@@ -418,10 +418,11 @@ def main() -> None:
     # 349-query record — the set-equality merge check can't merge a
     # subset, so it overwrote): the durable file is the
     # full-surface, local[32] series only.
-    if tier == "headline" or os.environ.get("SPARK_GRAFT_CPUS", "32") != "32":
+    # parsed as session.get_spark parses it, so "032" still means 32
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    if tier == "headline" or cpus != 32:
         print(
-            f"[bench] tier={tier} cpus="
-            f"{os.environ.get('SPARK_GRAFT_CPUS', '32')}: durable "
+            f"[bench] tier={tier} cpus={cpus}: durable "
             "BENCH_LOCAL record not written (full-surface local[32] "
             "series only)",
             file=sys.stderr,

@@ -9,9 +9,9 @@ the join keeps candidates with true distance ≤ threshold.
 
 This module is the same algorithm as explicit DataFrame ops:
 hyperplanes are tiny seeded constants folded into the plan (a few KB —
-a driver-side literal, broadcast with the task binary), bucketing is a
-JVM-side array expression, and the candidate join is a plain equi-join
-on (table_idx, bucket) that Catalyst shuffles/AQE-balances. Recall < 1
+a driver-side literal, broadcast with the task binary), bucketing is
+one folded numpy pass per Arrow batch, and candidates meet in a shuffle
+on (table_idx, bucket). Recall < 1
 by construction; precision = 1 after the exact distance filter.
 Correctness contract (SURVEY §7.3): LSH pairs ⊆ exact pairs, recall
 reported vs `exact_sqdist_join` — never hash-equality.
@@ -104,31 +104,6 @@ def brp_hashes(
             for plane in planes
         ]
     )
-
-
-def sign_lsh_buckets(
-    vec: Column | str,
-    planes: list[list[float]],
-    n_tables: int,
-    bits_per_table: int,
-) -> Column:
-    """Sign-bit (SRP) LSH buckets for COSINE similarity: per table, a
-    bit-string of sign(dot(v, g_i)) over that table's hyperplanes.
-    P[bit match] = 1 - θ/π — collision probability tracks the angle."""
-    v = F.col(vec) if isinstance(vec, str) else vec
-    assert len(planes) == n_tables * bits_per_table
-    buckets = []
-    for t in range(n_tables):
-        bits = [
-            F.when(
-                dot(v, F.array(*[F.lit(x) for x in planes[t * bits_per_table + b]]))
-                >= 0,
-                F.lit("1"),
-            ).otherwise(F.lit("0"))
-            for b in range(bits_per_table)
-        ]
-        buckets.append(F.concat(*bits))
-    return F.array(*buckets)
 
 
 def sign_bucket_frame(
@@ -523,153 +498,153 @@ def lsh_sqdist_join(
     more tables), which is an index-tuning decision, not a join-shape
     one.
 
-    Plan: bucket arrays (narrow) → posexplode by (table_idx, bucket) →
-    cogrouped ``applyInPandas`` scoring each bucket block with ONE
-    numpy pass (dimension-ordered accumulation → bitwise equal to the
-    fold-based expression and the SQL oracle) → threshold filter inside
-    the block → distinct surviving pairs.
+    Plan: both sides, tagged with a side byte, are unioned and hashed
+    in ONE ``mapInPandas`` into (side, id, table, bucket, vector) rows
+    → ``repartition`` on (table, bucket) (the session's shuffle
+    partitions) → ``sortWithinPartitions`` on (table, bucket, side,
+    id), so each key is one contiguous run with the left rows first
+    and the right rows in ascending id order → ONE ``mapInPandas``
+    that walks the runs across Arrow batches, carrying only the
+    unfinished last run into the next batch. Per run it keeps the
+    first ``bucket_cap`` right rows (the lowest ids), scores left ×
+    right (self mode: the run against itself, id_a < id_b) with one
+    dimension-ordered numpy pass (bitwise equal to the fold-based
+    expression and the SQL oracle) and keeps pairs within the
+    threshold → distinct surviving pairs.
 
-    Why blockwise instead of the ids-only equi-join + vector re-join:
-    candidate pairs vastly outnumber surviving pairs, and the pair-level
-    distance expression is an interpreted per-element fold (measured
-    16s for 2M candidates at sf0.1 vs ~2s blockwise). Shuffle trade:
-    vectors cross the exchange n_tables× (n·tables·dim·8B) instead of
-    candidate-id pairs (cand·16B) — blockwise shuffles less whenever
-    cand > 2·n·tables·dim/
-    (pair bytes/8), i.e. whenever collisions are non-trivial, and the
-    filtered output (not the candidate set) is all that's left after.
-    Bucket skew: a block must fit one task (bucket_length controls
-    occupancy); beyond that, AQE can't split a pandas group — shrink
-    bucket_length or add tables.
+    Why one sorted pass instead of a grouped (cogrouped) pandas UDF:
+    the bucket blocks are small and numerous — a 200-item arrival
+    batch against a 2,500-row stored table touches ~2,300
+    (table, bucket) keys for ~60k bucket pairs — so a pandas call per
+    key cost several times its arithmetic (perfbench's stream batch,
+    local[2] on a 4-vCPU VM: the LSH layer went from 4.0 s to 1.3 s
+    with the same output). Runs with only one side are skipped with no
+    per-key call at all, and the cap falls out of the sort order
+    instead of a ``row_number`` window. Why blockwise scoring instead
+    of an ids-only equi-join + vector re-join: candidate pairs vastly
+    outnumber surviving pairs, and the pair-level distance expression
+    is an interpreted per-element fold. Memory per task is one bucket
+    run plus one Arrow batch: a run must fit one task (bucket_length
+    controls occupancy) — shrink bucket_length or add tables for skew.
     """
     if dim is None:
         dim = _infer_dim(left, vec_col)
-    left = valid_vectors(left, vec_col, dim)  # np.stack dies on NULL/ragged
-    if right is not None:
-        right = valid_vectors(right, vec_col, dim)
-    planes = random_hyperplanes(dim, n_tables, seed)
-    planes_arr = np.asarray(planes, dtype=np.float64)  # (tables, dim)
+    planes_arr = np.asarray(random_hyperplanes(dim, n_tables, seed), dtype=np.float64)
+    self_mode = right is None
+    cap = None if self_mode else bucket_cap
 
-    def buckets(df: DataFrame, out_id: str) -> DataFrame:
-        # r14 (guide §4.2, the sign_bucket_frame precedent): the
-        # n_tables per-row dots run as ONE dimension-ordered numpy
-        # fold over Arrow batches instead of the interpreted
-        # per-element expression fold (measured 1.8 s/side at sf0.1
-        # for the expression form). The fold order is the expression
-        # dot's left-to-right accumulation exactly, and
-        # floor(acc/bucket_length) on float64 matches Spark's
-        # Divide+floor — bit-identical bucket ids.
-        id_type = df.schema[out_id].dataType
-        schema = T.StructType(
-            [
-                T.StructField(out_id, id_type),
-                T.StructField("__tbl", T.IntegerType()),
-                T.StructField("__bkt", T.LongType()),
-                T.StructField("__v", T.ArrayType(T.DoubleType())),
-            ]
+    def tagged(df: DataFrame, side: int) -> DataFrame:
+        df = valid_vectors(df, vec_col, dim)  # np.stack dies on NULL/ragged
+        return df.select(
+            F.lit(side).cast("byte").alias("__side"),
+            F.col(id_col).alias("__id"),
+            F.col(vec_col).cast("array<double>").alias("__v"),
         )
 
-        def bucketize(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                v = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
-                acc = np.zeros((len(v), n_tables), dtype=np.float64)
-                for i in range(dim):
-                    acc += v[:, i, None] * planes_arr[None, :, i]
-                bkt = np.floor(acc / bucket_length).astype(np.int64)
-                ids = pdf[out_id].to_numpy()
-                yield pd.concat(
-                    [
-                        pd.DataFrame(
-                            {
-                                out_id: ids,
-                                "__tbl": t,
-                                "__bkt": bkt[:, t],
-                                "__v": list(v),
-                            }
-                        )
-                        for t in range(n_tables)
-                    ]
-                )
-
-        return df.select(out_id, "__v").mapInPandas(bucketize, schema=schema)
-
-    self_mode = right is None
-    id_type = left.schema[id_col].dataType
+    rows = tagged(left, 0)
+    if not self_mode:
+        rows = rows.unionByName(tagged(right, 1))
+    bucket_schema = T.StructType(
+        [
+            T.StructField("__side", T.ByteType()),
+            T.StructField("__id", rows.schema["__id"].dataType),
+            T.StructField("__tbl", T.IntegerType()),
+            T.StructField("__bkt", T.LongType()),
+            T.StructField("__v", T.ArrayType(T.DoubleType())),
+        ]
+    )
     out_schema = T.StructType(
         [
-            T.StructField("id_a", id_type),
-            T.StructField("id_b", id_type),
+            T.StructField("id_a", left.schema[id_col].dataType),
+            T.StructField("id_b", left.schema[id_col].dataType),
             T.StructField(dist_col, T.DoubleType()),
         ]
     )
-    la = left.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).cast("array<double>").alias("__v")
-    )
-    ba = buckets(la, "id_a")
 
-    def empty() -> pd.DataFrame:
-        return pd.DataFrame({"id_a": [], "id_b": [], dist_col: []}).astype(
-            {dist_col: "float64"}
-        )
-
-    if self_mode:
-
-        def score_self(pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(pdf) < 2:
-                return empty()
+    def bucketize(batches):
+        # the n_tables per-row dots as ONE dimension-ordered numpy fold
+        # (the expression dot's left-to-right accumulation exactly);
+        # floor(acc/bucket_length) on float64 matches Spark's
+        # Divide+floor — bit-identical bucket ids to ``brp_hashes``
+        for pdf in batches:
+            if pdf.empty:
+                continue
             v = np.stack(pdf["__v"].to_numpy())
-            ids = pdf["id_a"].to_numpy()
-            d2 = _folded_sqdist_block(v, v)
-            ia, ib = np.nonzero(
-                (ids[:, None] < ids[None, :]) & (d2 <= threshold)
-            )
-            return pd.DataFrame(
-                {"id_a": ids[ia], "id_b": ids[ib], dist_col: d2[ia, ib]}
+            acc = np.zeros((len(v), n_tables), dtype=np.float64)
+            for i in range(dim):
+                acc += v[:, i, None] * planes_arr[None, :, i]
+            yield pd.DataFrame(
+                {
+                    "__side": np.tile(pdf["__side"].to_numpy(), n_tables),
+                    "__id": np.tile(pdf["__id"].to_numpy(), n_tables),
+                    "__tbl": np.repeat(np.arange(n_tables, dtype=np.int32), len(v)),
+                    "__bkt": np.floor(acc / bucket_length).astype(np.int64).T.ravel(),
+                    "__v": list(v) * n_tables,
+                }
             )
 
-        scored = ba.groupBy("__tbl", "__bkt").applyInPandas(
-            score_self, schema=out_schema
+    def score_runs(pdf: pd.DataFrame):
+        """Pairs of every (table, bucket) run in these sorted rows."""
+        if pdf.empty:
+            return
+        side, ids, tbl, bkt = (
+            pdf[c].to_numpy() for c in ("__side", "__id", "__tbl", "__bkt")
         )
-    else:
-        rb = buckets(
-            right.select(
-                F.col(id_col).alias("id_b"),
-                F.col(vec_col).cast("array<double>").alias("__v"),
-            ),
-            "id_b",
+        v = np.stack(pdf["__v"].to_numpy())
+        starts = np.flatnonzero(
+            np.r_[True, (tbl[1:] != tbl[:-1]) | (bkt[1:] != bkt[:-1])]
         )
-        if bucket_cap is not None:
-            from pyspark.sql.window import Window as _W
-
-            wb = _W.partitionBy("__tbl", "__bkt").orderBy("id_b")
-            rb = (
-                rb.withColumn("__brn", F.row_number().over(wb))
-                .filter(F.col("__brn") <= bucket_cap)
-                .drop("__brn")
+        ends = np.r_[starts[1:], len(ids)]
+        if self_mode:
+            blocks = [(slice(s, e),) * 2 for s, e in zip(starts, ends) if e - s > 1]
+        else:
+            # left rows sort first; the right rows follow by ascending id
+            mid = starts + np.add.reduceat((side == 0).astype(np.int64), starts)
+            hi = ends if cap is None else np.minimum(ends, mid + cap)
+            live = (mid > starts) & (hi > mid)
+            blocks = [
+                (slice(s, m), slice(m, h))
+                for s, m, h in zip(starts[live], mid[live], hi[live])
+            ]
+        out_a, out_b, out_d = [], [], []
+        for a, b in blocks:
+            d2 = _folded_sqdist_block(v[a], v[b])
+            hit = d2 <= threshold
+            if self_mode:
+                hit &= ids[a, None] < ids[None, b]
+            ia, ib = np.nonzero(hit)
+            out_a.append(ids[a][ia])
+            out_b.append(ids[b][ib])
+            out_d.append(d2[ia, ib])
+        if out_a:
+            yield pd.DataFrame(
+                {
+                    "id_a": np.concatenate(out_a),
+                    "id_b": np.concatenate(out_b),
+                    dist_col: np.concatenate(out_d),
+                }
             )
 
-        def score_pair(
-            _key: tuple, apdf: pd.DataFrame, bpdf: pd.DataFrame
-        ) -> pd.DataFrame:
-            if apdf.empty or bpdf.empty:
-                return empty()
-            va = np.stack(apdf["__v"].to_numpy())
-            vb = np.stack(bpdf["__v"].to_numpy())
-            ia_ids = apdf["id_a"].to_numpy()
-            ib_ids = bpdf["id_b"].to_numpy()
-            d2 = _folded_sqdist_block(va, vb)
-            ia, ib = np.nonzero(d2 <= threshold)
-            return pd.DataFrame(
-                {"id_a": ia_ids[ia], "id_b": ib_ids[ib], dist_col: d2[ia, ib]}
-            )
+    def score(batches):
+        # a run may go on in the next Arrow batch: each batch's last run
+        # is carried over and scored with the next batch's rows
+        carry = None
+        for pdf in batches:
+            if carry is not None:
+                pdf = pd.concat([carry, pdf], ignore_index=True)
+            tbl, bkt = pdf["__tbl"].to_numpy(), pdf["__bkt"].to_numpy()
+            edges = np.flatnonzero((tbl[1:] != tbl[:-1]) | (bkt[1:] != bkt[:-1]))
+            last = edges[-1] + 1 if len(edges) else 0
+            yield from score_runs(pdf.iloc[:last])
+            carry = pdf.iloc[last:]
+        if carry is not None:
+            yield from score_runs(carry)
 
-        scored = (
-            ba.groupBy("__tbl", "__bkt")
-            .cogroup(rb.groupBy("__tbl", "__bkt"))
-            .applyInPandas(score_pair, schema=out_schema)
-        )
+    runs = (
+        rows.mapInPandas(bucketize, schema=bucket_schema)
+        .repartition("__tbl", "__bkt")
+        .sortWithinPartitions("__tbl", "__bkt", "__side", "__id")
+    )
     # a pair colliding in several tables is scored per table with an
     # identical distance → distinct collapses the duplicates
-    return scored.distinct()
+    return runs.mapInPandas(score, schema=out_schema).distinct()

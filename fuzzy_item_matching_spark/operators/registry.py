@@ -33,6 +33,8 @@ NONE = "None"
 class ModelRegistry:
     def __init__(self, root: str):
         self.root = root
+        # (model path, loader) -> (meta mtime_ns, loaded model)
+        self._loaded: dict[tuple, tuple[int, object]] = {}
         os.makedirs(root, exist_ok=True)
 
     def _name_dir(self, name: str) -> str:
@@ -96,9 +98,21 @@ class ModelRegistry:
     def load(self, name: str, version: int | None = None,
              stage: str | None = None, loader=PipelineModel):
         """Load a version (``models:/name/Production`` equivalent is
-        ``load(name, stage=PRODUCTION)``)."""
+        ``load(name, stage=PRODUCTION)``).
+
+        The stage is resolved from the metas on every call, so a promote
+        is seen at once; the model itself is loaded once per model path
+        and meta mtime (a re-register rewrites the meta), because
+        ``loader.load`` runs Spark jobs. Callers share the returned
+        model and must not mutate it."""
         v = self.resolve(name, version=version, stage=stage)
-        return loader.load(self._model_path(name, v))
+        path = self._model_path(name, v)
+        stamp = os.stat(self._meta_path(name, v)).st_mtime_ns
+        hit = self._loaded.get((path, loader))
+        if hit is None or hit[0] != stamp:
+            hit = (stamp, loader.load(path))
+            self._loaded[(path, loader)] = hit
+        return hit[1]
 
     def _write_meta(self, name: str, meta: dict) -> None:
         path = self._meta_path(name, meta["version"])

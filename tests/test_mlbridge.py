@@ -125,6 +125,46 @@ def test_model_registry_version_promote_load(spark, part, tmp_path_factory):
         reg.resolve("name_matcher", stage="Staging")
 
 
+def test_model_registry_load_memoized_until_promote(spark, tmp_path):
+    """Loads are memoized, yet a promote to a new version serves the
+    new model at once, and a version re-registered over a wiped root
+    (same model path, rewritten meta) is loaded afresh."""
+    import shutil
+
+    from pyspark.ml import Pipeline
+    from pyspark.ml.feature import SQLTransformer
+
+    from fuzzy_item_matching_spark.operators.registry import (
+        PRODUCTION,
+        ModelRegistry,
+    )
+
+    df = spark.range(1)
+
+    def const(k: int):
+        stmt = f"SELECT {k} AS k FROM __THIS__"
+        return Pipeline(stages=[SQLTransformer(statement=stmt)]).fit(df)
+
+    def served(reg):
+        return reg.load("m", stage=PRODUCTION).transform(df).first()["k"]
+
+    root = str(tmp_path / "registry")
+    reg = ModelRegistry(root)
+    reg.register("m", const(1))
+    reg.register("m", const(2))
+    reg.promote("m", 1)
+    assert served(reg) == 1
+    first = reg.load("m", stage=PRODUCTION)
+    assert reg.load("m", stage=PRODUCTION) is first
+    reg.promote("m", 2)
+    assert served(reg) == 2
+
+    shutil.rmtree(root)
+    assert reg.register("m", const(3)) == 1  # v1's path, new model
+    reg.promote("m", 1)
+    assert served(reg) == 3
+
+
 def test_logreg_gd_fit_properties(spark):
     """M7 fit (engine-native GD): trace shape, finite weights, and
     ranking power — the fitted score must order pairs at least as well

@@ -638,3 +638,21 @@ def test_pit_features_single_user_shuffle(spark, registry):
     assert plan.count("(5) Window") or plan.count("Window") >= 1
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
     assert "hashpartitioning(user_id" in plan
+
+
+@pytest.mark.parametrize("mode", ["pair", "self"])
+def test_lsh_sqdist_join_is_one_sorted_pass(spark, mode):
+    """Bucketing and scoring are one ``mapInPandas`` each over a
+    (table, bucket)-sorted stream: no per-key grouped pandas call and
+    no cap window."""
+    from fuzzy_item_matching_spark.operators.lsh import lsh_sqdist_join
+
+    df = spark.createDataFrame([(1, [0.0, 1.0])], "id long, vec array<double>")
+    out = lsh_sqdist_join(
+        df, df if mode == "pair" else None, "id", "vec", 1.0,
+        n_tables=2, dim=2, bucket_cap=3,
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    for node in ("FlatMapCoGroupsInPandas", "FlatMapGroupsInPandas", "Window"):
+        assert node not in plan, plan
+    assert len(re.findall(r"\bMapInPandas\b", plan)) == 2, plan
