@@ -18,6 +18,7 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from fuzzy_item_matching_spark.functions.text import hex_long
 
@@ -561,10 +562,7 @@ def simhash_pairs(
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 25,
+    edges: DataFrame, src: str = "id_a", dst: str = "id_b"
 ) -> DataFrame:
     """Connected components of an undirected pair graph → one row per
     node ``(node, component)`` with ``component`` = the minimum node id
@@ -572,163 +570,72 @@ def connected_components(
     canonical assignment (``dedup_canonical_map`` is the one-hop
     compromise): a chain a~b~c~d all collapses to a.
 
-    Min-label propagation: every node repeatedly adopts the smallest
-    label among itself and its neighbours until a fixpoint. Converges
-    in O(graph diameter) rounds — near-dup graphs are unions of small
-    clusters (diameter a handful), so 3-5 rounds in practice; each
-    round is one shuffle-join on node id (partitioned identically
-    every round, so AQE reuses the exchange layout). For adversarial
-    long-chain graphs at 100 TB the O(log n)-round alternating
-    large-star/small-star algorithm (Kiveris et al., "Connected
-    Components in MapReduce and Beyond") is implemented below behind
-    the same signature (:func:`connected_components_star`); the
-    convergence loop and per-round localCheckpoint lineage truncation
-    carry over unchanged. Equality of the two on planted cluster and
-    chain graphs is pinned in tests/test_round9_ops.py.
+    ONE Spark action: an Arrow ``toPandas`` of the two id columns.
+    The ids are mapped to dense indices with ``np.unique`` (sorted, so
+    the smallest index is the smallest id), then a union-find with
+    path halving links every union to the SMALLER root. Each root is
+    therefore its component's minimum id whatever the graph's
+    diameter — there is no round cap, so labels are never returned
+    unconverged. The labels come back as a local DataFrame.
 
-    Driver-side per-round work is ONE count (the convergence test) —
-    labels themselves never collect. ``localCheckpoint`` truncates the
-    growing join lineage each round (iterative plans otherwise re-plan
-    the whole history every action).
+    Output equals the fixpoint of min-label propagation (every node
+    takes the smallest label among itself and its neighbours) for
+    every input, with the widened id type of ``src``/``dst`` for both
+    columns. Rules:
 
-    Convergence test (r15, guide §2.4): labels only ever DECREASE
-    (``least`` of the old label and the neighbour min), so "changed"
-    is a per-row flag computed inside the same projection that builds
-    the new labels — the old form re-JOINED new labels to old labels
-    every round (one extra keyed join + shuffle per round) to compare
-    components the update expression already knew. The flag rides the
-    checkpoint; counting it is a LocalTableScan aggregate, not a join.
+    - a self-loop ``(7, 7)`` yields ``(7, 7)``;
+    - an edge with one NULL end keeps its non-NULL end as a node (its
+      own component unless another edge joins it); ``(NULL, NULL)``
+      edges contribute nothing and no NULL node is emitted;
+    - nodes absent from the edge list are absent from the output.
+
+    Driver memory is O(|E|): the edge ids are collected once. The
+    collect is bounded by ``spark.driver.maxResultSize``, which fails
+    the action with a clear error rather than running the driver out
+    of memory.
     """
-    sym = edges.select(
-        F.col(src).alias("n"), F.col(dst).alias("m")
-    ).unionByName(edges.select(F.col(dst).alias("n"), F.col(src).alias("m")))
-    labels = (
-        sym.select("n")
-        .distinct()
-        .select(F.col("n").alias("node"), F.col("n").alias("component"))
-        .localCheckpoint()
+    import numpy as np
+    import pandas as pd
+
+    node = (
+        edges.select(F.col(src).alias("node"))
+        .unionByName(edges.select(F.col(dst).alias("node")))
+        .schema["node"]
     )
-    for _ in range(max_iter):
-        nbr_min = (
-            sym.join(labels, sym["m"] == labels["node"])
-            .groupBy(F.col("n").alias("node"))
-            .agg(F.min("component").alias("__nbr_min"))
-        )
-        new_comp = F.least(
-            "component", F.coalesce("__nbr_min", "component")
-        )
-        new_labels = (
-            labels.join(nbr_min, "node", "left")
-            .select(
-                "node",
-                new_comp.alias("component"),
-                (new_comp < F.col("component")).alias("__chg"),
-            )
-            .localCheckpoint()
-        )
-        changed = new_labels.filter(F.col("__chg")).count()
-        labels = new_labels.drop("__chg")
-        if changed == 0:
-            break
-    return labels
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC 2014) — the O(log n)-round twin of
-    :func:`connected_components` for adversarial-diameter graphs,
-    same output contract: one row per node ``(node, component)``,
-    ``component`` = the minimum node id in its component.
-
-    Per round, two edge rewrites, each ONE groupBy + join on node id:
-
-    - large-star: every node u computes m = min(Γ(u) ∪ {u}) and
-      re-attaches each STRICTLY LARGER neighbor v > u directly to m —
-      long chains contract toward the minimum from every node at
-      once, which is what buys O(log n) instead of O(diameter);
-    - small-star: on the resulting larger→smaller directed edges,
-      every node u re-attaches itself and its smaller neighbors to
-      their minimum.
-
-    Both preserve connectivity; the fixpoint is a star forest whose
-    centers are the component minimums, read off as the label table.
-    The fixpoint test is one exceptAll count on the edge set (edges
-    only shrink toward the star, labels never collect); per-round
-    localCheckpoint truncates the iterative lineage exactly as in the
-    min-label form. At 100 TB both phases are node-keyed shuffles of
-    the current edge set — no stage touches more than O(|E|) rows."""
-    cur = (
+    schema = StructType(
+        [node, StructField("component", node.dataType, node.nullable)]
+    )
+    # a NULL end collapses to a self-loop on the other end; NULL-NULL
+    # edges drop, so no NULL reaches pandas (int ids stay int64)
+    pdf = (
         edges.select(
-            F.greatest(F.col(src), F.col(dst)).alias("a"),
-            F.least(F.col(src), F.col(dst)).alias("b"),
+            F.coalesce(src, dst).alias("a"), F.coalesce(dst, src).alias("b")
         )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
+        .filter(F.col("a").isNotNull())
+        .toPandas()
     )
-    converged = False
-    for _ in range(max_iter):
-        # large-star over the undirected view
-        sym = cur.select("a", "b").unionByName(
-            cur.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        mins = (
-            sym.groupBy(F.col("a").alias("u"))
-            .agg(F.min("b").alias("__mb"))
-            .select("u", F.least("u", "__mb").alias("m"))
-        )
-        large = (
-            sym.join(mins, sym["a"] == mins["u"])
-            .filter(F.col("b") > F.col("a"))
-            .select(F.col("b").alias("a"), F.col("m").alias("b"))
-            .distinct()
-        )
-        # small-star over the larger→smaller directed edges
-        smins = large.groupBy(F.col("a").alias("u")).agg(
-            F.min("b").alias("m")
-        )
-        lj = large.join(smins, large["a"] == smins["u"])
-        small = (
-            lj.select(F.col("a"), F.col("m").alias("b"))
-            .unionByName(
-                lj.filter(F.col("b") != F.col("m")).select(
-                    F.col("b").alias("a"), F.col("m").alias("b")
-                )
-            )
-            .distinct()
-            .localCheckpoint()
-        )
-        changed = (
-            small.exceptAll(cur).count() + cur.exceptAll(small).count()
-        )
-        cur = small
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        # The documented contract is component = the MINIMUM node id;
-        # an un-converged star forest can still point nodes at an
-        # intermediate id, so returning silently would hand back wrong
-        # labels. O(log n) rounds suffice for any graph, so hitting
-        # max_iter means the caller under-budgeted it.
-        raise RuntimeError(
-            f"connected_components_star: no fixpoint after {max_iter} "
-            "rounds; raise max_iter (the star rewrites converge in "
-            "O(log n) rounds)"
-        )
-    roots = cur.select(F.col("b").alias("node")).distinct().select(
-        "node", F.col("node").alias("component")
+    ids, idx = np.unique(
+        np.concatenate([pdf["a"].to_numpy(), pdf["b"].to_numpy()]),
+        return_inverse=True,
     )
-    return (
-        cur.select(F.col("a").alias("node"), F.col("b").alias("component"))
-        .unionByName(roots)
-        .distinct()
+    parent = list(range(len(ids)))
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    n_edges = len(pdf)
+    for u, v in zip(idx[:n_edges].tolist(), idx[n_edges:].tolist()):
+        ru, rv = find(u), find(v)
+        if ru < rv:
+            parent[rv] = ru
+        elif rv < ru:
+            parent[ru] = rv
+    roots = [find(x) for x in range(len(ids))]
+    return edges.sparkSession.createDataFrame(
+        pd.DataFrame({"node": ids, "component": ids[roots]}), schema
     )
 
 

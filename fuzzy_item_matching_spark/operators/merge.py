@@ -8,17 +8,15 @@ target rows survive:
 
     merged = source ∪ (target ⟕anti source on keys)
 
-When delta-spark is importable and the target is a Delta path, the
-fast-path issues a real MERGE (rewrites only matched files); the
-anti-join form is the engine-portable equivalent with one shuffle on
-the key (AQE broadcasts a small source — the common incremental case:
-a trickle of updates against a huge target).
+The anti-join runs on any table format, with one shuffle on the key
+(AQE broadcasts a small source — the common incremental case: a
+trickle of updates against a huge target). The caller writes the
+merged frame back; nothing here depends on Delta.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def merge_upsert(target: DataFrame, source: DataFrame, keys: list[str]) -> DataFrame:
@@ -35,24 +33,3 @@ def merge_upsert(target: DataFrame, source: DataFrame, keys: list[str]) -> DataF
         )
     kept = target.join(source.select(*keys), on=keys, how="left_anti")
     return kept.unionByName(source)
-
-
-def merge_upsert_delta(spark, target_path: str, source: DataFrame, keys: list[str]) -> bool:
-    """Delta fast-path: real MERGE INTO when delta-spark is available.
-    Returns False (caller should fall back to ``merge_upsert`` +
-    overwrite) when Delta isn't importable in this environment.
-    """
-    try:
-        from delta.tables import DeltaTable  # type: ignore[import-not-found]
-    except ImportError:
-        return False
-    t = DeltaTable.forPath(spark, target_path)
-    cond = " AND ".join(f"t.`{k}` = s.`{k}`" for k in keys)
-    (
-        t.alias("t")
-        .merge(source.alias("s"), cond)
-        .whenMatchedUpdateAll()
-        .whenNotMatchedInsertAll()
-        .execute()
-    )
-    return True

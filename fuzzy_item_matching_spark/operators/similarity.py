@@ -234,97 +234,6 @@ def sparse_cosine_self_join_collapsed(
     )
 
 
-def sparse_cosine_self_join_prefix(
-    weights: DataFrame,
-    id_col: str,
-    term_col: str = "term",
-    weight_col: str = "weight",
-    min_sim: float = 0.5,
-    sim_col: str = "cosine",
-) -> DataFrame:
-    """Prefix-filtered sparse cosine SELF-join (AllPairs/PPJoin-style
-    candidate pruning) — same output as ``sparse_cosine_join(...,
-    self_dedup=True)``, far fewer candidates at high thresholds.
-
-    For L2-normalized docs, if every shared term of a pair lies in the
-    suffix of doc a (terms ranked rarest-first), Cauchy-Schwarz bounds
-    the dot by the suffix norm: dot ≤ √(Σ_suffix w²). So only positions
-    with remaining squared mass ≥ t² need to be INDEXED — candidates
-    come from prefix(a) ⋈ all(b), a strict superset of the answer set.
-    Verification then computes the exact dot per candidate pair
-    row-locally from per-doc term→weight maps (no second postings
-    join).
-
-    Scale shape: the candidate join's volume is Σ_t df_prefix(t)·df(t)
-    — the common-term tail that dominates Σ_t df(t)² never enters the
-    index. One extra window (per-doc rank) and one map-build groupBy.
-
-    When to use (measured): wins when the threshold prunes MOST pairs
-    (sparse answers over docs with many small-weight terms). On the
-    TPC-H part-name corpus at sf0.1 — short docs, bimodal gram df, and
-    6.4M pairs genuinely ≥ 0.8 — the candidate set is bounded below by
-    the answer set and the extra stages cost 2× vs the plain postings
-    join (30.6s vs 14.5s). sparse_cosine_join stays the default;
-    verified exactly equivalent (same pairs, bitwise-equal cosines).
-    """
-    t2 = min_sim * min_sim
-    df_by_term = weights.groupBy(term_col).agg(F.count("*").alias("__df"))
-    w = weights.select(
-        F.col(id_col).alias("__id"),
-        F.col(term_col).alias("__t"),
-        F.col(weight_col).alias("__w"),
-    ).join(df_by_term.withColumnRenamed(term_col, "__t"), "__t")  # AQE
-    # broadcasts the vocab side when it fits (unconditional broadcast
-    # of an unbounded vocabulary would OOM at scale)
-
-    from pyspark.sql.window import Window
-
-    order = Window.partitionBy("__id").orderBy(F.asc("__df"), F.asc("__t"))
-    w = w.withColumn(
-        "__cum", F.sum(F.col("__w") * F.col("__w")).over(order)
-    )
-    # Position i is prefix iff suffix-from-i squared mass ≥ t²:
-    # S_i = 1 - cum_i + w_i² (docs are unit-norm).
-    prefix = w.filter(
-        F.lit(1.0) - F.col("__cum") + F.col("__w") * F.col("__w") >= F.lit(t2)
-    ).select("__id", "__t")
-
-    postings = w.select("__id", "__t")
-    cand = (
-        prefix.withColumnRenamed("__id", "id_a")
-        .join(postings.withColumnRenamed("__id", "id_b"), "__t")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-        )
-        .distinct()
-    )
-
-    maps = weights.groupBy(F.col(id_col).alias("__id")).agg(
-        F.map_from_entries(
-            F.collect_list(F.struct(F.col(term_col), F.col(weight_col)))
-        ).alias("__m")
-    )
-    ma = maps.select(F.col("__id").alias("id_a"), F.col("__m").alias("__ma"))
-    mb = maps.select(F.col("__id").alias("id_b"), F.col("__m").alias("__mb"))
-    dot_expr = F.aggregate(
-        F.map_keys("__ma"),
-        F.lit(0.0),
-        lambda acc, k: acc
-        + F.coalesce(
-            F.element_at("__ma", k) * F.element_at("__mb", k), F.lit(0.0)
-        ),
-    )
-    return (
-        cand.join(ma, "id_a")
-        .join(mb, "id_b")
-        .withColumn(sim_col, dot_expr)
-        .filter(F.col(sim_col) >= F.lit(min_sim))
-        .select("id_a", "id_b", sim_col)
-    )
-
-
 def featurize_text(
     df: DataFrame,
     id_cols: list[str],

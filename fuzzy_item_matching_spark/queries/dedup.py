@@ -888,9 +888,9 @@ def dedup_canonical_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc id of its whole component (`dedup_canonical_map` is the
     one-hop compromise — a chain a~b~c leaves c pointing at b there,
     at a here; the component min itself is the survivor,
-    is_duplicate=0). Spark side is iterative min-label propagation
-    (`operators/dedup.connected_components`, O(diameter) rounds with
-    per-round lineage truncation); the oracle is the same closure as a
+    is_duplicate=0). Spark side is `operators/dedup.connected_components`
+    (one collect of the pair ids, then a driver-side union-find — exact
+    for any graph diameter); the oracle is the same closure as a
     DuckDB recursive CTE — set-semantics UNION reaches the fixpoint.
     """
     from fuzzy_item_matching_spark.operators.dedup import connected_components
@@ -898,7 +898,7 @@ def dedup_canonical_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(
         d, "doc_id", regex_tokenize("text"), n=3, min_jaccard=0.5
-    ).persist()
+    )
     comps = connected_components(pairs, "id_a", "id_b")
     return (
         d.select("doc_id")
@@ -1149,11 +1149,12 @@ def dedup_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_canonical_closure, composed into the reference's end goal:
     a deduplicated item master.
 
-    Plan: blocked pair join (bounded candidates) → O(diameter)
-    min-label rounds (operators/dedup.connected_components, exchange
-    layout reused per round) → three cluster-keyed aggs (counts/max,
-    modal argmax-by-count window, representative join). Every stage
-    keys on cluster or node ids — no global structure, no collect.
+    Plan: blocked pair join (bounded candidates) → connected
+    components (operators/dedup.connected_components: ONE collect of
+    the pair ids, a driver-side union-find, labels back as a local
+    frame — driver memory O(pairs)) → three cluster-keyed aggs
+    (counts/max, modal argmax-by-count window, representative join),
+    each keyed on cluster or node ids.
 
     Determinism: the JW kernel is bit-identical to DuckDB's; modal
     tie-breaks are total; golden_price is DECIMAL-exact before one
@@ -1180,10 +1181,6 @@ def dedup_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("jw") >= _GR_JW)
         .select("id_a", "id_b")
     )
-    # The edge frame embeds the Arrow-batched JW kernel; the closure
-    # loop references it every round — persist so the kernel runs ONCE
-    # (measured 7.5s -> ~3s at sf0.1 without it).
-    pairs.persist()
     comps = connected_components(pairs, "id_a", "id_b")
     members = (
         p.join(comps, p.p_partkey == comps.node, "left")

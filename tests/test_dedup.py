@@ -150,6 +150,104 @@ def test_connected_components_vs_one_hop(spark):
     assert comp[4] == 1
 
 
+def _planted_clusters():
+    """Clusters of sizes 1, 2, 5, 9, 17 with shuffled intra-cluster
+    path edges plus one cycle edge each, ids gapped so they are not
+    contiguous. The size-1 cluster has no edge, so it is no node."""
+    import random
+
+    rng = random.Random(99)
+    edges, base = [], 0
+    for size in (1, 2, 5, 9, 17):
+        nodes = list(range(base, base + size))
+        base += size + 3
+        if size == 1:
+            continue
+        shuffled = nodes[:]
+        rng.shuffle(shuffled)
+        edges += list(zip(shuffled, shuffled[1:]))
+        edges.append((nodes[-1], nodes[1]))
+    return edges
+
+
+_CC_CASES = {
+    "planted_clusters": _planted_clusters(),
+    "chain65": [(i, i + 1) for i in range(64)],
+    # diameter 100: beyond any fixed round budget of min-label loops
+    "chain101": [(i + 1, i) for i in range(100)],
+    "cycle": [(5, 6), (6, 7), (7, 8), (8, 5), (20, 21)],
+    "dup_and_reversed": [(3, 1), (1, 3), (1, 3), (3, 2), (2, 3), (9, 8)],
+    "self_loop": [(7, 7), (1, 2), (2, 2)],
+    "null_endpoint": [(4, None), (None, 5), (None, None), (1, 2), (2, None)],
+    "empty": [],
+}
+
+
+def _bfs_components(edges):
+    """Pure-Python reference: BFS over the undirected graph of the
+    non-NULL edge ends; each node labelled with its component's min."""
+    adj = {}
+    for a, b in edges:
+        for u, v in ((a, b), (b, a)):
+            if u is not None:
+                adj.setdefault(u, set())
+                if v is not None:
+                    adj[u].add(v)
+    label = {}
+    for start in sorted(adj):
+        if start in label:
+            continue
+        seen, frontier = {start}, [start]
+        while frontier:
+            frontier = [v for u in frontier for v in adj[u] if v not in seen]
+            seen.update(frontier)
+        label.update((n, start) for n in seen)
+    return label
+
+
+@pytest.mark.parametrize("case", sorted(_CC_CASES))
+def test_connected_components_equals_bfs(spark, case):
+    from fuzzy_item_matching_spark.operators.dedup import connected_components
+
+    edges = spark.createDataFrame(_CC_CASES[case], "id_a long, id_b long")
+    out = connected_components(edges)
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("node", "bigint"),
+        ("component", "bigint"),
+    ]
+    rows = out.collect()
+    assert len(rows) == len({r.node for r in rows})
+    assert {r.node: r.component for r in rows} == _bfs_components(
+        _CC_CASES[case]
+    )
+
+
+def test_connected_components_job_count_flat_in_diameter(spark):
+    """One collect of the edge ids, whatever the graph's diameter: a
+    2-node and a 200-node chain launch the same (small) number of
+    Spark jobs for the call plus a collect of its labels."""
+    from fuzzy_item_matching_spark.operators.dedup import connected_components
+
+    sc = spark.sparkContext
+
+    def jobs(n_nodes):
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(n_nodes - 1)], "id_a long, id_b long"
+        )
+        group = f"cc-jobs-{n_nodes}"
+        sc.setJobGroup(group, "connected_components job count")
+        try:
+            labels = connected_components(edges).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert {r.component for r in labels} == {0}
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    short, long_ = jobs(2), jobs(200)
+    assert short == long_ <= 3, (short, long_)
+
+
 def test_semantic_pairs_subset_and_recall(spark):
     """ivf_cell_pairs emits a SUBSET of the exact >= t cosine pairs
     (every within-probed-cell pair is scored with the exact fold-order

@@ -74,28 +74,6 @@ def test_gboost_bynode_fit_respects_node_menus(spark):
     ], "bynode restriction never bound — pick a different seed"
 
 
-def test_star_cc_raises_without_fixpoint(spark):
-    """connected_components_star's output contract is component =
-    the MINIMUM node id; exhausting max_iter before the star fixpoint
-    must raise, never return intermediate labels silently."""
-    from fuzzy_item_matching_spark.operators.dedup import (
-        connected_components_star,
-    )
-
-    # a path graph long enough that 1 round cannot finish
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(20)], "id_a long, id_b long"
-    )
-    with pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components_star(edges, max_iter=1)
-    # ample budget converges to the true labels
-    labels = {
-        r.node: r.component
-        for r in connected_components_star(edges, max_iter=25).collect()
-    }
-    assert labels == {i: 0 for i in range(21)}
-
-
 def test_tpe_lite_gamma_clamp(spark):
     """gamma large enough that ceil(gamma*n) == n must not produce a
     zero-size bad set (NaN/inf acquisition); the draw clamps to
@@ -293,8 +271,6 @@ def test_variant_dirty_input(spark):
     try_parse_json degrades them to NULL; try_variant_get on a valid
     variant but absent path is NULL — the three dirty-input contracts
     behind rel_variant_props."""
-    import pytest as _pytest
-
     df = spark.createDataFrame(
         [('{"k": 1}',), ("not json",), (None,)], "props string"
     )
@@ -304,7 +280,7 @@ def test_variant_dirty_input(spark):
         F.expr("try_variant_get(v, '$.k', 'int')").alias("k")
     ).collect()
     assert [r.k for r in ok] == [1, None, None]
-    with _pytest.raises(Exception):
+    with pytest.raises(Exception):
         df.select(F.expr("parse_json(props)")).collect()
 
 

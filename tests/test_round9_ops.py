@@ -168,76 +168,6 @@ def test_tpe_proposals_concentrate_in_good_region(spark):
         n_obs += _TPE_K
 
 
-def _cc_both(spark, edges, label_iters=25):
-    from fuzzy_item_matching_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
-    e = spark.createDataFrame(edges, "id_a long, id_b long")
-    a = {
-        (r.node, r.component)
-        for r in connected_components(e, max_iter=label_iters).collect()
-    }
-    b = {
-        (r.node, r.component)
-        for r in connected_components_star(e).collect()
-    }
-    return a, b
-
-
-def test_cc_star_agrees_on_planted_clusters(spark):
-    """Planted clusters with shuffled intra-cluster edges: the
-    large-star/small-star form must produce the identical
-    (node → component-min) table as min-label propagation."""
-    import random
-
-    rng = random.Random(99)
-    edges = []
-    expect = set()
-    base = 0
-    for size in (1, 2, 5, 9, 17):
-        nodes = list(range(base, base + size))
-        base += size + 3  # gaps so ids aren't contiguous
-        for n in nodes:
-            expect.add((n, nodes[0]))
-        if size == 1:
-            # isolated nodes never appear in an edge list — both
-            # algorithms skip them by contract
-            expect.discard((nodes[0], nodes[0]))
-            continue
-        shuffled = nodes[:]
-        rng.shuffle(shuffled)
-        for x, y in zip(shuffled, shuffled[1:]):
-            edges.append((x, y))
-        edges.append((nodes[-1], nodes[1]))  # a cycle edge
-    a, b = _cc_both(spark, edges)
-    assert a == b == expect
-
-
-def test_cc_star_agrees_on_long_chain(spark):
-    """The adversarial case the star form exists for: one 65-node
-    chain (diameter 64). Min-label propagation moves the minimum ONE
-    hop per round, so it needs diameter rounds (its default
-    max_iter=25 would leave this chain unfinished — measured, which
-    is exactly the scale hazard); the star form must collapse the
-    same chain within max_iter=8 (O(log n))."""
-    from fuzzy_item_matching_spark.operators.dedup import (
-        connected_components_star,
-    )
-
-    chain = [(i, i + 1) for i in range(64)]
-    a, b = _cc_both(spark, chain, label_iters=70)
-    expect = {(n, 0) for n in range(65)}
-    assert a == b == expect
-    e = spark.createDataFrame(chain, "id_a long, id_b long")
-    fast = {
-        (r.node, r.component)
-        for r in connected_components_star(e, max_iter=8).collect()
-    }
-    assert fast == expect
-
-
 def test_gboost_deep_empty_frame_raises(spark):
     from fuzzy_item_matching_spark.operators.gboost_deep import (
         gboost_deep_fit,

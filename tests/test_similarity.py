@@ -202,34 +202,6 @@ def test_two_set_fuzzy_match_directional_ids(spark):
         assert r.id_a % 2 == 0 and r.id_b % 2 == 1
 
 
-def test_prefix_join_equivalent_to_postings_join(spark):
-    from fuzzy_item_matching_spark.operators.similarity import (
-        featurize_text,
-        sparse_cosine_join,
-        sparse_cosine_self_join_prefix,
-    )
-
-    part = load_table(spark, SF_CHECK, "part")
-    feats = featurize_text(
-        part, ["p_partkey"], "p_name", num_features=None, max_df_ratio=0.15
-    ).cache()
-    a = feats.withColumnRenamed("p_partkey", "id_a")
-    b = feats.withColumnRenamed("p_partkey", "id_b")
-    base = {
-        (r.id_a, r.id_b)
-        for r in sparse_cosine_join(
-            a, b, "id_a", "id_b", min_sim=0.8, self_dedup=True
-        ).collect()
-    }
-    pref = {
-        (r.id_a, r.id_b)
-        for r in sparse_cosine_self_join_prefix(
-            feats, "p_partkey", min_sim=0.8
-        ).collect()
-    }
-    assert base == pref
-
-
 def test_exact_join_two_distinct_sets_no_dedup(spark, embeddings):
     a = embeddings.filter(F.col("vec_id") < 50)
     b = embeddings.filter(F.col("vec_id") >= 450)
