@@ -11,7 +11,7 @@ so the whole fit runs as Spark plans and replays in SQL:
 
 - stump candidates: a FIXED grid of thresholds per feature
   (min + k·(max−min)/G, exact double arithmetic) × both polarities;
-- per round: weighted error of every candidate in one crossJoin +
+- per round: weighted error of every candidate in one rows × candidates
   aggregate (DECIMAL-summed, order-insensitive), argmin with a total
   tie-break, α = ½·ln((1−err)/err) rounded to 9 digits, and the TWO
   weight factors e^{∓α} rounded to 9 digits — so the only
@@ -20,10 +20,17 @@ so the whole fit runs as Spark plans and replays in SQL:
 - weight update: per-row multiplication by one of the two quantized
   scalars — no per-row transcendental anywhere.
 
-Scale: per round, one pass over the (persisted) training frame against
-a broadcast candidate grid, one vocabulary-of-candidates aggregate,
-one 1-row argmin collect (the BPE-argmax budget, KB-scale), one
-projection updating the weight column. K rounds = K passes.
+Scale: per round, one pass over the (persisted) training frame with the
+candidate grid expanded inline as a literal generator, one
+vocabulary-of-candidates aggregate and one 1-row argmin collect (the
+BPE-argmax budget, KB-scale). K rounds = K passes.
+
+Rounds keep no state. A row's weight (AdaBoost) or raw score
+(gradient boosting) is a pure function of the trees already fitted, so
+every fit here carries it as a Column that each round folds one more
+tree into and the next pass evaluates inline. Every ``MARGIN_DEPTH``
+rounds one localCheckpoint materializes it, which caps the expression
+depth; below that no round writes or checkpoints anything.
 """
 
 from __future__ import annotations
@@ -36,6 +43,7 @@ from pyspark.sql.window import Window
 
 GRID = 16  # thresholds per feature: k = 1..GRID-1
 ERR_FLOOR = 1e-9  # clamp keeps alpha finite on degenerate rounds
+MARGIN_DEPTH = 8  # rounds a carried column folds in per localCheckpoint
 
 
 def _alpha_factors(err: float) -> tuple[float, float, float]:
@@ -45,6 +53,83 @@ def _alpha_factors(err: float) -> tuple[float, float, float]:
     e = min(max(err, ERR_FLOOR), 1.0 - ERR_FLOOR)
     alpha = round(0.5 * math.log((1.0 - e) / e), 9)
     return alpha, round(math.exp(-alpha), 9), round(math.exp(alpha), 9)
+
+
+def _grid(
+    pairs: DataFrame, features: list[str], grid: int
+) -> tuple[dict[str, tuple[float, float]], list[tuple[str, float]]]:
+    """One min/max pass: per-feature (mn, mx) and the fixed threshold
+    grid [(feature, mn + k·(mx−mn)/G) for k = 1..G−1], in feature
+    order. A constant feature keeps its G−1 equal thresholds — the SQL
+    twins' UNION ALL arms count each one too."""
+    stats = pairs.agg(
+        *[c for f_ in features for c in (F.min(f_), F.max(f_))]
+    ).first()
+    ranges = {}
+    for i, f_ in enumerate(features):
+        if stats[2 * i] is None:
+            raise ValueError(
+                "boosting fit: empty training frame — no"
+                " candidate thresholds can exist"
+            )
+        ranges[f_] = (float(stats[2 * i]), float(stats[2 * i + 1]))
+    cands = []
+    for f_ in features:
+        mn, mx = ranges[f_]
+        cands += [(f_, mn + k * (mx - mn) / float(grid)) for k in range(1, grid)]
+    return ranges, cands
+
+
+def _cands(
+    rows: list[tuple], names: tuple[str, ...] = ("feature", "thr")
+) -> Column:
+    """The candidate grid as a literal generator: selected next to a
+    row's columns, it yields one (row, candidate) pair per grid entry —
+    a crossJoin with no candidate frame to broadcast."""
+    return F.inline(
+        F.array(
+            *[
+                F.struct(*[F.lit(v).alias(n) for v, n in zip(r, names)])
+                for r in rows
+            ]
+        )
+    )
+
+
+def _feat_val(features: list[str]) -> Column:
+    """The candidate's feature value: CASE feature WHEN f THEN f …"""
+    c = F.when(F.col("feature") == features[0], F.col(features[0]))
+    for f_ in features[1:]:
+        c = c.when(F.col("feature") == f_, F.col(f_))
+    return c
+
+
+def _walk(
+    splits: dict[int, tuple[str, float]], leaves: dict, n: int = 1
+) -> Column:
+    """Route each row from heap node ``n`` down ``splits`` (node m
+    splits on ``feature <= thr``; its children are 2m on the <=-side
+    and 2m+1) to the node in ``leaves`` it reaches; return that leaf's
+    literal."""
+    if n in leaves:
+        return F.lit(leaves[n])
+    f_, thr = splits[n]
+    return F.when(
+        F.col(f_) <= F.lit(thr), _walk(splits, leaves, 2 * n)
+    ).otherwise(_walk(splits, leaves, 2 * n + 1))
+
+
+def _settle(
+    df: DataFrame, carried: Column, name: str, t: int
+) -> tuple[DataFrame, Column]:
+    """Before round ``t``: once the carried column has folded in
+    ``MARGIN_DEPTH`` more rounds, materialize it as column ``name``
+    with one localCheckpoint and carry the plain reference instead."""
+    if t == 1 or (t - 1) % MARGIN_DEPTH:
+        return df, carried
+    nxt = df.withColumn(name, carried).localCheckpoint(eager=True)
+    df.unpersist()
+    return nxt, F.col(name)
 
 
 def adaboost_stumps(
@@ -63,47 +148,23 @@ def adaboost_stumps(
     weights entering that round (unnormalized — the ratio form is
     scale-invariant, so no per-round renormalization drift).
     """
-    spark = pairs.sparkSession
-
-    stats = pairs.agg(
-        *[
-            c
-            for f_ in features
-            for c in (
-                F.min(f_).alias(f"mn_{f_}"),
-                F.max(f_).alias(f"mx_{f_}"),
-            )
-        ]
-    ).first()
-
-    cand_rows = []
-    for f_ in features:
-        if stats[f"mn_{f_}"] is None:
-            raise ValueError(
-                "boosting fit: empty training frame — no"
-                " candidate thresholds can exist"
-            )
-        mn, mx = float(stats[f"mn_{f_}"]), float(stats[f"mx_{f_}"])
-        for k in range(1, grid):
-            thr = mn + k * (mx - mn) / float(grid)
-            for pol in (1, -1):
-                cand_rows.append((f_, thr, pol))
-    cands = F.broadcast(
-        spark.createDataFrame(cand_rows, "feature string, thr double, pol int")
+    _, grid_rows = _grid(pairs, features, grid)
+    cands = _cands(
+        [(f_, thr, pol) for f_, thr in grid_rows for pol in (1, -1)],
+        ("feature", "thr", "pol"),
     )
-
-    df = pairs.select(
-        (2 * F.col(label) - 1).alias("__y"), *features
-    ).withColumn("__w", F.lit(1.0))
-    df = df.persist()
-
-    feat_val = F.when(F.col("feature") == features[0], F.col(features[0]))
-    for f_ in features[1:]:
-        feat_val = feat_val.when(F.col("feature") == f_, F.col(f_))
+    feat_val = _feat_val(features)
+    df = pairs.select((2 * F.col(label) - 1).alias("__y"), *features).persist()
+    w = F.lit(1.0)
 
     model: list[tuple[int, str, float, int, float, float]] = []
     for t in range(1, rounds + 1):
-        joined = df.crossJoin(cands).withColumn("__x", feat_val)
+        df, w = _settle(df, w, "__w", t)
+        joined = (
+            df.select("__y", *features, w.alias("__w"))
+            .select("*", cands)
+            .withColumn("__x", feat_val)
+        )
         pred = F.when(
             ((F.col("pol") == 1) & (F.col("__x") <= F.col("thr")))
             | ((F.col("pol") == -1) & (F.col("__x") > F.col("thr"))),
@@ -133,15 +194,11 @@ def adaboost_stumps(
             else (bx > F.lit(best["thr"])),
             1,
         ).otherwise(-1)
-        nxt = df.withColumn(
-            "__w",
-            F.col("__w")
-            * F.when(h == F.col("__y"), F.lit(f_corr)).otherwise(F.lit(f_wrong)),
+        w = w * F.when(h == F.col("__y"), F.lit(f_corr)).otherwise(
+            F.lit(f_wrong)
         )
-        nxt = nxt.localCheckpoint(eager=True)
-        df.unpersist()
-        df = nxt
-    return spark.createDataFrame(
+    df.unpersist()
+    return pairs.sparkSession.createDataFrame(
         model,
         "round int, feature string, thr double, pol int, err double,"
         " alpha double",
@@ -295,8 +352,8 @@ def adaboost_score_sql(
 # smaller Q — lower it, don't widen the decimal.
 #
 # Per round: TWO passes over the persisted frame (root eval; both
-# children in one side-partitioned eval), two KB-scale collects, one
-# weight-update projection + localCheckpoint. K rounds = 2K passes.
+# children in one side-partitioned eval) and two KB-scale collects; the
+# weight is a carried Column like the stump fit's. K rounds = 2K passes.
 
 W_QUANTUM = 1_000_000_000  # Q: weight-factor quantization denominator
 
@@ -310,7 +367,7 @@ def _d2_factors(err: float) -> tuple[float, int, int]:
     return alpha, round(f_corr * W_QUANTUM), round(f_wrong * W_QUANTUM)
 
 
-def _d2_region_aggs(prefix: str = "") -> list[Column]:
+def _d2_region_aggs() -> list[Column]:
     """The four (side × class) integer weight sums for one candidate."""
     le = F.col("__x") <= F.col("thr")
     y = F.col("__y")
@@ -318,7 +375,7 @@ def _d2_region_aggs(prefix: str = "") -> list[Column]:
     zero = F.lit(0).cast("decimal(38,0)")
 
     def s(cond: Column, name: str) -> Column:
-        return F.sum(F.when(cond, w).otherwise(zero)).alias(prefix + name)
+        return F.sum(F.when(cond, w).otherwise(zero)).alias(name)
 
     return [
         s(le & (y == 1), "le_pos"),
@@ -357,53 +414,21 @@ def adaboost_depth2(
 
     h(x) = sll/slr/srl/srr by the nested split path; the scorer's
     margin is Σ_t alpha_t · h_t(x)."""
-    spark = pairs.sparkSession
-
-    stats = pairs.agg(
-        *[
-            c
-            for f_ in features
-            for c in (
-                F.min(f_).alias(f"mn_{f_}"),
-                F.max(f_).alias(f"mx_{f_}"),
-            )
-        ]
-    ).first()
-    cand_rows = []
-    for f_ in features:
-        if stats[f"mn_{f_}"] is None:
-            raise ValueError(
-                "boosting fit: empty training frame — no"
-                " candidate thresholds can exist"
-            )
-        mn, mx = float(stats[f"mn_{f_}"]), float(stats[f"mx_{f_}"])
-        for k in range(1, grid):
-            cand_rows.append((f_, mn + k * (mx - mn) / float(grid)))
-    cands = F.broadcast(
-        spark.createDataFrame(cand_rows, "feature string, thr double")
-    )
-
-    df = pairs.select(
-        (2 * F.col(label) - 1).alias("__y"), *features
-    ).withColumn("__w", F.lit(1).cast("decimal(38,0)"))
-    df = df.persist()
-
-    feat_val = F.when(F.col("feature") == features[0], F.col(features[0]))
-    for f_ in features[1:]:
-        feat_val = feat_val.when(F.col("feature") == f_, F.col(f_))
-
-    def _fcol(name: str) -> Column:
-        c = F.when(F.lit(features[0]) == name, F.col(features[0]))
-        for f_ in features[1:]:
-            c = c.when(F.lit(f_) == name, F.col(f_))
-        return c
+    _, grid_rows = _grid(pairs, features, grid)
+    cands = _cands(grid_rows)
+    feat_val = _feat_val(features)
+    df = pairs.select((2 * F.col(label) - 1).alias("__y"), *features).persist()
+    w = F.lit(1).cast("decimal(38,0)")
 
     model_rows = []
     for t in range(1, rounds + 1):
+        df, w = _settle(df, w, "__w", t)
+        wdf = df.select("__y", *features, w.alias("__w"))
         # pass 1: root argmin + total weight (W rides the same agg)
-        joined = df.crossJoin(cands).withColumn("__x", feat_val)
         root = (
-            joined.groupBy("feature", "thr")
+            wdf.select("*", cands)
+            .withColumn("__x", feat_val)
+            .groupBy("feature", "thr")
             .agg(
                 *_d2_region_aggs(),
                 F.sum("__w").alias("wtot"),
@@ -417,10 +442,10 @@ def adaboost_depth2(
         w_tot = int(rt["wtot"])  # exact integer (scale-0 decimal)
 
         # pass 2: both children in one side-partitioned eval
-        side = (_fcol(f0) <= F.lit(t0)).cast("int")
+        side = (F.col(f0) <= F.lit(t0)).cast("int")
         ch = (
-            df.withColumn("__side", side)
-            .crossJoin(cands)
+            wdf.withColumn("__side", side)
+            .select("*", cands)
             .withColumn("__x", feat_val)
             .groupBy("__side", "feature", "thr")
             .agg(*_d2_region_aggs())
@@ -474,23 +499,15 @@ def adaboost_depth2(
             (t, f0, t0, fl, tl, sll, slr, fr, tr, srl, srr, err, alpha)
         )
 
-        h = F.when(
-            _fcol(f0) <= F.lit(t0),
-            F.when(_fcol(fl) <= F.lit(tl), F.lit(sll)).otherwise(F.lit(slr)),
-        ).otherwise(
-            F.when(_fcol(fr) <= F.lit(tr), F.lit(srl)).otherwise(F.lit(srr))
+        h = _walk(
+            {1: (f0, t0), 2: (fl, tl), 3: (fr, tr)},
+            {4: sll, 5: slr, 6: srl, 7: srr},
         )
-        nxt = df.withColumn(
-            "__w",
-            F.col("__w")
-            * F.when(h == F.col("__y"), F.lit(k_corr)).otherwise(
-                F.lit(k_wrong)
-            ).cast("decimal(20,0)"),
-        )
-        nxt = nxt.localCheckpoint(eager=True)
-        df.unpersist()
-        df = nxt
-    return spark.createDataFrame(model_rows, DEPTH2_SCHEMA)
+        w = w * F.when(h == F.col("__y"), F.lit(k_corr)).otherwise(
+            F.lit(k_wrong)
+        ).cast("decimal(20,0)")
+    df.unpersist()
+    return pairs.sparkSession.createDataFrame(model_rows, DEPTH2_SCHEMA)
 
 
 DEPTH2_SCHEMA = (
@@ -743,10 +760,10 @@ def adaboost_depth2_score_sql(
 # decimal region sums within an engine, so grid ties break on the
 # lexical key the same way on both sides.
 #
-# Per round: one pass over the persisted frame (45-candidate crossJoin
-# + one aggregate), one 1-row argmax collect (the BPE-argmax budget),
-# one score-update projection + localCheckpoint. K rounds = K passes —
-# the same 100 TB schedule as the stump fit.
+# Per round: one pass over the persisted frame (the per-row g/h
+# projection, the 45-candidate generator and one aggregate) and one
+# 1-row argmax collect (the BPE-argmax budget); the raw score is a
+# carried Column. K rounds = K passes — the stump fit's schedule.
 
 GB_LAMBDA = 1.0  # reg_lambda: L2 leaf shrinkage
 GB_ALPHA = 0.5  # reg_alpha: L1 leaf soft-threshold
@@ -778,6 +795,53 @@ def _gb_leaf(g: float, h: float, lam: float, alpha: float) -> float:
     # round() drops the zero sign, Python's keeps it; IEEE -0+0 = +0
     # and nonzero values are unchanged.
     return round(-s / (h + lam), 9) + 0.0
+
+
+def _loss_gh(f: Column, loss: str = "logistic") -> tuple[Column, Column]:
+    """Per-row (g, h) of ``loss`` at raw score ``f`` against ``__y``."""
+    y = F.col("__y")
+    if loss == "poisson":
+        mu = F.exp(f)
+        return mu - y, mu
+    if loss == "squared":
+        return f - y, F.lit(1.0)
+    p = 1.0 / (1.0 + F.exp(-f))
+    return p - y, p * (1.0 - p)
+
+
+def _score_step(f: Column, eta: float, leaf: Column) -> Column:
+    """f + η·leaf, rounded at scale 10, NOT 9: η·w (w 9-decimal, η 0.3)
+    is an EXACT 10-decimal value, so a 9-scale round hits a .5 tie on
+    ~10% of updates — where Spark (rounds the shortest decimal string)
+    and DuckDB (rounds the binary value) can disagree. At scale 10 the
+    value sits ON the grid and rounding is an identity in both engines
+    while still quantizing away exp ulp drift."""
+    return F.round(f + F.lit(eta) * leaf, 10)
+
+
+def _region_sums() -> list[Column]:
+    """GL/HL/GR/HR of one candidate: DECIMAL(38,18) sums of the
+    per-row ``__g``/``__h`` on each side of ``__x <= thr``.
+
+    SUM(CASE WHEN .. THEN g END) skips the other side's NULLs, halving
+    the decimal additions; an empty side's NULL sum coalesces to the
+    0.0 a sum of exact zeros would give, so the sums are bit-equal to
+    summing g·[side] over every row."""
+    le = F.col("__x") <= F.col("thr")
+    dec = "decimal(38,18)"
+
+    def s(cond: Column, term: str, name: str) -> Column:
+        return F.coalesce(
+            F.sum(F.when(cond, F.col(term)).cast(dec)).cast("double"),
+            F.lit(0.0),
+        ).alias(name)
+
+    return [
+        s(le, "__g", "gl"),
+        s(le, "__h", "hl"),
+        s(~le, "__g", "gr"),
+        s(~le, "__h", "hr"),
+    ]
 
 
 GB_SCHEMA = (
@@ -814,91 +878,27 @@ def gboost_fit(
       ridge-shrunk mean leaves, the bagging base learner."""
     if loss not in ("logistic", "poisson", "squared"):
         raise ValueError(f"gboost_fit: unknown loss {loss!r}")
-    spark = pairs.sparkSession
-
-    stats = pairs.agg(
-        *[
-            c
-            for f_ in features
-            for c in (
-                F.min(f_).alias(f"mn_{f_}"),
-                F.max(f_).alias(f"mx_{f_}"),
-            )
-        ]
-    ).first()
-    cand_rows = []
-    for f_ in features:
-        if stats[f"mn_{f_}"] is None:
-            raise ValueError(
-                "boosting fit: empty training frame — no"
-                " candidate thresholds can exist"
-            )
-        mn, mx = float(stats[f"mn_{f_}"]), float(stats[f"mx_{f_}"])
-        for k in range(1, grid):
-            cand_rows.append((f_, mn + k * (mx - mn) / float(grid)))
-    cands = F.broadcast(
-        spark.createDataFrame(cand_rows, "feature string, thr double")
-    )
-
-    df = pairs.select(
-        F.col(label).cast("double").alias("__y"), *features
-    ).withColumn("__f", F.lit(0.0))
+    _, grid_rows = _grid(pairs, features, grid)
+    cands = _cands(grid_rows)
+    feat_val = _feat_val(features)
+    df = pairs.select(F.col(label).cast("double").alias("__y"), *features)
     df = df.persist()
-
-    feat_val = F.when(F.col("feature") == features[0], F.col(features[0]))
-    for f_ in features[1:]:
-        feat_val = feat_val.when(F.col("feature") == f_, F.col(f_))
+    f = F.lit(0.0)
 
     gain_sql = _gb_gain_expr(lam, gamma)
-    dec = "decimal(38,18)"
     model_rows = []
     for t in range(1, rounds + 1):
-        if loss == "poisson":
-            mu = F.exp(F.col("__f"))
-            g = mu - F.col("__y")
-            h = mu
-        elif loss == "squared":
-            g = F.col("__f") - F.col("__y")
-            h = F.lit(1.0)
-        else:
-            p = 1.0 / (1.0 + F.exp(-F.col("__f")))
-            g = p - F.col("__y")
-            h = p * (1.0 - p)
-        le = F.col("__x") <= F.col("thr")
-        # r14 (guide §2.3): (g, h) are per-ROW values, so project them
-        # once per row BEFORE the candidate crossJoin — inlined, the
-        # sigmoid/exp subtree was re-evaluated inside all four
-        # aggregate children, i.e. 4·|grid| transcendentals per row
-        # instead of 1. And sum CASE WHEN .. THEN g END (NULL else,
-        # coalesced after) instead of otherwise(0.0): SUM skips NULLs,
-        # halving the DECIMAL(38,18) additions; adding exact zeros
-        # never changed a sum, and the empty-side coalesce restores
-        # the identical 0.0 — bit-equal gl/hl/gr/hr by construction.
-        zero = F.lit(0.0)
+        df, f = _settle(df, f, "__f", t)
+        g, h = _loss_gh(f, loss)
+        # (g, h) are per-ROW values: project them once per row BEFORE
+        # the candidate generator, or the sigmoid/exp subtree would be
+        # re-evaluated for every candidate.
         ev = (
-            df.withColumn("__g", g)
-            .withColumn("__h", h)
-            .crossJoin(cands)
+            df.select(*features, g.alias("__g"), h.alias("__h"))
+            .select("*", cands)
             .withColumn("__x", feat_val)
             .groupBy("feature", "thr")
-            .agg(
-                F.coalesce(
-                    F.sum(F.when(le, F.col("__g")).cast(dec)).cast("double"),
-                    zero,
-                ).alias("gl"),
-                F.coalesce(
-                    F.sum(F.when(le, F.col("__h")).cast(dec)).cast("double"),
-                    zero,
-                ).alias("hl"),
-                F.coalesce(
-                    F.sum(F.when(~le, F.col("__g")).cast(dec)).cast("double"),
-                    zero,
-                ).alias("gr"),
-                F.coalesce(
-                    F.sum(F.when(~le, F.col("__h")).cast(dec)).cast("double"),
-                    zero,
-                ).alias("hr"),
-            )
+            .agg(*_region_sums())
             .withColumn("gain", F.expr(gain_sql))
             .orderBy(F.desc("gain"), F.asc("feature"), F.asc("thr"))
             .limit(1)
@@ -916,21 +916,10 @@ def gboost_fit(
                 w_gt,
             )
         )
-        step = F.lit(eta) * F.when(
-            F.col(best["feature"]) <= F.lit(float(best["thr"])),
-            F.lit(w_le),
-        ).otherwise(F.lit(w_gt))
-        # scale 10, NOT 9: eta*w (w 9-decimal, eta 0.3) is an EXACT
-        # 10-decimal value, so a 9-scale round hits a .5 tie on ~10% of
-        # updates — where Spark (rounds the shortest decimal string)
-        # and DuckDB (rounds the binary value) can disagree. At scale
-        # 10 the value sits ON the grid and rounding is an identity in
-        # both engines while still quantizing away exp ulp drift.
-        nxt = df.withColumn("__f", F.round(F.col("__f") + step, 10))
-        nxt = nxt.localCheckpoint(eager=True)
-        df.unpersist()
-        df = nxt
-    return spark.createDataFrame(model_rows, GB_SCHEMA)
+        split = {1: (best["feature"], float(best["thr"]))}
+        f = _score_step(f, eta, _walk(split, {2: w_le, 3: w_gt}))
+    df.unpersist()
+    return pairs.sparkSession.createDataFrame(model_rows, GB_SCHEMA)
 
 
 def gboost_ctes(
@@ -1128,71 +1117,24 @@ def gboost_depth2_fit(
     i.e. −0.0 in BOTH engines — no special-cased literal, so the
     float sign matches the SQL twin's computed expression). The SQL
     twin's pri-2 fallback arm emits the identical row."""
-    spark = pairs.sparkSession
-
-    stats = pairs.agg(
-        *[
-            c
-            for f_ in features
-            for c in (
-                F.min(f_).alias(f"mn_{f_}"),
-                F.max(f_).alias(f"mx_{f_}"),
-            )
-        ]
-    ).first()
-    cand_rows = []
-    for f_ in features:
-        if stats[f"mn_{f_}"] is None:
-            raise ValueError(
-                "boosting fit: empty training frame — no"
-                " candidate thresholds can exist"
-            )
-        mn, mx = float(stats[f"mn_{f_}"]), float(stats[f"mx_{f_}"])
-        for k in range(1, grid):
-            cand_rows.append((f_, mn + k * (mx - mn) / float(grid)))
-    cands = F.broadcast(
-        spark.createDataFrame(cand_rows, "feature string, thr double")
-    )
-
-    df = pairs.select(
-        F.col(label).cast("double").alias("__y"), *features
-    ).withColumn("__f", F.lit(0.0))
+    _, grid_rows = _grid(pairs, features, grid)
+    cands = _cands(grid_rows)
+    feat_val = _feat_val(features)
+    df = pairs.select(F.col(label).cast("double").alias("__y"), *features)
     df = df.persist()
-
-    feat_val = F.when(F.col("feature") == features[0], F.col(features[0]))
-    for f_ in features[1:]:
-        feat_val = feat_val.when(F.col("feature") == f_, F.col(f_))
+    f = F.lit(0.0)
 
     gain_sql = _gb_gain_expr(lam, gamma)
-    dec = "decimal(38,18)"
     model_rows = []
-
-    def region_aggs(g, h, le):
-        return [
-            F.sum(F.when(le, g).otherwise(0.0).cast(dec))
-            .cast("double")
-            .alias("gl"),
-            F.sum(F.when(le, h).otherwise(0.0).cast(dec))
-            .cast("double")
-            .alias("hl"),
-            F.sum(F.when(~le, g).otherwise(0.0).cast(dec))
-            .cast("double")
-            .alias("gr"),
-            F.sum(F.when(~le, h).otherwise(0.0).cast(dec))
-            .cast("double")
-            .alias("hr"),
-        ]
-
     for t in range(1, rounds + 1):
-        p = 1.0 / (1.0 + F.exp(-F.col("__f")))
-        g = p - F.col("__y")
-        h = p * (1.0 - p)
-        le = F.col("__x") <= F.col("thr")
+        df, f = _settle(df, f, "__f", t)
+        g, h = _loss_gh(f)
+        ghdf = df.select(*features, g.alias("__g"), h.alias("__h"))
         root_ev = (
-            df.crossJoin(cands)
+            ghdf.select("*", cands)
             .withColumn("__x", feat_val)
             .groupBy("feature", "thr")
-            .agg(*region_aggs(g, h, le))
+            .agg(*_region_sums())
             .withColumn("gain", F.expr(gain_sql))
             .orderBy(F.desc("gain"), F.asc("feature"), F.asc("thr"))
             .limit(1)
@@ -1200,14 +1142,14 @@ def gboost_depth2_fit(
         [root] = root_ev.collect()  # 1 row — the argmax budget
         f0, t0 = root["feature"], float(root["thr"])
         evc = (
-            df.withColumn(
+            ghdf.withColumn(
                 "__side",
                 F.when(F.col(f0) <= F.lit(t0), 1).otherwise(0),
             )
-            .crossJoin(cands)
+            .select("*", cands)
             .withColumn("__x", feat_val)
             .groupBy("__side", "feature", "thr")
-            .agg(*region_aggs(g, h, le))
+            .agg(*_region_sums())
             .withColumn("gain", F.expr(gain_sql))
         )
         wnd = Window.partitionBy("__side").orderBy(
@@ -1255,27 +1197,13 @@ def gboost_depth2_fit(
                 w_rr,
             )
         )
-        step = F.lit(eta) * F.when(
-            F.col(f0) <= F.lit(t0),
-            F.when(F.col(fl) <= F.lit(tl), F.lit(w_ll)).otherwise(
-                F.lit(w_lr)
-            ),
-        ).otherwise(
-            F.when(F.col(fr) <= F.lit(tr), F.lit(w_rl)).otherwise(
-                F.lit(w_rr)
-            )
+        step = _walk(
+            {1: (f0, t0), 2: (fl, tl), 3: (fr, tr)},
+            {4: w_ll, 5: w_lr, 6: w_rl, 7: w_rr},
         )
-        # scale 10, NOT 9: eta*w (w 9-decimal, eta 0.3) is an EXACT
-        # 10-decimal value, so a 9-scale round hits a .5 tie on ~10% of
-        # updates — where Spark (rounds the shortest decimal string)
-        # and DuckDB (rounds the binary value) can disagree. At scale
-        # 10 the value sits ON the grid and rounding is an identity in
-        # both engines while still quantizing away exp ulp drift.
-        nxt = df.withColumn("__f", F.round(F.col("__f") + step, 10))
-        nxt = nxt.localCheckpoint(eager=True)
-        df.unpersist()
-        df = nxt
-    return spark.createDataFrame(model_rows, GB2_SCHEMA)
+        f = _score_step(f, eta, step)
+    df.unpersist()
+    return pairs.sparkSession.createDataFrame(model_rows, GB2_SCHEMA)
 
 
 def gboost_depth2_ctes(

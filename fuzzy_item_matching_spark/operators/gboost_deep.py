@@ -37,15 +37,20 @@ stochastic dimensions — completing the XGBoost capability shape:
 
 Replayability follows gboost_fit's discipline verbatim: DECIMAL(38,18)
 region sums, the ONE shared gain SQL string, round-to-9 leaves, and
-the round-to-10 score update. The DuckDB twin unrolls one CTE chain
-per (round, level, node): per-node best CTEs carry a 3-arm priority
-UNION (split found / unsplittable leaf from node totals / empty node),
-mirroring the Spark fallbacks bit-for-bit.
+the round-to-10 score update, carried as a Column as in gboost_fit.
+Both fits share one round loop (:func:`_fit_trees`) and differ only in
+how a level's candidate regions are summed. The DuckDB twin unrolls
+one CTE chain per (round, level, node): per-node best CTEs carry a
+3-arm priority UNION (split found / unsplittable leaf from node totals
+/ empty node), mirroring the Spark fallbacks bit-for-bit.
 """
 
 from __future__ import annotations
 
 import hashlib
+from functools import reduce
+from operator import or_
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -57,8 +62,16 @@ from fuzzy_item_matching_spark.operators.boosting import (
     GB_GAMMA,
     GB_LAMBDA,
     GRID,
+    _cands,
+    _feat_val,
     _gb_gain_expr,
     _gb_leaf,
+    _grid,
+    _loss_gh,
+    _region_sums,
+    _score_step,
+    _settle,
+    _walk,
 )
 
 GBD_SCHEMA = (
@@ -114,6 +127,168 @@ def _u_sql(row_key: str, seed_t: int) -> str:
     )
 
 
+def _fit_trees(
+    name: str,
+    level_ev: Callable[..., DataFrame],
+    pairs: DataFrame,
+    features: list[str],
+    label: str,
+    rounds: int,
+    depth: int,
+    grid: int,
+    lam: float,
+    alpha: float,
+    gamma: float,
+    eta: float,
+    subsample: float,
+    colsample: float,
+    colsample_bynode: float,
+    min_child_weight: float,
+    row_key: str | None,
+    seed: int,
+) -> DataFrame:
+    """The round loop of :func:`gboost_deep_fit` and
+    :func:`gboost_hist_fit` (``name``), which pass their own arguments
+    through in signature order. ``level_ev(base, subset, ranges,
+    grid_rows, grid)`` sums one level's candidate regions
+    (__node, feature, thr, gl, hl, gr, hr) over ``subset``'s features
+    from ``base``'s per-row (features, __g, __h, __node)."""
+    from fuzzy_item_matching_spark.functions.sampling import keyed_uniform
+
+    if subsample < 1.0 and row_key is None:
+        raise ValueError(f"{name}: subsample < 1 requires row_key")
+    ranges, grid_rows = _grid(pairs, features, grid)
+    keep = [F.col(label).cast("double").alias("__y"), *features]
+    if row_key is not None:
+        keep.append(F.col(row_key).cast("string").alias("__k"))
+    df = pairs.select(*keep).persist()
+    f = F.lit(0.0)
+
+    gain_sql = _gb_gain_expr(lam, gamma)
+    dec = "decimal(38,18)"
+    mcw = float(min_child_weight)
+    model_rows = []
+    for t in range(1, rounds + 1):
+        df, f = _settle(df, f, "__f", t)
+        g, h = _loss_gh(f)
+        if subsample < 1.0:
+            ind = (
+                F.when(
+                    keyed_uniform(F.col("__k"), seed=seed * 1000 + t)
+                    < F.lit(subsample),
+                    1.0,
+                )
+                .otherwise(0.0)
+            )
+            g, h = g * ind, h * ind
+        # every level reads g/h (the oracle's gh CTE), so they are
+        # materialized once per round rather than re-derived from the
+        # carried score and its sigmoid at each of the depth passes.
+        ghdf = df.select(
+            *features, g.alias("__g"), h.alias("__h")
+        ).localCheckpoint(eager=True)
+
+        picks: dict[int, dict] = {}
+        for level in range(depth):
+            nodes = range(2**level, 2 ** (level + 1))
+            splits = {n: (p["feature"], p["thr"]) for n, p in picks.items()}
+            node = _walk(splits, {n: n for n in nodes})
+            base = ghdf.withColumn("__node", node)
+            subset = col_subset(features, t, level, colsample, seed)
+            ev = level_ev(base, subset, ranges, grid_rows, grid)
+            ev = ev.withColumn("gain", F.expr(gain_sql))
+            # colsample_bynode: each heap node draws its own subset
+            # FROM the by-level survivors. The (node, feature) filter is
+            # on group keys, so Spark pushes it below the aggregate
+            # (disallowed combos never aggregate) and it keeps exactly
+            # the candidates the oracle's per-node IN-list keeps.
+            node_subsets: dict[int, list[str]] | None = None
+            if colsample_bynode < 1.0:
+                node_subsets = {
+                    n: col_subset(
+                        subset, t, level, colsample_bynode, seed, node=n
+                    )
+                    for n in nodes
+                }
+                allow = [
+                    (F.col("__node") == n) & F.col("feature").isin(sub)
+                    for n, sub in node_subsets.items()
+                ]
+                ev = ev.filter(reduce(or_, allow))
+            if mcw > 0.0:
+                ev = ev.filter(
+                    (F.col("hl") >= F.lit(mcw)) & (F.col("hr") >= F.lit(mcw))
+                )
+            wnd = Window.partitionBy("__node").orderBy(
+                F.desc("gain"), F.asc("feature"), F.asc("thr")
+            )
+            best = {
+                r["__node"]: r
+                for r in ev.withColumn("rn", F.row_number().over(wnd))
+                .filter(F.col("rn") == 1)
+                .collect()  # ≤ 2^level rows
+            }
+            # Node totals feed ONLY the unsplittable-node fallback, so
+            # the extra full-data aggregate runs lazily — levels where
+            # every node found a surviving split (the common case) cost
+            # one candidate aggregate, not two. The oracle's nt CTEs
+            # always exist but are likewise only read by fallback arms.
+            tot: dict[int, dict] = {}
+            if any(n not in best for n in nodes):
+                tot = {
+                    r["__node"]: r
+                    for r in base.groupBy("__node")
+                    .agg(
+                        F.sum(F.col("__g").cast(dec)).cast("double")
+                        .alias("gt_"),
+                        F.sum(F.col("__h").cast(dec)).cast("double")
+                        .alias("ht_"),
+                    )
+                    .collect()  # ≤ 2^level rows
+                }
+            for n in nodes:
+                if n in best:
+                    b = best[n]
+                    picks[n] = {
+                        "feature": b["feature"],
+                        "thr": float(b["thr"]),
+                        "gain": round(b["gain"], 9),
+                        "w_le": _gb_leaf(b["gl"], b["hl"], lam, alpha),
+                        "w_gt": _gb_leaf(b["gr"], b["hr"], lam, alpha),
+                    }
+                    continue
+                if level == 0:
+                    sub0 = node_subsets[n] if node_subsets else subset
+                    pf, pt = sub0[0], ranges[sub0[0]][0]
+                else:
+                    pf, pt = picks[n // 2]["feature"], picks[n // 2]["thr"]
+                if n in tot:
+                    w = _gb_leaf(tot[n]["gt_"], tot[n]["ht_"], lam, alpha)
+                else:
+                    w = _gb_leaf(0.0, 0.0, lam, alpha)
+                picks[n] = {
+                    "feature": pf,
+                    "thr": pt,
+                    "gain": 0.0,
+                    "w_le": w,
+                    "w_gt": w,
+                }
+
+        for n in sorted(picks):
+            pk = picks[n]
+            model_rows.append(
+                (t, n, pk["feature"], pk["thr"], pk["gain"], pk["w_le"], pk["w_gt"])
+            )
+        splits = {n: (p["feature"], p["thr"]) for n, p in picks.items()}
+        leaves = {
+            m: picks[m // 2]["w_gt" if m % 2 else "w_le"]
+            for m in range(2**depth, 2 ** (depth + 1))
+        }
+        f = _score_step(f, eta, _walk(splits, leaves))
+    df.unpersist()
+    return pairs.sparkSession.createDataFrame(model_rows, GBD_SCHEMA)
+
+
 def gboost_deep_fit(
     pairs: DataFrame,
     features: list[str],
@@ -137,222 +312,32 @@ def gboost_deep_fit(
     w_gt) with one row per heap node 1..2^depth−1 per round. Leaf
     weights are meaningful at the last level (w_le = w_gt on
     unsplittable/empty nodes); a scorer walks the split path and adds
-    η·w_leaf. Plan per round: depth × (one node-totals aggregate +
-    one candidate-grid aggregate + a ≤2^level-row collect) over the
-    persisted frame — the argmax collect budget grows with the TREE,
-    never the data."""
-    from fuzzy_item_matching_spark.functions.sampling import keyed_uniform
+    η·w_leaf. Plan per round: one g/h checkpoint, then depth × (one
+    candidate-grid aggregate + a ≤2^level-row collect, plus a
+    node-totals aggregate only on levels with an unsplittable node) —
+    the argmax collect budget grows with the TREE, never the data."""
+    return _fit_trees(
+        "gboost_deep_fit", _exact_level, pairs, features, label, rounds,
+        depth, grid, lam, alpha, gamma, eta, subsample, colsample,
+        colsample_bynode, min_child_weight, row_key, seed,
+    )
 
-    if subsample < 1.0 and row_key is None:
-        raise ValueError("gboost_deep_fit: subsample < 1 requires row_key")
-    spark = pairs.sparkSession
 
-    stats = pairs.agg(
-        *[
-            c
-            for f_ in features
-            for c in (
-                F.min(f_).alias(f"mn_{f_}"),
-                F.max(f_).alias(f"mx_{f_}"),
-            )
-        ]
-    ).first()
-    cand_rows = []
-    for f_ in features:
-        if stats[f"mn_{f_}"] is None:
-            raise ValueError(
-                "boosting fit: empty training frame — no"
-                " candidate thresholds can exist"
-            )
-        mn, mx = float(stats[f"mn_{f_}"]), float(stats[f"mx_{f_}"])
-        for k in range(1, grid):
-            cand_rows.append((f_, mn + k * (mx - mn) / float(grid)))
-    cands_all = spark.createDataFrame(cand_rows, "feature string, thr double")
-
-    keep = [F.col(label).cast("double").alias("__y"), *features]
-    if row_key is not None:
-        keep.append(F.col(row_key).cast("string").alias("__k"))
-    df = pairs.select(*keep).withColumn("__f", F.lit(0.0))
-    df = df.persist()
-
-    feat_val = F.when(F.col("feature") == features[0], F.col(features[0]))
-    for f_ in features[1:]:
-        feat_val = feat_val.when(F.col("feature") == f_, F.col(f_))
-
-    gain_sql = _gb_gain_expr(lam, gamma)
-    dec = "decimal(38,18)"
-    mcw = float(min_child_weight)
-    model_rows = []
-    for t in range(1, rounds + 1):
-        p = 1.0 / (1.0 + F.exp(-F.col("__f")))
-        if subsample < 1.0:
-            ind = (
-                F.when(
-                    keyed_uniform(F.col("__k"), seed=seed * 1000 + t)
-                    < F.lit(subsample),
-                    1.0,
-                )
-                .otherwise(0.0)
-            )
-            g_expr = (p - F.col("__y")) * ind
-            h_expr = (p * (1.0 - p)) * ind
-        else:
-            g_expr = p - F.col("__y")
-            h_expr = p * (1.0 - p)
-        # materialize g/h BEFORE the candidate crossJoin (the oracle's
-        # gh CTE): otherwise the sigmoid re-evaluates once per
-        # candidate row — grid×features times per source row.
-        ghdf = df.select(
-            *features, g_expr.alias("__g"), h_expr.alias("__h")
-        ).localCheckpoint(eager=True)
-        g, h = F.col("__g"), F.col("__h")
-        le = F.col("__x") <= F.col("thr")
-
-        picks: dict[int, dict] = {}
-        for level in range(depth):
-
-            def _node(n: int, lc: int):
-                if lc == level:
-                    return F.lit(n)
-                pk = picks[n]
-                return F.when(
-                    F.col(pk["feature"]) <= F.lit(pk["thr"]),
-                    _node(2 * n, lc + 1),
-                ).otherwise(_node(2 * n + 1, lc + 1))
-
-            base = ghdf.withColumn("__node", _node(1, 0))
-            subset = col_subset(features, t, level, colsample, seed)
-            cands = F.broadcast(
-                cands_all.filter(F.col("feature").isin(subset))
-            )
-            # colsample_bynode: each heap node draws its own subset
-            # FROM the by-level survivors; the (node, feature) filter
-            # sits on group keys BEFORE the aggregate (pushed into the
-            # broadcast join — disallowed combos never aggregate), so
-            # it matches the oracle's post-agg per-node IN-list
-            # bit-for-bit.
-            node_subsets: dict[int, list[str]] | None = None
-            ev_src = base.crossJoin(cands).withColumn("__x", feat_val)
-            if colsample_bynode < 1.0:
-                node_subsets = {
-                    n: col_subset(
-                        subset, t, level, colsample_bynode, seed, node=n
-                    )
-                    for n in range(2**level, 2 ** (level + 1))
-                }
-                allow = None
-                for n, sub_n in node_subsets.items():
-                    c = (F.col("__node") == n) & F.col("feature").isin(
-                        sub_n
-                    )
-                    allow = c if allow is None else (allow | c)
-                ev_src = ev_src.filter(allow)
-            ev = (
-                ev_src
-                .groupBy("__node", "feature", "thr")
-                .agg(
-                    F.sum(F.when(le, g).otherwise(0.0).cast(dec))
-                    .cast("double")
-                    .alias("gl"),
-                    F.sum(F.when(le, h).otherwise(0.0).cast(dec))
-                    .cast("double")
-                    .alias("hl"),
-                    F.sum(F.when(~le, g).otherwise(0.0).cast(dec))
-                    .cast("double")
-                    .alias("gr"),
-                    F.sum(F.when(~le, h).otherwise(0.0).cast(dec))
-                    .cast("double")
-                    .alias("hr"),
-                )
-                .withColumn("gain", F.expr(gain_sql))
-            )
-            if mcw > 0.0:
-                ev = ev.filter(
-                    (F.col("hl") >= F.lit(mcw)) & (F.col("hr") >= F.lit(mcw))
-                )
-            wnd = Window.partitionBy("__node").orderBy(
-                F.desc("gain"), F.asc("feature"), F.asc("thr")
-            )
-            best = {
-                r["__node"]: r
-                for r in ev.withColumn("rn", F.row_number().over(wnd))
-                .filter(F.col("rn") == 1)
-                .collect()  # ≤ 2^level rows
-            }
-            # Node totals feed ONLY the unsplittable-node fallback, so
-            # the extra full-data aggregate runs lazily — levels where
-            # every node found a surviving split (the common case) cost
-            # one candidate aggregate, not two. The oracle's nt CTEs
-            # always exist but are likewise only read by fallback arms.
-            tot: dict[int, dict] = {}
-            if any(
-                n not in best
-                for n in range(2**level, 2 ** (level + 1))
-            ):
-                tot = {
-                    r["__node"]: r
-                    for r in base.groupBy("__node")
-                    .agg(
-                        F.sum(g.cast(dec)).cast("double").alias("gt_"),
-                        F.sum(h.cast(dec)).cast("double").alias("ht_"),
-                    )
-                    .collect()  # ≤ 2^level rows
-                }
-            for n in range(2**level, 2 ** (level + 1)):
-                if n in best:
-                    b = best[n]
-                    picks[n] = {
-                        "feature": b["feature"],
-                        "thr": float(b["thr"]),
-                        "gain": round(b["gain"], 9),
-                        "w_le": _gb_leaf(b["gl"], b["hl"], lam, alpha),
-                        "w_gt": _gb_leaf(b["gr"], b["hr"], lam, alpha),
-                    }
-                    continue
-                if level == 0:
-                    sub0 = node_subsets[n] if node_subsets else subset
-                    pf = sub0[0]
-                    pt = float(stats[f"mn_{sub0[0]}"])
-                else:
-                    pf = picks[n // 2]["feature"]
-                    pt = picks[n // 2]["thr"]
-                if n in tot:
-                    w = _gb_leaf(tot[n]["gt_"], tot[n]["ht_"], lam, alpha)
-                else:
-                    w = _gb_leaf(0.0, 0.0, lam, alpha)
-                picks[n] = {
-                    "feature": pf,
-                    "thr": pt,
-                    "gain": 0.0,
-                    "w_le": w,
-                    "w_gt": w,
-                }
-
-        for n in sorted(picks):
-            pk = picks[n]
-            model_rows.append(
-                (t, n, pk["feature"], pk["thr"], pk["gain"], pk["w_le"], pk["w_gt"])
-            )
-
-        def _step(n: int, lc: int):
-            pk = picks[n]
-            go_le = F.col(pk["feature"]) <= F.lit(pk["thr"])
-            if lc == depth - 1:
-                return F.when(go_le, F.lit(pk["w_le"])).otherwise(
-                    F.lit(pk["w_gt"])
-                )
-            return F.when(go_le, _step(2 * n, lc + 1)).otherwise(
-                _step(2 * n + 1, lc + 1)
-            )
-
-        # scale 10, NOT 9 — see gboost_fit's tie-avoidance note.
-        nxt = df.withColumn(
-            "__f", F.round(F.col("__f") + F.lit(eta) * _step(1, 0), 10)
-        )
-        nxt = nxt.localCheckpoint(eager=True)
-        df.unpersist()
-        df = nxt
-    return pairs.sparkSession.createDataFrame(model_rows, GBD_SCHEMA)
+def _exact_level(
+    base: DataFrame,
+    subset: list[str],
+    ranges: dict[str, tuple[float, float]],
+    grid_rows: list[tuple[str, float]],
+    grid: int,
+) -> DataFrame:
+    """gboost_deep_fit's level: every (row, candidate) pair of the
+    subset's grid, region sums per (node, feature, thr)."""
+    return (
+        base.select("*", _cands([c for c in grid_rows if c[0] in subset]))
+        .withColumn("__x", _feat_val(subset))
+        .groupBy("__node", "feature", "thr")
+        .agg(*_region_sums())
+    )
 
 
 def gboost_deep_ctes(
@@ -615,7 +600,7 @@ def gboost_hist_fit(
     """:func:`gboost_deep_fit` with HISTOGRAM split finding — the
     reference XGBoost's ``tree_method='hist'``
     (`03_Train & Deploy Model.py:172`) and the booster's true 100 TB
-    shape: instead of a rows × features × grid candidate crossJoin
+    shape: instead of a rows × features × grid candidate expansion
     (exact comparisons, O(n·f·G) DECIMAL terms per level), each row
     lands in ONE bucket per feature (ceil on the fixed grid), the
     per-(node, feature, bucket) g/h histogram aggregates in one
@@ -628,257 +613,87 @@ def gboost_hist_fit(
     Same model contract as gboost_deep_fit (round, node, feature,
     thr, gain, w_le, w_gt); unsplittable/empty nodes fall back
     identically."""
-    spark = pairs.sparkSession
+    return _fit_trees(
+        "gboost_hist_fit", _hist_level, pairs, features, label, rounds,
+        depth, grid, lam, alpha, gamma, eta, subsample, colsample,
+        colsample_bynode, min_child_weight, row_key, seed,
+    )
 
-    stats = pairs.agg(
-        *[
-            c
-            for f_ in features
-            for c in (
-                F.min(f_).alias(f"mn_{f_}"),
-                F.max(f_).alias(f"mx_{f_}"),
-            )
-        ]
-    ).first()
-    mn: dict[str, float] = {}
-    step: dict[str, float] = {}
-    for f_ in features:
-        if stats[f"mn_{f_}"] is None:
-            raise ValueError(
-                "boosting fit: empty training frame — no"
-                " candidate thresholds can exist"
-            )
-        mn[f_] = float(stats[f"mn_{f_}"])
-        step[f_] = (float(stats[f"mx_{f_}"]) - mn[f_]) / float(grid)
 
-    if subsample < 1.0 and row_key is None:
-        raise ValueError("gboost_hist_fit: subsample < 1 requires row_key")
-    keep = [F.col(label).cast("double").alias("__y"), *features]
-    if row_key is not None:
-        keep.append(F.col(row_key).cast("string").alias("__k"))
-    df = pairs.select(*keep).withColumn("__f", F.lit(0.0))
-    df = df.persist()
-
-    gain_sql = _gb_gain_expr(lam, gamma)
+def _hist_level(
+    base: DataFrame,
+    subset: list[str],
+    ranges: dict[str, tuple[float, float]],
+    grid_rows: list[tuple[str, float]],
+    grid: int,
+) -> DataFrame:
+    """gboost_hist_fit's level: per-(node, feature, bucket) g/h
+    histograms, DECIMAL prefix sums, occupied-boundary thresholds."""
+    step = {f_: (mx - mn) / float(grid) for f_, (mn, mx) in ranges.items()}
     dec = "decimal(38,18)"
-    mcw = float(min_child_weight)
-    model_rows = []
-    for t in range(1, rounds + 1):
-        from fuzzy_item_matching_spark.functions.sampling import (
-            keyed_uniform,
+    fb = F.inline(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(f_).alias("feature"),
+                    _bucket_expr_spark(
+                        F.col(f_), ranges[f_][0], step[f_], grid
+                    ).alias("bucket"),
+                )
+                for f_ in subset
+            ]
         )
-
-        p = 1.0 / (1.0 + F.exp(-F.col("__f")))
-        if subsample < 1.0:
-            ind = (
-                F.when(
-                    keyed_uniform(F.col("__k"), seed=seed * 1000 + t)
-                    < F.lit(subsample),
-                    1.0,
-                )
-                .otherwise(0.0)
-            )
-            g_expr = (p - F.col("__y")) * ind
-            h_expr = (p * (1.0 - p)) * ind
-        else:
-            g_expr = p - F.col("__y")
-            h_expr = p * (1.0 - p)
-        ghdf = df.select(
-            *features,
-            g_expr.alias("__g"),
-            h_expr.alias("__h"),
-        ).localCheckpoint(eager=True)
-
-        picks: dict[int, dict] = {}
-        for level in range(depth):
-
-            def _node(n: int, lc: int):
-                if lc == level:
-                    return F.lit(n)
-                pk = picks[n]
-                return F.when(
-                    F.col(pk["feature"]) <= F.lit(pk["thr"]),
-                    _node(2 * n, lc + 1),
-                ).otherwise(_node(2 * n + 1, lc + 1))
-
-            base = ghdf.withColumn("__node", _node(1, 0))
-            subset = col_subset(features, t, level, colsample, seed)
-            fb = F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(f_).alias("feature"),
-                            _bucket_expr_spark(
-                                F.col(f_), mn[f_], step[f_], grid
-                            ).alias("bucket"),
-                        )
-                        for f_ in subset
-                    ]
-                )
-            ).alias("fb")
-            hist_src = base.select("__node", "__g", "__h", fb).select(
-                "__node",
-                F.col("fb.feature").alias("feature"),
-                F.col("fb.bucket").alias("bucket"),
-                "__g",
-                "__h",
-            )
-            # colsample_bynode (the gboost_deep_fit discipline): each
-            # node's own draw FROM the by-level survivors prunes whole
-            # (node, feature) histogram partitions pre-aggregate; the
-            # oracle's per-node IN-list drops the same partitions
-            # post-ev — prefix sums are per-(node, feature), so the
-            # surviving candidates are bit-for-bit identical.
-            node_subsets: dict[int, list[str]] | None = None
-            if colsample_bynode < 1.0:
-                node_subsets = {
-                    n: col_subset(
-                        subset, t, level, colsample_bynode, seed, node=n
-                    )
-                    for n in range(2**level, 2 ** (level + 1))
-                }
-                allow = None
-                for n, sub_n in node_subsets.items():
-                    c = (F.col("__node") == n) & F.col("feature").isin(
-                        sub_n
-                    )
-                    allow = c if allow is None else (allow | c)
-                hist_src = hist_src.filter(allow)
-            hist = (
-                hist_src
-                .groupBy("__node", "feature", "bucket")
-                .agg(
-                    F.sum(F.col("__g").cast(dec)).alias("gb"),
-                    F.sum(F.col("__h").cast(dec)).alias("hb"),
-                )
-            )
-            wpre = (
-                Window.partitionBy("__node", "feature")
-                .orderBy("bucket")
-                .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            )
-            # same partition AND order as wpre so both frames share one
-            # sort (decimal sums are order-insensitive either way)
-            wall = (
-                Window.partitionBy("__node", "feature")
-                .orderBy("bucket")
-                .rowsBetween(
-                    Window.unboundedPreceding, Window.unboundedFollowing
-                )
-            )
-            cum = hist.select(
-                "__node",
-                "feature",
-                "bucket",
-                F.sum("gb").over(wpre).alias("glp"),
-                F.sum("hb").over(wpre).alias("hlp"),
-                F.sum("gb").over(wall).alias("gtp"),
-                F.sum("hb").over(wall).alias("htp"),
-            )
-            ev = cum.filter(F.col("bucket") <= grid - 1).select(
-                "__node",
-                "feature",
-                "bucket",
-                F.col("glp").cast("double").alias("gl"),
-                F.col("hlp").cast("double").alias("hl"),
-                (F.col("gtp") - F.col("glp")).cast("double").alias("gr"),
-                (F.col("htp") - F.col("hlp")).cast("double").alias("hr"),
-            )
-            thr_col = None
-            for f_ in subset:
-                cond = F.col("feature") == f_
-                val = F.lit(mn[f_]) + F.col("bucket") * F.lit(step[f_])
-                thr_col = (
-                    F.when(cond, val)
-                    if thr_col is None
-                    else thr_col.when(cond, val)
-                )
-            ev = ev.withColumn("thr", thr_col).withColumn(
-                "gain", F.expr(gain_sql)
-            )
-            if mcw > 0.0:
-                ev = ev.filter(
-                    (F.col("hl") >= F.lit(mcw)) & (F.col("hr") >= F.lit(mcw))
-                )
-            wnd = Window.partitionBy("__node").orderBy(
-                F.desc("gain"), F.asc("feature"), F.asc("thr")
-            )
-            best = {
-                r["__node"]: r
-                for r in ev.withColumn("rn", F.row_number().over(wnd))
-                .filter(F.col("rn") == 1)
-                .collect()  # ≤ 2^level rows
-            }
-            tot: dict[int, dict] = {}
-            if any(
-                n not in best
-                for n in range(2**level, 2 ** (level + 1))
-            ):
-                tot = {
-                    r["__node"]: r
-                    for r in base.groupBy("__node")
-                    .agg(
-                        F.sum(F.col("__g").cast(dec))
-                        .cast("double")
-                        .alias("gt_"),
-                        F.sum(F.col("__h").cast(dec))
-                        .cast("double")
-                        .alias("ht_"),
-                    )
-                    .collect()
-                }
-            for n in range(2**level, 2 ** (level + 1)):
-                if n in best:
-                    b = best[n]
-                    picks[n] = {
-                        "feature": b["feature"],
-                        "thr": float(b["thr"]),
-                        "gain": round(b["gain"], 9),
-                        "w_le": _gb_leaf(b["gl"], b["hl"], lam, alpha),
-                        "w_gt": _gb_leaf(b["gr"], b["hr"], lam, alpha),
-                    }
-                    continue
-                if level == 0:
-                    sub0 = node_subsets[n] if node_subsets else subset
-                    pf, pt = sub0[0], mn[sub0[0]]
-                else:
-                    pf, pt = picks[n // 2]["feature"], picks[n // 2]["thr"]
-                if n in tot:
-                    w = _gb_leaf(tot[n]["gt_"], tot[n]["ht_"], lam, alpha)
-                else:
-                    w = _gb_leaf(0.0, 0.0, lam, alpha)
-                picks[n] = {
-                    "feature": pf,
-                    "thr": pt,
-                    "gain": 0.0,
-                    "w_le": w,
-                    "w_gt": w,
-                }
-
-        for n in sorted(picks):
-            pk = picks[n]
-            model_rows.append(
-                (t, n, pk["feature"], pk["thr"], pk["gain"], pk["w_le"], pk["w_gt"])
-            )
-
-        def _step(n: int, lc: int):
-            pk = picks[n]
-            go_le = F.col(pk["feature"]) <= F.lit(pk["thr"])
-            if lc == depth - 1:
-                return F.when(go_le, F.lit(pk["w_le"])).otherwise(
-                    F.lit(pk["w_gt"])
-                )
-            return F.when(go_le, _step(2 * n, lc + 1)).otherwise(
-                _step(2 * n + 1, lc + 1)
-            )
-
-        nxt = df.withColumn(
-            "__f", F.round(F.col("__f") + F.lit(eta) * _step(1, 0), 10)
+    )
+    hist = (
+        base.select("__node", "__g", "__h", fb)
+        .groupBy("__node", "feature", "bucket")
+        .agg(
+            F.sum(F.col("__g").cast(dec)).alias("gb"),
+            F.sum(F.col("__h").cast(dec)).alias("hb"),
         )
-        nxt = nxt.localCheckpoint(eager=True)
-        df.unpersist()
-        df = nxt
-    return pairs.sparkSession.createDataFrame(model_rows, GBD_SCHEMA)
+    )
+    wpre = (
+        Window.partitionBy("__node", "feature")
+        .orderBy("bucket")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    # same partition AND order as wpre so both frames share one
+    # sort (decimal sums are order-insensitive either way)
+    wall = (
+        Window.partitionBy("__node", "feature")
+        .orderBy("bucket")
+        .rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing
+        )
+    )
+    cum = hist.select(
+        "__node",
+        "feature",
+        "bucket",
+        F.sum("gb").over(wpre).alias("glp"),
+        F.sum("hb").over(wpre).alias("hlp"),
+        F.sum("gb").over(wall).alias("gtp"),
+        F.sum("hb").over(wall).alias("htp"),
+    )
+    thr_col = None
+    for f_ in subset:
+        cond = F.col("feature") == f_
+        val = F.lit(ranges[f_][0]) + F.col("bucket") * F.lit(step[f_])
+        thr_col = (
+            F.when(cond, val)
+            if thr_col is None
+            else thr_col.when(cond, val)
+        )
+    return cum.filter(F.col("bucket") <= grid - 1).select(
+        "__node",
+        "feature",
+        "bucket",
+        F.col("glp").cast("double").alias("gl"),
+        F.col("hlp").cast("double").alias("hl"),
+        (F.col("gtp") - F.col("glp")).cast("double").alias("gr"),
+        (F.col("htp") - F.col("hlp")).cast("double").alias("hr"),
+        thr_col.alias("thr"),
+    )
 
 
 def gboost_hist_ctes(

@@ -11,6 +11,14 @@ so the same contract is a thin store over ``PipelineModel.save``:
     aliases live IN the per-version meta — one file per version, no
     global state to corrupt; stage lookup scans the (few) versions.
 
+Crash and concurrency safety: a register claims ``v<N>`` with an
+exclusive ``mkdir`` (a concurrent register gets the next N), and a
+version without a ``meta.json`` yet is invisible. Metas are written
+to a temp file and renamed into place, so a reader never sees a torn
+one. A promote marks the new holder before it archives the old one,
+so a crash in between leaves two holders and ``resolve`` serves the
+higher version — never none.
+
 Local paths here; on a cluster ``root`` is any Hadoop-FS URI that
 ``save`` accepts (dbfs:/, s3://...) — the JSON sidecars would move to
 the same FS via the JVM FileSystem API.
@@ -21,6 +29,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import tempfile
 
 from pyspark.ml import PipelineModel
 
@@ -52,9 +61,11 @@ class ModelRegistry:
         if not os.path.isdir(d):
             return []
         out = []
-        for entry in sorted(os.listdir(d)):
-            if re.fullmatch(r"v\d+", entry):
-                with open(os.path.join(d, entry, "meta.json")) as f:
+        for entry in os.listdir(d):
+            meta = os.path.join(d, entry, "meta.json")
+            # a claimed version has no meta until its register finishes
+            if re.fullmatch(r"v\d+", entry) and os.path.exists(meta):
+                with open(meta) as f:
                     out.append(json.load(f))
         return sorted(out, key=lambda m: m["version"])
 
@@ -63,23 +74,31 @@ class ModelRegistry:
         Returns the new version number."""
         vs = self.versions(name)
         version = (vs[-1]["version"] + 1) if vs else 1
+        os.makedirs(self._name_dir(name), exist_ok=True)
+        while True:
+            try:
+                os.mkdir(os.path.dirname(self._meta_path(name, version)))
+                break
+            except FileExistsError:  # claimed by a concurrent register
+                version += 1
         model.write().overwrite().save(self._model_path(name, version))
         self._write_meta(name, {"version": version, "stage": NONE})
         return version
 
     def promote(self, name: str, version: int, stage: str = PRODUCTION) -> None:
-        """Move ``version`` to ``stage``; any version currently holding
-        that stage is archived first (the reference's archive-then-
-        promote flow)."""
+        """Move ``version`` to ``stage`` and archive any other version
+        holding it (the reference's archive-then-promote flow). The new
+        holder is written first, so a crash before the archive writes
+        still leaves ``stage`` resolvable."""
         metas = {m["version"]: m for m in self.versions(name)}
         if version not in metas:
             raise ValueError(f"{name} v{version} is not registered")
+        metas[version]["stage"] = stage
+        self._write_meta(name, metas[version])
         for m in metas.values():
             if m["stage"] == stage and m["version"] != version:
                 m["stage"] = ARCHIVED
                 self._write_meta(name, m)
-        metas[version]["stage"] = stage
-        self._write_meta(name, metas[version])
 
     def resolve(self, name: str, version: int | None = None,
                 stage: str | None = None) -> int:
@@ -116,6 +135,13 @@ class ModelRegistry:
 
     def _write_meta(self, name: str, meta: dict) -> None:
         path = self._meta_path(name, meta["version"])
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        with open(path, "w") as f:
-            json.dump(meta, f)
+        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".tmp")
+        try:
+            with os.fdopen(fd, "w") as f:
+                json.dump(meta, f)
+                f.flush()
+                os.fsync(f.fileno())
+            os.replace(tmp, path)
+        except BaseException:
+            os.unlink(tmp)
+            raise

@@ -165,6 +165,90 @@ def test_model_registry_load_memoized_until_promote(spark, tmp_path):
     assert served(reg) == 3
 
 
+def _const_model(spark, k: int):
+    from pyspark.ml import Pipeline
+    from pyspark.ml.feature import SQLTransformer
+
+    stmt = f"SELECT {k} AS k FROM __THIS__"
+    return Pipeline(stages=[SQLTransformer(statement=stmt)]).fit(spark.range(1))
+
+
+def test_model_registry_promote_survives_failed_meta_write(
+    spark, tmp_path, monkeypatch
+):
+    """A promote whose second meta write dies half-way (the file open,
+    nothing written) leaves every meta readable and the stage still
+    resolvable: the new holder is written first, and a meta is only
+    ever replaced whole."""
+    from fuzzy_item_matching_spark.operators import registry as registry_mod
+    from fuzzy_item_matching_spark.operators.registry import (
+        PRODUCTION,
+        ModelRegistry,
+    )
+
+    reg = ModelRegistry(str(tmp_path / "registry"))
+    reg.register("m", _const_model(spark, 1))
+    reg.register("m", _const_model(spark, 2))
+    reg.promote("m", 1)
+
+    real_dump = registry_mod.json.dump
+    calls = []
+
+    def dump(obj, fh):
+        calls.append(obj["version"])
+        if len(calls) == 2:
+            raise OSError("disk full")
+        real_dump(obj, fh)
+
+    monkeypatch.setattr(registry_mod.json, "dump", dump)
+    with pytest.raises(OSError):
+        reg.promote("m", 2)
+    monkeypatch.undo()
+
+    assert len(calls) == 2
+    assert [m["version"] for m in reg.versions("m")] == [1, 2]
+    assert reg.resolve("m", stage=PRODUCTION) == 2
+    served = reg.load("m", stage=PRODUCTION).transform(spark.range(1))
+    assert served.first()["k"] == 2
+
+
+def test_model_registry_concurrent_register(spark, tmp_path):
+    """Two registries on one root that register at the same moment (both
+    read the same version list first) get distinct versions, and both
+    metas are readable."""
+    import threading
+
+    from fuzzy_item_matching_spark.operators.registry import ModelRegistry
+
+    root = str(tmp_path / "registry")
+    barrier = threading.Barrier(2)
+
+    class Racing(ModelRegistry):
+        def versions(self, name):
+            seen = super().versions(name)
+            barrier.wait(timeout=60)
+            return seen
+
+    models = [_const_model(spark, 1), _const_model(spark, 2)]
+    got: dict[int, int] = {}
+
+    def register(i):
+        got[i] = Racing(root).register("m", models[i])
+
+    threads = [threading.Thread(target=register, args=(i,)) for i in (0, 1)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+
+    assert sorted(got.values()) == [1, 2]
+    reg = ModelRegistry(root)
+    assert [m["version"] for m in reg.versions("m")] == [1, 2]
+    for i, v in got.items():
+        served = reg.load("m", version=v).transform(spark.range(1)).first()
+        assert served["k"] == i + 1
+
+
 def test_logreg_gd_fit_properties(spark):
     """M7 fit (engine-native GD): trace shape, finite weights, and
     ranking power — the fitted score must order pairs at least as well
@@ -494,5 +578,108 @@ def test_gboost_depth2_degenerate_fallback_matches_oracle(spark):
                     assert math.copysign(1, sv) == math.copysign(
                         1, float(ov)
                     ), (s, o)
+            else:
+                assert sv == ov, (s, o)
+
+
+def test_gboost_fit_jobs_per_round(spark):
+    """Boosting rounds keep no state: an extra gboost_fit round runs
+    its argmax aggregate (a shuffle-map job plus the 1-row collect)
+    and nothing else — no broadcast candidate frame and no per-round
+    score checkpoint. Jobs are counted by job group through
+    statusTracker for the fit plus a collect of its model rows."""
+    from fuzzy_item_matching_spark.operators.boosting import gboost_fit
+
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame(
+        [(i % 3 % 2, float(i % 7), float(i % 5)) for i in range(40)],
+        "label int, xa double, xb double",
+    )
+
+    def jobs(rounds):
+        group = f"gboost-jobs-{rounds}"
+        sc.setJobGroup(group, "gboost_fit job count")
+        try:
+            model = gboost_fit(pairs, ["xa", "xb"], rounds=rounds).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(model) == rounds
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one, four = jobs(1), jobs(4)
+    assert four - one <= 3 * 2, (one, four)
+
+
+# 40 rows with label noise, so every round reweights (AdaBoost) or
+# moves the score (gradient boosting) and no split is ever perfect.
+_LONG_ROWS = [
+    (
+        int((i * 7) % 11 < 5),
+        (i * 37 % 41) / 8.0,
+        float(i % 5),
+        ((i * 13) % 17) / 3.0 - 2.0,
+    )
+    for i in range(40)
+]
+
+
+@pytest.mark.parametrize(
+    "fit_name, rounds",
+    [
+        ("adaboost_stumps", 10),
+        ("gboost_fit", 10),
+        ("gboost_depth2_fit", 10),
+        ("adaboost_depth2", 4),
+    ],
+)
+def test_long_fits_match_oracle(spark, fit_name, rounds):
+    """Fits that run past MARGIN_DEPTH rounds, where the carried
+    weight/score column is materialized once and carried as a plain
+    column again, emit the same model rows as their DuckDB twins (which
+    unroll every round's state as a CTE). adaboost_depth2 cannot get
+    there: its DECIMAL(38,0) weights gain ~9 digits a round and
+    overflow at round 5 on these rows (in both engines), so it runs at
+    that 4-round ceiling."""
+    import duckdb
+
+    from fuzzy_item_matching_spark.operators import boosting
+
+    fit = getattr(boosting, fit_name)
+    sql = {
+        "adaboost_stumps": boosting.adaboost_stumps_sql,
+        "gboost_fit": boosting.gboost_sql,
+        "gboost_depth2_fit": boosting.gboost_depth2_sql,
+        "adaboost_depth2": boosting.adaboost_depth2_sql,
+    }[fit_name]
+    feats = ["x1", "x2", "x3"]
+    pairs = spark.createDataFrame(
+        _LONG_ROWS, "label int, x1 double, x2 double, x3 double"
+    )
+    model = fit(pairs, feats, rounds=rounds).collect()
+    assert len(model) == rounds
+
+    # doubles go in as strings: DuckDB reads a bare 1.6666666666666667
+    # as a DECIMAL, and its DECIMAL -> DOUBLE cast can land one ulp off
+    # the double Spark holds, moving rows across a threshold equal to
+    # a data value.
+    values = ", ".join(
+        f"({l}, '{a!r}'::DOUBLE, '{b!r}'::DOUBLE, '{c!r}'::DOUBLE)"
+        for l, a, b, c in _LONG_ROWS
+    )
+    oracle = duckdb.sql(
+        sql(
+            f"SELECT * FROM (VALUES {values}) AS t(label, x1, x2, x3)",
+            feats,
+            rounds=rounds,
+        )
+    ).fetchall()
+    assert len(oracle) == rounds
+    for s, o in zip(
+        sorted([tuple(m) for m in model]), sorted(oracle)
+    ):
+        for sv, ov in zip(s, o):
+            if isinstance(sv, float):
+                assert abs(sv - float(ov)) < 1e-12, (s, o)
             else:
                 assert sv == ov, (s, o)
