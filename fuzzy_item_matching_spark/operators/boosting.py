@@ -6,44 +6,51 @@ features (`03_Train & Deploy Model.py:176-192,283-305`). Its exact
 algorithm is not replayable (histogram binning + multi-threaded split
 search), but the CAPABILITY — a boosted ensemble of axis-aligned
 threshold splits over the distance features — is: AdaBoost with
-depth-1 trees (decision stumps) is a sequence of weighted aggregates,
-so the whole fit runs as Spark plans and replays in SQL:
+depth-1 trees (decision stumps) is a sequence of weighted aggregates
+that replays in SQL:
 
 - stump candidates: a FIXED grid of thresholds per feature
   (min + k·(max−min)/G, exact double arithmetic) × both polarities;
-- per round: weighted error of every candidate in one rows × candidates
-  aggregate (DECIMAL-summed, order-insensitive), argmin with a total
-  tie-break, α = ½·ln((1−err)/err) rounded to 9 digits, and the TWO
-  weight factors e^{∓α} rounded to 9 digits — so the only
-  transcendentals are 3 scalars per round, quantized before they can
-  compound (the logistic-GD discipline, operators/logreg.py);
+- per round: weighted error of every candidate (DECIMAL-summed,
+  order-insensitive), argmin with a total tie-break,
+  α = ½·ln((1−err)/err) rounded to 9 digits, and the TWO weight
+  factors e^{∓α} rounded to 9 digits — so the only transcendentals
+  are 3 scalars per round, quantized before they can compound (the
+  logistic-GD discipline, operators/logreg.py);
 - weight update: per-row multiplication by one of the two quantized
   scalars — no per-row transcendental anywhere.
 
-Scale: per round, one pass over the (persisted) training frame with the
-candidate grid expanded inline as a literal generator, one
-vocabulary-of-candidates aggregate and one 1-row argmin collect (the
-BPE-argmax budget, KB-scale). K rounds = K passes.
-
-Rounds keep no state. A row's weight (AdaBoost) or raw score
-(gradient boosting) is a pure function of the trees already fitted, so
-every fit here carries it as a Column that each round folds one more
-tree into and the next pass evaluates inline. Every ``MARGIN_DEPTH``
-rounds one localCheckpoint materializes it, which caps the expression
-depth; below that no round writes or checkpoints anything.
+Where the fits run: like the reference, which collects its pair
+features with ``toPandas`` and fits on one node (NB3:119-134), each fit
+runs ONE Spark job — an Arrow collect of its label and feature columns
+— and its round loop in numpy on the driver, with Spark SQL's numerics
+and NULL/NaN ordering (operators/spark_numerics.py), so its model rows
+equal the SQL twins' bit for bit.
 """
 
 from __future__ import annotations
 
+import hashlib
 import math
+from collections import Counter
 
+import numpy as np
+from pyspark.errors import ArithmeticException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from fuzzy_item_matching_spark.operators.spark_numerics import (
+    checked,
+    limbs,
+    masked_sums,
+    round_half_up,
+    strict_exp,
+    to_units,
+    units_to_double,
+)
 
 GRID = 16  # thresholds per feature: k = 1..GRID-1
 ERR_FLOOR = 1e-9  # clamp keeps alpha finite on degenerate rounds
-MARGIN_DEPTH = 8  # rounds a carried column folds in per localCheckpoint
 
 
 def _alpha_factors(err: float) -> tuple[float, float, float]:
@@ -55,24 +62,44 @@ def _alpha_factors(err: float) -> tuple[float, float, float]:
     return alpha, round(math.exp(-alpha), 9), round(math.exp(alpha), 9)
 
 
+def _collect(pairs: DataFrame, y: Column, features: list[str], row_key=None):
+    """The fit's one Spark job: an Arrow collect of ``y`` and the
+    features as doubles (plus ``row_key`` as a string). Returns
+    (y, y_null, {feature: (x, x_null)}, keys): NULL reads as NaN in a
+    value array and its mask tells it apart from NaN."""
+    cols = [y, *map(F.col, features)]
+    tbl = pairs.select(
+        *[c.cast("double").alias(f"_{i}") for i, c in enumerate(cols)],
+        *([F.col(row_key).cast("string")] if row_key else []),
+    ).toArrow()
+    num = [
+        (c.fill_null(math.nan).to_numpy(), c.is_null().to_numpy(zero_copy_only=False))
+        for c in tbl.columns[: len(cols)]
+    ]
+    keys = tbl.columns[-1].to_pylist() if row_key else None
+    return (*num[0], dict(zip(features, num[1:])), keys)
+
+
 def _grid(
-    pairs: DataFrame, features: list[str], grid: int
+    X: dict, features: list[str], grid: int
 ) -> tuple[dict[str, tuple[float, float]], list[tuple[str, float]]]:
-    """One min/max pass: per-feature (mn, mx) and the fixed threshold
-    grid [(feature, mn + k·(mx−mn)/G) for k = 1..G−1], in feature
-    order. A constant feature keeps its G−1 equal thresholds — the SQL
-    twins' UNION ALL arms count each one too."""
-    stats = pairs.agg(
-        *[c for f_ in features for c in (F.min(f_), F.max(f_))]
-    ).first()
+    """Per-feature (mn, mx) with Spark's MIN/MAX (NULLs skipped, NaN
+    above every number) and the fixed threshold grid
+    [(feature, mn + k·(mx−mn)/G) for k = 1..G−1], in feature order. A
+    constant feature keeps its G−1 equal thresholds — the SQL twins'
+    UNION ALL arms count each one too."""
     ranges = {}
-    for i, f_ in enumerate(features):
-        if stats[2 * i] is None:
+    for f_ in features:
+        x, null = X[f_]
+        v = x[~null]
+        if not len(v):
             raise ValueError(
                 "boosting fit: empty training frame — no"
                 " candidate thresholds can exist"
             )
-        ranges[f_] = (float(stats[2 * i]), float(stats[2 * i + 1]))
+        nan = np.isnan(v)
+        mn = math.nan if nan.all() else float(v[~nan].min())
+        ranges[f_] = (mn, math.nan if nan.any() else float(v.max()))
     cands = []
     for f_ in features:
         mn, mx = ranges[f_]
@@ -80,56 +107,34 @@ def _grid(
     return ranges, cands
 
 
-def _cands(
-    rows: list[tuple], names: tuple[str, ...] = ("feature", "thr")
-) -> Column:
-    """The candidate grid as a literal generator: selected next to a
-    row's columns, it yields one (row, candidate) pair per grid entry —
-    a crossJoin with no candidate frame to broadcast."""
-    return F.inline(
-        F.array(
-            *[
-                F.struct(*[F.lit(v).alias(n) for v, n in zip(r, names)])
-                for r in rows
-            ]
-        )
-    )
+def _distinct(cands: list[tuple]) -> list[tuple[tuple, int]]:
+    """GROUP BY over candidate tuples: each distinct one (NaN equal to
+    NaN) with its multiplicity, which scales every sum it collects."""
+    key = lambda c: tuple("NaN" if v != v else v for v in c)  # noqa: E731
+    counts = Counter(key(c) for c in cands)
+    first = {key(c): c for c in reversed(cands)}
+    return [(first[k], m) for k, m in counts.items()]
 
 
-def _feat_val(features: list[str]) -> Column:
-    """The candidate's feature value: CASE feature WHEN f THEN f …"""
-    c = F.when(F.col("feature") == features[0], F.col(features[0]))
-    for f_ in features[1:]:
-        c = c.when(F.col("feature") == f_, F.col(f_))
-    return c
+def _le(col: tuple[np.ndarray, np.ndarray], thr: float) -> np.ndarray:
+    """Rows where Spark's ``x <= thr`` is TRUE: NaN sorts above every
+    number and equals NaN; NULL is neither side."""
+    x, null = col
+    return ~null if thr != thr else (x <= thr) & ~null
 
 
-def _walk(
-    splits: dict[int, tuple[str, float]], leaves: dict, n: int = 1
-) -> Column:
-    """Route each row from heap node ``n`` down ``splits`` (node m
-    splits on ``feature <= thr``; its children are 2m on the <=-side
-    and 2m+1) to the node in ``leaves`` it reaches; return that leaf's
-    literal."""
-    if n in leaves:
-        return F.lit(leaves[n])
-    f_, thr = splits[n]
-    return F.when(
-        F.col(f_) <= F.lit(thr), _walk(splits, leaves, 2 * n)
-    ).otherwise(_walk(splits, leaves, 2 * n + 1))
+def _gt(col: tuple[np.ndarray, np.ndarray], thr: float) -> np.ndarray:
+    return ~_le(col, thr) & ~col[1]
 
 
-def _settle(
-    df: DataFrame, carried: Column, name: str, t: int
-) -> tuple[DataFrame, Column]:
-    """Before round ``t``: once the carried column has folded in
-    ``MARGIN_DEPTH`` more rounds, materialize it as column ``name``
-    with one localCheckpoint and carry the plain reference instead."""
-    if t == 1 or (t - 1) % MARGIN_DEPTH:
-        return df, carried
-    nxt = df.withColumn(name, carried).localCheckpoint(eager=True)
-    df.unpersist()
-    return nxt, F.col(name)
+def _rank(v, desc: bool = False) -> tuple:
+    """Sort key of a double in Spark's ORDER BY: NaN above every
+    number; NULL first ascending and last descending."""
+    if v is None:
+        return (2,) if desc else (0,)
+    if v != v:
+        return (0,) if desc else (2,)
+    return (1, -v if desc else v)
 
 
 def adaboost_stumps(
@@ -148,56 +153,32 @@ def adaboost_stumps(
     weights entering that round (unnormalized — the ratio form is
     scale-invariant, so no per-round renormalization drift).
     """
-    _, grid_rows = _grid(pairs, features, grid)
-    cands = _cands(
-        [(f_, thr, pol) for f_, thr in grid_rows for pol in (1, -1)],
-        ("feature", "thr", "pol"),
-    )
-    feat_val = _feat_val(features)
-    df = pairs.select((2 * F.col(label) - 1).alias("__y"), *features).persist()
-    w = F.lit(1.0)
+    y, y_null, X, _ = _collect(pairs, 2 * F.col(label) - 1, features)
+    _, grid_rows = _grid(X, features, grid)
+    cands = _distinct([(f_, thr, pol) for f_, thr in grid_rows for pol in (1, -1)])
 
+    def pred(f_: str, thr: float, pol: int) -> np.ndarray:
+        """+1 where the stump fires; NULL x predicts -1."""
+        return np.where((_le if pol == 1 else _gt)(X[f_], thr), 1, -1)
+
+    w = np.ones(len(y))
     model: list[tuple[int, str, float, int, float, float]] = []
     for t in range(1, rounds + 1):
-        df, w = _settle(df, w, "__w", t)
-        joined = (
-            df.select("__y", *features, w.alias("__w"))
-            .select("*", cands)
-            .withColumn("__x", feat_val)
+        if t > 1:  # fold in the previous stump
+            hit = (pred(*model[-1][1:4]) == y) & ~y_null
+            w = w * np.where(hit, f_corr, f_wrong)
+        lm = limbs(to_units(w))
+        [w_sum] = masked_sums(np.ones((1, len(y)), dtype=bool), lm)
+        if w_sum == 0:
+            raise ArithmeticException(message="[DIVIDE_BY_ZERO] Division by zero.")
+        # a NULL label is never wrong
+        wrong = np.array([(pred(*c) != y) & ~y_null for c, _ in cands])
+        (err, f_, _, pol), thr = min(
+            ((units_to_double(m * s) / units_to_double(m * w_sum), f_, _rank(thr), pol), thr)
+            for ((f_, thr, pol), m), s in zip(cands, masked_sums(wrong, lm))
         )
-        pred = F.when(
-            ((F.col("pol") == 1) & (F.col("__x") <= F.col("thr")))
-            | ((F.col("pol") == -1) & (F.col("__x") > F.col("thr"))),
-            1,
-        ).otherwise(-1)
-        wrong = F.when(pred != F.col("__y"), F.col("__w")).otherwise(0.0)
-        evals = (
-            joined.groupBy("feature", "thr", "pol")
-            .agg(
-                (
-                    F.sum(wrong.cast("decimal(38,18)")).cast("double")
-                    / F.sum(F.col("__w").cast("decimal(38,18)")).cast("double")
-                ).alias("err")
-            )
-            .orderBy(F.asc("err"), F.asc("feature"), F.asc("thr"), F.asc("pol"))
-            .limit(1)
-        )
-        [best] = evals.collect()  # 1 row — the BPE-argmax budget
-        alpha, f_corr, f_wrong = _alpha_factors(best["err"])
-        model.append(
-            (t, best["feature"], best["thr"], best["pol"], best["err"], alpha)
-        )
-        bx = F.col(best["feature"])
-        h = F.when(
-            (bx <= F.lit(best["thr"]))
-            if best["pol"] == 1
-            else (bx > F.lit(best["thr"])),
-            1,
-        ).otherwise(-1)
-        w = w * F.when(h == F.col("__y"), F.lit(f_corr)).otherwise(
-            F.lit(f_wrong)
-        )
-    df.unpersist()
+        alpha, f_corr, f_wrong = _alpha_factors(err)
+        model.append((t, f_, thr, pol, err, alpha))
     return pairs.sparkSession.createDataFrame(
         model,
         "round int, feature string, thr double, pol int, err double,"
@@ -351,9 +332,10 @@ def adaboost_score_sql(
 # More rounds or a degenerate α (err → ERR_FLOOR ⇒ α ≈ 10.4) needs a
 # smaller Q — lower it, don't widen the decimal.
 #
-# Per round: TWO passes over the persisted frame (root eval; both
-# children in one side-partitioned eval) and two KB-scale collects; the
-# weight is a carried Column like the stump fit's. K rounds = 2K passes.
+# Per round: the root argmin over every row, then one argmin per side
+# of the root split; the integer weights are Python ints, and every
+# DECIMAL(38,0) product, sum and the err casts below raise where Spark
+# overflows (ANSI mode).
 
 W_QUANTUM = 1_000_000_000  # Q: weight-factor quantization denominator
 
@@ -365,36 +347,6 @@ def _d2_factors(err: float) -> tuple[float, int, int]:
     and SQL round() in the oracle pick the same integer."""
     alpha, f_corr, f_wrong = _alpha_factors(err)
     return alpha, round(f_corr * W_QUANTUM), round(f_wrong * W_QUANTUM)
-
-
-def _d2_region_aggs() -> list[Column]:
-    """The four (side × class) integer weight sums for one candidate."""
-    le = F.col("__x") <= F.col("thr")
-    y = F.col("__y")
-    w = F.col("__w")
-    zero = F.lit(0).cast("decimal(38,0)")
-
-    def s(cond: Column, name: str) -> Column:
-        return F.sum(F.when(cond, w).otherwise(zero)).alias(name)
-
-    return [
-        s(le & (y == 1), "le_pos"),
-        s(le & (y == -1), "le_neg"),
-        s(~le & (y == 1), "gt_pos"),
-        s(~le & (y == -1), "gt_neg"),
-    ]
-
-
-def _d2_err() -> Column:
-    # exact integer objective — ORDER BY on it is rounding-free.
-    # (The SQL twin must avoid LEAST here: DuckDB's LEAST on decimal
-    # args returns DOUBLE, which at ~1e20 loses integer exactness and
-    # mis-broke a true argmin tie at sf0.001 — see _dmin in
-    # adaboost_depth2_ctes. Spark's F.least keeps the decimal type.)
-    d37 = "decimal(37,0)"
-    return F.least(F.col("le_pos"), F.col("le_neg")).cast(d37) + F.least(
-        F.col("gt_pos"), F.col("gt_neg")
-    ).cast(d37)
 
 
 def adaboost_depth2(
@@ -414,99 +366,70 @@ def adaboost_depth2(
 
     h(x) = sll/slr/srl/srr by the nested split path; the scorer's
     margin is Σ_t alpha_t · h_t(x)."""
-    _, grid_rows = _grid(pairs, features, grid)
-    cands = _cands(grid_rows)
-    feat_val = _feat_val(features)
-    df = pairs.select((2 * F.col(label) - 1).alias("__y"), *features).persist()
-    w = F.lit(1).cast("decimal(38,0)")
+    y, y_null, X, _ = _collect(pairs, 2 * F.col(label) - 1, features)
+    _, grid_rows = _grid(X, features, grid)
+    cands = _distinct(grid_rows)
+    sides = [(_le(X[f_], thr), _gt(X[f_], thr)) for (f_, thr), _ in cands]
+    classes = (y == 1, y == -1)
+    widest = max(m for _, m in cands)
 
+    def argmin(rows: np.ndarray, lm: np.ndarray) -> tuple:
+        """(key, feature, thr, multiplicity, [le_pos, le_neg, gt_pos,
+        gt_neg]) of the candidate whose exact integer error
+        LEAST(le_pos, le_neg) + LEAST(gt_pos, gt_neg) over ``rows`` is
+        least; the error leads the key."""
+        masks = [side & rows & c for pair in sides for side in pair for c in classes]
+        sums = masked_sums(np.array(masks), lm)
+        best = None
+        for i, ((f_, thr), m) in enumerate(cands):
+            r = [checked(m * v, 0) for v in sums[4 * i : 4 * i + 4]]
+            # CAST(LEAST(..) AS DECIMAL(37,0)) on both sides
+            k = (checked(min(r[:2]), 0, 37) + checked(min(r[2:]), 0, 37), f_, _rank(thr))
+            if best is None or k < best[0]:
+                best = (k, f_, thr, m, r)
+        return best
+
+    w = np.ones(len(y), dtype=object)
     model_rows = []
     for t in range(1, rounds + 1):
-        df, w = _settle(df, w, "__w", t)
-        wdf = df.select("__y", *features, w.alias("__w"))
-        # pass 1: root argmin + total weight (W rides the same agg)
-        root = (
-            wdf.select("*", cands)
-            .withColumn("__x", feat_val)
-            .groupBy("feature", "thr")
-            .agg(
-                *_d2_region_aggs(),
-                F.sum("__w").alias("wtot"),
-            )
-            .withColumn("err", _d2_err())
-            .orderBy(F.asc("err"), F.asc("feature"), F.asc("thr"))
-            .limit(1)
-        )
-        [rt] = root.collect()  # 1 row — the BPE-argmax budget
-        f0, t0 = rt["feature"], float(rt["thr"])
-        w_tot = int(rt["wtot"])  # exact integer (scale-0 decimal)
-
-        # pass 2: both children in one side-partitioned eval
-        side = (F.col(f0) <= F.lit(t0)).cast("int")
-        ch = (
-            wdf.withColumn("__side", side)
-            .select("*", cands)
-            .withColumn("__x", feat_val)
-            .groupBy("__side", "feature", "thr")
-            .agg(*_d2_region_aggs())
-            .withColumn("err", _d2_err())
-        )
-        wnd = Window.partitionBy("__side").orderBy(
-            F.asc("err"), F.asc("feature"), F.asc("thr")
-        )
+        if t > 1:  # fold in the previous tree
+            w = w * np.where((h == y) & ~y_null, k_corr, k_wrong).astype(object)
+            for v in w:
+                checked(v, 0)
+        lm = limbs(w)
+        _, f0, t0, m0, _ = argmin(np.ones(len(y), dtype=bool), lm)
+        w_sum = sum(w)
+        checked(widest * w_sum, 0)  # every candidate group's SUM(w)
+        left = _le(X[f0], t0)
+        # Rows with a NULL root feature form a third side: it joins
+        # neither child but, as its own group, still meets the overflow
+        # checks. A side with no rows (e.g. a constant feature wins the
+        # root, so x <= thr everywhere) gets the TRIVIAL child: the root
+        # threshold, +1/+1 leaf signs (0 >= 0) and zero error — the row
+        # the SQL twin's pri-2 arm emits.
         picks = {
-            r["__side"]: r
-            for r in ch.withColumn("rn", F.row_number().over(wnd))
-            .filter(F.col("rn") == 1)
-            .collect()  # 2 rows
+            s_: argmin(r, lm)
+            for s_, r in ((1, left), (0, _gt(X[f0], t0)), (None, X[f0][1]))
+            if r.any()
         }
-
-        def leaf(r, pos: str, neg: str) -> int:
-            return 1 if r[pos] >= r[neg] else -1
-
-        # Degenerate-root guard: a root split can put EVERY row on one
-        # side (e.g. a constant feature, mn == mx, wins the argmin
-        # tie-break — all thresholds equal mn, so x <= thr everywhere).
-        # The empty side then has no candidate rows; fall back to a
-        # TRIVIAL child — the root threshold with +1/+1 leaf signs
-        # (the 0 >= 0 majority convention) and zero region error. The
-        # SQL twin emits the identical fallback row (pri-2 arm in
-        # adaboost_depth2_ctes), so the engines agree instead of the
-        # oracle silently dropping the round's model row.
-        def _pick(side: int):
-            if side in picks:
-                return picks[side]
-            return {
-                "feature": f0,
-                "thr": t0,
-                "le_pos": 0,
-                "le_neg": 0,
-                "gt_pos": 0,
-                "gt_neg": 0,
-                "err": 0,
-            }
-
-        lt_, rt_ = _pick(1), _pick(0)
-        fl, tl = lt_["feature"], float(lt_["thr"])
-        fr, tr = rt_["feature"], float(rt_["thr"])
-        sll, slr = leaf(lt_, "le_pos", "le_neg"), leaf(lt_, "gt_pos", "gt_neg")
-        srl, srr = leaf(rt_, "le_pos", "le_neg"), leaf(rt_, "gt_pos", "gt_neg")
+        trivial = ((0,), f0, t0, 1, [0, 0, 0, 0])
+        (el, *_), fl, tl, _, rl = picks.get(1, trivial)
+        (er, *_), fr, tr, _, rr = picks.get(0, trivial)
+        sll, slr, srl, srr = (
+            1 if p_ >= n_ else -1 for p_, n_ in (rl[:2], rl[2:], rr[:2], rr[2:])
+        )
         # float(int) is one correctly-rounded cast per operand — the
         # exact shape the SQL twin's CAST(dec AS DOUBLE)/CAST(...) has
-        err = float(int(lt_["err"]) + int(rt_["err"])) / float(w_tot)
+        err = float(el + er) / float(m0 * w_sum)
         alpha, k_corr, k_wrong = _d2_factors(err)
         model_rows.append(
             (t, f0, t0, fl, tl, sll, slr, fr, tr, srl, srr, err, alpha)
         )
-
-        h = _walk(
-            {1: (f0, t0), 2: (fl, tl), 3: (fr, tr)},
-            {4: sll, 5: slr, 6: srl, 7: srr},
+        h = np.where(
+            left,
+            np.where(_le(X[fl], tl), sll, slr),
+            np.where(_le(X[fr], tr), srl, srr),
         )
-        w = w * F.when(h == F.col("__y"), F.lit(k_corr)).otherwise(
-            F.lit(k_wrong)
-        ).cast("decimal(20,0)")
-    df.unpersist()
     return pairs.sparkSession.createDataFrame(model_rows, DEPTH2_SCHEMA)
 
 
@@ -747,23 +670,22 @@ def adaboost_depth2_score_sql(
 #   because it is the no-split margin a deeper tree would prune on;
 # - leaf weights: w = −soft(G, α)/(H + λ) (L1 soft-threshold + L2
 #   shrinkage — XGBoost's regularized closed form), rounded to 9
-#   digits; score update f ← round(f + η·w_leaf, 9).
+#   digits; score update f ← round(f + η·w_leaf, 10).
 #
 # Determinism is the logreg-GD discipline, not the depth-2 integer one:
 # the per-row sigmoid is inherently transcendental, so instead of
-# banning it we quantize every cross-round carrier — leaf weights and
-# the updated score round to 9 digits each round, squashing last-ulp
+# banning it we quantize every cross-round carrier — leaf weights round
+# to 9 digits and the score to 10 each round, squashing last-ulp
 # libm exp() disagreements before they compound. The gain expression is
-# built ONCE as a SQL string and evaluated by BOTH engines (F.expr in
-# Spark, verbatim in DuckDB), so the float contraction order is
-# identical by construction. Identical row partitions yield identical
-# decimal region sums within an engine, so grid ties break on the
-# lexical key the same way on both sides.
+# built ONCE as a SQL string, evaluated verbatim by DuckDB and as a
+# Python lambda by the fit, so the float contraction order is identical
+# by construction. Decimal region sums are exact, so grid ties break on
+# the lexical key the same way on both sides.
 #
-# Per round: one pass over the persisted frame (the per-row g/h
-# projection, the 45-candidate generator and one aggregate) and one
-# 1-row argmax collect (the BPE-argmax budget); the raw score is a
-# carried Column. K rounds = K passes — the stump fit's schedule.
+# One tree grower (:func:`_grow`) fits every gradient model in this
+# module and in operators/gboost_deep.py: gboost_fit is its depth 1,
+# gboost_depth2_fit its depth 2, gboost_deep_fit any depth with row and
+# column subsampling, and gboost_hist_fit swaps in a histogram level.
 
 GB_LAMBDA = 1.0  # reg_lambda: L2 leaf shrinkage
 GB_ALPHA = 0.5  # reg_alpha: L1 leaf soft-threshold
@@ -797,57 +719,208 @@ def _gb_leaf(g: float, h: float, lam: float, alpha: float) -> float:
     return round(-s / (h + lam), 9) + 0.0
 
 
-def _loss_gh(f: Column, loss: str = "logistic") -> tuple[Column, Column]:
-    """Per-row (g, h) of ``loss`` at raw score ``f`` against ``__y``."""
-    y = F.col("__y")
-    if loss == "poisson":
-        mu = F.exp(f)
-        return mu - y, mu
-    if loss == "squared":
-        return f - y, F.lit(1.0)
-    p = 1.0 / (1.0 + F.exp(-f))
-    return p - y, p * (1.0 - p)
-
-
-def _score_step(f: Column, eta: float, leaf: Column) -> Column:
-    """f + η·leaf, rounded at scale 10, NOT 9: η·w (w 9-decimal, η 0.3)
-    is an EXACT 10-decimal value, so a 9-scale round hits a .5 tie on
-    ~10% of updates — where Spark (rounds the shortest decimal string)
-    and DuckDB (rounds the binary value) can disagree. At scale 10 the
-    value sits ON the grid and rounding is an identity in both engines
-    while still quantizing away exp ulp drift."""
-    return F.round(f + F.lit(eta) * leaf, 10)
-
-
-def _region_sums() -> list[Column]:
-    """GL/HL/GR/HR of one candidate: DECIMAL(38,18) sums of the
-    per-row ``__g``/``__h`` on each side of ``__x <= thr``.
-
-    SUM(CASE WHEN .. THEN g END) skips the other side's NULLs, halving
-    the decimal additions; an empty side's NULL sum coalesces to the
-    0.0 a sum of exact zeros would give, so the sums are bit-equal to
-    summing g·[side] over every row."""
-    le = F.col("__x") <= F.col("thr")
-    dec = "decimal(38,18)"
-
-    def s(cond: Column, term: str, name: str) -> Column:
-        return F.coalesce(
-            F.sum(F.when(cond, F.col(term)).cast(dec)).cast("double"),
-            F.lit(0.0),
-        ).alias(name)
-
-    return [
-        s(le, "__g", "gl"),
-        s(le, "__h", "hl"),
-        s(~le, "__g", "gr"),
-        s(~le, "__h", "hr"),
-    ]
-
-
 GB_SCHEMA = (
     "round int, feature string, thr double, gain double,"
     " w_le double, w_gt double"
 )
+
+
+def col_subset(
+    features: list[str],
+    t: int,
+    level: int,
+    colsample: float,
+    seed: int,
+    node: int | None = None,
+) -> list[str]:
+    """Seeded column subsample: rank features by
+    md5('{seed}:cols:{t}:{level}:{feature}') and keep the smallest
+    ``max(1, round(colsample·n))`` in original feature order. Driver-
+    side (hashlib), so the fit and the SQL generator — which share
+    this function — embed the identical subset as literals.
+
+    With ``node`` set the draw keys by the heap node id instead
+    (md5('{seed}:colsnode:{t}:{node}:{feature}')) — XGBoost's
+    ``colsample_bynode``, drawn FROM the by-level survivors the
+    caller passes in (the reference searches the bytree/bylevel/
+    bynode triple, `03_Train & Deploy Model.py:168-171`; bytree is
+    the level-keyed draw with the level term held constant, i.e. a
+    per-round subset — callers get it by passing level=0 every
+    level)."""
+    if colsample >= 1.0:
+        return list(features)
+    k = max(1, int(round(colsample * len(features))))
+    key = (
+        (lambda f_: f"{seed}:colsnode:{t}:{node}:{f_}")
+        if node is not None
+        else (lambda f_: f"{seed}:cols:{t}:{level}:{f_}")
+    )
+    ranked = sorted(
+        features,
+        key=lambda f_: hashlib.md5(key(f_).encode()).hexdigest(),
+    )
+    keep = set(ranked[:k])
+    return [f_ for f_ in features if f_ in keep]
+
+
+def _keyed_uniform(keys: list[str | None], seed: int) -> np.ndarray:
+    """functions/sampling.keyed_uniform over collected string keys:
+    the first 8 hex digits of md5('seed:key') over 2^32. A NULL key
+    drops out of the concat_ws, leaving md5('seed')."""
+    return np.array(
+        [
+            int(hashlib.md5(
+                (str(seed) if k is None else f"{seed}:{k}").encode()
+            ).hexdigest()[:8], 16)
+            for k in keys
+        ],
+        dtype=np.float64,
+    ) / float(2**32)
+
+
+def _exact_regions(X, node, nodes, subset, ranges, grid_rows, grid, gh):
+    """One level's candidates, exact split finding: region sums of
+    every (node, feature, thr) of ``subset``'s grid over the node's
+    rows, as (node, feature, thr, gl, hl, gr, hr). An empty region
+    sums to 0.0, as the SQL twins' SUM over zeros does; a NULL x joins
+    neither side."""
+    out = []
+    cands = _distinct([c for c in grid_rows if c[0] in subset])
+    le = np.array([_le(X[f_], thr) for (f_, thr), _ in cands])
+    gt = np.array([_gt(X[f_], thr) for (f_, thr), _ in cands])
+    for n in nodes:
+        at = node == n
+        if not at.any():
+            continue
+        sums = [masked_sums(side & at, lm) for side in (le, gt) for lm, _ in gh]
+        for i, ((f_, thr), m) in enumerate(cands):
+            out.append(
+                (n, f_, thr, *(units_to_double(m * s[i]) for s in sums))
+            )
+    return out
+
+
+def _grow(
+    pairs: DataFrame,
+    features: list[str],
+    label: str,
+    rounds: int,
+    depth: int,
+    grid: int,
+    lam: float,
+    alpha: float,
+    gamma: float,
+    eta: float,
+    loss: str = "logistic",
+    regions=_exact_regions,
+    subsample: float = 1.0,
+    colsample: float = 1.0,
+    colsample_bynode: float = 1.0,
+    min_child_weight: float = 0.0,
+    row_key: str | None = None,
+    seed: int = 7,
+) -> list[dict[int, dict]]:
+    """Every gradient fit's round loop: ``rounds`` complete trees of
+    ``depth`` levels, heap-numbered (root 1, children 2n and 2n+1),
+    grown level by level on the collected columns. Returns each
+    round's {node: pick}: the split (feature, thr), its gain rounded to
+    9 digits and the leaf weights w_le/w_gt below it.
+
+    Per round, (g, h) of ``loss`` at the raw score f (0 for rows
+    ``subsample`` leaves out) cast to DECIMAL(38,18); per level,
+    ``regions`` sums every candidate, the ``colsample_bynode`` and
+    ``min_child_weight`` filters apply, and each node takes the argmax
+    by (gain DESC, feature, thr). A node with no candidate left becomes
+    a LEAF at its parent's threshold (the root: its subset's first
+    feature at that feature's minimum) weighing −soft(G, α)/(H + λ) of
+    its own rows, 0 if it has none. Then f ← round(f + η·w_leaf, 10)
+    along each row's path, NULL routing right."""
+    y, _, X, keys = _collect(pairs, F.col(label), features, row_key)
+    ranges, grid_rows = _grid(X, features, grid)
+    gain = eval("lambda gl, hl, gr, hr: " + _gb_gain_expr(lam, gamma))
+    f = np.zeros(len(y))
+    trees = []
+    for t in range(1, rounds + 1):
+        with np.errstate(all="ignore"):
+            if loss == "poisson":
+                g, h = strict_exp(f) - y, strict_exp(f)
+            elif loss == "squared":
+                g, h = f - y, np.ones(len(y))
+            else:
+                p = 1.0 / (1.0 + strict_exp(-f))
+                g, h = p - y, p * (1.0 - p)
+        if subsample < 1.0:
+            ind = np.where(_keyed_uniform(keys, seed * 1000 + t) < subsample, 1.0, 0.0)
+            g, h = g * ind, h * ind
+        # (limbs, not-NULL mask) of g and of h; a NULL label's g is NULL
+        gh = [
+            (limbs(q), np.array([u is not None for u in q], dtype=bool))
+            for q in (to_units(g), to_units(h))
+        ]
+        node = np.ones(len(y), dtype=np.int64)
+        picks: dict[int, dict] = {}
+        for level in range(depth):
+            nodes = range(2**level, 2 ** (level + 1))
+            if level:
+                node = _route(node, picks, X)
+            subset = col_subset(features, t, level, colsample, seed)
+            allow = {
+                n: col_subset(subset, t, level, colsample_bynode, seed, node=n)
+                for n in nodes
+            }
+            best: dict[int, tuple] = {}
+            for n, f_, thr, gl, hl, gr, hr in regions(
+                X, node, nodes, subset, ranges, grid_rows, grid, gh
+            ):
+                if f_ not in allow[n] or min_child_weight > 0.0 and (
+                    None in (hl, hr) or hl < min_child_weight or hr < min_child_weight
+                ):
+                    continue
+                gn = None if None in (gl, hl, gr, hr) else gain(gl, hl, gr, hr)
+                k = (_rank(gn, desc=True), f_, _rank(thr))
+                if n not in best or k < best[n][0]:
+                    best[n] = (k, f_, thr, gn, gl, hl, gr, hr)
+            for n in nodes:
+                if n in best:
+                    _, f_, thr, gn, gl, hl, gr, hr = best[n]
+                    picks[n] = dict(
+                        feature=f_, thr=thr, gain=round(gn, 9),
+                        w_le=_gb_leaf(gl, hl, lam, alpha),
+                        w_gt=_gb_leaf(gr, hr, lam, alpha),
+                    )
+                    continue
+                pf = allow[n][0] if level == 0 else picks[n // 2]["feature"]
+                pt = ranges[pf][0] if level == 0 else picks[n // 2]["thr"]
+                at = node == n
+                w = _gb_leaf(*(  # the node's own G, H: NULL if no row has one
+                    units_to_double(masked_sums(at[None], lm)[0])
+                    if (at & ok).any() else None
+                    for lm, ok in gh
+                ), lam, alpha) if at.any() else _gb_leaf(0.0, 0.0, lam, alpha)
+                picks[n] = dict(feature=pf, thr=pt, gain=0.0, w_le=w, w_gt=w)
+        trees.append(picks)
+        if t < rounds:
+            leaf = _route(node, picks, X)
+            w_leaf = {
+                m: picks[m // 2]["w_gt" if m % 2 else "w_le"]
+                for m in np.unique(leaf).tolist()
+            }
+            step = np.array([w_leaf[m] for m in leaf.tolist()], dtype=np.float64)
+            # scale 10, not 9: η·w (w at 9 places, η = 0.3) is an exact
+            # 10-place value, so a 9-place round would hit .5 ties, where
+            # Spark (decimal string) and DuckDB (binary value) disagree
+            f = round_half_up(f + eta * step, 10)
+    return trees
+
+
+def _route(node: np.ndarray, picks: dict[int, dict], X: dict) -> np.ndarray:
+    """Each row's child of its ``node``: 2n on the <=-side of n's
+    split, else 2n+1 (NULL included)."""
+    child = 2 * node + 1
+    for n in np.unique(node).tolist():
+        p = picks[n]
+        child[(node == n) & _le(X[p["feature"]], p["thr"])] -= 1
+    return child
 
 
 def gboost_fit(
@@ -878,48 +951,15 @@ def gboost_fit(
       ridge-shrunk mean leaves, the bagging base learner."""
     if loss not in ("logistic", "poisson", "squared"):
         raise ValueError(f"gboost_fit: unknown loss {loss!r}")
-    _, grid_rows = _grid(pairs, features, grid)
-    cands = _cands(grid_rows)
-    feat_val = _feat_val(features)
-    df = pairs.select(F.col(label).cast("double").alias("__y"), *features)
-    df = df.persist()
-    f = F.lit(0.0)
-
-    gain_sql = _gb_gain_expr(lam, gamma)
-    model_rows = []
-    for t in range(1, rounds + 1):
-        df, f = _settle(df, f, "__f", t)
-        g, h = _loss_gh(f, loss)
-        # (g, h) are per-ROW values: project them once per row BEFORE
-        # the candidate generator, or the sigmoid/exp subtree would be
-        # re-evaluated for every candidate.
-        ev = (
-            df.select(*features, g.alias("__g"), h.alias("__h"))
-            .select("*", cands)
-            .withColumn("__x", feat_val)
-            .groupBy("feature", "thr")
-            .agg(*_region_sums())
-            .withColumn("gain", F.expr(gain_sql))
-            .orderBy(F.desc("gain"), F.asc("feature"), F.asc("thr"))
-            .limit(1)
-        )
-        [best] = ev.collect()  # 1 row — the BPE-argmax budget
-        w_le = _gb_leaf(best["gl"], best["hl"], lam, alpha)
-        w_gt = _gb_leaf(best["gr"], best["hr"], lam, alpha)
-        model_rows.append(
-            (
-                t,
-                best["feature"],
-                float(best["thr"]),
-                round(best["gain"], 9),
-                w_le,
-                w_gt,
-            )
-        )
-        split = {1: (best["feature"], float(best["thr"]))}
-        f = _score_step(f, eta, _walk(split, {2: w_le, 3: w_gt}))
-    df.unpersist()
-    return pairs.sparkSession.createDataFrame(model_rows, GB_SCHEMA)
+    trees = _grow(
+        pairs, features, label, rounds, 1, grid, lam, alpha, gamma, eta, loss
+    )
+    rows = [
+        (t, p["feature"], p["thr"], p["gain"], p["w_le"], p["w_gt"])
+        for t, tree in enumerate(trees, 1)
+        for p in [tree[1]]
+    ]
+    return pairs.sparkSession.createDataFrame(rows, GB_SCHEMA)
 
 
 def gboost_ctes(
@@ -1113,97 +1153,18 @@ def gboost_depth2_fit(
 
     Degenerate-root guard (the adaboost_depth2 discipline): a side
     with no rows gets the TRIVIAL child — the root threshold with
-    leaves computed from all-zero region sums (= −soft(0)/(0+λ),
-    i.e. −0.0 in BOTH engines — no special-cased literal, so the
-    float sign matches the SQL twin's computed expression). The SQL
-    twin's pri-2 fallback arm emits the identical row."""
-    _, grid_rows = _grid(pairs, features, grid)
-    cands = _cands(grid_rows)
-    feat_val = _feat_val(features)
-    df = pairs.select(F.col(label).cast("double").alias("__y"), *features)
-    df = df.persist()
-    f = F.lit(0.0)
-
-    gain_sql = _gb_gain_expr(lam, gamma)
-    model_rows = []
-    for t in range(1, rounds + 1):
-        df, f = _settle(df, f, "__f", t)
-        g, h = _loss_gh(f)
-        ghdf = df.select(*features, g.alias("__g"), h.alias("__h"))
-        root_ev = (
-            ghdf.select("*", cands)
-            .withColumn("__x", feat_val)
-            .groupBy("feature", "thr")
-            .agg(*_region_sums())
-            .withColumn("gain", F.expr(gain_sql))
-            .orderBy(F.desc("gain"), F.asc("feature"), F.asc("thr"))
-            .limit(1)
-        )
-        [root] = root_ev.collect()  # 1 row — the argmax budget
-        f0, t0 = root["feature"], float(root["thr"])
-        evc = (
-            ghdf.withColumn(
-                "__side",
-                F.when(F.col(f0) <= F.lit(t0), 1).otherwise(0),
-            )
-            .select("*", cands)
-            .withColumn("__x", feat_val)
-            .groupBy("__side", "feature", "thr")
-            .agg(*_region_sums())
-            .withColumn("gain", F.expr(gain_sql))
-        )
-        wnd = Window.partitionBy("__side").orderBy(
-            F.desc("gain"), F.asc("feature"), F.asc("thr")
-        )
-        picks = {
-            r["__side"]: r
-            for r in evc.withColumn("rn", F.row_number().over(wnd))
-            .filter(F.col("rn") == 1)
-            .collect()  # 2 rows
-        }
-
-        def _pick(side: int):
-            if side in picks:
-                return picks[side]
-            return {
-                "feature": f0,
-                "thr": t0,
-                "gl": 0.0,
-                "hl": 0.0,
-                "gr": 0.0,
-                "hr": 0.0,
-            }
-
-        lt_, rt_ = _pick(1), _pick(0)
-        fl, tl = lt_["feature"], float(lt_["thr"])
-        fr, tr = rt_["feature"], float(rt_["thr"])
-        w_ll = _gb_leaf(lt_["gl"], lt_["hl"], lam, alpha)
-        w_lr = _gb_leaf(lt_["gr"], lt_["hr"], lam, alpha)
-        w_rl = _gb_leaf(rt_["gl"], rt_["hl"], lam, alpha)
-        w_rr = _gb_leaf(rt_["gr"], rt_["hr"], lam, alpha)
-        model_rows.append(
-            (
-                t,
-                f0,
-                t0,
-                round(root["gain"], 9),
-                fl,
-                tl,
-                w_ll,
-                w_lr,
-                fr,
-                tr,
-                w_rl,
-                w_rr,
-            )
-        )
-        step = _walk(
-            {1: (f0, t0), 2: (fl, tl), 3: (fr, tr)},
-            {4: w_ll, 5: w_lr, 6: w_rl, 7: w_rr},
-        )
-        f = _score_step(f, eta, step)
-    df.unpersist()
-    return pairs.sparkSession.createDataFrame(model_rows, GB2_SCHEMA)
+    leaves computed from all-zero region sums (−soft(0)/(0+λ), which
+    both engines normalize to +0.0). The SQL twin's pri-2 fallback
+    arm emits the identical row."""
+    trees = _grow(pairs, features, label, rounds, 2, grid, lam, alpha, gamma, eta)
+    rows = [
+        (t, r["feature"], r["thr"], r["gain"],
+         lt_["feature"], lt_["thr"], lt_["w_le"], lt_["w_gt"],
+         rt_["feature"], rt_["thr"], rt_["w_le"], rt_["w_gt"])
+        for t, tree in enumerate(trees, 1)
+        for r, lt_, rt_ in [(tree[1], tree[2], tree[3])]
+    ]
+    return pairs.sparkSession.createDataFrame(rows, GB2_SCHEMA)
 
 
 def gboost_depth2_ctes(

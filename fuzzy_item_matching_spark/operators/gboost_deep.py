@@ -3,31 +3,28 @@ row/column subsampling and a min-hessian split floor.
 
 The reference's hyperopt space searches ``max_depth`` 1-30,
 ``subsample``, ``colsample_bytree/bylevel/bynode``, and
-``min_child_weight`` (`03_Train & Deploy Model.py:163-174`); the
-hand-unrolled depth-1/2 fits (operators/boosting.py gboost_fit /
-gboost_depth2_fit) pin the gain and leaf math, and this module
-generalizes the recursion to a parameterized depth plus the three
-stochastic dimensions — completing the XGBoost capability shape:
+``min_child_weight`` (`03_Train & Deploy Model.py:163-174`). Both fits
+here are operators/boosting.py's tree grower (``_grow``, which also
+fits gboost_fit at depth 1 and gboost_depth2_fit at depth 2) at a
+parameterized depth plus the three stochastic dimensions — completing
+the XGBoost capability shape:
 
 - trees are COMPLETE binary trees of ``depth`` levels, nodes numbered
-  heap-style (root 1; children of n are 2n and 2n+1). Per level, ONE
-  grouped aggregate evaluates every (node, feature, threshold)
-  candidate's second-order regions, and a per-node window argmax
-  picks the split — so depth d costs d passes per round, never 2^d;
+  heap-style (root 1; children of n are 2n and 2n+1). Per level every
+  (node, feature, threshold) candidate's second-order regions are
+  summed and each node takes its argmax split;
 - ``subsample``: a per-round content-keyed Bernoulli draw
   (functions/sampling.keyed_uniform on ``row_key``, seed varied by
-  round) masks each row's g/h contribution to 0 — the selected set is
-  identical on any partitioning and replays exactly in DuckDB via the
+  round) masks each row's g/h contribution to 0 — the selected set
+  depends on the key alone and replays exactly in DuckDB via the
   documented md5 twin. ALL rows still receive the score update;
 - ``colsample`` (by-level): the candidate grid is restricted to a
-  seeded md5-ranked feature subset per (round, level) — computed on
-  the driver, so both engines receive it as literals;
+  seeded md5-ranked feature subset per (round, level), which the SQL
+  twins receive as literals;
 - ``colsample_bynode``: each heap node additionally draws its own
   md5-ranked subset FROM the by-level survivors (keyed by node id),
   completing the reference's searched colsample_by{tree,level,node}
-  triple — the fit prunes disallowed (node, feature) combos before
-  the candidate aggregate, the oracle filters each node's argmax arm
-  (identical survivors: the filter is on group keys);
+  triple;
 - ``min_child_weight``: candidates whose left or right hessian sum
   falls below the floor are excluded from the argmax. A node with no
   surviving candidate becomes a LEAF: both children inherit the
@@ -35,26 +32,21 @@ stochastic dimensions — completing the XGBoost capability shape:
   unsplittable-node semantics), routed under the parent's threshold;
   a node with no rows at all contributes weight 0.
 
-Replayability follows gboost_fit's discipline verbatim: DECIMAL(38,18)
-region sums, the ONE shared gain SQL string, round-to-9 leaves, and
-the round-to-10 score update, carried as a Column as in gboost_fit.
-Both fits share one round loop (:func:`_fit_trees`) and differ only in
-how a level's candidate regions are summed. The DuckDB twin unrolls
-one CTE chain per (round, level, node): per-node best CTEs carry a
-3-arm priority UNION (split found / unsplittable leaf from node totals
-/ empty node), mirroring the Spark fallbacks bit-for-bit.
+The two fits differ only in how a level's candidate regions are summed
+(exact comparisons against the grid, or a bucket histogram). Each runs
+one Spark job, the collect of its training columns. Replayability is
+gboost_fit's: DECIMAL(38,18) region sums, the ONE shared gain SQL
+string, round-to-9 leaves and the round-to-10 score update. The DuckDB
+twin unrolls one CTE chain per (round, level, node): per-node best
+CTEs carry a 3-arm priority UNION (split found / unsplittable leaf
+from node totals / empty node), mirroring the fit's fallbacks
+bit-for-bit.
 """
 
 from __future__ import annotations
 
-import hashlib
-from functools import reduce
-from operator import or_
-from typing import Callable
-
+import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from fuzzy_item_matching_spark.operators.boosting import (
     GB_ALPHA,
@@ -62,60 +54,20 @@ from fuzzy_item_matching_spark.operators.boosting import (
     GB_GAMMA,
     GB_LAMBDA,
     GRID,
-    _cands,
-    _feat_val,
     _gb_gain_expr,
-    _gb_leaf,
-    _grid,
-    _loss_gh,
-    _region_sums,
-    _score_step,
-    _settle,
-    _walk,
+    _grow,
+    col_subset,
+)
+from fuzzy_item_matching_spark.operators.spark_numerics import (
+    checked,
+    masked_sums,
+    units_to_double,
 )
 
 GBD_SCHEMA = (
     "round int, node int, feature string, thr double,"
     " gain double, w_le double, w_gt double"
 )
-
-
-def col_subset(
-    features: list[str],
-    t: int,
-    level: int,
-    colsample: float,
-    seed: int,
-    node: int | None = None,
-) -> list[str]:
-    """Seeded column subsample: rank features by
-    md5('{seed}:cols:{t}:{level}:{feature}') and keep the smallest
-    ``max(1, round(colsample·n))`` in original feature order. Driver-
-    side (hashlib), so the fit and the SQL generator — which share
-    this function — embed the identical subset as literals.
-
-    With ``node`` set the draw keys by the heap node id instead
-    (md5('{seed}:colsnode:{t}:{node}:{feature}')) — XGBoost's
-    ``colsample_bynode``, drawn FROM the by-level survivors the
-    caller passes in (the reference searches the bytree/bylevel/
-    bynode triple, `03_Train & Deploy Model.py:168-171`; bytree is
-    the level-keyed draw with the level term held constant, i.e. a
-    per-round subset — callers get it by passing level=0 every
-    level)."""
-    if colsample >= 1.0:
-        return list(features)
-    k = max(1, int(round(colsample * len(features))))
-    key = (
-        (lambda f_: f"{seed}:colsnode:{t}:{node}:{f_}")
-        if node is not None
-        else (lambda f_: f"{seed}:cols:{t}:{level}:{f_}")
-    )
-    ranked = sorted(
-        features,
-        key=lambda f_: hashlib.md5(key(f_).encode()).hexdigest(),
-    )
-    keep = set(ranked[:k])
-    return [f_ for f_ in features if f_ in keep]
 
 
 def _u_sql(row_key: str, seed_t: int) -> str:
@@ -127,166 +79,14 @@ def _u_sql(row_key: str, seed_t: int) -> str:
     )
 
 
-def _fit_trees(
-    name: str,
-    level_ev: Callable[..., DataFrame],
-    pairs: DataFrame,
-    features: list[str],
-    label: str,
-    rounds: int,
-    depth: int,
-    grid: int,
-    lam: float,
-    alpha: float,
-    gamma: float,
-    eta: float,
-    subsample: float,
-    colsample: float,
-    colsample_bynode: float,
-    min_child_weight: float,
-    row_key: str | None,
-    seed: int,
-) -> DataFrame:
-    """The round loop of :func:`gboost_deep_fit` and
-    :func:`gboost_hist_fit` (``name``), which pass their own arguments
-    through in signature order. ``level_ev(base, subset, ranges,
-    grid_rows, grid)`` sums one level's candidate regions
-    (__node, feature, thr, gl, hl, gr, hr) over ``subset``'s features
-    from ``base``'s per-row (features, __g, __h, __node)."""
-    from fuzzy_item_matching_spark.functions.sampling import keyed_uniform
-
-    if subsample < 1.0 and row_key is None:
-        raise ValueError(f"{name}: subsample < 1 requires row_key")
-    ranges, grid_rows = _grid(pairs, features, grid)
-    keep = [F.col(label).cast("double").alias("__y"), *features]
-    if row_key is not None:
-        keep.append(F.col(row_key).cast("string").alias("__k"))
-    df = pairs.select(*keep).persist()
-    f = F.lit(0.0)
-
-    gain_sql = _gb_gain_expr(lam, gamma)
-    dec = "decimal(38,18)"
-    mcw = float(min_child_weight)
-    model_rows = []
-    for t in range(1, rounds + 1):
-        df, f = _settle(df, f, "__f", t)
-        g, h = _loss_gh(f)
-        if subsample < 1.0:
-            ind = (
-                F.when(
-                    keyed_uniform(F.col("__k"), seed=seed * 1000 + t)
-                    < F.lit(subsample),
-                    1.0,
-                )
-                .otherwise(0.0)
-            )
-            g, h = g * ind, h * ind
-        # every level reads g/h (the oracle's gh CTE), so they are
-        # materialized once per round rather than re-derived from the
-        # carried score and its sigmoid at each of the depth passes.
-        ghdf = df.select(
-            *features, g.alias("__g"), h.alias("__h")
-        ).localCheckpoint(eager=True)
-
-        picks: dict[int, dict] = {}
-        for level in range(depth):
-            nodes = range(2**level, 2 ** (level + 1))
-            splits = {n: (p["feature"], p["thr"]) for n, p in picks.items()}
-            node = _walk(splits, {n: n for n in nodes})
-            base = ghdf.withColumn("__node", node)
-            subset = col_subset(features, t, level, colsample, seed)
-            ev = level_ev(base, subset, ranges, grid_rows, grid)
-            ev = ev.withColumn("gain", F.expr(gain_sql))
-            # colsample_bynode: each heap node draws its own subset
-            # FROM the by-level survivors. The (node, feature) filter is
-            # on group keys, so Spark pushes it below the aggregate
-            # (disallowed combos never aggregate) and it keeps exactly
-            # the candidates the oracle's per-node IN-list keeps.
-            node_subsets: dict[int, list[str]] | None = None
-            if colsample_bynode < 1.0:
-                node_subsets = {
-                    n: col_subset(
-                        subset, t, level, colsample_bynode, seed, node=n
-                    )
-                    for n in nodes
-                }
-                allow = [
-                    (F.col("__node") == n) & F.col("feature").isin(sub)
-                    for n, sub in node_subsets.items()
-                ]
-                ev = ev.filter(reduce(or_, allow))
-            if mcw > 0.0:
-                ev = ev.filter(
-                    (F.col("hl") >= F.lit(mcw)) & (F.col("hr") >= F.lit(mcw))
-                )
-            wnd = Window.partitionBy("__node").orderBy(
-                F.desc("gain"), F.asc("feature"), F.asc("thr")
-            )
-            best = {
-                r["__node"]: r
-                for r in ev.withColumn("rn", F.row_number().over(wnd))
-                .filter(F.col("rn") == 1)
-                .collect()  # ≤ 2^level rows
-            }
-            # Node totals feed ONLY the unsplittable-node fallback, so
-            # the extra full-data aggregate runs lazily — levels where
-            # every node found a surviving split (the common case) cost
-            # one candidate aggregate, not two. The oracle's nt CTEs
-            # always exist but are likewise only read by fallback arms.
-            tot: dict[int, dict] = {}
-            if any(n not in best for n in nodes):
-                tot = {
-                    r["__node"]: r
-                    for r in base.groupBy("__node")
-                    .agg(
-                        F.sum(F.col("__g").cast(dec)).cast("double")
-                        .alias("gt_"),
-                        F.sum(F.col("__h").cast(dec)).cast("double")
-                        .alias("ht_"),
-                    )
-                    .collect()  # ≤ 2^level rows
-                }
-            for n in nodes:
-                if n in best:
-                    b = best[n]
-                    picks[n] = {
-                        "feature": b["feature"],
-                        "thr": float(b["thr"]),
-                        "gain": round(b["gain"], 9),
-                        "w_le": _gb_leaf(b["gl"], b["hl"], lam, alpha),
-                        "w_gt": _gb_leaf(b["gr"], b["hr"], lam, alpha),
-                    }
-                    continue
-                if level == 0:
-                    sub0 = node_subsets[n] if node_subsets else subset
-                    pf, pt = sub0[0], ranges[sub0[0]][0]
-                else:
-                    pf, pt = picks[n // 2]["feature"], picks[n // 2]["thr"]
-                if n in tot:
-                    w = _gb_leaf(tot[n]["gt_"], tot[n]["ht_"], lam, alpha)
-                else:
-                    w = _gb_leaf(0.0, 0.0, lam, alpha)
-                picks[n] = {
-                    "feature": pf,
-                    "thr": pt,
-                    "gain": 0.0,
-                    "w_le": w,
-                    "w_gt": w,
-                }
-
-        for n in sorted(picks):
-            pk = picks[n]
-            model_rows.append(
-                (t, n, pk["feature"], pk["thr"], pk["gain"], pk["w_le"], pk["w_gt"])
-            )
-        splits = {n: (p["feature"], p["thr"]) for n, p in picks.items()}
-        leaves = {
-            m: picks[m // 2]["w_gt" if m % 2 else "w_le"]
-            for m in range(2**depth, 2 ** (depth + 1))
-        }
-        f = _score_step(f, eta, _walk(splits, leaves))
-    df.unpersist()
-    return pairs.sparkSession.createDataFrame(model_rows, GBD_SCHEMA)
+def _model(pairs, trees: list[dict[int, dict]]):
+    """One (round, node, ...) row per heap node of every tree."""
+    rows = [
+        (t, n, p["feature"], p["thr"], p["gain"], p["w_le"], p["w_gt"])
+        for t, tree in enumerate(trees, 1)
+        for n, p in sorted(tree.items())
+    ]
+    return pairs.sparkSession.createDataFrame(rows, GBD_SCHEMA)
 
 
 def gboost_deep_fit(
@@ -312,32 +112,15 @@ def gboost_deep_fit(
     w_gt) with one row per heap node 1..2^depth−1 per round. Leaf
     weights are meaningful at the last level (w_le = w_gt on
     unsplittable/empty nodes); a scorer walks the split path and adds
-    η·w_leaf. Plan per round: one g/h checkpoint, then depth × (one
-    candidate-grid aggregate + a ≤2^level-row collect, plus a
-    node-totals aggregate only on levels with an unsplittable node) —
-    the argmax collect budget grows with the TREE, never the data."""
-    return _fit_trees(
-        "gboost_deep_fit", _exact_level, pairs, features, label, rounds,
-        depth, grid, lam, alpha, gamma, eta, subsample, colsample,
-        colsample_bynode, min_child_weight, row_key, seed,
-    )
-
-
-def _exact_level(
-    base: DataFrame,
-    subset: list[str],
-    ranges: dict[str, tuple[float, float]],
-    grid_rows: list[tuple[str, float]],
-    grid: int,
-) -> DataFrame:
-    """gboost_deep_fit's level: every (row, candidate) pair of the
-    subset's grid, region sums per (node, feature, thr)."""
-    return (
-        base.select("*", _cands([c for c in grid_rows if c[0] in subset]))
-        .withColumn("__x", _feat_val(subset))
-        .groupBy("__node", "feature", "thr")
-        .agg(*_region_sums())
-    )
+    η·w_leaf. One Spark job (the collect), at any rounds or depth."""
+    if subsample < 1.0 and row_key is None:
+        raise ValueError("gboost_deep_fit: subsample < 1 requires row_key")
+    return _model(pairs, _grow(
+        pairs, features, label, rounds, depth, grid, lam, alpha, gamma,
+        eta, subsample=subsample, colsample=colsample,
+        colsample_bynode=colsample_bynode,
+        min_child_weight=min_child_weight, row_key=row_key, seed=seed,
+    ))
 
 
 def gboost_deep_ctes(
@@ -560,23 +343,23 @@ def gboost_deep_sql(
 
 
 # ---------------------------------------------------------------------------
-# Histogram split finding — tree_method='hist', the 100 TB scale path
+# Histogram split finding — tree_method='hist'
 # ---------------------------------------------------------------------------
 
 
-def _bucket_expr_spark(x, mn: float, step: float, grid: int):
-    """Bucket id 1..grid: the smallest threshold index covering x
-    (ceil((x−mn)/step), clamped). Rows in bucket `grid` lie above the
-    last threshold. The identical expression tree evaluates in SQL, so
-    bucket boundaries agree bit-for-bit across engines even where
-    ceil((x−mn)/step) and a direct x <= thr_k comparison would differ
-    by one ulp. A constant feature (step 0) maps everything to bucket
-    1 — the SQL twin branches on mx = mn at runtime, this branch on
-    the same collected stats."""
+def _bucket(col: tuple[np.ndarray, np.ndarray], mn: float, step: float, grid: int):
+    """Bucket id 1..grid per row: the smallest threshold index
+    covering x, CAST(GREATEST(1, LEAST(grid, CEIL((x − mn)/step))) AS
+    INT) as Spark evaluates it — CEIL(NaN) is 0, so NaN lands in
+    bucket 1, and LEAST skips a NULL, so NULL lands in bucket
+    ``grid``, above the last threshold. A constant feature (step 0)
+    maps every row to bucket 1 — the SQL twin branches on mx = mn."""
+    x, null = col
     if step == 0.0:
-        return F.lit(1).cast("int")
-    c = F.ceil((x - F.lit(mn)) / F.lit(step))
-    return F.greatest(F.lit(1), F.least(F.lit(grid), c)).cast("int")
+        return np.ones(len(x), dtype=np.int64)
+    with np.errstate(all="ignore"):
+        c = np.nan_to_num(np.ceil((x - mn) / step), nan=0.0)
+    return np.where(null, grid, np.clip(c, 1, grid)).astype(np.int64)
 
 
 def gboost_hist_fit(
@@ -599,101 +382,73 @@ def gboost_hist_fit(
 ) -> DataFrame:
     """:func:`gboost_deep_fit` with HISTOGRAM split finding — the
     reference XGBoost's ``tree_method='hist'``
-    (`03_Train & Deploy Model.py:172`) and the booster's true 100 TB
-    shape: instead of a rows × features × grid candidate expansion
-    (exact comparisons, O(n·f·G) DECIMAL terms per level), each row
-    lands in ONE bucket per feature (ceil on the fixed grid), the
-    per-(node, feature, bucket) g/h histogram aggregates in one
-    O(n·f) pass, and split sums come from DECIMAL prefix sums over
-    the ≤G-bucket histogram — exact and order-insensitive, so the
-    whole fit still replays bit-for-bit in SQL. Candidate thresholds
-    are the OCCUPIED bucket boundaries (XGBoost-hist semantics; an
-    empty bin is never a distinct split). Right-region sums are
-    decimal differences (total − prefix) — exact, no second pass.
+    (`03_Train & Deploy Model.py:172`): each row lands in ONE bucket
+    per feature (ceil on the fixed grid), the per-(node, feature,
+    bucket) g/h histogram is summed once, and split sums are DECIMAL
+    prefix sums over the ≤G-bucket histogram — exact and
+    order-insensitive, so the whole fit still replays bit-for-bit in
+    SQL. Candidate thresholds are the OCCUPIED bucket boundaries
+    (XGBoost-hist semantics; an empty bin is never a distinct split).
+    Right-region sums are decimal differences (total − prefix).
     Same model contract as gboost_deep_fit (round, node, feature,
     thr, gain, w_le, w_gt); unsplittable/empty nodes fall back
     identically."""
-    return _fit_trees(
-        "gboost_hist_fit", _hist_level, pairs, features, label, rounds,
-        depth, grid, lam, alpha, gamma, eta, subsample, colsample,
-        colsample_bynode, min_child_weight, row_key, seed,
-    )
+    if subsample < 1.0 and row_key is None:
+        raise ValueError("gboost_hist_fit: subsample < 1 requires row_key")
+    return _model(pairs, _grow(
+        pairs, features, label, rounds, depth, grid, lam, alpha, gamma,
+        eta, regions=_hist_regions, subsample=subsample,
+        colsample=colsample, colsample_bynode=colsample_bynode,
+        min_child_weight=min_child_weight, row_key=row_key, seed=seed,
+    ))
 
 
-def _hist_level(
-    base: DataFrame,
-    subset: list[str],
-    ranges: dict[str, tuple[float, float]],
-    grid_rows: list[tuple[str, float]],
-    grid: int,
-) -> DataFrame:
-    """gboost_hist_fit's level: per-(node, feature, bucket) g/h
-    histograms, DECIMAL prefix sums, occupied-boundary thresholds."""
-    step = {f_: (mx - mn) / float(grid) for f_, (mn, mx) in ranges.items()}
-    dec = "decimal(38,18)"
-    fb = F.inline(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(f_).alias("feature"),
-                    _bucket_expr_spark(
-                        F.col(f_), ranges[f_][0], step[f_], grid
-                    ).alias("bucket"),
-                )
-                for f_ in subset
-            ]
-        )
-    )
-    hist = (
-        base.select("__node", "__g", "__h", fb)
-        .groupBy("__node", "feature", "bucket")
-        .agg(
-            F.sum(F.col("__g").cast(dec)).alias("gb"),
-            F.sum(F.col("__h").cast(dec)).alias("hb"),
-        )
-    )
-    wpre = (
-        Window.partitionBy("__node", "feature")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # same partition AND order as wpre so both frames share one
-    # sort (decimal sums are order-insensitive either way)
-    wall = (
-        Window.partitionBy("__node", "feature")
-        .orderBy("bucket")
-        .rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-    )
-    cum = hist.select(
-        "__node",
-        "feature",
-        "bucket",
-        F.sum("gb").over(wpre).alias("glp"),
-        F.sum("hb").over(wpre).alias("hlp"),
-        F.sum("gb").over(wall).alias("gtp"),
-        F.sum("hb").over(wall).alias("htp"),
-    )
-    thr_col = None
+def _hist_regions(X, node, nodes, subset, ranges, grid_rows, grid, gh):
+    """gboost_hist_fit's level: per (node, feature) the DECIMAL g/h sum
+    of each occupied bucket (NULL when no row of it has one), running
+    sums in bucket order that skip NULLs, and one candidate per
+    occupied bucket below ``grid`` at threshold mn + bucket·step. The
+    right region is total − prefix, which Spark types DECIMAL(38,17):
+    rounded half up to 17 places before the cast to double."""
+    out = []
     for f_ in subset:
-        cond = F.col("feature") == f_
-        val = F.lit(ranges[f_][0]) + F.col("bucket") * F.lit(step[f_])
-        thr_col = (
-            F.when(cond, val)
-            if thr_col is None
-            else thr_col.when(cond, val)
-        )
-    return cum.filter(F.col("bucket") <= grid - 1).select(
-        "__node",
-        "feature",
-        "bucket",
-        F.col("glp").cast("double").alias("gl"),
-        F.col("hlp").cast("double").alias("hl"),
-        (F.col("gtp") - F.col("glp")).cast("double").alias("gr"),
-        (F.col("htp") - F.col("hlp")).cast("double").alias("hr"),
-        thr_col.alias("thr"),
-    )
+        mn, mx = ranges[f_]
+        step = (mx - mn) / float(grid)
+        b = _bucket(X[f_], mn, step, grid)
+        for n in nodes:
+            at = node == n
+            if not at.any():
+                continue
+            occupied = np.unique(b[at]).tolist()
+            rows = np.array([at & (b == k) for k in occupied])
+            sides = []
+            for lm, ok in gh:
+                has = (rows & ok).any(axis=1)
+                pre, run = [], None
+                for s_, h_ in zip(masked_sums(rows, lm), has.tolist()):
+                    if h_:
+                        run = checked(checked(s_) + (run or 0))
+                    pre.append(run)
+                sides.append((pre, run))
+            (g_pre, g_tot), (h_pre, h_tot) = sides
+            for i, k in enumerate(occupied):
+                if k <= grid - 1:
+                    out.append((
+                        n, f_, mn + k * step,
+                        units_to_double(g_pre[i]), units_to_double(h_pre[i]),
+                        _minus17(g_tot, g_pre[i]), _minus17(h_tot, h_pre[i]),
+                    ))
+    return out
+
+
+def _minus17(a: int | None, b: int | None) -> float | None:
+    """CAST(a − b AS DOUBLE) for DECIMAL(38,18) a and b, whose
+    difference Spark types DECIMAL(38,17)."""
+    if a is None or b is None:
+        return None
+    q, r = divmod(abs(a - b), 10)
+    q += r >= 5
+    return units_to_double(q if a >= b else -q, 17)
 
 
 def gboost_hist_ctes(

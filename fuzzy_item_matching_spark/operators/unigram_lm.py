@@ -308,53 +308,6 @@ def unigram_em_sql(docs_sql_tokens: str) -> str:
     )
 
 
-def _viterbi_cols(dp: DataFrame, P, word: str, rev: bool = False):
-    """Attach v{i}/l{i} Viterbi columns (best path prob, winning piece
-    length) over the ``word`` column. Tie-break: smallest k wins (the
-    k-ascending >= chain, identical in the SQL twin)."""
-    dp = dp.withColumn("v0", F.lit(1.0))
-    for i in range(1, MAXLEN + 1):
-        ks = list(range(1, min(KMAX, i) + 1))
-        ts = {
-            k: F.col(f"v{i - k}")
-            * P(f"substring({word}, {i - k + 1}, {k})")
-            for k in ks
-        }
-        tmp = dp
-        for k in ks:
-            tmp = tmp.withColumn(f"__t{k}", ts[k])
-        v = F.greatest(*[F.col(f"__t{k}") for k in ks]) if len(ks) > 1 \
-            else F.col("__t1")
-        dp = tmp.withColumn(
-            f"v{i}",
-            F.when(F.lit(i) <= F.col("l"), v).otherwise(F.lit(0.0)),
-        ).withColumn(f"l{i}", _argmax_k(ks))
-        dp = dp.drop(*[f"__t{k}" for k in ks])
-        if i % 6 == 0:
-            dp = dp.localCheckpoint(eager=True)
-    return dp
-
-
-def _argmax_k(ks: list[int]):
-    """First k (ascending) whose bound __t{k} is >= all later ones —
-    the deterministic argmax tie-break shared with the SQL twin."""
-    expr = None
-    for k in ks[:-1]:
-        cond = None
-        for k2 in ks:
-            if k2 <= k:
-                continue
-            c = F.col(f"__t{k}") >= F.col(f"__t{k2}")
-            cond = c if cond is None else cond & c
-        expr = (
-            F.when(cond, F.lit(k))
-            if expr is None
-            else expr.when(cond, F.lit(k))
-        )
-    last = F.lit(ks[-1])
-    return last if expr is None else expr.otherwise(last)
-
-
 def unigram_viterbi_segments(docs: DataFrame, tokenize) -> DataFrame:
     """Viterbi segmentation APPLY: per distinct word, the max-prob
     segmentation under the substring-count unigram model (the p0 the

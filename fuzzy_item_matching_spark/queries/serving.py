@@ -536,9 +536,9 @@ def serve_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     MERGE, LSH, labeling, fit, AND serve in one verdict.
 
     Scale: identical shapes to the proven pieces — the labeled-pair
-    frame persists once and feeds the fit's bounded passes (each a
-    map-side-combinable aggregate; the collect is the model table, 2
-    rows); scoring is one narrow projection over the candidate frame.
+    frame persists once and feeds the fit (one Arrow collect of the
+    pair features, rounds on the driver); scoring is one narrow
+    projection over the candidate frame.
     """
     import os
     import shutil
@@ -604,7 +604,7 @@ def serve_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
             squared_dist(sl("__ea", 1, 32), sl("__eb", 1, 32)).alias("head_sqd"),
             squared_dist(sl("__ea", 33, 32), sl("__eb", 33, 32)).alias("tail_sqd"),
         )
-        .persist()  # feeds the fit's bounded passes AND the scoring
+        .persist()  # feeds the fit's collect AND the scoring
     )
 
     model_rows = sorted(

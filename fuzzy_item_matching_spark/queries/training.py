@@ -2968,7 +2968,7 @@ def train_adaboost_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle re-runs the unrolled fit AND the scoring join, so fit
     and serve verify together end-to-end.
 
-    Plan: the fit's per-round passes run ONCE per session — the model
+    Plan: the fit runs ONCE per session — the model
     comes from the shared (sf_dir, rounds)-keyed memo that
     train_adaboost_stumps fills (r06 VERDICT fix: fit and serve in one
     session used to cost 2·K passes) — then one projection +
@@ -3037,8 +3037,8 @@ def train_adaboost_depth2(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact decimal comparisons, alpha and the two weight factors
     quantized to 9 digits. The oracle unrolls all {r} rounds — root
     argmin, side-partitioned child argmins, leaf signs, and the weight
-    recursion. Per round: 2 passes over the persisted pair frame + two
-    KB-scale collects; K rounds = 2K passes (the logreg-GD budget).
+    recursion. The fit is one collect of the pair features; its rounds
+    run on the driver (operators/boosting.py).
 
     Output: the fitted model table (round, f0, t0, fl, tl, sll, slr,
     fr, tr, srl, srr, err, alpha) — a scorer applies
@@ -3140,13 +3140,12 @@ def train_gboost_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Replayability (operators/boosting.py gboost_fit): region sums are
     DECIMAL(38,18) accumulations of per-row doubles; the gain is ONE
-    shared SQL string evaluated by both engines (F.expr / verbatim),
+    shared SQL string (a Python lambda in the fit, verbatim in DuckDB),
     so its float contraction is identical by construction; leaf
-    weights and the per-row score update round to 9 digits each round
+    weights round to 9 digits and the per-row score to 10 each round
     — the logreg-GD quantization that stops last-ulp libm sigmoid
-    differences from compounding. Per round: one pass over the
-    persisted pair frame + a 1-row argmax collect; {r} rounds = {r}
-    passes.
+    differences from compounding. The fit is one collect of the pair
+    features, then {r} rounds on the driver.
 
     Output: the model table (round, feature, thr, gain, w_le, w_gt);
     a scorer applies f(x) = Σ_t η·w_leaf through the split path. The
@@ -3652,9 +3651,9 @@ def train_gboost_depth2(spark: SparkSession, sf_dir: str) -> DataFrame:
     train_adaboost_depth2's tree shape; the degenerate-root fallback
     (empty side → trivial child, leaves computed from zero sums so
     even the −0.0 sign matches) is the adaboost pri-2 discipline.
-    {r} rounds = {r}·2 passes over the persisted pair frame plus
-    1-row/2-row argmax collects. Memoized per (sf_dir, rounds); the
-    serve half reads the same model."""
+    One collect of the pair features, then {r} rounds on the driver.
+    Memoized per (sf_dir, rounds); the serve half reads the same
+    model."""
     from fuzzy_item_matching_spark.operators.boosting import GB2_SCHEMA
 
     return spark.createDataFrame(_gb2_rows(spark, sf_dir), GB2_SCHEMA)
@@ -3779,10 +3778,9 @@ def train_gboost_depth3(spark: SparkSession, sf_dir: str) -> DataFrame:
     the generic recursion the reference's searched ``max_depth`` 1-30
     spans (`03_Train & Deploy Model.py:165`), generalizing the
     hand-unrolled depth-1/2 fits: trees are complete heap-numbered
-    binary trees; each level is ONE (node × feature × threshold)
-    grouped aggregate plus a per-node window argmax, so depth d costs
-    d passes per round — never 2^d — and the collect budget is the
-    tree size (≤2^d−1 rows), never the data. Unsplittable/empty nodes
+    binary trees; each level sums every (node × feature × threshold)
+    candidate and takes a per-node argmax, on the driver after one
+    collect of the pair features. Unsplittable/empty nodes
     take XGBoost's leaf semantics (both children inherit
     −soft(G,α)/(H+λ) of the node). The DuckDB oracle unrolls one CTE
     chain per (round, level, node) and replays every level exactly
@@ -3891,19 +3889,16 @@ def _gbh_oracle() -> str:
 @query("train_gboost_hist", oracle=_gbh_oracle())
 def train_gboost_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HISTOGRAM split finding at depth 3 — the reference XGBoost's
-    ``tree_method='hist'`` (`03_Train & Deploy Model.py:172`) and the
-    booster family's true 100 TB shape: each row lands in ONE bucket
-    per feature (ceil on the fixed grid — the identical expression
-    both engines evaluate), the per-(node, feature, bucket) g/h
-    histogram aggregates in one O(n·f) pass per level, and split
+    ``tree_method='hist'`` (`03_Train & Deploy Model.py:172`): each
+    row lands in ONE bucket per feature (ceil on the fixed grid — the
+    identical expression both engines evaluate), the per-(node,
+    feature, bucket) g/h histogram sums once per level, and split
     region sums come from DECIMAL prefix sums over the ≤16-bucket
     histogram with right regions as exact decimal differences
-    (total − prefix) — no second pass, no rows×grid expansion, still
-    bit-for-bit SQL-replayable. Candidate thresholds are the OCCUPIED
-    bucket boundaries (XGBoost-hist semantics). Compare
-    train_gboost_depth3: same tree shape, same gain/leaf math,
-    exact-comparison candidates at O(n·f·grid) — this query is the
-    plan that wins when n·grid stops fitting the shuffle."""
+    (total − prefix) — bit-for-bit SQL-replayable. Candidate
+    thresholds are the OCCUPIED bucket boundaries (XGBoost-hist
+    semantics). Compare train_gboost_depth3: same tree shape, same
+    gain/leaf math, exact-comparison candidates at O(n·f·grid)."""
     from fuzzy_item_matching_spark.operators.gboost_deep import GBD_SCHEMA
 
     return spark.createDataFrame(
@@ -4750,10 +4745,9 @@ def train_gboost_poisson(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch. The DuckDB oracle replays all {r} rounds with the Poisson
     gh CTEs.
 
-    Plan: identical to train_gboost_fit — per round one pass over the
-    persisted per-customer frame (a keyed aggregation of orders,
-    shuffled once) against the broadcast threshold grid, one 1-row
-    argmax collect. Zero-order counts (customers without orders) are
+    Plan: identical to train_gboost_fit — one collect of the
+    per-customer frame (a keyed aggregation of orders, shuffled once),
+    then the rounds on the driver. Zero-order counts (customers without orders) are
     first-class: the left join keeps them and Poisson's h = mu > 0
     keeps every region solvable.
 

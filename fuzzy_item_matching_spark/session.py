@@ -14,6 +14,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_memory() -> str:
+    """``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM`` if set, else
+    min(48g, half the physical RAM) in MiB, so a small host keeps room
+    for the Python driver (where the boosting fits run) and workers."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48 * 1024, ram // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "fuzzy_item_matching_spark",
     master: str | None = None,
@@ -46,7 +57,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

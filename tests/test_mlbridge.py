@@ -583,12 +583,12 @@ def test_gboost_depth2_degenerate_fallback_matches_oracle(spark):
 
 
 def test_gboost_fit_jobs_per_round(spark):
-    """Boosting rounds keep no state: an extra gboost_fit round runs
-    its argmax aggregate (a shuffle-map job plus the 1-row collect)
-    and nothing else — no broadcast candidate frame and no per-round
-    score checkpoint. Jobs are counted by job group through
-    statusTracker for the fit plus a collect of its model rows."""
-    from fuzzy_item_matching_spark.operators.boosting import gboost_fit
+    """Each boosting fit runs exactly one Spark job — the Arrow collect
+    of its training columns — at any rounds or depth; the round loop
+    runs on the driver. Jobs are counted by job group through
+    statusTracker for the fit call; its model rows are collected
+    outside the group."""
+    from fuzzy_item_matching_spark.operators import boosting, gboost_deep
 
     sc = spark.sparkContext
     pairs = spark.createDataFrame(
@@ -596,19 +596,29 @@ def test_gboost_fit_jobs_per_round(spark):
         "label int, xa double, xb double",
     )
 
-    def jobs(rounds):
-        group = f"gboost-jobs-{rounds}"
-        sc.setJobGroup(group, "gboost_fit job count")
+    def jobs(fit_name, rounds, depth=None):
+        fit = getattr(boosting, fit_name, None) or getattr(gboost_deep, fit_name)
+        kw = {} if depth is None else {"depth": depth}
+        group = f"{fit_name}-jobs-{rounds}"
+        sc.setJobGroup(group, "boosting fit job count")
         try:
-            model = gboost_fit(pairs, ["xa", "xb"], rounds=rounds).collect()
+            model = fit(pairs, ["xa", "xb"], rounds=rounds, **kw)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
-        assert len(model) == rounds
+        assert model.count() == rounds * (2 ** (depth or 1) - 1)
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    one, four = jobs(1), jobs(4)
-    assert four - one <= 3 * 2, (one, four)
+    for fit_name, depth in [
+        ("adaboost_stumps", None),
+        ("adaboost_depth2", None),
+        ("gboost_fit", None),
+        ("gboost_depth2_fit", None),
+        ("gboost_deep_fit", 3),
+        ("gboost_hist_fit", 3),
+    ]:
+        counts = (jobs(fit_name, 1, depth), jobs(fit_name, 4, depth))
+        assert counts == (1, 1), (fit_name, counts)
 
 
 # 40 rows with label noise, so every round reweights (AdaBoost) or
@@ -634,13 +644,11 @@ _LONG_ROWS = [
     ],
 )
 def test_long_fits_match_oracle(spark, fit_name, rounds):
-    """Fits that run past MARGIN_DEPTH rounds, where the carried
-    weight/score column is materialized once and carried as a plain
-    column again, emit the same model rows as their DuckDB twins (which
-    unroll every round's state as a CTE). adaboost_depth2 cannot get
-    there: its DECIMAL(38,0) weights gain ~9 digits a round and
-    overflow at round 5 on these rows (in both engines), so it runs at
-    that 4-round ceiling."""
+    """Ten-round fits emit the same model rows as their DuckDB twins
+    (which unroll every round's state as a CTE). adaboost_depth2
+    cannot get there: its DECIMAL(38,0) weights gain ~9 digits a round
+    and overflow at round 5 on these rows (in both engines), so it
+    runs at that 4-round ceiling."""
     import duckdb
 
     from fuzzy_item_matching_spark.operators import boosting
