@@ -25,7 +25,12 @@ features with ``toPandas`` and fits on one node (NB3:119-134), each fit
 runs ONE Spark job — an Arrow collect of its label and feature columns
 — and its round loop in numpy on the driver, with Spark SQL's numerics
 and NULL/NaN ordering (operators/spark_numerics.py), so its model rows
-equal the SQL twins' bit for bit.
+equal the SQL twins' bit for bit. The training frame must fit on the
+driver: most callers pass labelled pair samples (1,999 rows at sf0.1),
+but ``train_gboost_poisson`` passes the whole customer table (150k·sf
+rows, 15,000 at sf0.1, the largest input measured). Each tree level
+holds (candidates × rows) masks there, and the exact DECIMAL sums
+refuse ``spark_numerics.EXACT_ROWS`` rows or more.
 """
 
 from __future__ import annotations

@@ -8,20 +8,26 @@ plans (and the DuckDB twins) compute, bit for bit:
   the double's shortest decimal string half up. NaN and ±inf cast to
   NULL, and a result past the precision raises, as ANSI mode does;
 - DECIMAL sums are exact: integers scaled by 10^s, summed exactly in
-  int64 base-10^12 limbs; DECIMAL -> DOUBLE is a correctly rounded
-  division.
+  int64 base-10^9 limbs (below EXACT_ROWS rows; more raise rather
+  than wrap); DECIMAL -> DOUBLE is a correctly rounded division.
 """
 
 from __future__ import annotations
 
 import math
 import struct
-from decimal import ROUND_HALF_UP, Decimal
+from decimal import ROUND_HALF_UP, Context, Decimal
 
 import numpy as np
 from pyspark.errors import ArithmeticException
 
-_LIMB, _N_LIMBS = 10**12, 4  # 10^48 covers DECIMAL(38, s)
+_LIMB, _N_LIMBS = 10**9, 5  # 10^45 covers DECIMAL(38, s)
+# n·(10^9 − 1) < 2^63 − 1: the most rows an int64 limb sum holds
+EXACT_ROWS = 9_000_000_000
+# enough digits that no quantize or rescale below rounds: a finite
+# double has at most 309 integer digits, so 327 at 18 places, before
+# checked() rejects it (Python's default context holds only 28)
+_CTX = Context(prec=400, rounding=ROUND_HALF_UP)
 
 
 def _word(hi: int, lo: int = 0) -> float:
@@ -85,17 +91,22 @@ def checked(units: int, scale: int = 18, precision: int = 38) -> int:
     return units
 
 
-def _half_up(x: float, scale: int) -> Decimal:
-    return Decimal(repr(x)).quantize(Decimal(1).scaleb(-scale), ROUND_HALF_UP)
+def _half_up(v, scale: int) -> list[Decimal | None]:
+    """Each finite double's shortest decimal string rounded half up to
+    ``scale`` places; None for NaN and ±inf."""
+    q = Decimal(1).scaleb(-scale)
+    return [
+        Decimal(repr(x)).quantize(q, context=_CTX) if math.isfinite(x) else None
+        for x in np.asarray(v, dtype=np.float64).tolist()
+    ]
 
 
 def to_units(v, scale: int = 18) -> list[int | None]:
     """CAST(v AS DECIMAL(38, scale)) per element, as unscaled integers
     (value·10^scale); NaN and ±inf are NULL (None)."""
     return [
-        checked(int(_half_up(x, scale).scaleb(scale)), scale)
-        if math.isfinite(x) else None
-        for x in np.asarray(v, dtype=np.float64).tolist()
+        None if d is None else checked(int(d.scaleb(scale, _CTX)), scale)
+        for d in _half_up(v, scale)
     ]
 
 
@@ -107,24 +118,31 @@ def units_to_double(units: int | None, scale: int = 18) -> float | None:
 def round_half_up(v, scale: int) -> np.ndarray:
     """``round(v, scale)`` per element; a zero result is +0.0, as
     Java's BigDecimal has no negative zero."""
+    v = np.asarray(v, dtype=np.float64)
     return np.array(
         [
-            float(_half_up(x, scale)) + 0.0 if math.isfinite(x) else x
-            for x in np.asarray(v, dtype=np.float64).tolist()
-        ]
+            x if d is None else float(d) + 0.0
+            for x, d in zip(v.tolist(), _half_up(v, scale))
+        ],
+        dtype=np.float64,
     )
 
 
 def limbs(units) -> np.ndarray:
-    """(n, 4) int64 base-10^12 digits of each integer (None -> 0): a 0/1
-    mask matrix times them sums exactly below 9·10^6 rows."""
-    out = np.zeros((len(units), _N_LIMBS), dtype=np.int64)
-    for i, u in enumerate(units):
-        a = abs(u or 0)
-        for j in range(_N_LIMBS):
-            a, out[i, j] = divmod(a, _LIMB)
-        if u and u < 0:
-            out[i] *= -1
+    """(n, 5) int64 base-10^9 digits of each integer (None -> 0): a 0/1
+    mask matrix times them sums exactly, as n < EXACT_ROWS."""
+    if len(units) >= EXACT_ROWS:
+        raise ValueError(
+            f"{len(units)} rows: exact DECIMAL sums hold fewer than {EXACT_ROWS}"
+        )
+    a = np.array([u or 0 for u in units], dtype=object)
+    neg = a < 0
+    a = np.abs(a)
+    out = np.empty((len(a), _N_LIMBS), dtype=np.int64)
+    for j in range(_N_LIMBS):
+        out[:, j] = (a % _LIMB).astype(np.int64)
+        a = a // _LIMB
+    out[neg] *= -1
     return out
 
 

@@ -1,16 +1,20 @@
 """operators/spark_numerics.py against the Spark it reproduces: fdlibm
 ``exp`` against ``java.lang.StrictMath.exp``, and the DECIMAL(38,18)
 cast, DECIMAL -> DOUBLE cast and ``round(x, 10)`` against one Spark
-DataFrame of the same values."""
+DataFrame of the same values; the limb sums against Python's ints."""
 
 from __future__ import annotations
 
 import math
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
+from fuzzy_item_matching_spark.operators import spark_numerics
 from fuzzy_item_matching_spark.operators.spark_numerics import (
+    limbs,
+    masked_sums,
     round_half_up,
     strict_exp,
     to_units,
@@ -52,6 +56,8 @@ def test_decimal_cast_and_round_match_spark(spark):
             rng.normal(0.0, 0.5, 500), 9
         ),
         [0.0, -0.0, 5e-19, -5e-19, 1.5e-10, math.nan, math.inf],
+        # past the 28 digits of Python's default decimal context
+        [1.2345678901234567e11, -9.87654321e15, 9.9e19, -1.0000000000000002e19],
     ])
     rows = (
         spark.createDataFrame([(float(x),) for x in xs], "x double")
@@ -71,3 +77,21 @@ def test_decimal_cast_and_round_match_spark(spark):
             _bits(row.dd if row.dd is not None else math.nan)
         ), (x, row.dd)
         assert _bits(r) == _bits(row.r), (x, r, row.r)
+
+
+def test_limb_sums_exact_and_bounded(monkeypatch):
+    rng = np.random.default_rng(13)
+    units = [
+        None if i % 7 == 0 else int(rng.integers(-(10**18), 10**18)) * 10**19 + i
+        for i in range(300)
+    ] + [10**38 - 1, -(10**38 - 1)]
+    masks = rng.random((5, len(units))) < 0.5
+    want = [
+        sum(u or 0 for u, m in zip(units, row) if m) for row in masks.tolist()
+    ]
+    assert masked_sums(masks, limbs(units)) == want
+    # past EXACT_ROWS an int64 limb sum could wrap: refuse instead
+    monkeypatch.setattr(spark_numerics, "EXACT_ROWS", 4)
+    assert limbs([1, -2, None]).shape == (3, 5)
+    with pytest.raises(ValueError, match="exact DECIMAL sums"):
+        limbs([1, 2, 3, 4])
