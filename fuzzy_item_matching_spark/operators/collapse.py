@@ -69,8 +69,9 @@ def expand_group_pairs(
 ) -> DataFrame:
     """Expand group-level pairs back to document-level pairs.
 
-    ``rep_pairs``: cross-group matches over representative ids
-    (id_a < id_b, both group ids) plus ``val_cols``. ``self_groups``:
+    ``rep_pairs``: matches over representative ids (id_a < id_b, both
+    group ids; an id_a = id_b row gives its group's intra-group value)
+    plus ``val_cols``. ``self_groups``:
     (__gid, *val_cols) rows for groups whose INTRA-group pairs belong
     in the output (their value is signature-determined — Jaccard 1.0,
     Hamming 0); groups of size 1 contribute nothing via the final

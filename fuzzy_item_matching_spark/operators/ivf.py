@@ -21,7 +21,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from fuzzy_item_matching_spark.functions.vector import dot, l2_norm
 
@@ -244,13 +243,14 @@ def ivf_cosine_topk(
     graded vs brute force in tests.
     """
     from fuzzy_item_matching_spark.operators.lsh import (
+        _cosine_topk,
         _infer_dim,
         valid_vectors,
     )
 
     dim = len(centroids[0]) if centroids else _infer_dim(df, vec_col)
-    # np.stack in score_cell dies on NULL/ragged rows; one bad row must
-    # cost one row, not the task (see operators/lsh.py valid_vectors).
+    # np.stack in the block scorer dies on NULL/ragged rows; one bad row
+    # must cost one row, not the task (see operators/lsh.py valid_vectors).
     df = valid_vectors(df, vec_col, dim)
     if centroids is None:
         centroids = sample_centroids(df, id_col, vec_col, n_centroids)
@@ -265,92 +265,36 @@ def ivf_cosine_topk(
     # folds, analysis cost scale-independent) to the one-pass numpy
     # kernel — same bit-identical dots, map-only.
     scored = cell_order_frame(
-        df, id_col, vec_col, centroids, keep_vec=True, keep_norm=True
+        df, id_col, vec_col, centroids, keep_vec=True
     ).persist()  # cell scoring = n_centroids dots per row; feeds both sides
-
-    index = scored.select(
-        F.col("__id").alias("nid"),
-        F.col("__v").alias("__vn"),
-        F.col("__n").alias("__nn"),
-        F.element_at("__cells", 1).alias("__cell"),
-    )
     probes = scored.select(
-        F.col("__id").alias("qid"),
-        F.col("__v").alias("__vq"),
-        F.col("__n").alias("__nq"),
         F.explode(F.slice("__cells", 1, n_probe)).alias("__cell"),
+        F.lit(0).cast("byte").alias("__side"),
+        "__id",
+        "__v",
     )
-
+    index = scored.select(
+        F.element_at("__cells", 1).alias("__cell"),
+        F.lit(1).cast("byte").alias("__side"),
+        "__id",
+        "__v",
+    )
     # Blockwise scoring per cell (the FAISS-IVF shape): instead of a
     # candidate equi-join that expands to |probes-in-cell| ×
     # |index-in-cell| rows each paying an interpreted per-pair
-    # array-dot (measured 16s for 2M pairs at sf0.1), cogroup ships
-    # each cell's probe/index vectors ONCE over Arrow and scores the
-    # block with one numpy matmul (~3s end-to-end). Per-cell top-k
-    # bounds the output to k·n_probe candidates per query; the exact
-    # global top-k window below is then tiny. Scale notes: both sides
-    # shuffle by cell id exactly once (same volume as the equi-join's
-    # shuffle WITHOUT the pair expansion); a cell block must fit one
+    # array-dot (measured 16s for 2M pairs at sf0.1), the sorted-run
+    # pass (``_cosine_topk``, pair mode) meets each cell's probe
+    # and index vectors once and scores the block with one folded
+    # numpy pass; per-cell top-k bounds the output to k·n_probe
+    # candidates per query, so the global top-k window is tiny. Each
+    # probe and index row shuffles by cell id once (the equi-join's
+    # volume WITHOUT the pair expansion); a cell run must fit one
     # task's memory, so n_centroids grows ~√n to bound occupancy.
-    id_field = df.schema[id_col]
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", id_field.dataType),
-            T.StructField("nid", id_field.dataType),
-            T.StructField("cosine", T.DoubleType()),
-        ]
+    return _cosine_topk(
+        probes.unionByName(index), ("__cell",), k, df.schema[id_col].dataType,
+        self_mode=False, dedup=False,
     )
 
-    def score_cell(
-        _key: tuple, probe_pdf: pd.DataFrame, index_pdf: pd.DataFrame
-    ) -> pd.DataFrame:
-        if probe_pdf.empty or index_pdf.empty:
-            return pd.DataFrame(
-                {"qid": [], "nid": [], "cosine": []}
-            ).astype({"cosine": "float64"})
-        from fuzzy_item_matching_spark.operators.lsh import _folded_dot_block
-
-        q = np.stack(probe_pdf["__vq"].to_numpy())
-        x = np.stack(index_pdf["__vn"].to_numpy())
-        qn = probe_pdf["__nq"].to_numpy()
-        xn = index_pdf["__nn"].to_numpy()
-        denom = np.outer(qn, xn)
-        # Dimension-ordered accumulation (not matmul's pairwise sums):
-        # the same left-to-right IEEE fold as the F.aggregate dot and
-        # DuckDB list_sum, keeping blockwise results bitwise
-        # oracle-exact (see operators/lsh.py).
-        cos = np.divide(
-            _folded_dot_block(q, x), denom,
-            out=np.zeros_like(denom), where=denom != 0.0,
-        )
-        qids = probe_pdf["qid"].to_numpy()
-        nids = index_pdf["nid"].to_numpy()
-        cos[qids[:, None] == nids[None, :]] = -np.inf  # self-pairs
-        rows_q, rows_n, rows_c = [], [], []
-        kk = min(k, len(nids))
-        for i in range(len(qids)):
-            # ties broken by ascending nid to match the global window
-            order = np.lexsort((nids, -cos[i]))[:kk]
-            order = order[np.isfinite(cos[i][order])]
-            rows_q.extend([qids[i]] * len(order))
-            rows_n.extend(nids[order])
-            rows_c.extend(cos[i][order])
-        return pd.DataFrame({"qid": rows_q, "nid": rows_n, "cosine": rows_c})
-
-    cand = (
-        probes.groupBy("__cell")
-        .cogroup(index.groupBy("__cell"))
-        .applyInPandas(score_cell, schema=out_schema)
-    )
-    # Each index vector lives in exactly one cell → (qid, nid) pairs are
-    # unique across cells; global exact top-k over ≤ k·n_probe
-    # candidates per query.
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
-    return (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "nid", "cosine", "rnk")
-    )
 
 def assign_cells(
     df: DataFrame,
@@ -389,15 +333,16 @@ def ivf_cell_pairs(
     by occupancy, never n² — the scale path that replaces
     ``dedup_embedding_exact_pairs``'s all-pairs oracle form.
 
-    Per-cell blocks are scored with one Arrow round-trip and a
-    dimension-folded numpy block dot (bitwise equal to the F.aggregate
-    / DuckDB list_sum fold — see operators/lsh.py); per-pair cosine is
-    independent of block membership, so the cross-block duplicates the
-    final (id_a, id_b) groupBy collapses carry identical bits and the
-    whole output is exactly oracle-replayable. Shuffles: one
-    groupBy(cell) + one groupBy(pair) over the already-thresholded
-    survivors. At 1000× the corpus, n_centroids grows ~√n so a cell
-    block stays one task's memory (the ``ivf_cosine_topk`` contract).
+    Each cell run is scored against itself in the sorted-run pass
+    (``_sorted_run_pairs``, self mode) with a dimension-folded numpy
+    block dot (bitwise equal to the F.aggregate / DuckDB list_sum fold
+    — see operators/lsh.py); per-pair cosine is independent of block
+    membership, so the cross-block duplicates the final (id_a, id_b)
+    groupBy collapses carry identical bits and the whole output is
+    exactly oracle-replayable. Shuffles: one on cell + one
+    groupBy(pair) over the already-thresholded survivors. At 1000× the
+    corpus, n_centroids grows ~√n so a cell block stays one task's
+    memory (the ``ivf_cosine_topk`` contract).
 
     Recall caveat (documented, tested): pairs whose probed cell lists
     are disjoint are missed — the classic SemDeDup trade. On the
@@ -406,8 +351,9 @@ def ivf_cell_pairs(
     (tests/test_dedup.py grades the subset + recall floor).
     """
     from fuzzy_item_matching_spark.operators.lsh import (
-        _folded_dot_block,
+        _cosine_block,
         _infer_dim,
+        _sorted_run_pairs,
         valid_vectors,
     )
 
@@ -424,12 +370,12 @@ def ivf_cell_pairs(
     # r14 (guide §4.2): probe-cell assignment via the numpy kernel —
     # see cell_order_frame; bit-identical order, map-only.
     probes = cell_order_frame(
-        df, id_col, vec_col, centroids, keep_vec=True, keep_norm=True
+        df, id_col, vec_col, centroids, keep_vec=True
     ).select(
+        F.explode(F.slice("__cells", 1, n_probe)).alias("__cell"),
+        F.lit(0).cast("byte").alias("__side"),
         "__id",
         "__v",
-        "__n",
-        F.explode(F.slice("__cells", 1, n_probe)).alias("__cell"),
     )
     id_field = df.schema[id_col]
     out_schema = T.StructType(
@@ -441,32 +387,12 @@ def ivf_cell_pairs(
         ]
     )
 
-    def cell_pairs(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pd.DataFrame(
-                {"id_a": [], "id_b": [], "cell": [], "cosine": []}
-            ).astype({"cell": "int32", "cosine": "float64"})
-        pdf = pdf.sort_values("__id")  # ascending ids → triu ⇒ id_a < id_b
-        v = np.stack(pdf["__v"].to_numpy())
-        nrm = pdf["__n"].to_numpy()
-        denom = np.outer(nrm, nrm)
-        cos = np.divide(
-            _folded_dot_block(v, v), denom,
-            out=np.zeros_like(denom), where=denom != 0.0,
-        )
-        ia, ib = np.triu_indices(len(pdf), k=1)
-        keep = cos[ia, ib] >= min_cosine
-        ids = pdf["__id"].to_numpy()
-        return pd.DataFrame(
-            {
-                "id_a": ids[ia[keep]],
-                "id_b": ids[ib[keep]],
-                "cell": np.full(int(keep.sum()), key[0], dtype="int32"),
-                "cosine": cos[ia[keep], ib[keep]],
-            }
-        )
+    def cell_pairs(key, ids_a, v_a, ids_b, v_b):
+        _, cos = _cosine_block(v_a, v_b)
+        ia, ib = np.nonzero((ids_a[:, None] < ids_b[None, :]) & (cos >= min_cosine))
+        return ids_a[ia], ids_b[ib], np.full(len(ia), key[0], np.int32), cos[ia, ib]
 
-    raw = probes.groupBy("__cell").applyInPandas(cell_pairs, schema=out_schema)
+    raw = _sorted_run_pairs(probes, ("__cell",), cell_pairs, out_schema, self_mode=True)
     # A pair sharing several probed cells repeats with IDENTICAL cosine
     # bits (per-pair fold is block-independent); keep the lowest cell.
     # min(cosine) == the value — used over first() for determinism.

@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 from fuzzy_item_matching_spark.functions.vector import dot
 
@@ -57,6 +58,186 @@ def _folded_dot_block_diag(a: np.ndarray) -> np.ndarray:
     for i in range(a.shape[1]):
         acc += a[:, i] * a[:, i]
     return acc
+
+
+def _cosine_block(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(dots, cosines) of all pairs a × b: the folded dot over the
+    product of the folded norms (Σ x² then sqrt, the l2_norm fold), 0
+    where a norm is 0 — bitwise equal to the expression cosine."""
+    dots = _folded_dot_block(a, b)
+    denom = np.outer(
+        np.sqrt(_folded_dot_block_diag(a)), np.sqrt(_folded_dot_block_diag(b))
+    )
+    return dots, np.divide(dots, denom, out=np.zeros_like(dots), where=denom != 0.0)
+
+
+def _sorted_run_pairs(
+    rows: DataFrame,
+    keys: tuple[str, ...],
+    scorer,
+    schema: T.StructType,
+    self_mode: bool,
+    cap: int | None = None,
+) -> DataFrame:
+    """Score every co-keyed block of ``rows`` in one sorted pass — the
+    candidate step of every blocked pair operator (LSH buckets, IVF
+    cells, label blocks).
+
+    ``rows`` carry ``(*keys, __side, __id, __v)``: ``__side`` 0 is the
+    query (left) side, 1 the index (right) side, ``__v`` an
+    array<double>. Plan: ``repartition(*keys)`` →
+    ``sortWithinPartitions(*keys, __side, __id)``, so each key is one
+    contiguous run with the left rows first and each side in ascending
+    id order → ONE ``mapInPandas`` that walks the runs across Arrow
+    batches, carrying only the unfinished last run into the next
+    batch. Per run it calls ``scorer(key, ids_a, v_a, ids_b, v_b)``,
+    which returns the output columns (arrays, in ``schema`` order):
+    left × right in pair mode (runs missing a side are skipped), the
+    run against itself in self mode (one-row runs are skipped).
+    ``cap`` keeps only the first ``cap`` index-side rows of a run —
+    the lowest ids, a deterministic posting-list truncation.
+
+    Why one sorted pass instead of one grouped pandas call per key:
+    where blocks are small and numerous, a pandas call per key cost
+    several times its arithmetic — ``lsh_sqdist_join`` on perfbench's
+    stream batch (a 200-item arrival batch against a 2,500-row stored
+    table, ~2,300 (table, bucket) keys; local[2] on a 4-vCPU VM) went
+    from 4.0 s to 1.3 s with the same output. The other five operators
+    were timed on the bench.py queries that reach them
+    (``docs/scaling/block_scorer_ab.json``): the LSH top-k forms got
+    faster, the IVF forms' few large cells about even, and the ten
+    large label blocks of ``blocked_pair_stats`` ~35 ms slower per
+    query than one grouped call each. The cap falls out of the sort
+    order instead of a ``row_number`` window. Each row is shuffled
+    once. Memory per task is one run plus one Arrow batch: a run must
+    fit one task."""
+    names = schema.fieldNames()
+    for k in keys:
+        dtype = rows.schema[k].dataType
+        if isinstance(dtype, (T.FloatType, T.DoubleType)):
+            # one block per value as an equi-join compares them: -0.0 = 0.0
+            # and NaN = NaN, whereas the hash partitioner sees the bits
+            c = F.col(k)
+            rows = rows.withColumn(
+                k,
+                F.when(F.isnan(c), float("nan"))
+                .when(c == 0, 0.0)
+                .otherwise(c)
+                .cast(dtype),
+            )
+
+    def run_starts(pdf: pd.DataFrame) -> np.ndarray:
+        """Positions past row 0 where a new key run begins."""
+        change = np.zeros(max(len(pdf) - 1, 0), dtype=bool)
+        for k in keys:
+            kv = pdf[k].to_numpy()
+            same = kv[1:] == kv[:-1]
+            if kv.dtype.kind == "f":
+                same |= np.isnan(kv[1:]) & np.isnan(kv[:-1])
+            change |= ~same
+        return np.flatnonzero(change) + 1
+
+    def score_whole_runs(pdf: pd.DataFrame):
+        """Output of every run in these sorted rows (all complete)."""
+        if pdf.empty:
+            return
+        side, ids = pdf["__side"].to_numpy(), pdf["__id"].to_numpy()
+        v = np.stack(pdf["__v"].to_numpy())
+        starts = np.r_[0, run_starts(pdf)]
+        ends = np.r_[starts[1:], len(ids)]
+        if self_mode:
+            a_end, b_start = ends, starts
+        else:
+            # left rows sort first; the right rows follow by ascending id
+            a_end = b_start = starts + np.add.reduceat(
+                (side == 0).astype(np.int64), starts
+            )
+        b_end = ends if cap is None else np.minimum(ends, b_start + cap)
+        live = (a_end > starts) & (b_end > b_start)
+        if self_mode:
+            live &= ends - starts > 1
+        starts, a_end, b_start, b_end = (x[live] for x in (starts, a_end, b_start, b_end))
+        run_keys = zip(*(pdf[k].to_numpy()[starts] for k in keys))
+        outs = [
+            scorer(key, ids[s:ae], v[s:ae], ids[bs:be], v[bs:be])
+            for key, s, ae, bs, be in zip(run_keys, starts, a_end, b_start, b_end)
+        ]
+        if outs:
+            yield pd.DataFrame(
+                {n: np.concatenate([o[j] for o in outs]) for j, n in enumerate(names)}
+            )
+
+    def score_runs(batches):
+        # a run may go on in the next Arrow batch: each batch's last run
+        # is carried over and scored with the next batch's rows
+        carry = None
+        for pdf in batches:
+            if carry is not None:
+                pdf = pd.concat([carry, pdf], ignore_index=True)
+            edges = run_starts(pdf)
+            last = edges[-1] if len(edges) else 0
+            yield from score_whole_runs(pdf.iloc[:last])
+            carry = pdf.iloc[last:]
+        if carry is not None:
+            yield from score_whole_runs(carry)
+
+    return (
+        rows.repartition(*keys)
+        .sortWithinPartitions(*keys, "__side", "__id")
+        .mapInPandas(score_runs, schema=schema)
+    )
+
+
+def _cosine_topk(
+    rows: DataFrame,
+    keys: tuple[str, ...],
+    k: int,
+    id_type: T.DataType,
+    self_mode: bool,
+    cap: int | None = None,
+    dedup: bool = True,
+) -> DataFrame:
+    """(qid, nid, cosine, rnk): cosine top-k per query id over the
+    blocks of ``rows`` (``_sorted_run_pairs``' input and modes).
+
+    Each block keeps every query row's k best index rows by cosine
+    (ties to the lower nid), never itself (nor a row sharing its id)
+    and never a NaN cosine. The pruning is lossless: any global top-k
+    pair is within the top-k of every block holding it (same total
+    order). A pair found in several blocks carries the same cosine
+    bits in each, so ``distinct`` collapses the repeats before one
+    exact row_number window over the survivors. ``dedup=False`` skips
+    that aggregate and its exchange where no pair can meet twice (an
+    IVF index row lives in one cell)."""
+
+    def score(_key, qids, vq, nids, vn):
+        _, cos = _cosine_block(vq, vn)
+        cos[qids[:, None] == nids[None, :]] = -np.inf
+        order = np.lexsort((np.broadcast_to(nids, cos.shape), -cos))[:, :k]
+        best = np.take_along_axis(cos, order, axis=1)
+        hit = np.isfinite(best)
+        return (
+            np.broadcast_to(qids[:, None], order.shape)[hit],
+            nids[order[hit]],
+            best[hit],
+        )
+
+    schema = T.StructType(
+        [
+            T.StructField("qid", id_type),
+            T.StructField("nid", id_type),
+            T.StructField("cosine", T.DoubleType()),
+        ]
+    )
+    cand = _sorted_run_pairs(rows, keys, score, schema, self_mode, cap)
+    if dedup:
+        cand = cand.distinct()
+    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
+    return (
+        cand.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select("qid", "nid", "cosine", "rnk")
+    )
 
 
 def valid_vectors(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
@@ -121,8 +302,9 @@ def sign_bucket_frame(
     numpy pass over Arrow batches (the column-expression form is an
     interpreted per-element fold, measured 7-10 s alone at sf0.1).
     Fold order matches the expression/oracle exactly
-    (_folded_dot_block). Shared by lsh_cosine_topk and the multiprobe
-    variant.
+    (_folded_dot_block). The rows of lsh_cosine_topk's and
+    lsh_multiprobe_topk's (table, bucket) blocks, which
+    ``_sorted_run_pairs`` scores.
 
     ``probe_budget=T`` adds a ``__probes`` array<string> column: the
     T neighbor buckets obtained by flipping the perturbation SETS
@@ -226,18 +408,16 @@ def lsh_cosine_topk(
     """Approximate cosine top-k per vector — the ANN scale path
     (brute-force twin: queries/vectors.vec_knn_bruteforce).
 
-    Candidates come from sign-LSH bucket collisions (any table); each
-    bucket block is scored with one numpy pass (dimension-ordered
+    Candidates come from sign-LSH bucket collisions (any table): the
+    sorted-run pass (``_cosine_topk``, self mode) scores each bucket
+    run against itself with one numpy pass (dimension-ordered
     accumulation + one IEEE division per pair → bitwise equal to the
-    fold-based expression and the SQL oracle) and pruned to k per
-    query within the bucket — any global top-k pair is within the
-    top-k of every bucket containing it (same total order), so the
-    pruning is lossless. Duplicate pairs from multi-table collisions
-    carry identical cosines → distinct collapses them; an exact
-    row_number window over the tiny survivor set (≤ k·n_tables per
-    query) finishes. Work scales with collision counts (tunable via
-    bits_per_table), never n². Recall < 1 by construction; graded in
-    tests/ vs brute force.
+    fold-based expression and the SQL oracle) and prunes it to k per
+    query, losslessly; the multi-table repeats collapse and one window
+    ranks the tiny survivor set (≤ k·n_tables per query). Each bucket
+    row is shuffled once. Work scales with collision counts (tunable
+    via bits_per_table), never n². Recall < 1 by construction; graded
+    in tests/ vs brute force.
 
     ``bucket_cap``: with a FIXED bucket geometry (2^bits buckets per
     table) occupancy grows linearly with the corpus and the per-bucket
@@ -250,68 +430,17 @@ def lsh_cosine_topk(
     returned k best among indexable mates; rows past the cap in an
     overfull bucket are simply not returnable from that bucket (they
     still earn their own out-edges). Compute bounds at occupancy·cap
-    per bucket; pair the cap with MORE BITS when group memory, not
+    per bucket; pair the cap with MORE BITS when run memory, not
     compute, is the binding constraint.
     """
-    from pyspark.sql.window import Window
-
     if dim is None:
         dim = _infer_dim(df, vec_col)
-    id_type = df.schema[id_col].dataType
     buckets = sign_bucket_frame(
         df, id_col, vec_col, n_tables, bits_per_table, seed, dim
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", id_type),
-            T.StructField("nid", id_type),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pd.DataFrame({"qid": [], "nid": [], "cosine": []}).astype(
-                {"cosine": "float64"}
-            )
-        v = np.stack(pdf["__v"].to_numpy())
-        ids = pdf["__id"].to_numpy()
-        if bucket_cap is not None and len(ids) > bucket_cap:
-            # index side = the bucket_cap lowest ids (deterministic
-            # posting-list truncation); query side = every row
-            keep = np.sort(np.argsort(ids, kind="stable")[:bucket_cap])
-        else:
-            keep = np.arange(len(ids))
-        vi, idx_ids = v[keep], ids[keep]
-        # per-row norm: same fold order as l2_norm (Σ x² then sqrt)
-        norms = np.sqrt(_folded_dot_block_diag(v))
-        dots = _folded_dot_block(v, vi)
-        denom = np.outer(norms, norms[keep])
-        cos = np.divide(
-            dots, denom, out=np.zeros_like(dots), where=denom != 0.0
-        )
-        same = ids[:, None] == idx_ids[None, :]
-        cos[same] = -np.inf  # self (and dup-id) pairs
-        kk = min(k, len(idx_ids))
-        rows_q, rows_n, rows_c = [], [], []
-        for i in range(len(ids)):
-            order = np.lexsort((idx_ids, -cos[i]))[:kk]
-            order = order[np.isfinite(cos[i][order])]
-            rows_q.extend([ids[i]] * len(order))
-            rows_n.extend(idx_ids[order])
-            rows_c.extend(cos[i][order])
-        return pd.DataFrame({"qid": rows_q, "nid": rows_n, "cosine": rows_c})
-
-    cand = (
-        buckets.groupBy("__tbl", "__bkt")
-        .applyInPandas(score_bucket, schema=out_schema)
-        .distinct()
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
-    return (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "nid", "cosine", "rnk")
+    ).select("__tbl", "__bkt", F.lit(0).cast("byte").alias("__side"), "__id", "__v")
+    return _cosine_topk(
+        buckets, ("__tbl", "__bkt"), k, df.schema[id_col].dataType,
+        self_mode=True, cap=bucket_cap,
     )
 
 
@@ -337,135 +466,47 @@ def lsh_multiprobe_topk(
     is the right trade when queries stream against a resident index.
 
     ``probe_budget=None`` flips every single bit (bits+1 probes per
-    table — the exhaustive-1-flip baseline, scored pairwise).
+    table — the 1-flip baseline): the directed path with
+    ``probe_budget=bits_per_table, max_flip=1``.
     ``probe_budget=T`` is Lv et al.'s actual contribution,
     QUERY-DIRECTED probing: rank the perturbation SETS of up to
     ``max_flip`` bits by total hyperplane margin Σ|dot(v, plane)| —
     P[a bit differs for a true neighbor] falls with its margin, so
     low-margin sets carry nearly all the residual recall — and probe
     only the best T. Measured on the sf0.01 embeddings at 2×6 bits:
-    T=13 directed probes beat 4-table exhaustive 1-flip recall
-    (0.713 vs 0.679) with HALF the index (2 tables), equal probe
-    rows per query.
+    T=13 directed probes beat 4-table all-1-flip recall (0.713 vs
+    0.679) with HALF the index (2 tables), equal probe rows per query.
 
-    Verification in the directed path is BLOCKWISE: probes and index
-    rows cogroup on (table, bucket) and each block is scored with one
-    folded numpy pass (dimension-ordered accumulation + one IEEE
-    division per pair → bitwise equal to the fold expression and the
-    SQL oracle), pruned to k per query in-block (lossless: a global
-    top-k pair is within the top-k of every block containing it) —
-    the lsh_cosine_topk/lsh_sqdist_join discipline, vs the per-pair
-    interpreted cosine fold that dominated the exhaustive path's
-    runtime. Candidates still come only from (table, bucket)
-    collisions; never n².
+    Verification is BLOCKWISE, the lsh_cosine_topk discipline: the
+    query side (own bucket plus probes) and the index side (own
+    bucket) meet in one sorted-run pass on (table, bucket)
+    (``_cosine_topk``, pair mode), each block scored with one
+    folded numpy pass (bitwise equal to the fold expression and the
+    SQL oracle) and pruned to k per query in-block (lossless).
+    Candidates still come only from (table, bucket) collisions;
+    never n².
     """
-    from pyspark.sql.window import Window
-
-    from fuzzy_item_matching_spark.functions.vector import cosine_similarity
-
     if dim is None:
         dim = _infer_dim(df, vec_col)
-    b = bits_per_table
-    id_type = df.schema[id_col].dataType
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
     if probe_budget is None:
-        buckets = sign_bucket_frame(
-            df, id_col, vec_col, n_tables, bits_per_table, seed, dim
-        ).select("__id", "__tbl", "__bkt").persist()
-        flip = (
-            f"transform(sequence(0, {b}), j -> CASE WHEN j = 0 THEN __bkt "
-            f"ELSE concat(substring(__bkt, 1, j - 1), "
-            f"CASE WHEN substring(__bkt, j, 1) = '1' THEN '0' ELSE '1' END, "
-            f"substring(__bkt, j + 1, {b} - j)) END)"
-        )
-        probes = buckets.select(
-            "__id", "__tbl", F.explode(F.expr(flip)).alias("__probe")
-        )
-        cand = (
-            probes.alias("x")
-            .join(
-                buckets.alias("y"),
-                (F.col("x.__tbl") == F.col("y.__tbl"))
-                & (F.col("x.__probe") == F.col("y.__bkt")),
-            )
-            .filter(F.col("x.__id") != F.col("y.__id"))
-            .select(F.col("x.__id").alias("qid"), F.col("y.__id").alias("nid"))
-            .distinct()
-        )
-        q = df.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("__qv"))
-        n = df.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("__nv"))
-        scored = cand.join(q, "qid").join(n, "nid").select(
-            "qid",
-            "nid",
-            cosine_similarity(F.col("__qv"), F.col("__nv")).alias("cosine"),
-        )
-        return (
-            scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("qid", "nid", "cosine", "rnk")
-        )
-
+        probe_budget, max_flip = bits_per_table, 1
     framed = sign_bucket_frame(
         df, id_col, vec_col, n_tables, bits_per_table, seed, dim,
         probe_budget=probe_budget, max_flip=max_flip,
     ).persist()
-    index = framed.select("__tbl", "__bkt", "__id", "__v")
-    qside = framed.select(
-        F.col("__id").alias("__qid"),
+    queries = framed.select(
         "__tbl",
-        F.explode(
-            F.concat(F.array(F.col("__bkt")), F.col("__probes"))
-        ).alias("__bkt"),
+        F.explode(F.concat(F.array("__bkt"), "__probes")).alias("__bkt"),
+        F.lit(0).cast("byte").alias("__side"),
+        "__id",
         "__v",
     )
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", id_type),
-            T.StructField("nid", id_type),
-            T.StructField("cosine", T.DoubleType()),
-        ]
+    index = framed.select(
+        "__tbl", "__bkt", F.lit(1).cast("byte").alias("__side"), "__id", "__v"
     )
-
-    def score_block(
-        _key: tuple, qpdf: pd.DataFrame, ipdf: pd.DataFrame
-    ) -> pd.DataFrame:
-        if qpdf.empty or ipdf.empty:
-            return pd.DataFrame({"qid": [], "nid": [], "cosine": []}).astype(
-                {"cosine": "float64"}
-            )
-        vq = np.stack(qpdf["__v"].to_numpy())
-        vi = np.stack(ipdf["__v"].to_numpy())
-        qids = qpdf["__qid"].to_numpy()
-        nids = ipdf["__id"].to_numpy()
-        dots = _folded_dot_block(vq, vi)
-        denom = np.outer(
-            np.sqrt(_folded_dot_block_diag(vq)),
-            np.sqrt(_folded_dot_block_diag(vi)),
-        )
-        cos = np.divide(
-            dots, denom, out=np.zeros_like(dots), where=denom != 0.0
-        )
-        cos[qids[:, None] == nids[None, :]] = -np.inf
-        kk = min(k, len(nids))
-        rows_q, rows_n, rows_c = [], [], []
-        for i in range(len(qids)):
-            order = np.lexsort((nids, -cos[i]))[:kk]
-            order = order[np.isfinite(cos[i][order])]
-            rows_q.extend([qids[i]] * len(order))
-            rows_n.extend(nids[order])
-            rows_c.extend(cos[i][order])
-        return pd.DataFrame({"qid": rows_q, "nid": rows_n, "cosine": rows_c})
-
-    scored = (
-        qside.groupBy("__tbl", "__bkt")
-        .cogroup(index.groupBy("__tbl", "__bkt"))
-        .applyInPandas(score_block, schema=out_schema)
-        .distinct()  # cross-block duplicates carry identical cosines
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "nid", "cosine", "rnk")
+    return _cosine_topk(
+        queries.unionByName(index), ("__tbl", "__bkt"), k,
+        df.schema[id_col].dataType, self_mode=False,
     )
 
 
@@ -499,33 +540,17 @@ def lsh_sqdist_join(
     one.
 
     Plan: both sides, tagged with a side byte, are unioned and hashed
-    in ONE ``mapInPandas`` into (side, id, table, bucket, vector) rows
-    → ``repartition`` on (table, bucket) (the session's shuffle
-    partitions) → ``sortWithinPartitions`` on (table, bucket, side,
-    id), so each key is one contiguous run with the left rows first
-    and the right rows in ascending id order → ONE ``mapInPandas``
-    that walks the runs across Arrow batches, carrying only the
-    unfinished last run into the next batch. Per run it keeps the
-    first ``bucket_cap`` right rows (the lowest ids), scores left ×
-    right (self mode: the run against itself, id_a < id_b) with one
-    dimension-ordered numpy pass (bitwise equal to the fold-based
-    expression and the SQL oracle) and keeps pairs within the
-    threshold → distinct surviving pairs.
-
-    Why one sorted pass instead of a grouped (cogrouped) pandas UDF:
-    the bucket blocks are small and numerous — a 200-item arrival
-    batch against a 2,500-row stored table touches ~2,300
-    (table, bucket) keys for ~60k bucket pairs — so a pandas call per
-    key cost several times its arithmetic (perfbench's stream batch,
-    local[2] on a 4-vCPU VM: the LSH layer went from 4.0 s to 1.3 s
-    with the same output). Runs with only one side are skipped with no
-    per-key call at all, and the cap falls out of the sort order
-    instead of a ``row_number`` window. Why blockwise scoring instead
-    of an ids-only equi-join + vector re-join: candidate pairs vastly
-    outnumber surviving pairs, and the pair-level distance expression
-    is an interpreted per-element fold. Memory per task is one bucket
-    run plus one Arrow batch: a run must fit one task (bucket_length
-    controls occupancy) — shrink bucket_length or add tables for skew.
+    in ONE ``mapInPandas`` into (side, id, table, bucket, vector) rows;
+    ``_sorted_run_pairs`` on (table, bucket) then scores each bucket
+    run, left × right after the cap (self mode: the run against
+    itself, id_a < id_b), with one dimension-ordered numpy pass
+    (bitwise equal to the fold-based expression and the SQL oracle)
+    and keeps pairs within the threshold → distinct surviving pairs.
+    Why blockwise scoring instead of an ids-only equi-join + vector
+    re-join: candidate pairs vastly outnumber surviving pairs, and the
+    pair-level distance expression is an interpreted per-element fold.
+    A bucket run must fit one task (bucket_length controls occupancy)
+    — shrink bucket_length or add tables for skew.
     """
     if dim is None:
         dim = _infer_dim(left, vec_col)
@@ -583,68 +608,18 @@ def lsh_sqdist_join(
                 }
             )
 
-    def score_runs(pdf: pd.DataFrame):
-        """Pairs of every (table, bucket) run in these sorted rows."""
-        if pdf.empty:
-            return
-        side, ids, tbl, bkt = (
-            pdf[c].to_numpy() for c in ("__side", "__id", "__tbl", "__bkt")
-        )
-        v = np.stack(pdf["__v"].to_numpy())
-        starts = np.flatnonzero(
-            np.r_[True, (tbl[1:] != tbl[:-1]) | (bkt[1:] != bkt[:-1])]
-        )
-        ends = np.r_[starts[1:], len(ids)]
+    def score(_key, ids_a, v_a, ids_b, v_b):
+        d2 = _folded_sqdist_block(v_a, v_b)
+        hit = d2 <= threshold
         if self_mode:
-            blocks = [(slice(s, e),) * 2 for s, e in zip(starts, ends) if e - s > 1]
-        else:
-            # left rows sort first; the right rows follow by ascending id
-            mid = starts + np.add.reduceat((side == 0).astype(np.int64), starts)
-            hi = ends if cap is None else np.minimum(ends, mid + cap)
-            live = (mid > starts) & (hi > mid)
-            blocks = [
-                (slice(s, m), slice(m, h))
-                for s, m, h in zip(starts[live], mid[live], hi[live])
-            ]
-        out_a, out_b, out_d = [], [], []
-        for a, b in blocks:
-            d2 = _folded_sqdist_block(v[a], v[b])
-            hit = d2 <= threshold
-            if self_mode:
-                hit &= ids[a, None] < ids[None, b]
-            ia, ib = np.nonzero(hit)
-            out_a.append(ids[a][ia])
-            out_b.append(ids[b][ib])
-            out_d.append(d2[ia, ib])
-        if out_a:
-            yield pd.DataFrame(
-                {
-                    "id_a": np.concatenate(out_a),
-                    "id_b": np.concatenate(out_b),
-                    dist_col: np.concatenate(out_d),
-                }
-            )
+            hit &= ids_a[:, None] < ids_b[None, :]
+        ia, ib = np.nonzero(hit)
+        return ids_a[ia], ids_b[ib], d2[ia, ib]
 
-    def score(batches):
-        # a run may go on in the next Arrow batch: each batch's last run
-        # is carried over and scored with the next batch's rows
-        carry = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            tbl, bkt = pdf["__tbl"].to_numpy(), pdf["__bkt"].to_numpy()
-            edges = np.flatnonzero((tbl[1:] != tbl[:-1]) | (bkt[1:] != bkt[:-1]))
-            last = edges[-1] + 1 if len(edges) else 0
-            yield from score_runs(pdf.iloc[:last])
-            carry = pdf.iloc[last:]
-        if carry is not None:
-            yield from score_runs(carry)
-
-    runs = (
-        rows.mapInPandas(bucketize, schema=bucket_schema)
-        .repartition("__tbl", "__bkt")
-        .sortWithinPartitions("__tbl", "__bkt", "__side", "__id")
+    buckets = rows.mapInPandas(bucketize, schema=bucket_schema)
+    pairs = _sorted_run_pairs(
+        buckets, ("__tbl", "__bkt"), score, out_schema, self_mode, cap
     )
     # a pair colliding in several tables is scored per table with an
     # identical distance → distinct collapses the duplicates
-    return runs.mapInPandas(score, schema=out_schema).distinct()
+    return pairs.distinct()

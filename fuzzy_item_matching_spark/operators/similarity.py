@@ -145,7 +145,8 @@ def sparse_cosine_self_join_collapsed(
     signatures; groups = distinct signatures keyed by their min doc id;
     the postings pair join runs over GROUP REPRESENTATIVES only (g²
     scale, not n²); matched rep pairs are symmetrized and expanded back
-    through the doc→group map and a group→ids list — both joins sized
+    through the doc→group map and a group→ids list (the gate, the map
+    and the expansion are operators/collapse.py's) — both joins sized
     g/n rows, AQE picks broadcast at runtime — so the (possibly huge)
     output explodes map-side with NO shuffle of the output. Cosine
     values are the same Σ w_a·w_b over the same term multiset as the
@@ -159,22 +160,21 @@ def sparse_cosine_self_join_collapsed(
     strategy choice on measured stats — the operator-level analogue of
     AQE — pinned by tests/test_round11_ops.py equality tests on both
     corpus shapes."""
+    from fuzzy_item_matching_spark.operators.collapse import (
+        expand_group_pairs,
+        group_map,
+        signature_gate,
+    )
+
     w = weights
-    doc_sig = w.groupBy(id_col).agg(
+    doc_sig = w.groupBy(F.col(id_col).alias("__id")).agg(
         F.array_sort(
             F.collect_list(F.struct(F.col(term_col), F.col(weight_col)))
         ).alias("__sig")
     ).persist()  # read by the gate count, the doc→gid map and (via
     # groups) the representative postings — one shuffle, three readers
-    groups = doc_sig.groupBy("__sig").agg(F.min(id_col).alias("__gid"))
-    # ONE job yields both gate statistics (a second count over the
-    # persisted frame would still schedule a separate action).
-    stats = doc_sig.agg(
-        F.count(F.lit(1)).alias("nd"),
-        F.countDistinct("__sig").alias("ng"),
-    ).first()
-    n_docs, n_groups = stats["nd"], stats["ng"]
-    if n_docs == 0 or n_groups > collapse_ratio * n_docs:
+    _, _, collapse = signature_gate(doc_sig, collapse_ratio)
+    if not collapse:
         doc_sig.unpersist()
         a = w.withColumnRenamed(id_col, "id_a")
         b = w.withColumnRenamed(id_col, "id_b")
@@ -183,11 +183,8 @@ def sparse_cosine_self_join_collapsed(
             term_col=term_col, weight_col=weight_col,
             min_sim=min_sim, sim_col=sim_col, self_dedup=True,
         )
-    doc_gid = (
-        doc_sig.join(F.broadcast(groups), "__sig")
-        .select(F.col(id_col).alias("__id"), "__gid")
-        .persist()
-    )
+    groups, doc_gid = group_map(doc_sig)
+    doc_gid = doc_gid.persist()
     rep_w = w.join(
         F.broadcast(groups.select(F.col("__gid").alias(id_col))),
         id_col,
@@ -203,35 +200,15 @@ def sparse_cosine_self_join_collapsed(
         F.col(term_col).alias("__t"),
         F.col(weight_col).alias("__wb"),
     )
+    # the diagonal (__ga = __gb) carries each group's intra-group cosine
     rep_pairs = (
         ra.join(rb, "__t")
         .filter(F.col("__ga") <= F.col("__gb"))
-        .groupBy("__ga", "__gb")
+        .groupBy(F.col("__ga").alias("id_a"), F.col("__gb").alias("id_b"))
         .agg(F.sum(F.col("__wa") * F.col("__wb")).alias(sim_col))
         .filter(F.col(sim_col) >= F.lit(min_sim))
     )
-    # symmetrize so every doc expands from its own group's side; the
-    # final id_a < id_b filter then emits each unordered pair once
-    sym = rep_pairs.unionByName(
-        rep_pairs.filter(F.col("__ga") != F.col("__gb")).select(
-            F.col("__gb").alias("__ga"),
-            F.col("__ga").alias("__gb"),
-            F.col(sim_col),
-        )
-    )
-    gid_ids = doc_gid.groupBy("__gid").agg(
-        F.collect_list("__id").alias("__ids")
-    ).select(F.col("__gid").alias("__g2"), "__ids")
-    return (
-        doc_gid.join(sym, F.col("__gid") == F.col("__ga"))
-        .join(gid_ids, F.col("__gb") == F.col("__g2"))
-        .select(
-            F.col("__id").alias("id_a"),
-            F.explode("__ids").alias("id_b"),
-            F.col(sim_col),
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-    )
+    return expand_group_pairs(doc_gid, rep_pairs, [sim_col])
 
 
 def featurize_text(
@@ -338,23 +315,30 @@ def blocked_pair_stats(
 
     The block key IS the blocking strategy: work is Σ per-block n²,
     never global n², and blocks score independently across executors.
-    Per block, ONE Arrow exchange and a dimension-by-dimension
-    accumulated numpy kernel — the identical left-to-right IEEE fold as
-    the engine's `F.aggregate` expressions and DuckDB's `list_sum`, so
-    results stay bitwise oracle-exact (interpreted per-pair HOF folds
-    measured ~2.5× slower at sf0.1; see operators/lsh.py for the same
-    trade on LSH candidates).
+    Each block is one run of the sorted-run pass
+    (``operators/lsh._sorted_run_pairs``, self mode), scored with a
+    dimension-by-dimension accumulated numpy kernel — the identical
+    left-to-right IEEE fold as the engine's `F.aggregate` expressions
+    and DuckDB's `list_sum`, so results stay bitwise oracle-exact
+    (interpreted per-pair HOF folds measured ~2.5× slower at sf0.1).
+    Equi-join semantics: NULL block keys never match (NaN keys do, and
+    -0.0 meets 0.0). NULL vectors and vectors off the dimension most
+    rows have (``valid_vectors``) have no defined stats, so one ragged
+    row costs that row, even when it comes first.
     """
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     from fuzzy_item_matching_spark.operators.lsh import (
-        _folded_dot_block,
-        _folded_dot_block_diag,
+        _cosine_block,
         _folded_sqdist_block,
+        _sorted_run_pairs,
+        valid_vectors,
     )
 
+    # the most common length, ties to the shorter; no vector at all: no pairs
+    modal = F.mode(F.size(vec_col), deterministic=True)
+    dim = df.filter(F.col(vec_col).isNotNull()).agg(modal).first()[0] or 0
     id_type = df.schema[id_col].dataType
     out_schema = T.StructType(
         [
@@ -366,42 +350,19 @@ def blocked_pair_stats(
         ]
     )
 
-    def score_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pd.DataFrame(
-                {"id_a": pdf["__id"][:0], "id_b": pdf["__id"][:0],
-                 "dp": pd.Series(dtype="float64"),
-                 "sqdist": pd.Series(dtype="float64"),
-                 "cosine": pd.Series(dtype="float64")}
-            )
-        ids = pdf["__id"].to_numpy()
-        v = np.stack(pdf["__vec"].to_numpy()).astype(np.float64)
-        dp = _folded_dot_block(v, v)
-        sq = _folded_sqdist_block(v, v)
-        nrm = np.sqrt(_folded_dot_block_diag(v))
-        ia, ib = np.where(ids[:, None] < ids[None, :])
-        nn = nrm[ia] * nrm[ib]
-        d = dp[ia, ib]
-        cos = np.where(nn == 0.0, 0.0, d / np.where(nn == 0.0, 1.0, nn))
-        return pd.DataFrame(
-            {"id_a": ids[ia], "id_b": ids[ib], "dp": d,
-             "sqdist": sq[ia, ib], "cosine": cos}
-        )
+    def pair_stats(_key, ids_a, v_a, ids_b, v_b):
+        dp, cos = _cosine_block(v_a, v_b)
+        sq = _folded_sqdist_block(v_a, v_b)
+        ia, ib = np.nonzero(ids_a[:, None] < ids_b[None, :])
+        return ids_a[ia], ids_b[ib], dp[ia, ib], sq[ia, ib], cos[ia, ib]
 
-    return (
-        df.select(
-            F.col(block_col).alias("__blk"),
-            F.col(id_col).alias("__id"),
-            F.col(vec_col).cast("array<double>").alias("__vec"),
-        )
-        # Equi-join semantics: NULL block keys never match (and a NULL
-        # or missing vector has no defined stats) — filter both, rather
-        # than letting groupBy collect all NULLs into one spurious
-        # block or np.stack crash on ragged input.
-        .filter(F.col("__blk").isNotNull() & F.col("__vec").isNotNull())
-        .groupBy("__blk")
-        .applyInPandas(score_block, schema=out_schema)
-    )
+    rows = valid_vectors(df, vec_col, dim).select(
+        F.col(block_col).alias("__blk"),
+        F.lit(0).cast("byte").alias("__side"),
+        F.col(id_col).alias("__id"),
+        F.col(vec_col).cast("array<double>").alias("__v"),
+    ).filter(F.col("__blk").isNotNull())
+    return _sorted_run_pairs(rows, ("__blk",), pair_stats, out_schema, self_mode=True)
 
 
 def as_struct_pairs(

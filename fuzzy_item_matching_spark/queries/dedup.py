@@ -628,7 +628,7 @@ def dedup_semantic_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     block dot per cell. The scale twin of
     `dedup_embedding_exact_pairs`: candidate volume is occupancy-
     bounded (24% of n² here; shrinks as n_centroids grows ~√n), never
-    n²; shuffles are groupBy(cell) + the pair-dedup groupBy. Pairs
+    n²; shuffles are one on cell + the pair-dedup groupBy. Pairs
     with disjoint probe lists are missed by design — the subset
     property and the 40/59 recall floor vs the exact O(n²) pairs are
     graded in tests/test_dedup.py."""

@@ -1736,12 +1736,12 @@ def sim_ann_multiprobe_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the cheap streaming side, and directing the probes by margin
     keeps only the expansions that carry recall. Candidate
     generation stays a (table, bucket) collision; verification is
-    BLOCKWISE folded numpy per bucket (the lsh_cosine_topk
-    discipline — the per-pair interpreted cosine fold dominated the
-    exhaustive path's runtime), pruned losslessly to k in-block;
-    never n². The oracle replays the seeded hyperplanes, the
-    (margin-sum, subset) probe ranking and the final ranking in one
-    SQL statement."""
+    BLOCKWISE folded numpy per bucket in the sorted-run pass all the
+    LSH/IVF operators share (a per-pair interpreted cosine fold
+    dominated the runtime of the old all-1-flip probe join), pruned
+    losslessly to k in-block; never n². The oracle replays the seeded
+    hyperplanes, the (margin-sum, subset) probe ranking and the final
+    ranking in one SQL statement."""
     from fuzzy_item_matching_spark.operators.lsh import lsh_multiprobe_topk
 
     e = load_table(spark, sf_dir, "embeddings")

@@ -72,10 +72,10 @@ def vec_label_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked pairwise distances: dot/sqdist/cosine for same-label
     pairs (V1 applied `03_Train & Deploy Model.py:100-107`). The label
     IS the blocking key — work is Σ per-label n², never global n².
-    One shuffle on label, then each block scores in a single Arrow
-    kernel (dimension-ordered accumulation keeps results bitwise equal
-    to the fold/list_sum oracle; the per-pair interpreted-HOF join form
-    measured ~2.5× slower at sf0.1)."""
+    One shuffle on label, then each block scores in the sorted-run
+    pass with one numpy kernel (dimension-ordered accumulation keeps
+    results bitwise equal to the fold/list_sum oracle; the per-pair
+    interpreted-HOF join form measured ~2.5× slower at sf0.1)."""
     from fuzzy_item_matching_spark.operators.similarity import blocked_pair_stats
 
     e = load_table(spark, sf_dir, "embeddings")

@@ -139,6 +139,10 @@ DIRTY_SAFE = [
     # survive intact (both the all-pairs and the delta-vs-index form)
     "dedup_winnowing_pairs",
     "dedup_incremental_winnowing",
+    # blocked label-pair stats: NULL/ragged vectors drop via
+    # valid_vectors before the block kernel (a ragged one used to kill
+    # the query in np.stack); the NaN row's stats are NaN
+    "vec_label_pair_stats",
 ]
 
 

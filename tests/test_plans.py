@@ -225,11 +225,14 @@ def test_basket_and_pagerank_broadcast_dims(spark, registry):
 
 
 def test_semantic_pairs_single_cell_shuffle_then_pair_agg(spark, registry):
-    """ivf_cell_pairs: exactly the groupBy(cell) exchange into the
-    Arrow block kernel plus the pair-dedup aggregate — no join, no
+    """ivf_cell_pairs: exactly the cell exchange and sort into the
+    sorted-run block kernel plus the pair-dedup aggregate — no join, no
     cartesian (candidates never materialize as a pair join)."""
     plan = plan_of(spark, registry, "dedup_semantic_pairs")
-    assert "FlatMapGroupsInPandas" in plan or "FlatMapGroupsInArrow" in plan
+    assert "FlatMapGroupsInPandas" not in plan
+    assert "hashpartitioning(__cell" in plan and "REPARTITION_BY_COL" in plan
+    assert plan.count("Arguments: score_runs(") == 1
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 2  # cell, pair
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
 
@@ -656,3 +659,50 @@ def test_lsh_sqdist_join_is_one_sorted_pass(spark, mode):
     for node in ("FlatMapCoGroupsInPandas", "FlatMapGroupsInPandas", "Window"):
         assert node not in plan, plan
     assert len(re.findall(r"\bMapInPandas\b", plan)) == 2, plan
+
+
+_PAIR_NODES = (
+    "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas", "SortMergeJoin",
+    "BroadcastHashJoin", "ShuffledHashJoin", "BroadcastNestedLoopJoin",
+    "CartesianProduct",
+)
+
+
+def _block_operator(op: str, df):
+    from fuzzy_item_matching_spark.operators import ivf, lsh, similarity
+
+    cents = [[1.0, 0.0], [0.0, 1.0]]
+    return {
+        "lsh_cosine_topk": lambda: lsh.lsh_cosine_topk(
+            df, "id", "vec", n_tables=2, bits_per_table=2, dim=2, bucket_cap=3),
+        "lsh_multiprobe_topk": lambda: lsh.lsh_multiprobe_topk(
+            df, "id", "vec", n_tables=2, bits_per_table=2, dim=2),
+        "ivf_cosine_topk": lambda: ivf.ivf_cosine_topk(df, "id", "vec", centroids=cents),
+        "ivf_cell_pairs": lambda: ivf.ivf_cell_pairs(df, "id", "vec", centroids=cents),
+        "blocked_pair_stats": lambda: similarity.blocked_pair_stats(df, "id", "vec", "blk"),
+    }[op]()
+
+
+@pytest.mark.parametrize(
+    ("op", "exchanges"),
+    [("lsh_cosine_topk", 3), ("lsh_multiprobe_topk", 3), ("ivf_cosine_topk", 2),
+     ("ivf_cell_pairs", 2), ("blocked_pair_stats", 1)],
+)
+def test_block_operators_are_one_sorted_pass(spark, op, exchanges):
+    """The other five block operators score through the same sorted-run
+    pass as lsh_sqdist_join: no grouped or cogrouped pandas call, no
+    pair join, and exactly one scoring ``mapInPandas``. The exchanges
+    are the block key's, then only what the output needs: the LSH
+    top-k forms add the cross-table ``distinct`` and the ``qid``
+    window, IVF top-k the window alone (an index row lives in one
+    cell, so no pair meets twice), ``ivf_cell_pairs`` the per-pair
+    aggregate that keeps the lowest shared cell."""
+    df = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0], i % 2) for i in range(8)],
+        "id long, vec array<double>, blk int",
+    )
+    plan = _block_operator(op, df)._jdf.queryExecution().executedPlan().toString()
+    for node in _PAIR_NODES:
+        assert node not in plan, plan
+    assert len(re.findall(r"\bMapInPandas score_runs\(", plan)) == 1, plan
+    assert len(re.findall(r"\bExchange\b", plan)) == exchanges, plan

@@ -71,7 +71,7 @@ def test_directed_multiprobe_recall_not_below_exhaustive(spark):
 
 
 def test_directed_multiprobe_blockwise_equals_join_scoring(spark):
-    """The blockwise cogrouped verification must produce the exact
+    """The blockwise sorted-run verification must produce the exact
     same (qid, nid, cosine, rnk) rows as scoring the same directed
     candidate set through the fold-expression path — i.e. the numpy
     block kernel is bitwise-faithful to the engine expression. Pinned
