@@ -63,13 +63,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB oracle SQL for every SQL-expressible query; queries whose
-    semantics are not SQL-expressible (LSH bucketing, streaming state,
-    seeded sampling) are omitted → driver records a rows-only check,
-    with stronger checks in tests/.
-    """
-    from fuzzy_item_matching_spark.queries import load_all
+    """DuckDB oracle SQL for every SQL-expressible query, keyed by
+    query name. Queries whose semantics are not SQL-expressible (LSH
+    bucketing, streaming state, seeded sampling) are omitted and get a
+    rows-only check, with stronger checks in tests/.
 
-    return {
-        name: q.oracle for name, q in load_all().items() if q.oracle is not None
-    }
+    The oracles live outside the engine: inline strings on
+    ``queries.Query.oracle`` and the generated DuckDB twins in the
+    root ``oracles/`` package. ``oracles.oracle_sql()`` merges both and
+    is the one way to read them; this returns its dict.
+    """
+    from oracles import oracle_sql as _oracle_sql
+
+    return _oracle_sql()

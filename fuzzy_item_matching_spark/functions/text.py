@@ -206,64 +206,12 @@ def hashed_tf(terms: Column, num_features: int = 46656, binary: bool = True) -> 
 # Jaro-Winkler similarity (the classical record-linkage string kernel)
 
 
-def jaro_winkler_py(s1: str, s2: str) -> float:
-    """Jaro-Winkler similarity of two strings — the standard Winkler
-    variant (prefix scale 0.1 over the first 4 chars, applied only when
-    Jaro > 0.7), bit-identical to DuckDB's ``jaro_winkler_similarity``
-    (verified case-by-case in tests/). Pure Python so the pandas_udf
-    wrapper ships no dependency; production on the JVM would register a
-    codegen'd Catalyst expression instead (SURVEY §7.2 stage 4 keeps
-    the portable twin as the oracle path, like md5-vs-xxhash64)."""
-    l1, l2 = len(s1), len(s2)
-    # Empty-before-equal: DuckDB scores ('','') as 0.0, not 1.0.
-    if l1 == 0 or l2 == 0:
-        return 0.0
-    if s1 == s2:
-        return 1.0
-    window = max(l1, l2) // 2 - 1
-    m1 = [False] * l1
-    m2 = [False] * l2
-    matches = 0
-    for i in range(l1):
-        c = s1[i]
-        lo = i - window if i > window else 0
-        hi = i + window + 1
-        if hi > l2:
-            hi = l2
-        for j in range(lo, hi):
-            if not m2[j] and s2[j] == c:
-                m1[i] = True
-                m2[j] = True
-                matches += 1
-                break
-    if matches == 0:
-        return 0.0
-    transpositions = 0
-    k = 0
-    for i in range(l1):
-        if m1[i]:
-            while not m2[k]:
-                k += 1
-            if s1[i] != s2[k]:
-                transpositions += 1
-            k += 1
-    transpositions //= 2
-    jaro = (
-        matches / l1 + matches / l2 + (matches - transpositions) / matches
-    ) / 3.0
-    if jaro > 0.7:
-        prefix = 0
-        for a, b in zip(s1[:4], s2[:4]):
-            if a != b:
-                break
-            prefix += 1
-        jaro += prefix * 0.1 * (1.0 - jaro)
-    return jaro
-
-
 def jaro_winkler_batch(xs: list, ys: list):
-    """Numpy-vectorized Jaro-Winkler over a BATCH of pairs — identical
-    results to :func:`jaro_winkler_py` (property-tested pairwise), but
+    """Numpy-vectorized Jaro-Winkler over a BATCH of pairs — the
+    standard Winkler variant (prefix scale 0.1 over the first 4 chars,
+    applied only when Jaro > 0.7), bit-identical to DuckDB's
+    ``jaro_winkler_similarity`` and to a per-pair Python twin
+    (property-tested pairwise in tests/test_kernel_properties.py), but
     the per-character greedy matching loop runs across the whole Arrow
     batch at once: strings become (batch × maxlen) code matrices
     (utf-32 decode, 0 = padding sentinel, real codepoints shifted +1),
@@ -336,7 +284,7 @@ def jaro_winkler_batch(xs: list, ys: list):
     boosted = jaro + prefix * 0.1 * (1.0 - jaro)
     out = np.where(jaro > 0.7, boosted, jaro)
 
-    # jaro_winkler_py's early return: identical non-empty strings score
+    # identical non-empty strings score
     # 1.0 even when the match window is degenerate (single-char pairs
     # have window = -1, which the greedy pass scores 0).
     k2 = min(L1, L2)
@@ -346,8 +294,7 @@ def jaro_winkler_batch(xs: list, ys: list):
 
 def jaro_winkler(a: Column | str, b: Column | str) -> Column:
     """Arrow-batched pandas_udf column wrapper over the numpy batch
-    kernel (jaro_winkler_batch; jaro_winkler_py is its per-pair oracle
-    twin, kept for tests/docs).
+    kernel (jaro_winkler_batch).
 
     O(len(a)·window) per pair with no sub-linear index — like
     Levenshtein it NEEDS candidate blocking upstream; this is the

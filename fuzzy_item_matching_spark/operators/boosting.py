@@ -31,6 +31,8 @@ but ``train_gboost_poisson`` passes the whole customer table (150k·sf
 rows, 15,000 at sf0.1, the largest input measured). Each tree level
 holds (candidates × rows) masks there, and the exact DECIMAL sums
 refuse ``spark_numerics.EXACT_ROWS`` rows or more.
+
+The DuckDB twins live in ``oracles/boosting.py``, outside the engine.
 """
 
 from __future__ import annotations
@@ -191,119 +193,6 @@ def adaboost_stumps(
     )
 
 
-def adaboost_ctes(
-    pairs_sql: str, features: list[str], rounds: int = 5, grid: int = GRID
-) -> tuple[str, str]:
-    """The unrolled fit as (WITH-clause body, model-table UNION tail) —
-    shared by the model query and the scoring query."""
-    mn_mx = ", ".join(
-        f"MIN({f_}) AS mn_{f_}, MAX({f_}) AS mx_{f_}" for f_ in features
-    )
-    cand_arms = []
-    for f_ in features:
-        for k in range(1, grid):
-            thr = f"(mn_{f_} + {k} * (mx_{f_} - mn_{f_}) / {float(grid)!r})"
-            for pol in (1, -1):
-                cand_arms.append(
-                    f"SELECT '{f_}' AS feature, {thr} AS thr,"
-                    f" {pol} AS pol FROM stats"
-                )
-    feat_case = "CASE feature " + " ".join(
-        f"WHEN '{f_}' THEN {f_}" for f_ in features
-    ) + " END"
-    parts = [
-        f"WITH pairs AS MATERIALIZED ({pairs_sql})",
-        f"stats AS MATERIALIZED (SELECT {mn_mx} FROM pairs)",
-        "cands AS MATERIALIZED (" + " UNION ALL ".join(cand_arms) + ")",
-        "w0 AS MATERIALIZED (SELECT 2 * label - 1 AS y, "
-        + ", ".join(features)
-        + ", 1.0 AS w FROM pairs)",
-    ]
-    e_clamp = (
-        f"LEAST(GREATEST(err, {ERR_FLOOR!r}), {1.0 - ERR_FLOOR!r})"
-    )
-    arms = []
-    for t in range(1, rounds + 1):
-        parts.append(f"""ev{t} AS MATERIALIZED (
-      SELECT feature, thr, pol,
-             CAST(SUM(CAST(CASE WHEN (CASE WHEN (pol = 1 AND {feat_case} <= thr)
-                                          OR (pol = -1 AND {feat_case} > thr)
-                                     THEN 1 ELSE -1 END) != y
-                            THEN w ELSE 0.0 END AS DECIMAL(38,18))) AS DOUBLE)
-             / CAST(SUM(CAST(w AS DECIMAL(38,18))) AS DOUBLE) AS err
-      FROM w{t - 1}, cands GROUP BY feature, thr, pol
-    )""")
-        parts.append(f"""best{t} AS MATERIALIZED (
-      SELECT feature, thr, pol, err,
-             round(0.5 * ln((1.0 - {e_clamp}) / {e_clamp}), 9) AS alpha
-      FROM ev{t} ORDER BY err ASC, feature ASC, thr ASC, pol ASC LIMIT 1
-    )""")
-        parts.append(f"""w{t} AS MATERIALIZED (
-      SELECT y, {", ".join(features)},
-             w * (CASE WHEN (CASE WHEN (b.pol = 1 AND {feat_case} <= b.thr)
-                                      OR (b.pol = -1 AND {feat_case} > b.thr)
-                                 THEN 1 ELSE -1 END) = y
-                       THEN round(exp(-b.alpha), 9)
-                       ELSE round(exp(b.alpha), 9) END) AS w
-      FROM w{t - 1}, best{t} b
-    )""")
-        arms.append(
-            f"SELECT {t} AS round, feature, thr, pol, err, alpha FROM best{t}"
-        )
-    return ",\n".join(parts), "\nUNION ALL\n".join(arms)
-
-
-def adaboost_stumps_sql(
-    pairs_sql: str, features: list[str], rounds: int = 5, grid: int = GRID
-) -> str:
-    """DuckDB twin of :func:`adaboost_stumps`: identical candidate
-    grid, weighted-error argmin, quantized alpha/factors, and weight
-    recursion — unrolled one CTE level per round (MATERIALIZED:
-    inlining re-expands the recursion exponentially)."""
-    ctes, model_union = adaboost_ctes(pairs_sql, features, rounds, grid)
-    return ctes + "\n" + model_union
-
-
-def adaboost_score_sql(
-    pairs_sql: str,
-    features: list[str],
-    rounds: int = 5,
-    grid: int = GRID,
-    id_cols: tuple[str, str] = ("id_a", "id_b"),
-    limit: int = 20,
-) -> str:
-    """DuckDB twin of scoring through the fitted ensemble: the same
-    unrolled fit CTEs, then margin = Σ_t ±alpha_t per pair (the 1-row
-    best CTEs cross-joined in), ranked by (margin DESC, id ASC).
-    ``pairs_sql`` must also expose ``id_cols``."""
-    ctes, _ = adaboost_ctes(pairs_sql, features, rounds, grid)
-    ida, idb = id_cols
-    terms = []
-    froms = ["pairs"]
-    for t in range(1, rounds + 1):
-        b = f"b{t}"
-        froms.append(f"best{t} {b}")
-        feat_case = "CASE " + " ".join(
-            f"WHEN {b}.feature = '{f_}' THEN {f_}" for f_ in features
-        ) + " END"
-        terms.append(
-            f"(CASE WHEN ({b}.pol = 1 AND {feat_case} <= {b}.thr)"
-            f" OR ({b}.pol = -1 AND {feat_case} > {b}.thr)"
-            f" THEN {b}.alpha ELSE -{b}.alpha END)"
-        )
-    margin = " + ".join(terms)
-    return (
-        ctes
-        + f"""
-    SELECT {ida}, {idb}, margin,
-           CASE WHEN margin > 0 THEN 1 ELSE 0 END AS pred
-    FROM (
-      SELECT {ida}, {idb}, {margin} AS margin
-      FROM {", ".join(froms)}
-    ) ORDER BY margin DESC, {ida} ASC LIMIT {limit}"""
-    )
-
-
 # ---------------------------------------------------------------------------
 # Depth-2 boosted trees: one nested split level — feature interactions
 # ---------------------------------------------------------------------------
@@ -443,212 +332,6 @@ DEPTH2_SCHEMA = (
     " sll int, slr int, fr string, tr double, srl int, srr int,"
     " err double, alpha double"
 )
-
-
-def adaboost_depth2_ctes(
-    pairs_sql: str, features: list[str], rounds: int = 3, grid: int = GRID
-) -> tuple[str, str]:
-    """The unrolled depth-2 fit as (WITH-clause body, model UNION
-    tail) — shared by the model query and the scoring query (the
-    adaboost_ctes convention)."""
-    mn_mx = ", ".join(
-        f"MIN({f_}) AS mn_{f_}, MAX({f_}) AS mx_{f_}" for f_ in features
-    )
-    cand_arms = []
-    for f_ in features:
-        for k in range(1, grid):
-            thr = f"(mn_{f_} + {k} * (mx_{f_} - mn_{f_}) / {float(grid)!r})"
-            cand_arms.append(
-                f"SELECT '{f_}' AS feature, {thr} AS thr FROM stats"
-            )
-    feat_case = (
-        "CASE feature "
-        + " ".join(f"WHEN '{f_}' THEN {f_}" for f_ in features)
-        + " END"
-    )
-
-    def region_sums(x: str) -> str:
-        def s(cond: str, name: str) -> str:
-            return (
-                f"SUM(CASE WHEN {cond} THEN w"
-                f" ELSE CAST(0 AS DECIMAL(38,0)) END) AS {name}"
-            )
-
-        return ", ".join(
-            [
-                s(f"{x} <= thr AND y = 1", "le_pos"),
-                s(f"{x} <= thr AND y = -1", "le_neg"),
-                s(f"{x} > thr AND y = 1", "gt_pos"),
-                s(f"{x} > thr AND y = -1", "gt_neg"),
-            ]
-        )
-
-    # exact integer objective (see module header: weights are products
-    # of the quantized integer factors, the Q^t denominator cancels)
-    # Exactness trap this expression dodges (found live at sf0.001):
-    # DuckDB's LEAST on ANY decimal args returns DOUBLE, which loses
-    # integer exactness at ~1e20 and mis-breaks argmin ties — a CASE
-    # comparison keeps DECIMAL. The (37,0) casts bound the addition's
-    # result type to (38,0) explicitly on both engines.
-    def _dmin(a: str, b: str) -> str:
-        return f"CASE WHEN {a} <= {b} THEN {a} ELSE {b} END"
-
-    err_expr = (
-        f"(CAST({_dmin('le_pos', 'le_neg')} AS DECIMAL(37,0))"
-        f" + CAST({_dmin('gt_pos', 'gt_neg')} AS DECIMAL(37,0)))"
-    )
-    e_clamp = f"LEAST(GREATEST(err, {ERR_FLOOR!r}), {1.0 - ERR_FLOOR!r})"
-    parts = [
-        f"WITH pairs AS MATERIALIZED ({pairs_sql})",
-        f"stats AS MATERIALIZED (SELECT {mn_mx} FROM pairs)",
-        "cands AS MATERIALIZED (" + " UNION ALL ".join(cand_arms) + ")",
-        "w0 AS MATERIALIZED (SELECT 2 * label - 1 AS y, "
-        + ", ".join(features)
-        + ", CAST(1 AS DECIMAL(38,0)) AS w FROM pairs)",
-    ]
-    arms = []
-    for t in range(1, rounds + 1):
-        w_prev = f"w{t - 1}"
-        parts.append(f"""root{t} AS MATERIALIZED (
-      SELECT feature AS f0, thr AS t0, wtot AS w_tot
-      FROM (
-        SELECT feature, thr, {region_sums(feat_case)},
-               SUM(w) AS wtot
-        FROM {w_prev}, cands GROUP BY feature, thr
-      ) ORDER BY {err_expr} ASC, feature ASC, thr ASC LIMIT 1
-    )""")
-        root_case = (
-            "CASE b.f0 "
-            + " ".join(f"WHEN '{f_}' THEN {f_}" for f_ in features)
-            + " END"
-        )
-        parts.append(f"""evc{t} AS MATERIALIZED (
-      SELECT CASE WHEN {root_case} <= b.t0 THEN 1 ELSE 0 END AS side,
-             feature, thr, {region_sums(feat_case)}
-      FROM {w_prev}, root{t} b, cands
-      GROUP BY 1, feature, thr
-    )""")
-        # pri-2 arm = the degenerate-root fallback (see adaboost_depth2
-        # _pick): when the root puts every row on one side, the other
-        # side's evc slice is empty — without the fallback this CTE
-        # would be empty and best{t} would silently drop the round's
-        # model row while the Spark fit kept it. The trivial child
-        # (root threshold, +1/+1 signs, zero error) only wins when no
-        # pri-1 row exists.
-        for side, nm in ((1, "bl"), (0, "br")):
-            parts.append(f"""{nm}{t} AS MATERIALIZED (
-      SELECT feature, thr, s_le, s_gt, errc FROM (
-        SELECT 1 AS pri, feature, thr,
-               CASE WHEN le_pos >= le_neg THEN 1 ELSE -1 END AS s_le,
-               CASE WHEN gt_pos >= gt_neg THEN 1 ELSE -1 END AS s_gt,
-               {err_expr} AS errc
-        FROM evc{t} WHERE side = {side}
-        UNION ALL
-        SELECT 2 AS pri, f0 AS feature, t0 AS thr, 1 AS s_le, 1 AS s_gt,
-               CAST(0 AS DECIMAL(38,0)) AS errc
-        FROM root{t}
-      ) ORDER BY pri ASC, errc ASC, feature ASC, thr ASC LIMIT 1
-    )""")
-        parts.append(f"""best{t} AS MATERIALIZED (
-      SELECT r.f0, r.t0,
-             l.feature AS fl, l.thr AS tl, l.s_le AS sll, l.s_gt AS slr,
-             g.feature AS fr, g.thr AS tr, g.s_le AS srl, g.s_gt AS srr,
-             CAST(CAST(l.errc AS DECIMAL(37,0))
-                  + CAST(g.errc AS DECIMAL(37,0)) AS DOUBLE)
-               / CAST(r.w_tot AS DOUBLE) AS err,
-             round(0.5 * ln((1.0 - {e_clamp}) / {e_clamp}), 9) AS alpha
-      FROM root{t} r, bl{t} l, br{t} g
-    )""")
-        h_case = (
-            f"(CASE WHEN (CASE b.f0 "
-            + " ".join(f"WHEN '{f_}' THEN {f_}" for f_ in features)
-            + " END) <= b.t0 THEN"
-            f" (CASE WHEN (CASE b.fl "
-            + " ".join(f"WHEN '{f_}' THEN {f_}" for f_ in features)
-            + " END) <= b.tl THEN b.sll ELSE b.slr END)"
-            f" ELSE (CASE WHEN (CASE b.fr "
-            + " ".join(f"WHEN '{f_}' THEN {f_}" for f_ in features)
-            + " END) <= b.tr THEN b.srl ELSE b.srr END) END)"
-        )
-        parts.append(f"""w{t} AS MATERIALIZED (
-      SELECT y, {", ".join(features)},
-             w * (CASE WHEN {h_case} = y
-                       THEN CAST(round(round(exp(-b.alpha), 9)
-                                       * {W_QUANTUM}) AS DECIMAL(38,0))
-                       ELSE CAST(round(round(exp(b.alpha), 9)
-                                       * {W_QUANTUM}) AS DECIMAL(38,0))
-                  END) AS w
-      FROM {w_prev}, best{t} b
-    )""")
-        arms.append(
-            f"SELECT {t} AS round, f0, t0, fl, tl, sll, slr,"
-            f" fr, tr, srl, srr, err, alpha FROM best{t}"
-        )
-    return ",\n".join(parts), "\nUNION ALL\n".join(arms)
-
-
-def adaboost_depth2_sql(
-    pairs_sql: str, features: list[str], rounds: int = 3, grid: int = GRID
-) -> str:
-    """DuckDB twin of :func:`adaboost_depth2`: identical grid, integer
-    region weights, split objective, leaf signs, and weight recursion —
-    unrolled one CTE level per round."""
-    ctes, model_union = adaboost_depth2_ctes(pairs_sql, features, rounds, grid)
-    return ctes + "\n" + model_union
-
-
-def _d2_h_case(b: str, features: list[str]) -> str:
-    """The depth-2 prediction h(x) through best-row ``b``'s nested
-    split path, as a SQL CASE over the pair columns."""
-
-    def fcase(col: str) -> str:
-        return (
-            f"(CASE {b}.{col} "
-            + " ".join(f"WHEN '{f_}' THEN {f_}" for f_ in features)
-            + " END)"
-        )
-
-    return (
-        f"(CASE WHEN {fcase('f0')} <= {b}.t0 THEN"
-        f" (CASE WHEN {fcase('fl')} <= {b}.tl"
-        f" THEN {b}.sll ELSE {b}.slr END)"
-        f" ELSE (CASE WHEN {fcase('fr')} <= {b}.tr"
-        f" THEN {b}.srl ELSE {b}.srr END) END)"
-    )
-
-
-def adaboost_depth2_score_sql(
-    pairs_sql: str,
-    features: list[str],
-    rounds: int = 3,
-    grid: int = GRID,
-    id_cols: tuple[str, str] = ("id_a", "id_b"),
-    limit: int = 20,
-) -> str:
-    """DuckDB twin of scoring through the fitted depth-2 ensemble:
-    the unrolled fit CTEs, then margin = Σ_t alpha_t·h_t(x) per pair
-    through each round's nested split path, ranked by
-    (margin DESC, id ASC). ``pairs_sql`` must also expose
-    ``id_cols``."""
-    ctes, _ = adaboost_depth2_ctes(pairs_sql, features, rounds, grid)
-    ida, idb = id_cols
-    terms = []
-    froms = ["pairs"]
-    for t in range(1, rounds + 1):
-        b = f"b{t}"
-        froms.append(f"best{t} {b}")
-        terms.append(f"({b}.alpha * {_d2_h_case(b, features)})")
-    margin = " + ".join(terms)
-    return (
-        ctes
-        + f"""
-    SELECT {ida}, {idb}, margin,
-           CASE WHEN margin > 0 THEN 1 ELSE 0 END AS pred
-    FROM (
-      SELECT {ida}, {idb}, {margin} AS margin
-      FROM {", ".join(froms)}
-    ) ORDER BY margin DESC, {ida} ASC LIMIT {limit}"""
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -967,167 +650,6 @@ def gboost_fit(
     return pairs.sparkSession.createDataFrame(rows, GB_SCHEMA)
 
 
-def gboost_ctes(
-    pairs_sql: str,
-    features: list[str],
-    rounds: int = 3,
-    grid: int = GRID,
-    lam: float = GB_LAMBDA,
-    alpha: float = GB_ALPHA,
-    gamma: float = GB_GAMMA,
-    eta: float = GB_ETA,
-    loss: str = "logistic",
-) -> tuple[str, str]:
-    """The unrolled second-order fit as (WITH-clause body, model UNION
-    tail) — shared by the model query and the scoring query (the
-    adaboost_ctes convention). ``loss`` swaps only the gh{t} CTE's
-    (g, h) expressions, mirroring :func:`gboost_fit`."""
-    if loss not in ("logistic", "poisson", "squared"):
-        raise ValueError(f"gboost_ctes: unknown loss {loss!r}")
-    mn_mx = ", ".join(
-        f"MIN({f_}) AS mn_{f_}, MAX({f_}) AS mx_{f_}" for f_ in features
-    )
-    cand_arms = []
-    for f_ in features:
-        for k in range(1, grid):
-            thr = f"(mn_{f_} + {k} * (mx_{f_} - mn_{f_}) / {float(grid)!r})"
-            cand_arms.append(
-                f"SELECT '{f_}' AS feature, {thr} AS thr FROM stats"
-            )
-    feat_case = (
-        "CASE feature "
-        + " ".join(f"WHEN '{f_}' THEN {f_}" for f_ in features)
-        + " END"
-    )
-    gain_sql = _gb_gain_expr(lam, gamma)
-    sig = "1.0 / (1.0 + exp(-f))"
-
-    def leaf(G: str, H: str) -> str:
-        soft = (
-            f"CASE WHEN {G} > {alpha!r} THEN {G} - {alpha!r}"
-            f" WHEN {G} < -{alpha!r} THEN {G} + {alpha!r} ELSE 0.0 END"
-        )
-        # + 0.0: normalize a -0.0 empty-region leaf (see _gb_leaf)
-        return f"(round(-({soft}) / ({H} + {lam!r}), 9) + 0.0)"
-
-    def rsum(cond: str, term: str, name: str) -> str:
-        return (
-            f"CAST(SUM(CAST(CASE WHEN {cond} THEN {term} ELSE 0.0 END"
-            f" AS DECIMAL(38,18))) AS DOUBLE) AS {name}"
-        )
-
-    parts = [
-        f"WITH pairs AS MATERIALIZED ({pairs_sql})",
-        f"stats AS MATERIALIZED (SELECT {mn_mx} FROM pairs)",
-        "cands AS MATERIALIZED (" + " UNION ALL ".join(cand_arms) + ")",
-        "s0 AS MATERIALIZED (SELECT CAST(label AS DOUBLE) AS y, "
-        + ", ".join(features)
-        + ", 0.0 AS f FROM pairs)",
-    ]
-    if loss == "poisson":
-        g_expr, h_expr = "exp(f) - y AS g", "exp(f) AS h"
-    elif loss == "squared":
-        g_expr, h_expr = "f - y AS g", "1.0 AS h"
-    else:
-        g_expr, h_expr = f"{sig} - y AS g", f"({sig}) * (1.0 - {sig}) AS h"
-    arms = []
-    for t in range(1, rounds + 1):
-        parts.append(f"""gh{t} AS MATERIALIZED (
-      SELECT y, {", ".join(features)},
-             {g_expr}, {h_expr}
-      FROM s{t - 1}
-    )""")
-        le = f"{feat_case} <= thr"
-        parts.append(f"""ev{t} AS MATERIALIZED (
-      SELECT feature, thr,
-             {rsum(le, "g", "gl")},
-             {rsum(le, "h", "hl")},
-             {rsum(f"NOT ({le})", "g", "gr")},
-             {rsum(f"NOT ({le})", "h", "hr")}
-      FROM gh{t}, cands GROUP BY feature, thr
-    )""")
-        parts.append(f"""best{t} AS MATERIALIZED (
-      SELECT feature, thr, round({gain_sql}, 9) AS gain,
-             {leaf("gl", "hl")} AS w_le, {leaf("gr", "hr")} AS w_gt
-      FROM ev{t} ORDER BY {gain_sql} DESC, feature ASC, thr ASC LIMIT 1
-    )""")
-        b_case = (
-            "CASE b.feature "
-            + " ".join(f"WHEN '{f_}' THEN {f_}" for f_ in features)
-            + " END"
-        )
-        parts.append(f"""s{t} AS MATERIALIZED (
-      SELECT y, {", ".join(features)},
-             round(f + {eta!r} * (CASE WHEN {b_case} <= b.thr
-                                  THEN b.w_le ELSE b.w_gt END), 10) AS f
-      FROM s{t - 1}, best{t} b
-    )""")
-        arms.append(
-            f"SELECT {t} AS round, feature, thr, gain, w_le, w_gt"
-            f" FROM best{t}"
-        )
-    return ",\n".join(parts), "\nUNION ALL\n".join(arms)
-
-
-def gboost_sql(
-    pairs_sql: str,
-    features: list[str],
-    rounds: int = 3,
-    grid: int = GRID,
-    loss: str = "logistic",
-) -> str:
-    """DuckDB twin of :func:`gboost_fit`: identical grid, g/h terms,
-    DECIMAL region sums, shared gain expression, regularized leaf
-    closed form, and quantized score recursion — unrolled one CTE
-    level per round."""
-    ctes, model_union = gboost_ctes(
-        pairs_sql, features, rounds, grid, loss=loss
-    )
-    return ctes + "\n" + model_union
-
-
-def gboost_score_sql(
-    pairs_sql: str,
-    features: list[str],
-    rounds: int = 3,
-    grid: int = GRID,
-    eta: float = GB_ETA,
-    id_cols: tuple[str, str] = ("id_a", "id_b"),
-    limit: int = 20,
-) -> str:
-    """DuckDB twin of scoring through the fitted gradient-boosted
-    ensemble: the unrolled fit CTEs, then the raw score
-    f = Σ_t η·w_leaf per pair, ranked by (score DESC, id ASC).
-    ``pairs_sql`` must also expose ``id_cols``."""
-    ctes, _ = gboost_ctes(pairs_sql, features, rounds, grid)
-    ida, idb = id_cols
-    terms = []
-    froms = ["pairs"]
-    for t in range(1, rounds + 1):
-        b = f"b{t}"
-        froms.append(f"best{t} {b}")
-        feat_case = (
-            f"CASE {b}.feature "
-            + " ".join(f"WHEN '{f_}' THEN {f_}" for f_ in features)
-            + " END"
-        )
-        terms.append(
-            f"({eta!r} * (CASE WHEN {feat_case} <= {b}.thr"
-            f" THEN {b}.w_le ELSE {b}.w_gt END))"
-        )
-    score = " + ".join(terms)
-    return (
-        ctes
-        + f"""
-    SELECT {ida}, {idb}, score,
-           CASE WHEN score > 0 THEN 1 ELSE 0 END AS pred
-    FROM (
-      SELECT {ida}, {idb}, {score} AS score
-      FROM {", ".join(froms)}
-    ) ORDER BY score DESC, {ida} ASC LIMIT {limit}"""
-    )
-
-
 # ---------------------------------------------------------------------------
 # Depth-2 gradient boosting: second-order splits WITH interactions —
 # the gboost_fit gain/leaf machinery at adaboost_depth2's tree shape.
@@ -1170,151 +692,3 @@ def gboost_depth2_fit(
         for r, lt_, rt_ in [(tree[1], tree[2], tree[3])]
     ]
     return pairs.sparkSession.createDataFrame(rows, GB2_SCHEMA)
-
-
-def gboost_depth2_ctes(
-    pairs_sql: str,
-    features: list[str],
-    rounds: int = 2,
-    grid: int = GRID,
-    lam: float = GB_LAMBDA,
-    alpha: float = GB_ALPHA,
-    gamma: float = GB_GAMMA,
-    eta: float = GB_ETA,
-) -> tuple[str, str]:
-    """The unrolled depth-2 second-order fit as (WITH body, model
-    UNION tail) — gboost_ctes' conventions plus adaboost_depth2_ctes'
-    pri-2 degenerate-root fallback arm."""
-    mn_mx = ", ".join(
-        f"MIN({f_}) AS mn_{f_}, MAX({f_}) AS mx_{f_}" for f_ in features
-    )
-    cand_arms = []
-    for f_ in features:
-        for k in range(1, grid):
-            thr = f"(mn_{f_} + {k} * (mx_{f_} - mn_{f_}) / {float(grid)!r})"
-            cand_arms.append(
-                f"SELECT '{f_}' AS feature, {thr} AS thr FROM stats"
-            )
-    feat_case = (
-        "CASE feature "
-        + " ".join(f"WHEN '{f_}' THEN {f_}" for f_ in features)
-        + " END"
-    )
-    gain_sql = _gb_gain_expr(lam, gamma)
-    sig = "1.0 / (1.0 + exp(-f))"
-
-    def leaf(G: str, H: str) -> str:
-        soft = (
-            f"CASE WHEN {G} > {alpha!r} THEN {G} - {alpha!r}"
-            f" WHEN {G} < -{alpha!r} THEN {G} + {alpha!r} ELSE 0.0 END"
-        )
-        # + 0.0: normalize a -0.0 empty-region leaf (see _gb_leaf)
-        return f"(round(-({soft}) / ({H} + {lam!r}), 9) + 0.0)"
-
-    def rsum(cond: str, term: str, name: str) -> str:
-        return (
-            f"CAST(SUM(CAST(CASE WHEN {cond} THEN {term} ELSE 0.0 END"
-            f" AS DECIMAL(38,18))) AS DOUBLE) AS {name}"
-        )
-
-    def sums(le: str) -> str:
-        return ", ".join(
-            [
-                rsum(le, "g", "gl"),
-                rsum(le, "h", "hl"),
-                rsum(f"NOT ({le})", "g", "gr"),
-                rsum(f"NOT ({le})", "h", "hr"),
-            ]
-        )
-
-    parts = [
-        f"WITH pairs AS MATERIALIZED ({pairs_sql})",
-        f"stats AS MATERIALIZED (SELECT {mn_mx} FROM pairs)",
-        "cands AS MATERIALIZED (" + " UNION ALL ".join(cand_arms) + ")",
-        "s0 AS MATERIALIZED (SELECT CAST(label AS DOUBLE) AS y, "
-        + ", ".join(features)
-        + ", 0.0 AS f FROM pairs)",
-    ]
-    arms = []
-    le = f"{feat_case} <= thr"
-    for t in range(1, rounds + 1):
-        parts.append(f"""gh{t} AS MATERIALIZED (
-      SELECT y, {", ".join(features)},
-             {sig} - y AS g, ({sig}) * (1.0 - {sig}) AS h
-      FROM s{t - 1}
-    )""")
-        parts.append(f"""root{t} AS MATERIALIZED (
-      SELECT feature AS f0, thr AS t0, round({gain_sql}, 9) AS gain
-      FROM (SELECT feature, thr, {sums(le)}
-            FROM gh{t}, cands GROUP BY feature, thr)
-      ORDER BY {gain_sql} DESC, feature ASC, thr ASC LIMIT 1
-    )""")
-        root_case = (
-            "CASE b.f0 "
-            + " ".join(f"WHEN '{f_}' THEN {f_}" for f_ in features)
-            + " END"
-        )
-        parts.append(f"""evc{t} AS MATERIALIZED (
-      SELECT CASE WHEN {root_case} <= b.t0 THEN 1 ELSE 0 END AS side,
-             feature, thr, {sums(le)}
-      FROM gh{t}, root{t} b, cands
-      GROUP BY side, feature, thr
-    )""")
-        # pri-2 arm = the degenerate-root fallback: trivial child at
-        # the root threshold with leaves COMPUTED from all-zero sums
-        # (−soft(0)/(0+λ) → the same −0.0 the Spark fit produces) —
-        # only wins when the side's evc slice is empty.
-        for side, nm in ((1, "bl"), (0, "br")):
-            parts.append(f"""{nm}{t} AS MATERIALIZED (
-      SELECT feature, thr, w_le, w_gt FROM (
-        SELECT 1 AS pri, feature, thr, {gain_sql} AS gc,
-               {leaf("gl", "hl")} AS w_le, {leaf("gr", "hr")} AS w_gt
-        FROM evc{t} WHERE side = {side}
-        UNION ALL
-        SELECT 2 AS pri, f0 AS feature, t0 AS thr, 0.0 AS gc,
-               {leaf("0.0", "0.0")} AS w_le, {leaf("0.0", "0.0")} AS w_gt
-        FROM root{t}
-      ) ORDER BY pri ASC, gc DESC, feature ASC, thr ASC LIMIT 1
-    )""")
-        parts.append(f"""best{t} AS MATERIALIZED (
-      SELECT r.f0, r.t0, r.gain,
-             l.feature AS fl, l.thr AS tl,
-             l.w_le AS w_ll, l.w_gt AS w_lr,
-             g.feature AS fr, g.thr AS tr,
-             g.w_le AS w_rl, g.w_gt AS w_rr
-      FROM root{t} r, bl{t} l, br{t} g
-    )""")
-        w_case = (
-            f"(CASE WHEN (CASE b.f0 "
-            + " ".join(f"WHEN '{f_}' THEN {f_}" for f_ in features)
-            + " END) <= b.t0 THEN"
-            f" (CASE WHEN (CASE b.fl "
-            + " ".join(f"WHEN '{f_}' THEN {f_}" for f_ in features)
-            + " END) <= b.tl THEN b.w_ll ELSE b.w_lr END)"
-            f" ELSE (CASE WHEN (CASE b.fr "
-            + " ".join(f"WHEN '{f_}' THEN {f_}" for f_ in features)
-            + " END) <= b.tr THEN b.w_rl ELSE b.w_rr END) END)"
-        )
-        parts.append(f"""s{t} AS MATERIALIZED (
-      SELECT y, {", ".join(features)},
-             round(f + {eta!r} * {w_case}, 10) AS f
-      FROM s{t - 1}, best{t} b
-    )""")
-        arms.append(
-            f"SELECT {t} AS round, f0, t0, gain, fl, tl, w_ll, w_lr,"
-            f" fr, tr, w_rl, w_rr FROM best{t}"
-        )
-    return ",\n".join(parts), "\nUNION ALL\n".join(arms)
-
-
-def gboost_depth2_sql(
-    pairs_sql: str,
-    features: list[str],
-    rounds: int = 2,
-    grid: int = GRID,
-) -> str:
-    """DuckDB twin of :func:`gboost_depth2_fit`."""
-    ctes, model_union = gboost_depth2_ctes(
-        pairs_sql, features, rounds, grid
-    )
-    return ctes + "\n" + model_union

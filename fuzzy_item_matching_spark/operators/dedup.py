@@ -144,23 +144,6 @@ def ngram_jaccard_pairs(
     return expand_group_pairs(doc_gid, rep_pairs, ["jaccard"], self_groups)
 
 
-def minhash_signature(shingles: Column, n_hashes: int = 32, seed: int = 42) -> Column:
-    """MinHash signature: per seeded hash function, the min hash over
-    the shingle set. Row-local array expression — no shuffle.
-
-    h_i(s) = murmur3(s, seed+i); sig[i] = min over shingles. Empty
-    shingle sets get NULL mins (callers should filter empty docs).
-    """
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(shingles, lambda s, i=i: F.hash(s, F.lit(seed + i)))
-            )
-            for i in range(n_hashes)
-        ]
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -169,8 +152,6 @@ def minhash_lsh_pairs(
     n_hashes: int = 32,
     bands: int = 8,
     min_jaccard: float = 0.5,
-    seed: int = 42,
-    portable: bool = False,
     delta_ids: Callable[[Column], Column] | None = None,
 ) -> DataFrame:
     """MinHash + banded LSH near-duplicate pairs, Jaccard-verified.
@@ -178,21 +159,20 @@ def minhash_lsh_pairs(
     Classic shingle→minhash→band→bucket-join: signatures are split into
     ``bands`` bands of ``n_hashes/bands`` rows; docs colliding on any
     full band become candidates (P[collide] = 1-(1-j^r)^b); candidates
-    are then verified with the EXACT Jaccard (array_intersect on the
-    two shingle sets — row-local, after an id join). Output ⊆
-    ngram_jaccard_pairs(min_jaccard) with recall driven by (b, r).
+    are then verified with the EXACT Jaccard (a shingle equi-join over
+    the candidate pairs). Output ⊆ ngram_jaccard_pairs(min_jaccard)
+    with recall driven by (b, r).
 
     Scale shape: explode is ``bands``× ids only; the candidate join key
-    is (band_idx, band_hash); signature arrays never cross a shuffle
-    except id→shingle-set re-join for verification.
+    is (band_idx, band_key); signature arrays never cross a shuffle.
 
-    ``portable=True`` switches to a md5-derived hash family and plain
-    string band keys, making the whole query exactly
-    DuckDB-oracle-checkable at the cost of one crypto hash per shingle:
-    h_i(s) = h1(s) + i·h2(s) (Kirsch–Mitzenmacher double hashing),
-    where h1/h2 are the first/second 8 hex chars of md5(s) as unsigned
-    32-bit ints — h_i < 2^32·n_hashes, far from BIGINT overflow, and
-    reproducible in SQL as CAST('0x'||substr(md5(s),N,8) AS BIGINT).
+    The hash family is md5-derived and the band keys are plain strings,
+    so the whole query is exactly DuckDB-oracle-checkable at the cost
+    of one crypto hash per shingle: h_i(s) = h1(s) + i·h2(s)
+    (Kirsch–Mitzenmacher double hashing), where h1/h2 are the
+    first/second 8 hex chars of md5(s) as unsigned 32-bit ints —
+    h_i < 2^32·n_hashes, far from BIGINT overflow, and reproducible in
+    SQL as CAST('0x'||substr(md5(s),N,8) AS BIGINT).
 
     ``delta_ids`` (an id-column predicate) switches to INCREMENTAL
     mode — the production ingest shape: one candidate side is
@@ -207,74 +187,57 @@ def minhash_lsh_pairs(
     rows_per_band = n_hashes // bands
     toks = F.col(tokens_col) if isinstance(tokens_col, str) else tokens_col
 
-    if portable:
-        # Single persisted POSTINGS frame (id, shingle) feeds both the
-        # signature aggregate and the pair verification — never
-        # materializing per-doc shingle arrays (the array persist +
-        # re-explode + array_intersect form measured ~25% slower).
-        # Explode + 32 min-aggregates instead of a per-row array fold:
-        # the md5 per shingle stays inside whole-stage codegen
-        # (higher-order functions are interpreted — measured 3× slower)
-        # and the groupBy is map-side-combined to one row per doc.
-        # md5 bound once per shingle (unbound it would hash twice for
-        # h1/h2, +45%); hex_long (ascii arithmetic) over conv: same
-        # values, 2.2× faster.
-        sh = df.select(
-            F.col(id_col).alias("__id"), toks.alias("__toks")
-        ).select(
-            "__id", F.explode(word_shingles(F.col("__toks"), n)).alias("__g")
-        ).persist()
-        hs = sh.select(
-            "__id", F.md5(F.col("__g").cast("binary")).alias("__m")
-        ).select(
-            "__id",
-            hex_long("__m", 1).alias("__h1"),
-            hex_long("__m", 9).alias("__h2"),
-        )
-        # r14 (guide §2.3/§2.4): the per-doc set size rides the SAME
-        # aggregate as the signature mins (postings are distinct per
-        # doc, so COUNT(*) = |set|) and is carried through the band
-        # explode — the separate sizes aggregate over the postings
-        # frame and its two post-verification joins are gone, and the
-        # size ratio prunes candidate pairs BEFORE the distinct and
-        # the verification join (exact-safe: jaccard ≤ min/max, see
-        # the prefilter note below).
-        sig = hs.groupBy("__id").agg(
-            *[
-                F.min(F.col("__h1") + i * F.col("__h2")).alias(f"__s{i}")
-                for i in range(n_hashes)
-            ],
-            F.count(F.lit(1)).alias("__n"),
-        ).select(
-            "__id",
-            "__n",
-            F.array(*[f"__s{i}" for i in range(n_hashes)]).alias("__sig"),
-        )
-    else:
-        base = df.select(
-            F.col(id_col).alias("__id"), toks.alias("__toks")
-        ).select(
-            # Bind tokens first: the transform lambda in word_shingles
-            # would re-run the tokenizer per gram (O(L²) → O(L)).
-            "__id", word_shingles(F.col("__toks"), n).alias("__sh")
-        ).filter(F.size("__sh") > 0).persist()  # arrays feed the fold
-        # signature AND both verification sides — compute once
-        sig = base.select(
-            "__id",
-            F.size("__sh").alias("__n"),
-            minhash_signature(F.col("__sh"), n_hashes, seed).alias("__sig"),
-        )
+    # Single persisted POSTINGS frame (id, shingle) feeds both the
+    # signature aggregate and the pair verification — never
+    # materializing per-doc shingle arrays (the array persist +
+    # re-explode + array_intersect form measured ~25% slower).
+    # Explode + 32 min-aggregates instead of a per-row array fold:
+    # the md5 per shingle stays inside whole-stage codegen
+    # (higher-order functions are interpreted — measured 3× slower)
+    # and the groupBy is map-side-combined to one row per doc.
+    # md5 bound once per shingle (unbound it would hash twice for
+    # h1/h2, +45%); hex_long (ascii arithmetic) over conv: same
+    # values, 2.2× faster.
+    sh = df.select(
+        F.col(id_col).alias("__id"), toks.alias("__toks")
+    ).select(
+        "__id", F.explode(word_shingles(F.col("__toks"), n)).alias("__g")
+    ).persist()
+    hs = sh.select(
+        "__id", F.md5(F.col("__g").cast("binary")).alias("__m")
+    ).select(
+        "__id",
+        hex_long("__m", 1).alias("__h1"),
+        hex_long("__m", 9).alias("__h2"),
+    )
+    # r14 (guide §2.3/§2.4): the per-doc set size rides the SAME
+    # aggregate as the signature mins (postings are distinct per
+    # doc, so COUNT(*) = |set|) and is carried through the band
+    # explode — the separate sizes aggregate over the postings
+    # frame and its two post-verification joins are gone, and the
+    # size ratio prunes candidate pairs BEFORE the distinct and
+    # the verification join (exact-safe: jaccard ≤ min/max, see
+    # the prefilter note below).
+    sig = hs.groupBy("__id").agg(
+        *[
+            F.min(F.col("__h1") + i * F.col("__h2")).alias(f"__s{i}")
+            for i in range(n_hashes)
+        ],
+        F.count(F.lit(1)).alias("__n"),
+    ).select(
+        "__id",
+        "__n",
+        F.array(*[f"__s{i}" for i in range(n_hashes)]).alias("__sig"),
+    )
 
     def band_key(b: int) -> Column:
+        # join on the values themselves ('|'-joined, exactly
+        # reproducible in SQL)
         cols = [
             F.element_at("__sig", b * rows_per_band + r + 1)
             for r in range(rows_per_band)
         ]
-        # portable: join on the values themselves ('|'-joined, exactly
-        # reproducible in SQL); fast path: one murmur fold per band
-        if portable:
-            return F.concat_ws("|", *[c.cast("string") for c in cols])
-        return F.hash(F.lit(b), *cols).cast("string")
+        return F.concat_ws("|", *[c.cast("string") for c in cols])
 
     banded = sig.select(
         "__id",
@@ -335,43 +298,27 @@ def minhash_lsh_pairs(
             .filter(ratio_ok)
             .distinct()
         )
-    if portable:
-        # Verify candidates relationally from the SAME postings frame:
-        # per-pair intersection = equi-join on the shingle restricted
-        # to candidate ids (shingles are distinct per doc, so COUNT =
-        # |A∩B|). Pairs sharing no shingle drop out of the inner join —
-        # their jaccard is 0, below any threshold. Set sizes arrived
-        # WITH the candidate pair (carried through the band explode),
-        # so the former per-doc sizes aggregate and its two post-
-        # aggregation joins are gone (r14).
-        pa = cand.join(
-            sh.select(F.col("__id").alias("id_a"), "__g"), "id_a"
-        )
-        inter = (
-            pa.join(sh.select(F.col("__id").alias("id_b"), "__g"), ["id_b", "__g"])
-            .groupBy("id_a", "id_b", "__na", "__nb")
-            .agg(F.count(F.lit(1)).alias("__i"))
-        )
-        return (
-            inter.withColumn(
-                "jaccard",
-                F.col("__i").cast("double")
-                / (F.col("__na") + F.col("__nb") - F.col("__i")),
-            )
-            .filter(F.col("jaccard") >= F.lit(min_jaccard))
-            .select("id_a", "id_b", "jaccard")
-        )
-
-    sa = base.select(F.col("__id").alias("id_a"), F.col("__sh").alias("__sha"))
-    sb = base.select(F.col("__id").alias("id_b"), F.col("__sh").alias("__shb"))
-    inter = F.size(F.array_intersect("__sha", "__shb"))
+    # Verify candidates relationally from the SAME postings frame:
+    # per-pair intersection = equi-join on the shingle restricted
+    # to candidate ids (shingles are distinct per doc, so COUNT =
+    # |A∩B|). Pairs sharing no shingle drop out of the inner join —
+    # their jaccard is 0, below any threshold. Set sizes arrived
+    # WITH the candidate pair (carried through the band explode),
+    # so the former per-doc sizes aggregate and its two post-
+    # aggregation joins are gone (r14).
+    pa = cand.join(
+        sh.select(F.col("__id").alias("id_a"), "__g"), "id_a"
+    )
+    inter = (
+        pa.join(sh.select(F.col("__id").alias("id_b"), "__g"), ["id_b", "__g"])
+        .groupBy("id_a", "id_b", "__na", "__nb")
+        .agg(F.count(F.lit(1)).alias("__i"))
+    )
     return (
-        cand.select("id_a", "id_b")
-        .join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
+        inter.withColumn(
             "jaccard",
-            inter.cast("double") / (F.size("__sha") + F.size("__shb") - inter),
+            F.col("__i").cast("double")
+            / (F.col("__na") + F.col("__nb") - F.col("__i")),
         )
         .filter(F.col("jaccard") >= F.lit(min_jaccard))
         .select("id_a", "id_b", "jaccard")
@@ -429,8 +376,8 @@ def simhash_pairs(
 
     ``portable=True`` derives the 64 bits from md5 (two 32-bit halves)
     instead of xxhash64 — bit-identical across engines, so the whole
-    pipeline is exactly SQL-replicable (same trade as
-    ``minhash_lsh_pairs(portable=True)``; xxhash64 stays the hot path).
+    pipeline is exactly SQL-replicable (the ``minhash_lsh_pairs`` trade;
+    xxhash64 stays the hot path).
 
     Zero-token docs: BOTH paths (portable and fast) exclude docs whose
     token bag is empty — the explode produces no rows for them, so
@@ -736,11 +683,10 @@ def winnowing_fingerprints(
     interprets md5 per position (measured 4.2 s vs 3.3 s old vs 1.35 s
     kernel at sf0.1, identical output). Zero exchanges: at 100 TB the
     fingerprint pass fuses into the scan. Per-batch DISTINCT is the
-    global distinct because ids are unique per row. The JVM twin
-    (:func:`winnowing_fingerprints_native`) stays as the
-    oracle-INDEPENDENT implementation, equality-pinned in
-    tests/test_round14_opt.py (the kernel and the DuckDB oracle would
-    otherwise share one code path).
+    global distinct because ids are unique per row. A pure-JVM
+    array-expression twin in tests/test_round14_opt.py is the
+    oracle-INDEPENDENT implementation the kernel is pinned against (the
+    kernel and the DuckDB oracle would otherwise share one code path).
     """
     import pyarrow as pa  # noqa: F401 — worker-side dependency
 
@@ -766,52 +712,6 @@ def winnowing_fingerprints(
     return docs.select(id_col, text_col).mapInArrow(
         gen, f"{id_col} {id_type}, h long"
     )
-
-
-def winnowing_fingerprints_native(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "txt",
-    k: int = 7,
-    w: int = 4,
-) -> DataFrame:
-    """Pure-JVM map-only twin of :func:`winnowing_fingerprints` —
-    k-gram keys, trailing-window minima and the per-doc distinct as
-    row-local array expressions (zero exchanges, but interpreted-HOF
-    md5 per position). Kept as the oracle-independent implementation
-    the equality test pins the DuckDB kernel against."""
-    from fuzzy_item_matching_spark.functions.text import hex_long_once
-
-    # key[p] = hash(k-gram at p)·2^30 + p for p = 1..L-k+1, bound to an
-    # attribute BEFORE the window pass so the second transform's slice
-    # references a materialized array, not a re-evaluated expression.
-    key_arr = F.transform(
-        F.sequence(F.lit(1), F.length(text_col) - (k - 1)),
-        lambda p: hex_long_once(
-            F.md5(F.substring(F.col(text_col), p, F.lit(k))), 1, 8
-        )
-        * F.lit(1073741824)
-        + p,
-    )
-    # Docs shorter than k+w-1 chars have no full w-window; the guard
-    # also keeps F.sequence ascending (sequence(w, stop) with stop < w
-    # would count DOWN, not produce an empty array).
-    g = docs.filter(F.length(text_col) >= k + w - 1).select(
-        id_col, key_arr.alias("__keys")
-    )
-    # m[p] = min(key[p-w+1 .. p]); h = m div 2^30 (shiftright is exact
-    # integer division here — keys are non-negative). array_distinct
-    # per doc replaces the global distinct: ids are unique per row, so
-    # the exploded (id, h) multiset is already distinct.
-    sel = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(w), F.size("__keys")),
-            lambda p: F.shiftright(
-                F.array_min(F.slice("__keys", p - (w - 1), w)), 30
-            ),
-        )
-    )
-    return g.select(id_col, F.explode(sel).alias("h"))
 
 
 def winnowing_sql(

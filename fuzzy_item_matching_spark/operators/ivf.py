@@ -244,11 +244,12 @@ def ivf_cosine_topk(
     """
     from fuzzy_item_matching_spark.operators.lsh import (
         _cosine_topk,
-        _infer_dim,
+        _sides,
         valid_vectors,
+        vector_dim,
     )
 
-    dim = len(centroids[0]) if centroids else _infer_dim(df, vec_col)
+    dim = len(centroids[0]) if centroids else vector_dim(df, vec_col)
     # np.stack in the block scorer dies on NULL/ragged rows; one bad row
     # must cost one row, not the task (see operators/lsh.py valid_vectors).
     df = valid_vectors(df, vec_col, dim)
@@ -264,21 +265,10 @@ def ivf_cosine_topk(
     # expression tree (n_centroids×dim plan literals + interpreted HOF
     # folds, analysis cost scale-independent) to the one-pass numpy
     # kernel — same bit-identical dots, map-only.
-    scored = cell_order_frame(
-        df, id_col, vec_col, centroids, keep_vec=True
-    ).persist()  # cell scoring = n_centroids dots per row; feeds both sides
-    probes = scored.select(
-        F.explode(F.slice("__cells", 1, n_probe)).alias("__cell"),
-        F.lit(0).cast("byte").alias("__side"),
-        "__id",
-        "__v",
-    )
-    index = scored.select(
-        F.element_at("__cells", 1).alias("__cell"),
-        F.lit(1).cast("byte").alias("__side"),
-        "__id",
-        "__v",
-    )
+    scored = cell_order_frame(df, id_col, vec_col, centroids, keep_vec=True)
+    # one explode per row, so cell scoring runs once: the nearest cell
+    # on the index side, then the n_probe nearest on the query side
+    cells = F.concat(F.slice("__cells", 1, 1), F.slice("__cells", 1, n_probe))
     # Blockwise scoring per cell (the FAISS-IVF shape): instead of a
     # candidate equi-join that expands to |probes-in-cell| ×
     # |index-in-cell| rows each paying an interpreted per-pair
@@ -291,8 +281,8 @@ def ivf_cosine_topk(
     # volume WITHOUT the pair expansion); a cell run must fit one
     # task's memory, so n_centroids grows ~√n to bound occupancy.
     return _cosine_topk(
-        probes.unionByName(index), ("__cell",), k, df.schema[id_col].dataType,
-        self_mode=False, dedup=False,
+        _sides(scored, [], cells, "__cell"), ("__cell",), k,
+        df.schema[id_col].dataType, self_mode=False, dedup=False,
     )
 
 
@@ -352,12 +342,12 @@ def ivf_cell_pairs(
     """
     from fuzzy_item_matching_spark.operators.lsh import (
         _cosine_block,
-        _infer_dim,
         _sorted_run_pairs,
         valid_vectors,
+        vector_dim,
     )
 
-    dim = len(centroids[0]) if centroids else _infer_dim(df, vec_col)
+    dim = len(centroids[0]) if centroids else vector_dim(df, vec_col)
     df = valid_vectors(df, vec_col, dim)
     if centroids is None:
         centroids = sample_centroids(df, id_col, vec_col, n_centroids)

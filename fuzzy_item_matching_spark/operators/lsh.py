@@ -253,13 +253,29 @@ def valid_vectors(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
     return df.filter(c.isNotNull() & (F.size(c) == dim))
 
 
-def _infer_dim(df: DataFrame, vec_col: str) -> int:
-    """Vector dimensionality from the first non-null row (dirty-input
-    safe — ``first()[0]`` alone can hand back None)."""
-    row = df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
-    if row is None:
-        raise ValueError(f"cannot infer dim: no non-null '{vec_col}' rows")
-    return len(row[0])
+def vector_dim(df: DataFrame, vec_col: str, default: int | None = None) -> int:
+    """The dimension most non-null vectors of ``vec_col`` have, ties to
+    the shorter — one aggregate job. Wherever a ragged row sits, even
+    first, ``valid_vectors`` then drops that row alone. With no
+    non-null vector: ``default``, or a ValueError when it is None."""
+    modal = F.mode(F.size(vec_col), deterministic=True)
+    dim = df.filter(F.col(vec_col).isNotNull()).agg(modal).first()[0]
+    if dim is None:
+        if default is None:
+            raise ValueError(f"cannot infer dim: no non-null '{vec_col}' rows")
+        return default
+    return dim
+
+
+def _sides(rows: DataFrame, keep: list[str], keys: Column, key: str) -> DataFrame:
+    """``_sorted_run_pairs``' input from one explode of each row's
+    ``keys`` array: its first element as the index side (1), every
+    later one as the query side (0)."""
+    return rows.select(
+        *keep, F.posexplode(keys).alias("__pos", key), "__id", "__v"
+    ).select(
+        *keep, key, (F.col("__pos") == 0).cast("byte").alias("__side"), "__id", "__v"
+    )
 
 
 def random_hyperplanes(dim: int, n_tables: int, seed: int = 42) -> list[list[float]]:
@@ -434,7 +450,7 @@ def lsh_cosine_topk(
     compute, is the binding constraint.
     """
     if dim is None:
-        dim = _infer_dim(df, vec_col)
+        dim = vector_dim(df, vec_col)
     buckets = sign_bucket_frame(
         df, id_col, vec_col, n_tables, bits_per_table, seed, dim
     ).select("__tbl", "__bkt", F.lit(0).cast("byte").alias("__side"), "__id", "__v")
@@ -487,25 +503,18 @@ def lsh_multiprobe_topk(
     never n².
     """
     if dim is None:
-        dim = _infer_dim(df, vec_col)
+        dim = vector_dim(df, vec_col)
     if probe_budget is None:
         probe_budget, max_flip = bits_per_table, 1
     framed = sign_bucket_frame(
         df, id_col, vec_col, n_tables, bits_per_table, seed, dim,
         probe_budget=probe_budget, max_flip=max_flip,
-    ).persist()
-    queries = framed.select(
-        "__tbl",
-        F.explode(F.concat(F.array("__bkt"), "__probes")).alias("__bkt"),
-        F.lit(0).cast("byte").alias("__side"),
-        "__id",
-        "__v",
     )
-    index = framed.select(
-        "__tbl", "__bkt", F.lit(1).cast("byte").alias("__side"), "__id", "__v"
-    )
+    # one explode per bucket row: its own bucket on the index side, then
+    # its own bucket and probes on the query side, so hashing runs once
+    buckets = F.concat(F.array("__bkt", "__bkt"), "__probes")
     return _cosine_topk(
-        queries.unionByName(index), ("__tbl", "__bkt"), k,
+        _sides(framed, ["__tbl"], buckets, "__bkt"), ("__tbl", "__bkt"), k,
         df.schema[id_col].dataType, self_mode=False,
     )
 
@@ -553,7 +562,7 @@ def lsh_sqdist_join(
     — shrink bucket_length or add tables for skew.
     """
     if dim is None:
-        dim = _infer_dim(left, vec_col)
+        dim = vector_dim(left, vec_col)
     planes_arr = np.asarray(random_hyperplanes(dim, n_tables, seed), dtype=np.float64)
     self_mode = right is None
     cap = None if self_mode else bucket_cap

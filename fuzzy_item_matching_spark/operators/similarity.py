@@ -334,11 +334,10 @@ def blocked_pair_stats(
         _folded_sqdist_block,
         _sorted_run_pairs,
         valid_vectors,
+        vector_dim,
     )
 
-    # the most common length, ties to the shorter; no vector at all: no pairs
-    modal = F.mode(F.size(vec_col), deterministic=True)
-    dim = df.filter(F.col(vec_col).isNotNull()).agg(modal).first()[0] or 0
+    dim = vector_dim(df, vec_col, default=0)  # no vector at all: no pairs
     id_type = df.schema[id_col].dataType
     out_schema = T.StructType(
         [

@@ -16,6 +16,8 @@ the key, which handles skew without a driver-side pass. 16 bits per
 dimension is the demonstration width; production widens the key or
 first range-buckets each dimension into 2^16 quantile bins (same
 plan, one extra ntile window over a sampled CDF).
+
+The DuckDB twin lives in ``oracles/zorder.py``, outside the engine.
 """
 
 from __future__ import annotations
@@ -29,7 +31,8 @@ BITS = 16
 def zorder_key(x: Column | str, y: Column | str, bits: int = BITS) -> Column:
     """Interleave the low ``bits`` of two non-negative ints: x takes
     odd bit positions, y even — a pure integer expression tree (no
-    UDF) identical to the generated SQL of :func:`zorder_key_sql`.
+    UDF) identical to the generated SQL of
+    ``oracles/zorder.zorder_key_sql``.
 
     CONTRACT: inputs must be non-negative. Negative values
     two's-complement-truncate into the top of the ``bits``-wide range
@@ -51,16 +54,6 @@ def zorder_key(x: Column | str, y: Column | str, bits: int = BITS) -> Column:
     for t in terms[1:]:
         out = out + t
     return out
-
-
-def zorder_key_sql(x: str, y: str, bits: int = BITS) -> str:
-    """DuckDB expression computing the identical Morton key — exact
-    integer arithmetic, so oracle parity is bit-for-bit."""
-    terms = []
-    for i in range(bits):
-        terms.append(f"((({x} >> {i}) & 1) * {1 << (2 * i + 1)})")
-        terms.append(f"((({y} >> {i}) & 1) * {1 << (2 * i)})")
-    return "(" + " + ".join(terms) + ")"
 
 
 def zorder_write(

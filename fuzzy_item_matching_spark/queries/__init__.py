@@ -4,12 +4,17 @@ Every operator from SURVEY.md §2 (plus the scale extensions: dedup,
 similarity search, text analysis) is exposed as a named query:
 
     (spark, sf_dir) -> DataFrame            # Spark-first implementation
-    oracle: str | None                      # equivalent DuckDB SQL
+    oracle: str | None                      # inline DuckDB SQL, if any
 
-The driver (and tests/) runs both at sf0.01 and compares row count,
-schema, and an order-insensitive value hash. Queries whose semantics are
-not SQL-expressible (LSH bucketing, streaming state) register
-``oracle=None`` → rows-only check, with stronger checks in tests/.
+Each query and its DuckDB oracle run at sf0.01 and are compared on
+row count, schema, and an order-insensitive value hash.
+Oracles are not engine code: read them only through
+``oracles.oracle_sql()`` (the root ``oracles/`` package, which this
+package never imports). It merges the inline ``Query.oracle`` strings
+with the oracles generated by the DuckDB twins in ``oracles/``, keyed by
+query name. Queries whose semantics are not SQL-expressible (LSH
+bucketing, streaming state) have neither → rows-only check, with
+stronger checks in tests/.
 
 Determinism rules for oracle-checked queries:
 - every computed column is aliased identically in Spark and SQL;
@@ -33,7 +38,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class Query:
     name: str
     fn: QueryFn
-    oracle: str | None  # DuckDB SQL over pre-registered views, or None
+    oracle: str | None  # inline DuckDB SQL; read oracles via oracles.oracle_sql()
     doc: str = ""
 
 
@@ -41,7 +46,8 @@ REGISTRY: dict[str, Query] = {}
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Register ``fn`` as a named engine query with an optional oracle."""
+    """Register ``fn`` as a named engine query with an optional inline
+    oracle (the generated ones register in ``oracles/`` instead)."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:

@@ -98,7 +98,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_cte_prefix(n_hashes: int, bands: int) -> str:
-    """Shared WITH-prefix replaying minhash_lsh_pairs(portable=True)'s
+    """Shared WITH-prefix replaying minhash_lsh_pairs's
     shingle→md5 hash family→signature→band pipeline; the full and
     incremental oracles differ only in their candidate CTE."""
     rpb = n_hashes // bands
@@ -150,7 +150,7 @@ _MINHASH_VERIFY_SUFFIX = """,
 
 
 def _minhash_oracle(n_hashes: int, bands: int, min_jaccard: float) -> str:
-    """Exact SQL replica of minhash_lsh_pairs(portable=True): the
+    """Exact SQL replica of minhash_lsh_pairs: the
     md5-derived hash family (h_i = h1 + i·h2) is plain integer
     arithmetic in both engines, so the banding join is value-exact."""
     return (
@@ -193,14 +193,13 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash (32 hashes) + 8-band LSH candidates, exact-Jaccard
     verified ≥ 0.5. The 100 TB dedup path: shuffle volume is bands×ids
     + candidate pairs, never n². Output ⊆ dedup_ngram_jaccard.
-    Uses the portable md5-derived hash family (one md5 per shingle,
+    Uses the md5-derived hash family (one md5 per shingle,
     Kirsch–Mitzenmacher derivation) so banding is exactly replicated by
-    the SQL oracle; the murmur fast path stays available via
-    minhash_lsh_pairs(portable=False)."""
+    the SQL oracle."""
     d = load_table(spark, sf_dir, "documents")
     return minhash_lsh_pairs(
         d, "doc_id", regex_tokenize("text"),
-        n=3, n_hashes=32, bands=8, min_jaccard=0.5, seed=42, portable=True,
+        n=3, n_hashes=32, bands=8, min_jaccard=0.5,
     )
 
 
@@ -223,7 +222,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     return minhash_lsh_pairs(
         d, "doc_id", regex_tokenize("text"),
-        n=3, n_hashes=32, bands=8, min_jaccard=0.5, seed=42, portable=True,
+        n=3, n_hashes=32, bands=8, min_jaccard=0.5,
         delta_ids=lambda c: c % 5 == 0,
     )
 
@@ -306,7 +305,7 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("id_a", "id_b", F.lit(1).alias("__e"))
     lsh = minhash_lsh_pairs(
         d, "doc_id", F.col("__toks"),
-        n=3, n_hashes=32, bands=8, min_jaccard=0.5, seed=42, portable=True,
+        n=3, n_hashes=32, bands=8, min_jaccard=0.5,
     ).select("id_a", "id_b", F.lit(1).alias("__l"))
     both = exact.join(lsh, ["id_a", "id_b"], "full_outer")
     return both.agg(
@@ -536,12 +535,12 @@ def _sem_centroids(
         refine_centroids,
         sample_centroids,
     )
-    from fuzzy_item_matching_spark.operators.lsh import _infer_dim, valid_vectors
+    from fuzzy_item_matching_spark.operators.lsh import valid_vectors, vector_dim
 
     key = (sf_dir, n_centroids, iters)
     if key not in _SEM_CENTROIDS_MEMO:
         e = load_table(spark, sf_dir, "embeddings")
-        e = valid_vectors(e, "embedding", _infer_dim(e, "embedding"))
+        e = valid_vectors(e, "embedding", vector_dim(e, "embedding"))
         c = sample_centroids(e, "vec_id", "embedding", n_centroids)
         if iters:
             c = refine_centroids(e, "vec_id", "embedding", c, iters)
@@ -759,7 +758,7 @@ def dedup_semantic_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         assign_cells,
         ivf_cell_pairs,
     )
-    from fuzzy_item_matching_spark.operators.lsh import _infer_dim, valid_vectors
+    from fuzzy_item_matching_spark.operators.lsh import valid_vectors, vector_dim
 
     e = load_table(spark, sf_dir, "embeddings")
     cents = _sem_centroids(spark, sf_dir)
@@ -773,7 +772,7 @@ def dedup_semantic_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("__dropped", F.lit(1))
     )
     assigned = assign_cells(
-        valid_vectors(e, "embedding", _infer_dim(e, "embedding")),
+        valid_vectors(e, "embedding", vector_dim(e, "embedding")),
         "vec_id", "embedding", cents,
     )
     return (

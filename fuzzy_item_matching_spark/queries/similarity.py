@@ -1381,8 +1381,8 @@ def sim_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from fuzzy_item_matching_spark.functions.vector import cosine_similarity
     from fuzzy_item_matching_spark.operators.lsh import (
-        _infer_dim,
         valid_vectors,
+        vector_dim,
     )
 
     raw = load_table(spark, sf_dir, "embeddings")
@@ -1392,7 +1392,7 @@ def sim_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single bad row would seize the pool — the explicit isnan filter
     # keeps one bad row costing one row. No-op on clean fixtures, so
     # the oracle (which reads the same clean parquet) is unchanged.
-    e = valid_vectors(raw, "embedding", _infer_dim(raw, "embedding"))
+    e = valid_vectors(raw, "embedding", vector_dim(raw, "embedding"))
     qv = e.orderBy("vec_id").limit(1).select(
         F.col("vec_id").alias("__qid"), F.col("embedding").alias("__qe")
     )

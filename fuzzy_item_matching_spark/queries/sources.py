@@ -613,37 +613,16 @@ def src_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from fuzzy_item_matching_spark.operators.zorder import (  # noqa: E402
-    zorder_key,
-    zorder_key_sql,
-)
+from fuzzy_item_matching_spark.operators.zorder import zorder_key  # noqa: E402
 
 # Epoch at/below the TPC-H data minimum (orders span 1992-1998) so the
 # day offset honors zorder_key's non-negative-int contract — a later
 # epoch would two's-complement-truncate 1992-1994 dates into the top of
 # the 16-bit range and alias silently once |value| >= 2^16.
 _Z_EPOCH = "1992-01-01"
-_Z_DUCK = zorder_key_sql(
-    "o_custkey", f"date_diff('day', DATE '{_Z_EPOCH}', o_orderdate)"
-)
 
 
-@query(
-    "src_zorder_layout",
-    oracle=f"""
-    WITH z AS (
-      SELECT o_custkey,
-             date_diff('day', DATE '1992-01-01', o_orderdate) AS day,
-             {_Z_DUCK} AS zkey
-      FROM orders
-    )
-    SELECT CAST(zkey >> 16 AS BIGINT) AS bucket,
-           COUNT(*) AS n,
-           MIN(o_custkey) AS min_cust, MAX(o_custkey) AS max_cust,
-           MIN(day) AS min_day, MAX(day) AS max_day
-    FROM z GROUP BY bucket
-    """,
-)
+@query("src_zorder_layout")
 def src_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) clustering key over (o_custkey, order-day),
     summarized per 64Ki z-range bucket: each bucket's min/max in BOTH

@@ -860,13 +860,7 @@ def stream_heavy_hitters_bounded(
     )
 
 
-def _stream_quality_oracle() -> str:
-    from fuzzy_item_matching_spark.queries.training import _qd_score_oracle
-
-    return _qd_score_oracle()
-
-
-@query("stream_quality_scores", oracle=_stream_quality_oracle())
+@query("stream_quality_scores")
 def stream_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONLINE model-based quality monitoring — the streaming twin of
     train_quality_score, with the batch query's oracle reused

@@ -666,17 +666,7 @@ text_bpe_fit_batched.__doc__ = text_bpe_fit_batched.__doc__.format(
 )
 
 
-def _unigram_oracle() -> str:
-    from fuzzy_item_matching_spark.operators.unigram_lm import (
-        unigram_em_sql,
-    )
-
-    return unigram_em_sql(
-        f"SELECT {_D_TOKENS.format(c='text')} AS toks FROM documents"
-    )
-
-
-@query("text_unigram_em", oracle=_unigram_oracle())
+@query("text_unigram_em")
 def text_unigram_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM subword tokenizer fit (SentencePiece's model; Kudo
     2018) — the OTHER major tokenizer next to BPE: piece probabilities
@@ -701,17 +691,7 @@ def text_unigram_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _unigram_viterbi_oracle() -> str:
-    from fuzzy_item_matching_spark.operators.unigram_lm import (
-        unigram_viterbi_sql,
-    )
-
-    return unigram_viterbi_sql(
-        f"SELECT {_D_TOKENS.format(c='text')} AS toks FROM documents"
-    )
-
-
-@query("text_unigram_segments", oracle=_unigram_viterbi_oracle())
+@query("text_unigram_segments")
 def text_unigram_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM Viterbi segmentation APPLY — the `encode` half of
     the SentencePiece pair (text_unigram_em is the fit): per distinct
@@ -753,22 +733,7 @@ def _uni_rows(spark: SparkSession, sf_dir: str) -> list:
     return _UNI_MEMO[sf_dir]
 
 
-def _unigram_prune_oracle() -> str:
-    return f"""
-    WITH em AS MATERIALIZED (SELECT * FROM ({_unigram_oracle()}) t),
-    kept AS MATERIALIZED (
-      SELECT piece, cnt, p1 FROM em
-      WHERE len(piece) = 1 OR p1 >= {_UNI_PRUNE_TAU!r}
-    ),
-    tot AS (SELECT CAST(SUM(CAST(p1 AS DECIMAL(38,18))) AS DOUBLE) AS s
-            FROM kept)
-    SELECT piece, cnt, p1,
-           round(p1 / tot.s, 9) AS p_pruned
-    FROM kept, tot
-    """
-
-
-@query("text_unigram_prune", oracle=_unigram_prune_oracle())
+@query("text_unigram_prune")
 def text_unigram_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SentencePiece PRUNE stage (Kudo 2018 §3.2's loop is
     EM → prune → repeat): after the EM re-estimate, multi-char pieces

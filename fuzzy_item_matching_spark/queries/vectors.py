@@ -572,7 +572,6 @@ vec_pca_power.__doc__ = vec_pca_power.__doc__.format(t=_PCA_ITERS)
 # k-means (Lloyd's) — the clustering primitive behind IVF coarse
 # quantizers and SemDeDup cells, exposed as a fitted operator.
 
-_KM_EMB_SQL = "SELECT vec_id, embedding FROM embeddings"
 _KM_DIM = 64
 
 # (sf_dir,) -> collected centroid rows [(c, cent list[float], n)] —
@@ -591,15 +590,7 @@ def _km_cent(spark: SparkSession, sf_dir: str):
     return _KM_MEMO[sf_dir]
 
 
-def _km_centroids_oracle() -> str:
-    from fuzzy_item_matching_spark.operators.kmeans import (
-        kmeans_centroids_sql,
-    )
-
-    return kmeans_centroids_sql(_KM_EMB_SQL, _KM_DIM)
-
-
-@query("vec_kmeans_centroids", oracle=_km_centroids_oracle())
+@query("vec_kmeans_centroids")
 def vec_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed k-means fit (operators/kmeans.py): k=8 hash-seeded
     centroids, 2 unrolled Lloyd iterations, output in long
@@ -625,15 +616,7 @@ def vec_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("cluster", "dim_idx", "v", "cluster_size")
 
 
-def _km_sil_oracle() -> str:
-    from fuzzy_item_matching_spark.operators.kmeans import (
-        kmeans_silhouette_sql,
-    )
-
-    return kmeans_silhouette_sql(_KM_EMB_SQL, _KM_DIM)
-
-
-@query("vec_kmeans_silhouette", oracle=_km_sil_oracle())
+@query("vec_kmeans_silhouette")
 def vec_kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Clustering quality eval on the fitted k-means model (shared
     sf_dir memo — fit once per session): per final cluster the size,
@@ -691,36 +674,7 @@ _KM_ELBOW_KS = (2, 4, 8)
 _KM_EQ = 2.0**30  # elbow inertia fixed-point quantum
 
 
-def _km_elbow_oracle() -> str:
-    from fuzzy_item_matching_spark.operators.kmeans import (
-        KM_ITERS,
-        _D_SQD,
-        kmeans_ctes,
-    )
-
-    blocks, arms = [], []
-    for k in _KM_ELBOW_KS:
-        pfx = f"k{k}_"
-        ctes = kmeans_ctes(_KM_EMB_SQL, _KM_DIM, k=k, pfx=pfx)
-        if blocks:
-            ctes = ctes[len("WITH "):]  # one WITH for the whole union
-        blocks.append(ctes)
-        sqd = _D_SQD.format(a="e.x", b="c.cent")
-        blocks.append(f"""{pfx}dm AS MATERIALIZED (
-      SELECT e.vec_id, MIN({sqd}) AS dmin
-      FROM {pfx}emb e, {pfx}cent{KM_ITERS} c
-      GROUP BY e.vec_id
-    )""")
-        arms.append(f"""SELECT {k} AS k,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM {pfx}cent{KM_ITERS})
-             AS n_clusters,
-           CAST(SUM(CAST(floor(dmin * {_KM_EQ!r}) AS BIGINT)) AS DOUBLE)
-             / {_KM_EQ!r} AS inertia
-    FROM {pfx}dm""")
-    return ",\n".join(blocks) + "\n" + "\nUNION ALL\n".join(arms)
-
-
-@query("vec_kmeans_elbow", oracle=_km_elbow_oracle())
+@query("vec_kmeans_elbow")
 def vec_kmeans_elbow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model selection for the k-means family: the ELBOW sweep — for
     k ∈ {ks}, fit (shared per-(sf_dir, k) memo) and report the
@@ -854,47 +808,7 @@ def vec_arrow_map_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KC_K = 6
 
-_D_SQD = (
-    "list_sum(list_transform(list_zip({a}, {b}),"
-    " s -> (s[1]-s[2])*(s[1]-s[2])))"
-)
-
-
-def _kcenter_oracle() -> str:
-    sqd = _D_SQD.format(a="e.v", b="c.v")
-    parts = [
-        "emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)",
-        """c0 AS (
-      SELECT 0 AS center_idx, vec_id, v, 0.0 AS d2_at_selection
-      FROM emb ORDER BY vec_id LIMIT 1
-    )""",
-        "cs0 AS (SELECT * FROM c0)",
-    ]
-    for j in range(1, _KC_K):
-        p = j - 1
-        parts += [
-            f"""m{j} AS (
-      SELECT e.vec_id, e.v, MIN({sqd}) AS dmin
-      FROM emb e CROSS JOIN cs{p} c GROUP BY e.vec_id, e.v
-    )""",
-            f"""pick{j} AS (
-      SELECT {j} AS center_idx, vec_id, v, dmin AS d2_at_selection
-      FROM m{j} ORDER BY dmin DESC, vec_id ASC LIMIT 1
-    )""",
-            f"cs{j} AS (SELECT * FROM cs{p} UNION ALL"
-            f" SELECT * FROM pick{j})",
-        ]
-    last = _KC_K - 1
-    return (
-        "WITH "
-        + ",\n".join(parts)
-        + f"""
-    SELECT center_idx, vec_id, d2_at_selection FROM cs{last}
-    """
-    )
-
-
-@query("vec_kcenter_init", oracle=_kcenter_oracle())
+@query("vec_kcenter_init")
 def vec_kcenter_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GREEDY K-CENTER seeding (Gonzalez 1985, farthest-point
     traversal): start from the lowest-id vector, then {k}−1 times add

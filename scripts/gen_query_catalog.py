@@ -1,9 +1,11 @@
 """Generate docs/QUERIES.md — the query catalog — from the registry,
 and re-stamp the registry-derived counts in docs/VERIFICATION.md and
-README.md (both went stale twice when edited by hand; the counts are
-pinned by tests/test_registry_order.py and test_verification_counts).
+README.md (both went stale twice when edited by hand). The catalog
+text comes from ``catalog_text``, which tests/test_registry_order.py
+compares against the whole committed file; the counts are pinned there
+too.
 
-Run: PYTHONPATH=/root/repo python scripts/gen_query_catalog.py
+Run from the repository root: python scripts/gen_query_catalog.py
 """
 
 from __future__ import annotations
@@ -36,10 +38,14 @@ def first_sentence(doc: str) -> str:
     return (m.group(1) if m else text)[:220]
 
 
-def main() -> None:
+def catalog_text() -> str:
+    """docs/QUERIES.md as the registry and the oracle accessor
+    (``oracles.oracle_sql``) define it today."""
     from fuzzy_item_matching_spark.queries import load_all
+    from oracles import oracle_sql
 
     reg = load_all()
+    oracles = oracle_sql()
     order = {n: i for i, n in enumerate(reg)}
     lines = [
         "# Query catalog",
@@ -52,8 +58,7 @@ def main() -> None:
         "property checks in `tests/`. The first 50 registry positions are",
         "the driver's check budget (see `queries/__init__.CHECK_PRIORITY`).",
         "",
-        f"**{len(reg)} queries, "
-        f"{sum(1 for q in reg.values() if q.oracle)} with exact oracles.**",
+        f"**{len(reg)} queries, {len(oracles)} with exact oracles.**",
         "",
     ]
     for prefix, title in GROUPS:
@@ -62,18 +67,25 @@ def main() -> None:
             continue
         lines += [f"## {title}", "", "| # | query | oracle | what it verifies |", "|---|---|---|---|"]
         for n in sorted(members, key=order.get):
-            q = reg[n]
-            kind = "exact" if q.oracle else "rows-only"
+            kind = "exact" if n in oracles else "rows-only"
             lines.append(
-                f"| {order[n] + 1} | `{n}` | {kind} | {first_sentence(q.doc)} |"
+                f"| {order[n] + 1} | `{n}` | {kind} | {first_sentence(reg[n].doc)} |"
             )
         lines.append("")
+    return "\n".join(lines)
+
+
+def main() -> None:
+    from fuzzy_item_matching_spark.queries import load_all
+    from oracles import oracle_sql
+
     with open("docs/QUERIES.md", "w") as f:
-        f.write("\n".join(lines))
+        f.write(catalog_text())
+    reg = load_all()
     print(f"wrote docs/QUERIES.md ({len(reg)} queries)")
 
     n = len(reg)
-    ex = sum(1 for q in reg.values() if q.oracle)
+    ex = len(oracle_sql())
     restamps = [
         (
             "docs/VERIFICATION.md",

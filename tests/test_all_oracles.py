@@ -28,10 +28,12 @@ import pytest
 
 from fuzzy_item_matching_spark.queries import load_all
 from fuzzy_item_matching_spark.tables import TABLE_NAMES, table_path
+from oracles import oracle_sql
 from tests.conftest import SF_SMOKE, assert_matches_oracle
 
 _REG = load_all()
-_ORACLED = [name for name, q in _REG.items() if q.oracle is not None]
+_ORACLES = oracle_sql()
+_ORACLED = list(_ORACLES)
 
 
 @pytest.fixture(scope="module")
@@ -47,5 +49,4 @@ def duck_smoke():
 
 @pytest.mark.parametrize("name", _ORACLED)
 def test_oracle(spark, duck_smoke, name):
-    q = _REG[name]
-    assert_matches_oracle(q.fn(spark, SF_SMOKE), duck_smoke, q.oracle)
+    assert_matches_oracle(_REG[name].fn(spark, SF_SMOKE), duck_smoke, _ORACLES[name])

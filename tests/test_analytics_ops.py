@@ -12,9 +12,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from fuzzy_item_matching_spark.queries import load_all
+from oracles import oracle_sql
 from tests.conftest import SF_CHECK, assert_matches_oracle
 
 REGISTRY = load_all()
+ORACLES = oracle_sql()
 
 NEW_OPS = [
     "train_ols_by_brand",
@@ -28,8 +30,8 @@ NEW_OPS = [
 @pytest.mark.parametrize("name", NEW_OPS)
 def test_new_op_oracle(spark, duck, name):
     q = REGISTRY[name]
-    assert q.oracle is not None, f"{name} must carry an exact oracle"
-    assert_matches_oracle(q.fn(spark, SF_CHECK), duck, q.oracle)
+    assert name in ORACLES, f"{name} must carry an exact oracle"
+    assert_matches_oracle(q.fn(spark, SF_CHECK), duck, ORACLES[name])
 
 
 def test_ols_matches_numpy_polyfit(spark):
@@ -131,8 +133,8 @@ def test_bpe_segments_reassemble(spark):
 @pytest.mark.parametrize("name", ["text_bpe_fit", "rel_pagerank_brands"])
 def test_iterative_op_oracle(spark, duck, name):
     q = REGISTRY[name]
-    assert q.oracle is not None, f"{name} must carry an exact oracle"
-    assert_matches_oracle(q.fn(spark, SF_CHECK), duck, q.oracle)
+    assert name in ORACLES, f"{name} must carry an exact oracle"
+    assert_matches_oracle(q.fn(spark, SF_CHECK), duck, ORACLES[name])
 
 
 def test_bpe_fit_merge_table_is_valid(spark):
@@ -162,7 +164,7 @@ def test_pagerank_is_a_distribution(spark):
 
 def test_weighted_sample_oracle_and_bias(spark, duck):
     q = REGISTRY["train_weighted_sample"]
-    assert_matches_oracle(q.fn(spark, SF_CHECK), duck, q.oracle)
+    assert_matches_oracle(q.fn(spark, SF_CHECK), duck, ORACLES["train_weighted_sample"])
     from fuzzy_item_matching_spark.tables import load_table
 
     sample = q.fn(spark, SF_CHECK).collect()
@@ -178,7 +180,7 @@ def test_weighted_sample_oracle_and_bias(spark, duck):
 
 def test_audio_windows_cover_payload_exactly(spark, duck):
     q = REGISTRY["mm_audio_windows"]
-    assert_matches_oracle(q.fn(spark, SF_CHECK), duck, q.oracle)
+    assert_matches_oracle(q.fn(spark, SF_CHECK), duck, ORACLES["mm_audio_windows"])
     from fuzzy_item_matching_spark.tables import load_table
 
     rows = REGISTRY["mm_audio_windows"].fn(spark, SF_CHECK).collect()
@@ -204,7 +206,7 @@ def test_audio_windows_cover_payload_exactly(spark, duck):
 
 def test_quarantine_counts_are_complete(spark, duck):
     q = REGISTRY["src_quarantine_split"]
-    assert_matches_oracle(q.fn(spark, SF_CHECK), duck, q.oracle)
+    assert_matches_oracle(q.fn(spark, SF_CHECK), duck, ORACLES["src_quarantine_split"])
     from fuzzy_item_matching_spark.tables import load_table
 
     rows = {r["reason"]: r["n"] for r in q.fn(spark, SF_CHECK).collect()}

@@ -13,11 +13,9 @@ from pyspark.sql import functions as F
 from fuzzy_item_matching_spark.functions.text import regex_tokenize
 from fuzzy_item_matching_spark.operators.dedup import (
     minhash_lsh_pairs,
-    minhash_signature,
     ngram_jaccard_pairs,
     simhash_bits,
     simhash_pairs,
-    word_shingles,
 )
 from fuzzy_item_matching_spark.tables import load_table
 
@@ -44,24 +42,13 @@ def test_minhash_subset_and_recall(documents, jaccard_pairs):
         (r.id_a, r.id_b)
         for r in minhash_lsh_pairs(
             documents, "doc_id", regex_tokenize("text"),
-            n=3, n_hashes=32, bands=8, min_jaccard=0.5, seed=42,
+            n=3, n_hashes=32, bands=8, min_jaccard=0.5,
         ).collect()
     }
     assert mh <= jaccard_pairs, f"minhash emitted {len(mh - jaccard_pairs)} false pairs"
     # b=8, r=4: P[candidate | j=0.8] = 1-(1-0.8^4)^8 ≈ 0.985; planted
     # dups sit at j≥0.8, so near-total recall is expected.
     assert len(mh) / len(jaccard_pairs) >= 0.9
-
-
-def test_minhash_signature_similarity_tracks_jaccard(spark):
-    # Identical shingle sets -> identical signatures.
-    df = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog"),
-         (2, "the quick brown fox jumps over the lazy dog")],
-        ["id", "text"],
-    ).select("id", minhash_signature(word_shingles(regex_tokenize("text"), 3), 16).alias("sig"))
-    a, b = [r.sig for r in df.collect()]
-    assert a == b
 
 
 def test_simhash_identical_and_disjoint(spark):

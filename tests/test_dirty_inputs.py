@@ -223,6 +223,25 @@ def test_dirty_vectors_cost_only_their_rows(spark, dirty_sf):
     assert len({r["qid"] for r in rows}) >= 40  # clean corpus intact
 
 
+def test_ivf_topk_dimension_survives_a_ragged_first_row(spark):
+    """The vector dimension is the most common one, not the first
+    row's: one 3-dim row read before every other vector costs that
+    row alone, not the whole top-k."""
+    from fuzzy_item_matching_spark.operators.ivf import ivf_cosine_topk
+    from fuzzy_item_matching_spark.tables import load_table
+
+    clean = load_table(spark, SF_SRC, "embeddings").select("vec_id", "embedding")
+    ragged = spark.createDataFrame([(-1, [1.0, 2.0, 3.0])], clean.schema)
+
+    def topk(df):
+        out = ivf_cosine_topk(df, "vec_id", "embedding").collect()
+        return sorted((r.qid, r.nid, r.cosine, r.rnk) for r in out)
+
+    want = topk(clean)
+    assert len(want) == 3 * clean.count()
+    assert topk(ragged.unionByName(clean)) == want
+
+
 def test_nan_value_isolated_in_outlier_screen(spark, dirty_sf):
     """NaN event values poison their own group's sigma, not other
     groups: every non-NaN-bearing event_type keeps finite stats."""
@@ -238,8 +257,8 @@ def test_arrow_norms_ragged_raises_prefiltered_survives(spark, dirty_sf):
     batch raises the labeled ValueError; with the production
     pre-filter (valid_vectors) the clean corpus computes normally."""
     from fuzzy_item_matching_spark.operators.lsh import (
-        _infer_dim,
         valid_vectors,
+        vector_dim,
     )
     from fuzzy_item_matching_spark.tables import load_table
 
@@ -247,7 +266,7 @@ def test_arrow_norms_ragged_raises_prefiltered_survives(spark, dirty_sf):
     with pytest.raises(Exception, match="ragged embedding batch"):
         reg["vec_arrow_map_norms"].fn(spark, dirty_sf).collect()
     raw = load_table(spark, dirty_sf, "embeddings")
-    clean = valid_vectors(raw, "embedding", _infer_dim(raw, "embedding"))
+    clean = valid_vectors(raw, "embedding", vector_dim(raw, "embedding"))
     clean.createOrReplaceTempView("__dirty_clean_emb")
     # reuse the kernel through the query on the clean view path: the
     # pre-filter drops NULL and ragged rows, so 90001/90002 are gone

@@ -19,6 +19,57 @@ TEXT = st.text(
 )
 
 
+def _jaro_winkler_py(s1: str, s2: str) -> float:
+    """Jaro-Winkler similarity of two strings, one pair at a time — the
+    plain-loop twin ``functions.text.jaro_winkler_batch`` is pinned
+    against."""
+    l1, l2 = len(s1), len(s2)
+    # Empty-before-equal: DuckDB scores ('','') as 0.0, not 1.0.
+    if l1 == 0 or l2 == 0:
+        return 0.0
+    if s1 == s2:
+        return 1.0
+    window = max(l1, l2) // 2 - 1
+    m1 = [False] * l1
+    m2 = [False] * l2
+    matches = 0
+    for i in range(l1):
+        c = s1[i]
+        lo = i - window if i > window else 0
+        hi = i + window + 1
+        if hi > l2:
+            hi = l2
+        for j in range(lo, hi):
+            if not m2[j] and s2[j] == c:
+                m1[i] = True
+                m2[j] = True
+                matches += 1
+                break
+    if matches == 0:
+        return 0.0
+    transpositions = 0
+    k = 0
+    for i in range(l1):
+        if m1[i]:
+            while not m2[k]:
+                k += 1
+            if s1[i] != s2[k]:
+                transpositions += 1
+            k += 1
+    transpositions //= 2
+    jaro = (
+        matches / l1 + matches / l2 + (matches - transpositions) / matches
+    ) / 3.0
+    if jaro > 0.7:
+        prefix = 0
+        for a, b in zip(s1[:4], s2[:4]):
+            if a != b:
+                break
+            prefix += 1
+        jaro += prefix * 0.1 * (1.0 - jaro)
+    return jaro
+
+
 def _eval_batch(spark, rows, colexprs):
     df = spark.createDataFrame([(r,) for r in rows], ["s"])
     return df.select(*colexprs).collect()
@@ -116,12 +167,10 @@ def test_python_fold_matches_duckdb_and_spark_fold(spark, data):
 @settings(max_examples=1, deadline=None)
 @given(st.data())
 def test_jaro_winkler_matches_duckdb(spark, data):
-    """jaro_winkler_py is bit-identical to DuckDB's
+    """The per-pair twin is bit-identical to DuckDB's
     jaro_winkler_similarity on generated string pairs (the exactness
     text_jaro_winkler_pairs' oracle and threshold both lean on)."""
     import duckdb
-
-    from fuzzy_item_matching_spark.functions.text import jaro_winkler_py
 
     pairs = data.draw(
         st.lists(st.tuples(TEXT, TEXT), min_size=1, max_size=200)
@@ -139,7 +188,7 @@ def test_jaro_winkler_matches_duckdb(spark, data):
         want = con.execute(
             "SELECT jaro_winkler_similarity(?, ?)", [a, b]
         ).fetchone()[0]
-        assert jaro_winkler_py(a, b) == want, (a, b)
+        assert _jaro_winkler_py(a, b) == want, (a, b)
     con.close()
 
 
@@ -149,10 +198,7 @@ def test_jaro_winkler_batch_matches_py_kernel():
     windows, empties, transposition-heavy pairs, embedded NULs)."""
     import random
 
-    from fuzzy_item_matching_spark.functions.text import (
-        jaro_winkler_batch,
-        jaro_winkler_py,
-    )
+    from fuzzy_item_matching_spark.functions.text import jaro_winkler_batch
 
     rng = random.Random(1234)
     alpha = "abcdef"
@@ -172,4 +218,4 @@ def test_jaro_winkler_batch_matches_py_kernel():
         )
     got = jaro_winkler_batch([a for a, _ in cases], [b for _, b in cases])
     for (a, b), g in zip(cases, got):
-        assert jaro_winkler_py(a, b) == g, (a, b)
+        assert _jaro_winkler_py(a, b) == g, (a, b)

@@ -13,12 +13,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from fuzzy_item_matching_spark.operators.kmeans import (
-    KM_Q,
-    kmeans_centroids_sql,
-    kmeans_fit,
-)
+from fuzzy_item_matching_spark.operators.kmeans import KM_Q, kmeans_fit
 from fuzzy_item_matching_spark.tables import load_table
+from oracles.kmeans import kmeans_centroids_sql
 
 from .conftest import SF_SMOKE
 

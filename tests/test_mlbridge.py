@@ -430,10 +430,8 @@ def test_adaboost_depth2_degenerate_root_matches_oracle(spark):
     """
     import duckdb
 
-    from fuzzy_item_matching_spark.operators.boosting import (
-        adaboost_depth2,
-        adaboost_depth2_sql,
-    )
+    from fuzzy_item_matching_spark.operators.boosting import adaboost_depth2
+    from oracles.boosting import adaboost_depth2_sql
 
     rows = [(1, 1.0, 2.0), (1, 1.0, 2.0), (0, 1.0, 2.0), (1, 1.0, 2.0)]
     pairs = spark.createDataFrame(rows, "label int, xa double, xb double")
@@ -509,10 +507,8 @@ def test_gboost_constant_features_match_oracle(spark):
     casing needed). Both engines must emit identical model rows."""
     import duckdb
 
-    from fuzzy_item_matching_spark.operators.boosting import (
-        gboost_fit,
-        gboost_sql,
-    )
+    from fuzzy_item_matching_spark.operators.boosting import gboost_fit
+    from oracles.boosting import gboost_sql
 
     rows = [(1, 1.0, 2.0), (1, 1.0, 2.0), (0, 1.0, 2.0), (1, 1.0, 2.0)]
     pairs = spark.createDataFrame(rows, "label int, xa double, xb double")
@@ -547,10 +543,8 @@ def test_gboost_depth2_degenerate_fallback_matches_oracle(spark):
     all-zero sums — including the -0.0 sign)."""
     import duckdb
 
-    from fuzzy_item_matching_spark.operators.boosting import (
-        gboost_depth2_fit,
-        gboost_depth2_sql,
-    )
+    from fuzzy_item_matching_spark.operators.boosting import gboost_depth2_fit
+    from oracles.boosting import gboost_depth2_sql
 
     rows = [(1, 1.0, 2.0), (1, 1.0, 2.0), (0, 1.0, 2.0), (1, 1.0, 2.0)]
     pairs = spark.createDataFrame(rows, "label int, xa double, xb double")
@@ -652,13 +646,14 @@ def test_long_fits_match_oracle(spark, fit_name, rounds):
     import duckdb
 
     from fuzzy_item_matching_spark.operators import boosting
+    from oracles import boosting as twins
 
     fit = getattr(boosting, fit_name)
     sql = {
-        "adaboost_stumps": boosting.adaboost_stumps_sql,
-        "gboost_fit": boosting.gboost_sql,
-        "gboost_depth2_fit": boosting.gboost_depth2_sql,
-        "adaboost_depth2": boosting.adaboost_depth2_sql,
+        "adaboost_stumps": twins.adaboost_stumps_sql,
+        "gboost_fit": twins.gboost_sql,
+        "gboost_depth2_fit": twins.gboost_depth2_sql,
+        "adaboost_depth2": twins.adaboost_depth2_sql,
     }[fit_name]
     feats = ["x1", "x2", "x3"]
     pairs = spark.createDataFrame(

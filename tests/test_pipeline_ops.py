@@ -12,9 +12,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from fuzzy_item_matching_spark.queries import load_all
+from oracles import oracle_sql
 from tests.conftest import SF_CHECK, SF_SMOKE, assert_matches_oracle
 
 REGISTRY = load_all()
+ORACLES = oracle_sql()
 
 
 @pytest.mark.parametrize(
@@ -22,8 +24,8 @@ REGISTRY = load_all()
 )
 def test_pipeline_op_oracle(spark, duck, name):
     q = REGISTRY[name]
-    assert q.oracle is not None, f"{name} must carry an exact oracle"
-    assert_matches_oracle(q.fn(spark, SF_CHECK), duck, q.oracle)
+    assert name in ORACLES, f"{name} must carry an exact oracle"
+    assert_matches_oracle(q.fn(spark, SF_CHECK), duck, ORACLES[name])
 
 
 def test_seq_packing_conserves_tokens(spark):
@@ -76,8 +78,8 @@ def test_ann_recall_is_valid_ratio(spark):
 )
 def test_curation_op_oracle(spark, duck, name):
     q = REGISTRY[name]
-    assert q.oracle is not None, f"{name} must carry an exact oracle"
-    assert_matches_oracle(q.fn(spark, SF_CHECK), duck, q.oracle)
+    assert name in ORACLES, f"{name} must carry an exact oracle"
+    assert_matches_oracle(q.fn(spark, SF_CHECK), duck, ORACLES[name])
 
 
 def test_decontaminate_covers_eval_split_only(spark):
@@ -127,8 +129,8 @@ def test_stratified_sample_keeps_min_class_whole(spark):
 @pytest.mark.parametrize("name", ["ts_repetition", "stream_ingest_dedup"])
 def test_quality_stream_op_oracle(spark, duck, name):
     q = REGISTRY[name]
-    assert q.oracle is not None, f"{name} must carry an exact oracle"
-    assert_matches_oracle(q.fn(spark, SF_CHECK), duck, q.oracle)
+    assert name in ORACLES, f"{name} must carry an exact oracle"
+    assert_matches_oracle(q.fn(spark, SF_CHECK), duck, ORACLES[name])
 
 
 def test_repetition_fracs_bounded(spark):
@@ -180,7 +182,7 @@ def test_tokenizer_null_text_yields_empty_not_null(spark):
 
 def test_stream_stream_join_matches_batch(spark, duck):
     q = REGISTRY["stream_stream_join"]
-    assert_matches_oracle(q.fn(spark, SF_CHECK), duck, q.oracle)
+    assert_matches_oracle(q.fn(spark, SF_CHECK), duck, ORACLES["stream_stream_join"])
 
 
 def test_stream_stream_join_respects_window(spark):
@@ -193,7 +195,7 @@ def test_stream_stream_join_respects_window(spark):
 
 def test_sliding_window_covers_each_event_four_times(spark, duck):
     q = REGISTRY["stream_events_sliding"]
-    assert_matches_oracle(q.fn(spark, SF_CHECK), duck, q.oracle)
+    assert_matches_oracle(q.fn(spark, SF_CHECK), duck, ORACLES["stream_events_sliding"])
     from fuzzy_item_matching_spark.tables import load_table
 
     out = REGISTRY["stream_events_sliding"].fn(spark, SF_SMOKE)
@@ -203,7 +205,7 @@ def test_sliding_window_covers_each_event_four_times(spark, duck):
 
 def test_kmv_sketch_oracle_and_accuracy(spark, duck):
     q = REGISTRY["ts_distinct_kmv"]
-    assert_matches_oracle(q.fn(spark, SF_CHECK), duck, q.oracle)
+    assert_matches_oracle(q.fn(spark, SF_CHECK), duck, ORACLES["ts_distinct_kmv"])
     row = q.fn(spark, SF_CHECK).collect()[0]
     exact, est = row["exact_distinct"], row["kmv_estimate"]
     assert exact > 256, "cardinality must exceed k for the estimator path"
@@ -225,7 +227,7 @@ def test_kmv_uses_takeordered_not_global_sort(spark):
 @pytest.mark.parametrize("name", ["ts_token_dominance", "ts_top_terms"])
 def test_textstat_extras_oracle(spark, duck, name):
     q = REGISTRY[name]
-    assert_matches_oracle(q.fn(spark, SF_CHECK), duck, q.oracle)
+    assert_matches_oracle(q.fn(spark, SF_CHECK), duck, ORACLES[name])
 
 
 def test_token_dominance_bounds(spark):

@@ -530,9 +530,7 @@ def test_gboost_deep_oracle_aggregate_budget():
     generated oracle (which mirrors the fit CTE-for-CTE): rounds×depth
     candidate aggregates, per-node best CTEs = rounds×(2^depth − 1),
     node-totals aggregates likewise one per level."""
-    from fuzzy_item_matching_spark.operators.gboost_deep import (
-        gboost_deep_ctes,
-    )
+    from oracles.gboost_deep import gboost_deep_ctes
 
     rounds, depth = 2, 3
     body, _ = gboost_deep_ctes(
@@ -696,13 +694,15 @@ def test_block_operators_are_one_sorted_pass(spark, op, exchanges):
     top-k forms add the cross-table ``distinct`` and the ``qid``
     window, IVF top-k the window alone (an index row lives in one
     cell, so no pair meets twice), ``ivf_cell_pairs`` the per-pair
-    aggregate that keeps the lowest shared cell."""
+    aggregate that keeps the lowest shared cell. None caches a frame:
+    both sides of a block come from one explode of the bucket or cell
+    rows, so nothing is left persisted."""
     df = spark.createDataFrame(
         [(i, [float(i % 3), 1.0], i % 2) for i in range(8)],
         "id long, vec array<double>, blk int",
     )
     plan = _block_operator(op, df)._jdf.queryExecution().executedPlan().toString()
-    for node in _PAIR_NODES:
+    for node in (*_PAIR_NODES, "InMemoryRelation"):
         assert node not in plan, plan
     assert len(re.findall(r"\bMapInPandas score_runs\(", plan)) == 1, plan
     assert len(re.findall(r"\bExchange\b", plan)) == exchanges, plan

@@ -7,6 +7,7 @@ These tests don't need a SparkSession — they only inspect the registry.
 """
 
 from fuzzy_item_matching_spark.queries import CHECK_PRIORITY, load_all
+from oracles import oracle_sql
 
 DRIVER_PREFIX_BUDGET = 50
 
@@ -35,15 +36,12 @@ def test_driver_prefix_is_all_oracle_bearing():
     driver record. The invariant is now 'oracle-bearing before
     rows-only within the prefix' — a rows-only entry must never
     displace an oracle-bearing one from a stronger (earlier) slot."""
-    reg = load_all()
-    prefix = list(reg.items())[:DRIVER_PREFIX_BUDGET]
+    oracles = oracle_sql()
+    prefix = list(load_all())[:DRIVER_PREFIX_BUDGET]
     first_rows_only = next(
-        (i for i, (_, q) in enumerate(prefix) if q.oracle is None),
-        len(prefix),
+        (i for i, n in enumerate(prefix) if n not in oracles), len(prefix)
     )
-    misordered = [
-        n for n, q in prefix[first_rows_only:] if q.oracle is not None
-    ]
+    misordered = [n for n in prefix[first_rows_only:] if n in oracles]
     assert misordered == [], (
         f"oracle-bearing prefix queries ordered after rows-only ones: {misordered}"
     )
@@ -53,12 +51,12 @@ def test_rows_only_in_prefix_tail_or_global_tail():
     """Outside the driver prefix, rows-only queries must still hold the
     global tail (their check is weaker at any position, so they never
     displace an oracle-bearing query from the ordered backlog)."""
-    reg = load_all()
-    names = list(reg)[DRIVER_PREFIX_BUDGET:]
+    oracles = oracle_sql()
+    names = list(load_all())[DRIVER_PREFIX_BUDGET:]
     first_rows_only = next(
-        (i for i, n in enumerate(names) if reg[n].oracle is None), len(names)
+        (i for i, n in enumerate(names) if n not in oracles), len(names)
     )
-    tail_oracle = [n for n in names[first_rows_only:] if reg[n].oracle is not None]
+    tail_oracle = [n for n in names[first_rows_only:] if n in oracles]
     assert tail_oracle == [], (
         f"oracle-bearing queries ordered after rows-only ones: {tail_oracle}"
     )
@@ -66,14 +64,18 @@ def test_rows_only_in_prefix_tail_or_global_tail():
 
 def test_catalog_counts_match_registry():
     """README.md and docs/QUERIES.md state the registry size; both went
-    stale in r06 (said 168/163 while the registry held 170/165). Pin
-    them to load_all() so a new query without a catalog regen fails
-    here instead of in review."""
+    stale in r06 (said 168/163 while the registry held 170/165), and
+    the catalog's rows drifted from the registry later while its two
+    counts still matched. Pin the README counts and the WHOLE catalog
+    to what scripts/gen_query_catalog.py generates now, so a new query
+    without a catalog regen fails here."""
     import pathlib
+
+    from scripts.gen_query_catalog import catalog_text
 
     reg = load_all()
     n = len(reg)
-    ex = sum(1 for q in reg.values() if q.oracle is not None)
+    ex = len(oracle_sql())
     root = pathlib.Path(__file__).resolve().parents[1]
     readme = (root / "README.md").read_text()
     assert f"{n} named queries ({ex} with exact DuckDB oracles)" in readme, (
@@ -83,6 +85,10 @@ def test_catalog_counts_match_registry():
     catalog = (root / "docs" / "QUERIES.md").read_text()
     assert f"**{n} queries, {ex} with exact oracles.**" in catalog, (
         f"docs/QUERIES.md stale: registry has {n}/{ex} — "
+        "run scripts/gen_query_catalog.py"
+    )
+    assert catalog == catalog_text(), (
+        "docs/QUERIES.md differs from its generator — "
         "run scripts/gen_query_catalog.py"
     )
 
@@ -95,7 +101,7 @@ def test_verification_counts_match_registry():
 
     reg = load_all()
     n = len(reg)
-    ex = sum(1 for q in reg.values() if q.oracle is not None)
+    ex = len(oracle_sql())
     root = pathlib.Path(__file__).resolve().parents[1]
     text = (root / "docs" / "VERIFICATION.md").read_text()
     assert f"{ex} of {n} registered queries carry" in text, (

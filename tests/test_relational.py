@@ -5,18 +5,20 @@ from __future__ import annotations
 import pytest
 
 from fuzzy_item_matching_spark.queries import load_all
+from oracles import oracle_sql
 from tests.conftest import SF_CHECK, assert_matches_oracle
 
 REGISTRY = load_all()
+ORACLES = oracle_sql()
 REL_NAMES = sorted(n for n in REGISTRY if n.startswith("rel_"))
 
 
 @pytest.mark.parametrize("name", REL_NAMES)
 def test_relational_oracle(spark, duck, name):
     q = REGISTRY[name]
-    assert q.oracle is not None, f"{name} must carry an exact oracle"
+    assert name in ORACLES, f"{name} must carry an exact oracle"
     df = q.fn(spark, SF_CHECK)
-    assert_matches_oracle(df, duck, q.oracle)
+    assert_matches_oracle(df, duck, ORACLES[name])
 
 
 def test_histo_quantile_within_one_bin_of_exact(spark):

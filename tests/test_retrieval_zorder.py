@@ -18,9 +18,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from fuzzy_item_matching_spark.queries import load_all
+from oracles import oracle_sql
 from tests.conftest import SF_CHECK, assert_matches_oracle
 
 REGISTRY = load_all()
+ORACLES = oracle_sql()
 
 NEW_OPS = [
     "ts_charlm_score",
@@ -33,8 +35,8 @@ NEW_OPS = [
 @pytest.mark.parametrize("name", NEW_OPS)
 def test_new_op_oracle(spark, duck, name):
     q = REGISTRY[name]
-    assert q.oracle is not None, f"{name} must carry an exact oracle"
-    assert_matches_oracle(q.fn(spark, SF_CHECK), duck, q.oracle)
+    assert name in ORACLES, f"{name} must carry an exact oracle"
+    assert_matches_oracle(q.fn(spark, SF_CHECK), duck, ORACLES[name])
 
 
 def test_bm25_returns_only_matching_docs_ranked(spark):

@@ -25,7 +25,7 @@ def test_col_subset_bynode_varies_across_siblings():
     menus somewhere in the tree — otherwise bynode degenerates to
     bylevel and the oracle check is vacuous. Pin the seed-13 draw the
     train_gboost_colsample_node query uses."""
-    from fuzzy_item_matching_spark.operators.gboost_deep import col_subset
+    from fuzzy_item_matching_spark.operators.boosting import col_subset
 
     subs = {
         (t, level, n): tuple(
@@ -51,10 +51,8 @@ def test_gboost_bynode_fit_respects_node_menus(spark):
     """Every fitted SPLIT node's feature must come from that node's
     own subset, and the bynode model must differ from the plain
     depth-3 fit (the restriction actually bound somewhere)."""
-    from fuzzy_item_matching_spark.operators.gboost_deep import (
-        col_subset,
-        gboost_deep_fit,
-    )
+    from fuzzy_item_matching_spark.operators.boosting import col_subset
+    from fuzzy_item_matching_spark.operators.gboost_deep import gboost_deep_fit
 
     kw = dict(rounds=2, depth=3, colsample_bynode=2.0 / 3.0, seed=13)
     rows = gboost_deep_fit(_pairs(spark), FEATS, **kw).collect()
@@ -230,14 +228,10 @@ def test_gboost_hist_bynode_matches_oracle(spark, duck):
     (prefix sums are per-(node, feature) partitions), so the fitted
     model must match the oracle bit-for-bit at sf0.01."""
     from .conftest import SF_CHECK, assert_matches_oracle
-    from fuzzy_item_matching_spark.operators.gboost_deep import (
-        gboost_hist_fit,
-        gboost_hist_sql,
-    )
-    from fuzzy_item_matching_spark.queries.training import (
-        _LR_PAIRS_SQL,
-        _lr_pairs,
-    )
+    from fuzzy_item_matching_spark.operators.gboost_deep import gboost_hist_fit
+    from fuzzy_item_matching_spark.queries.training import _lr_pairs
+    from oracles.gboost_deep import gboost_hist_sql
+    from oracles.training import _LR_PAIRS_SQL
 
     kw = dict(rounds=2, depth=3, colsample_bynode=2.0 / 3.0, seed=13)
     fitted = gboost_hist_fit(_lr_pairs(spark, SF_CHECK), FEATS, **kw)

@@ -8,25 +8,69 @@ winnowing kernel now shares the engine's code path).
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fuzzy_item_matching_spark.functions.text import hex_long_once
+
 from .conftest import SF_CHECK
+
+
+def _winnowing_native(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "txt",
+    k: int = 7,
+    w: int = 4,
+) -> DataFrame:
+    """Pure-JVM map-only twin of ``dedup.winnowing_fingerprints`` —
+    k-gram keys, trailing-window minima and the per-doc distinct as
+    row-local array expressions (zero exchanges, but interpreted-HOF
+    md5 per position): the oracle-independent implementation the
+    DuckDB kernel is pinned against."""
+    # key[p] = hash(k-gram at p)·2^30 + p for p = 1..L-k+1, bound to an
+    # attribute BEFORE the window pass so the second transform's slice
+    # references a materialized array, not a re-evaluated expression.
+    key_arr = F.transform(
+        F.sequence(F.lit(1), F.length(text_col) - (k - 1)),
+        lambda p: hex_long_once(
+            F.md5(F.substring(F.col(text_col), p, F.lit(k))), 1, 8
+        )
+        * F.lit(1073741824)
+        + p,
+    )
+    # Docs shorter than k+w-1 chars have no full w-window; the guard
+    # also keeps F.sequence ascending (sequence(w, stop) with stop < w
+    # would count DOWN, not produce an empty array).
+    g = docs.filter(F.length(text_col) >= k + w - 1).select(
+        id_col, key_arr.alias("__keys")
+    )
+    # m[p] = min(key[p-w+1 .. p]); h = m div 2^30 (shiftright is exact
+    # integer division here — keys are non-negative). array_distinct
+    # per doc replaces the global distinct: ids are unique per row, so
+    # the exploded (id, h) multiset is already distinct.
+    sel = F.array_distinct(
+        F.transform(
+            F.sequence(F.lit(w), F.size("__keys")),
+            lambda p: F.shiftright(
+                F.array_min(F.slice("__keys", p - (w - 1), w)), 30
+            ),
+        )
+    )
+    return g.select(id_col, F.explode(sel).alias("h"))
 
 
 def test_winnowing_kernel_equals_native(spark):
     """The DuckDB-kernel winnowing (default path) must emit exactly
     the fingerprint set of the pure-JVM array twin."""
-    from fuzzy_item_matching_spark.operators.dedup import (
-        winnowing_fingerprints,
-        winnowing_fingerprints_native,
-    )
+    from fuzzy_item_matching_spark.operators.dedup import winnowing_fingerprints
     from fuzzy_item_matching_spark.tables import load_table
 
     d = load_table(spark, SF_CHECK, "documents").select(
         "doc_id", F.lower(F.col("text")).alias("txt")
     )
     kern = winnowing_fingerprints(d)
-    nat = winnowing_fingerprints_native(d)
+    nat = _winnowing_native(d)
     assert kern.exceptAll(nat).count() == 0
     assert nat.exceptAll(kern).count() == 0
     assert kern.count() > 0

@@ -92,10 +92,8 @@ def test_gboost_colsample_restricts_features(spark):
     """With colsample=1/3 every level's split features must come from
     that (round, level)'s seeded subset — and the subset function is
     the single source of truth for both engines."""
-    from fuzzy_item_matching_spark.operators.gboost_deep import (
-        col_subset,
-        gboost_deep_fit,
-    )
+    from fuzzy_item_matching_spark.operators.boosting import col_subset
+    from fuzzy_item_matching_spark.operators.gboost_deep import gboost_deep_fit
 
     rows = gboost_deep_fit(
         _pairs(spark), FEATS, rounds=2, depth=2, colsample=1.0 / 3.0, seed=5
