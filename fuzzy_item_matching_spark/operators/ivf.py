@@ -233,6 +233,7 @@ def ivf_cosine_topk(
     centroids: list[list[float]] | None = None,
     refine_iters: int = 2,
     sample_cap: int = REFINE_SAMPLE_CAP,
+    dim: int | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k per vector via IVF cells.
 
@@ -240,7 +241,8 @@ def ivf_cosine_topk(
     side: each vector probes its ``n_probe`` nearest cells. The
     candidate join key is the cell id; exact cosine ranks candidates.
     Recall misses only neighbors whose cell the query didn't probe —
-    graded vs brute force in tests.
+    graded vs brute force in tests. ``dim``: the vector dimension, by
+    default the centroids' or else ``vector_dim``'s (one more job).
     """
     from fuzzy_item_matching_spark.operators.lsh import (
         _cosine_topk,
@@ -249,7 +251,8 @@ def ivf_cosine_topk(
         vector_dim,
     )
 
-    dim = len(centroids[0]) if centroids else vector_dim(df, vec_col)
+    if dim is None:
+        dim = len(centroids[0]) if centroids else vector_dim(df, vec_col)
     # np.stack in the block scorer dies on NULL/ragged rows; one bad row
     # must cost one row, not the task (see operators/lsh.py valid_vectors).
     df = valid_vectors(df, vec_col, dim)

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -37,9 +38,11 @@ def _folded_sqdist_block(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     numpy scoring stays BITWISE equal to the SQL oracle — np.sum's
     pairwise summation would not be."""
     acc = np.zeros((a.shape[0], b.shape[0]), dtype=np.float64)
+    d = np.empty_like(acc)
     for i in range(a.shape[1]):
-        d = a[:, i, None] - b[None, :, i]
-        acc += d * d
+        np.subtract(a[:, i, None], b[None, :, i], out=d)
+        d *= d
+        acc += d
     return acc
 
 
@@ -71,6 +74,65 @@ def _cosine_block(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]
     return dots, np.divide(dots, denom, out=np.zeros_like(dots), where=denom != 0.0)
 
 
+def _run_starts(key_cols: list[np.ndarray]) -> np.ndarray:
+    """Positions past row 0 where a new key run begins in rows sorted
+    by the key columns ``key_cols`` (NaN keys form one run)."""
+    change = np.zeros(max(len(key_cols[0]) - 1, 0), dtype=bool)
+    for kv in key_cols:
+        same = kv[1:] == kv[:-1]
+        if kv.dtype.kind == "f":
+            same |= np.isnan(kv[1:]) & np.isnan(kv[:-1])
+        change |= ~same
+    return np.flatnonzero(change) + 1
+
+
+def _run_blocks(
+    key_cols: list[np.ndarray], side: np.ndarray, self_mode: bool, cap: int | None
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """(start, a_end, b_start, b_end) of every run that scores, in rows
+    sorted by (*keys, side, id) with key columns ``key_cols`` and sides
+    ``side``: its left rows are [start, a_end) and its right rows after
+    the cap [b_start, b_end); in self mode both are the whole run."""
+    if not len(side):
+        return tuple(np.zeros(0, dtype=np.int64) for _ in range(4))
+    starts = np.r_[0, _run_starts(key_cols)]
+    ends = np.r_[starts[1:], len(side)]
+    if self_mode:
+        a_end, b_start = ends, starts
+    else:
+        # left rows sort first; the right rows follow by ascending id
+        a_end = b_start = starts + np.add.reduceat((side == 0).astype(np.int64), starts)
+    b_end = ends if cap is None else np.minimum(ends, b_start + cap)
+    live = (a_end > starts) & (b_end > b_start)
+    if self_mode:
+        live &= ends - starts > 1
+    return tuple(x[live] for x in (starts, a_end, b_start, b_end))
+
+
+def _score_whole_runs(
+    key_cols: list[np.ndarray],
+    blocks: tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray],
+    row: np.ndarray,
+    ids: np.ndarray,
+    v: np.ndarray,
+    scorer,
+) -> list[np.ndarray] | None:
+    """The scorer's output columns over the ``_run_blocks`` ``blocks``
+    of sorted rows, or None when no run scores. Sorted row j has key
+    ``key_cols[·][j]`` and id and vector ``ids[row[j]]``,
+    ``v[row[j]]``, so several sorted rows (one per hash table) can
+    share one stored vector."""
+    starts, a_end, b_start, b_end = blocks
+    run_keys = zip(*(kv[starts] for kv in key_cols))
+    outs = []
+    for key, s, ae, bs, be in zip(run_keys, starts, a_end, b_start, b_end):
+        a, b = row[s:ae], row[bs:be]
+        outs.append(scorer(key, ids[a], v[a], ids[b], v[b]))
+    if not outs:
+        return None
+    return [np.concatenate([o[j] for o in outs]) for j in range(len(outs[0]))]
+
+
 def _sorted_run_pairs(
     rows: DataFrame,
     keys: tuple[str, ...],
@@ -97,6 +159,10 @@ def _sorted_run_pairs(
     ``cap`` keeps only the first ``cap`` index-side rows of a run —
     the lowest ids, a deterministic posting-list truncation.
 
+    The run walker (``_score_whole_runs``) is plain numpy over sorted
+    arrays, so ``lsh_sqdist_join``'s driver placement calls the same
+    walker on rows it sorted itself, without this plan.
+
     Why one sorted pass instead of one grouped pandas call per key:
     where blocks are small and numerous, a pandas call per key cost
     several times its arithmetic — ``lsh_sqdist_join`` on perfbench's
@@ -110,7 +176,9 @@ def _sorted_run_pairs(
     query than one grouped call each. The cap falls out of the sort
     order instead of a ``row_number`` window. Each row is shuffled
     once. Memory per task is one run plus one Arrow batch: a run must
-    fit one task."""
+    fit one task. Each Python task also costs a fixed ~0.2 s of worker
+    CPU whatever its size (PySpark 4.1 on Python 3.11: the worker's
+    per-task ``importlib.invalidate_caches()`` alone is ~0.1 s)."""
     names = schema.fieldNames()
     for k in keys:
         dtype = rows.schema[k].dataType
@@ -126,46 +194,18 @@ def _sorted_run_pairs(
                 .cast(dtype),
             )
 
-    def run_starts(pdf: pd.DataFrame) -> np.ndarray:
-        """Positions past row 0 where a new key run begins."""
-        change = np.zeros(max(len(pdf) - 1, 0), dtype=bool)
-        for k in keys:
-            kv = pdf[k].to_numpy()
-            same = kv[1:] == kv[:-1]
-            if kv.dtype.kind == "f":
-                same |= np.isnan(kv[1:]) & np.isnan(kv[:-1])
-            change |= ~same
-        return np.flatnonzero(change) + 1
-
     def score_whole_runs(pdf: pd.DataFrame):
         """Output of every run in these sorted rows (all complete)."""
         if pdf.empty:
             return
-        side, ids = pdf["__side"].to_numpy(), pdf["__id"].to_numpy()
-        v = np.stack(pdf["__v"].to_numpy())
-        starts = np.r_[0, run_starts(pdf)]
-        ends = np.r_[starts[1:], len(ids)]
-        if self_mode:
-            a_end, b_start = ends, starts
-        else:
-            # left rows sort first; the right rows follow by ascending id
-            a_end = b_start = starts + np.add.reduceat(
-                (side == 0).astype(np.int64), starts
-            )
-        b_end = ends if cap is None else np.minimum(ends, b_start + cap)
-        live = (a_end > starts) & (b_end > b_start)
-        if self_mode:
-            live &= ends - starts > 1
-        starts, a_end, b_start, b_end = (x[live] for x in (starts, a_end, b_start, b_end))
-        run_keys = zip(*(pdf[k].to_numpy()[starts] for k in keys))
-        outs = [
-            scorer(key, ids[s:ae], v[s:ae], ids[bs:be], v[bs:be])
-            for key, s, ae, bs, be in zip(run_keys, starts, a_end, b_start, b_end)
-        ]
-        if outs:
-            yield pd.DataFrame(
-                {n: np.concatenate([o[j] for o in outs]) for j, n in enumerate(names)}
-            )
+        key_cols = [pdf[k].to_numpy() for k in keys]
+        cols = _score_whole_runs(
+            key_cols, _run_blocks(key_cols, pdf["__side"].to_numpy(), self_mode, cap),
+            np.arange(len(pdf)), pdf["__id"].to_numpy(), np.stack(pdf["__v"].to_numpy()),
+            scorer,
+        )
+        if cols is not None:
+            yield pd.DataFrame(dict(zip(names, cols)))
 
     def score_runs(batches):
         # a run may go on in the next Arrow batch: each batch's last run
@@ -174,7 +214,7 @@ def _sorted_run_pairs(
         for pdf in batches:
             if carry is not None:
                 pdf = pd.concat([carry, pdf], ignore_index=True)
-            edges = run_starts(pdf)
+            edges = _run_starts([pdf[k].to_numpy() for k in keys])
             last = edges[-1] if len(edges) else 0
             yield from score_whole_runs(pdf.iloc[:last])
             carry = pdf.iloc[last:]
@@ -519,6 +559,92 @@ def lsh_multiprobe_topk(
     )
 
 
+_SELF_TILE = 64  # rows per self-mode scoring tile: its 64 × run block stays in cache
+# Most squared-difference folds (block cells × dim; self mode counts
+# half the cells) the driver placement scores: the measured crossover
+# with the distributed plan (see lsh_sqdist_join, "Placement").
+_DRIVER_MAX_FOLDS = 200_000_000
+
+
+def _brp_buckets(v: np.ndarray, planes: np.ndarray, bucket_length: float) -> np.ndarray:
+    """(n_tables, n) bucket ids floor(dot(v, g_i) / bucketLength) of
+    the rows of ``v``: the n_tables per-row dots as ONE
+    dimension-ordered numpy fold (the expression dot's left-to-right
+    accumulation exactly); floor(acc/bucket_length) on float64 matches
+    Spark's Divide+floor — bit-identical bucket ids to ``brp_hashes``."""
+    acc = np.zeros((len(v), len(planes)), dtype=np.float64)
+    for i in range(planes.shape[1]):
+        acc += v[:, i, None] * planes[None, :, i]
+    with np.errstate(invalid="ignore"):
+        # a NaN vector gets one arbitrary bucket; its distances are NaN,
+        # so it pairs with nothing
+        return np.floor(acc / bucket_length).astype(np.int64).T
+
+
+def _fits_driver(df: DataFrame) -> bool:
+    """Whether Spark's planner would broadcast ``df``: a batch plan
+    whose optimized size estimate (``stats().sizeInBytes``) is within
+    ``spark.sql.autoBroadcastJoinThreshold`` (-1: never)."""
+    if df.isStreaming:
+        return False
+    limit = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return 0 <= df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() <= limit
+
+
+def _driver_run_pairs(
+    rows: DataFrame,
+    planes: np.ndarray,
+    bucket_length: float,
+    scorer,
+    schema: T.StructType,
+    self_mode: bool,
+    cap: int | None,
+) -> DataFrame | None:
+    """``lsh_sqdist_join``'s bucketing and ``_sorted_run_pairs`` on the
+    driver: ONE Arrow collect of the tagged ``(__side, __id, __v)``
+    rows, the ``_brp_buckets`` fold, one ``np.lexsort`` in the order
+    ``sortWithinPartitions(__tbl, __bkt, __side, __id)`` gives (ids
+    ascending with NULLs and NaN first, as the distributed plan sorts
+    them), one walk of the runs by ``_score_whole_runs`` → the distinct
+    output rows as a local DataFrame. The n_tables bucket rows of a
+    vector share its one stored copy. None, before any scoring, when
+    the runs hold more than ``_DRIVER_MAX_FOLDS`` of work."""
+    spark = rows.sparkSession
+    t = rows.toArrow()
+    n, n_tables = t.num_rows, len(planes)
+    if n == 0:
+        return spark.createDataFrame([], schema)
+    v = t.column("__v").combine_chunks().flatten().to_numpy(zero_copy_only=False)
+    v = v.reshape(n, planes.shape[1])
+    side = t.column("__side").to_numpy()
+    # the ids as mapInPandas hands them to the scorer, ranked in the
+    # distributed sort's order: NULLs first, and NaN with them (Arrow
+    # places NaN as it places NULL; on the distributed side the pandas
+    # hop turns a NaN id into NULL before Spark sorts, so a NaN id
+    # comes out NULL from both placements)
+    ids = t.column("__id").to_pandas().to_numpy()
+    id_rank = pc.rank(
+        t.column("__id"), sort_keys="ascending", null_placement="at_start",
+        tiebreaker="dense",
+    ).to_numpy()
+    bkt = _brp_buckets(v, planes, bucket_length).ravel()
+    tbl = np.repeat(np.arange(n_tables, dtype=np.int32), n)
+    row = np.tile(np.arange(n), n_tables)
+    order = np.lexsort((id_rank[row], side[row], bkt, tbl))
+    row = row[order]
+    key_cols = [tbl[order], bkt[order]]
+    blocks = _run_blocks(key_cols, side[row], self_mode, cap)
+    start, a_end, b_start, b_end = blocks
+    cells = (a_end - start) * (b_end - b_start)
+    if (cells.sum() // (2 if self_mode else 1)) * v.shape[1] > _DRIVER_MAX_FOLDS:
+        return None
+    cols = _score_whole_runs(key_cols, blocks, row, ids, v, scorer)
+    if cols is None:
+        return spark.createDataFrame([], schema)
+    out = pd.DataFrame(dict(zip(schema.fieldNames(), cols))).drop_duplicates()
+    return spark.createDataFrame(out, schema)
+
+
 def lsh_sqdist_join(
     left: DataFrame,
     right: DataFrame | None,
@@ -548,18 +674,45 @@ def lsh_sqdist_join(
     more tables), which is an index-tuning decision, not a join-shape
     one.
 
-    Plan: both sides, tagged with a side byte, are unioned and hashed
-    in ONE ``mapInPandas`` into (side, id, table, bucket, vector) rows;
-    ``_sorted_run_pairs`` on (table, bucket) then scores each bucket
-    run, left × right after the cap (self mode: the run against
+    Both sides are tagged with a side byte and unioned into
+    ``(__side, __id, __v)`` rows, hashed into (table, bucket) with one
+    dimension-ordered numpy fold, and every (table, bucket) run is
+    scored, left × right after the cap (self mode: the run against
     itself, id_a < id_b), with one dimension-ordered numpy pass
-    (bitwise equal to the fold-based expression and the SQL oracle)
-    and keeps pairs within the threshold → distinct surviving pairs.
+    (bitwise equal to the fold-based expression and the SQL oracle),
+    keeping pairs within the threshold → distinct surviving pairs.
     Why blockwise scoring instead of an ids-only equi-join + vector
     re-join: candidate pairs vastly outnumber surviving pairs, and the
     pair-level distance expression is an interpreted per-element fold.
-    A bucket run must fit one task (bucket_length controls occupancy)
-    — shrink bucket_length or add tables for skew.
+
+    Placement. When the tagged rows are a batch plan whose size
+    estimate is at most ``spark.sql.autoBroadcastJoinThreshold`` (the
+    estimate and threshold Spark's planner broadcasts by; 10 MB by
+    default, -1 never), they are collected to the driver with one
+    Arrow collect and hashed and sorted there (``_driver_run_pairs``).
+    If the runs then hold at most ``_DRIVER_MAX_FOLDS`` of work, the
+    same run walker scores them on the driver and a local DataFrame
+    comes back. That call is EAGER — the collect runs inside
+    ``lsh_sqdist_join`` — and holds about 3× the estimate in driver
+    memory (parquet compression plus the float → double cast) plus
+    n_tables index arrays of the row count. It skips the distributed
+    plan's Python worker tasks, each a fixed ~0.2 s of worker CPU
+    whatever its size: a 200-item stream batch against 2,500 stored
+    rows ran 5 of them (1.6–1.8 s of a ~4 s op) for ~30 ms of numpy
+    each. The work bound exists because the input size does not bound
+    the work: it grows with the square of bucket occupancy, and the
+    driver scores on one thread. On a 4-vCPU VM (local[4],
+    ``docs/scaling/lsh_placement_ab.json``) the driver took ~3.9 ns
+    per fold and the distributed plan ~1.3 ns plus ~0.6 s more fixed
+    wall time, so they crossed near 250M folds (the 2,000-row sf0.1
+    self join is 640M); more cores move the crossover down towards
+    ~170M. Otherwise (larger, streaming or heavier
+    inputs) the plan is lazy: ONE ``mapInPandas`` hashes the tagged
+    rows into (side, id, table, bucket, vector) rows and
+    ``_sorted_run_pairs`` on (table, bucket) scores them. A bucket run
+    must fit one task (bucket_length controls occupancy) — shrink
+    bucket_length or add tables for skew. Both placements return the
+    same rows.
     """
     if dim is None:
         dim = vector_dim(left, vec_col)
@@ -578,6 +731,37 @@ def lsh_sqdist_join(
     rows = tagged(left, 0)
     if not self_mode:
         rows = rows.unionByName(tagged(right, 1))
+    out_schema = T.StructType(
+        [
+            T.StructField("id_a", left.schema[id_col].dataType),
+            T.StructField("id_b", left.schema[id_col].dataType),
+            T.StructField(dist_col, T.DoubleType()),
+        ]
+    )
+
+    def score(_key, ids_a, v_a, ids_b, v_b):
+        if not self_mode:
+            d2 = _folded_sqdist_block(v_a, v_b)
+            ia, ib = np.nonzero(d2 <= threshold)
+            return ids_a[ia], ids_b[ib], d2[ia, ib]
+        # the run against itself in ascending id order: only columns from
+        # a row on can have id_a < id_b, so each tile of _SELF_TILE rows
+        # is scored against those (half the block; a tile stays in cache)
+        out = []
+        for r in range(0, len(ids_a), _SELF_TILE):
+            d2 = _folded_sqdist_block(v_a[r : r + _SELF_TILE], v_b[r:])
+            hit = (d2 <= threshold) & (ids_a[r : r + _SELF_TILE, None] < ids_b[None, r:])
+            ia, ib = np.nonzero(hit)
+            out.append((ids_a[r + ia], ids_b[r + ib], d2[ia, ib]))
+        return tuple(np.concatenate(c) for c in zip(*out))
+
+    if _fits_driver(rows):
+        out = _driver_run_pairs(
+            rows, planes_arr, bucket_length, score, out_schema, self_mode, cap
+        )
+        if out is not None:
+            return out
+
     bucket_schema = T.StructType(
         [
             T.StructField("__side", T.ByteType()),
@@ -587,43 +771,21 @@ def lsh_sqdist_join(
             T.StructField("__v", T.ArrayType(T.DoubleType())),
         ]
     )
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", left.schema[id_col].dataType),
-            T.StructField("id_b", left.schema[id_col].dataType),
-            T.StructField(dist_col, T.DoubleType()),
-        ]
-    )
 
     def bucketize(batches):
-        # the n_tables per-row dots as ONE dimension-ordered numpy fold
-        # (the expression dot's left-to-right accumulation exactly);
-        # floor(acc/bucket_length) on float64 matches Spark's
-        # Divide+floor — bit-identical bucket ids to ``brp_hashes``
         for pdf in batches:
             if pdf.empty:
                 continue
             v = np.stack(pdf["__v"].to_numpy())
-            acc = np.zeros((len(v), n_tables), dtype=np.float64)
-            for i in range(dim):
-                acc += v[:, i, None] * planes_arr[None, :, i]
             yield pd.DataFrame(
                 {
                     "__side": np.tile(pdf["__side"].to_numpy(), n_tables),
                     "__id": np.tile(pdf["__id"].to_numpy(), n_tables),
                     "__tbl": np.repeat(np.arange(n_tables, dtype=np.int32), len(v)),
-                    "__bkt": np.floor(acc / bucket_length).astype(np.int64).T.ravel(),
+                    "__bkt": _brp_buckets(v, planes_arr, bucket_length).ravel(),
                     "__v": list(v) * n_tables,
                 }
             )
-
-    def score(_key, ids_a, v_a, ids_b, v_b):
-        d2 = _folded_sqdist_block(v_a, v_b)
-        hit = d2 <= threshold
-        if self_mode:
-            hit &= ids_a[:, None] < ids_b[None, :]
-        ia, ib = np.nonzero(hit)
-        return ids_a[ia], ids_b[ib], d2[ia, ib]
 
     buckets = rows.mapInPandas(bucketize, schema=bucket_schema)
     pairs = _sorted_run_pairs(

@@ -5,9 +5,9 @@ The engine's native path is array-native columns (SURVEY §7.0);
 
 - the reference's NAME pipeline as a real ``pyspark.ml.Pipeline``
   (T1→T2→T3→T4→T5→T7→T8→T9, `01_Feature Engineering.py:184-298`),
-  including the SQLTransformer melt/collapse stages (T3/T5/T13);
-- VectorUDT ↔ array<double> converters for crossing between the two
-  worlds (`pyspark.ml.functions.vector_to_array` / ``array_to_vector``).
+  including the SQLTransformer melt/collapse stages (T3/T5/T13).
+Callers cross between the two worlds with
+``pyspark.ml.functions.vector_to_array`` / ``array_to_vector``.
 
 Parity contract (SURVEY §7.2 stage 4): tokenization/stopword/n-gram
 stages agree exactly with the array-native kernels; hashed dimensions
@@ -28,23 +28,9 @@ from pyspark.ml.feature import (
     SQLTransformer,
     StopWordsRemover,
 )
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 
 TOKEN_PATTERN = r"[^\w\d]"
-
-
-def to_array(vec_col: str) -> Column:
-    """VectorUDT -> array<double> (engine-native boundary)."""
-    from pyspark.ml.functions import vector_to_array
-
-    return vector_to_array(vec_col)
-
-
-def to_vector(arr_col: str) -> Column:
-    """array<numeric> -> VectorUDT (ml.* boundary)."""
-    from pyspark.ml.functions import array_to_vector
-
-    return array_to_vector(arr_col)
 
 
 def build_name_pipeline(

@@ -308,6 +308,7 @@ def blocked_pair_stats(
     id_col: str,
     vec_col: str,
     block_col: str,
+    dim: int | None = None,
 ) -> DataFrame:
     """All within-block vector-pair statistics (dot, sqdist, cosine),
     scored blockwise in Arrow (V1 applied per label block,
@@ -324,7 +325,8 @@ def blocked_pair_stats(
     Equi-join semantics: NULL block keys never match (NaN keys do, and
     -0.0 meets 0.0). NULL vectors and vectors off the dimension most
     rows have (``valid_vectors``) have no defined stats, so one ragged
-    row costs that row, even when it comes first.
+    row costs that row, even when it comes first. A caller that knows
+    the dimension passes ``dim`` and skips that aggregate's job.
     """
     import numpy as np
     from pyspark.sql import types as T
@@ -337,7 +339,8 @@ def blocked_pair_stats(
         vector_dim,
     )
 
-    dim = vector_dim(df, vec_col, default=0)  # no vector at all: no pairs
+    if dim is None:
+        dim = vector_dim(df, vec_col, default=0)  # no vector at all: no pairs
     id_type = df.schema[id_col].dataType
     out_schema = T.StructType(
         [

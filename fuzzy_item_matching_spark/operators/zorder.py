@@ -22,7 +22,7 @@ The DuckDB twin lives in ``oracles/zorder.py``, outside the engine.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 BITS = 16
@@ -54,19 +54,3 @@ def zorder_key(x: Column | str, y: Column | str, bits: int = BITS) -> Column:
     for t in terms[1:]:
         out = out + t
     return out
-
-
-def zorder_write(
-    df: DataFrame, zcol: Column, path: str, n_files: int = 8
-) -> None:
-    """Cluster-write: range-partition on the z-key (one shuffle whose
-    boundaries Spark samples), sort within each file so row-group
-    min/max stats are tight, write parquet."""
-    (
-        df.withColumn("_z", zcol)
-        .repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

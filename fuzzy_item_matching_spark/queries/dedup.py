@@ -24,7 +24,7 @@ from fuzzy_item_matching_spark.operators.dedup import (
 )
 from fuzzy_item_matching_spark.queries import query
 from fuzzy_item_matching_spark.queries.text import _D_TOKENS
-from fuzzy_item_matching_spark.tables import load_table
+from fuzzy_item_matching_spark.tables import EMB_DIM, load_table
 
 # Word-3-gram distinct shingles in DuckDB, over regex-tokenized text.
 _D_SHINGLES = f"""
@@ -758,7 +758,7 @@ def dedup_semantic_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         assign_cells,
         ivf_cell_pairs,
     )
-    from fuzzy_item_matching_spark.operators.lsh import valid_vectors, vector_dim
+    from fuzzy_item_matching_spark.operators.lsh import valid_vectors
 
     e = load_table(spark, sf_dir, "embeddings")
     cents = _sem_centroids(spark, sf_dir)
@@ -772,7 +772,7 @@ def dedup_semantic_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("__dropped", F.lit(1))
     )
     assigned = assign_cells(
-        valid_vectors(e, "embedding", vector_dim(e, "embedding")),
+        valid_vectors(e, "embedding", EMB_DIM),
         "vec_id", "embedding", cents,
     )
     return (

@@ -25,7 +25,7 @@ from fuzzy_item_matching_spark.operators.pipeline import (
     sql_stage,
 )
 from fuzzy_item_matching_spark.queries import query
-from fuzzy_item_matching_spark.tables import load_table
+from fuzzy_item_matching_spark.tables import EMB_DIM, load_table
 
 
 _E2E_CAND_CAP = 32  # LSH candidates kept per arriving item
@@ -294,7 +294,7 @@ def _incremental_scoring_oracle(
 @query(
     "serve_incremental_scoring",
     oracle=_incremental_scoring_oracle(
-        n_tables=10, bucket_length=1.0, seed=42, dim=64, threshold=1.5
+        n_tables=10, bucket_length=1.0, seed=42, dim=EMB_DIM, threshold=1.5
     ),
 )
 def serve_incremental_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -340,7 +340,7 @@ def serve_incremental_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsh_pairs = _cap_candidates(
         lsh_sqdist_join(
             new_items, stored, "vec_id", "emb", threshold=1.5,
-            n_tables=10, bucket_length=1.0, seed=42, dim=64,
+            n_tables=10, bucket_length=1.0, seed=42, dim=EMB_DIM,
             bucket_cap=_E2E_BUCKET_CAP,
         )
     )
@@ -447,7 +447,7 @@ def serve_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsh_pairs = _cap_candidates(
         lsh_sqdist_join(
             new_items, stored, "vec_id", "emb", threshold=1.5,
-            n_tables=10, bucket_length=1.0, seed=42, dim=64,
+            n_tables=10, bucket_length=1.0, seed=42, dim=EMB_DIM,
             bucket_cap=_E2E_BUCKET_CAP,
         )
     )

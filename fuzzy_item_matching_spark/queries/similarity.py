@@ -22,7 +22,7 @@ from fuzzy_item_matching_spark.operators.similarity import (
 )
 from fuzzy_item_matching_spark.queries import query
 from fuzzy_item_matching_spark.queries.text import _D_TOKENS
-from fuzzy_item_matching_spark.tables import load_table
+from fuzzy_item_matching_spark.tables import EMB_DIM, load_table
 
 SQDIST_THRESHOLD = 1.5  # ~2.3% of embedding pairs at sf0.01
 
@@ -98,7 +98,7 @@ def _lsh_sqdist_oracle(
 @query(
     "sim_lsh_sqdist_pairs",
     oracle=_lsh_sqdist_oracle(
-        n_tables=10, bucket_length=1.0, seed=42, dim=64,
+        n_tables=10, bucket_length=1.0, seed=42, dim=EMB_DIM,
         threshold=SQDIST_THRESHOLD,
     ),
 )
@@ -120,7 +120,7 @@ def sim_lsh_sqdist_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_tables=10,
         bucket_length=1.0,
         seed=42,
-        dim=64,
+        dim=EMB_DIM,
     )
 
 
@@ -178,7 +178,7 @@ def _lsh_topk_oracle(
 
 @query(
     "sim_ann_lsh_topk",
-    oracle=_lsh_topk_oracle(n_tables=16, bits_per_table=5, seed=42, dim=64, k=3),
+    oracle=_lsh_topk_oracle(n_tables=16, bits_per_table=5, seed=42, dim=EMB_DIM, k=3),
 )
 def sim_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate nearest neighbors: sign-LSH bucketed cosine top-3
@@ -190,7 +190,7 @@ def sim_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     return lsh_cosine_topk(
         e, "vec_id", "embedding", k=3, n_tables=16, bits_per_table=5,
-        seed=42, dim=64,
+        seed=42, dim=EMB_DIM,
     )
 
 
@@ -371,7 +371,7 @@ def sim_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     return ivf_cosine_topk(
         e, "vec_id", "embedding", k=3, n_centroids=16, n_probe=8,
-        refine_iters=1, sample_cap=_IVF_SAMPLE_CAP,
+        refine_iters=1, sample_cap=_IVF_SAMPLE_CAP, dim=EMB_DIM,
     )
 
 
@@ -512,7 +512,7 @@ def _ann_recall_oracle() -> str:
         f" / ({_D_NORM.format(v='a.embedding')} * {_D_NORM.format(v='b.embedding')})"
     )
     return f"""
-    WITH ann AS ({_lsh_topk_oracle(n_tables=16, bits_per_table=5, seed=42, dim=64, k=3)}),
+    WITH ann AS ({_lsh_topk_oracle(n_tables=16, bits_per_table=5, seed=42, dim=EMB_DIM, k=3)}),
     bf AS (
       SELECT qid, nid FROM (
         SELECT a.vec_id AS qid, b.vec_id AS nid,
@@ -1254,7 +1254,7 @@ sim_ann_ivf_probe_sweep.__doc__ = sim_ann_ivf_probe_sweep.__doc__.format(
            lb.label AS label_b,
            base.sqdist AS dist
     FROM ({_lsh_sqdist_oracle(
-        n_tables=10, bucket_length=1.0, seed=42, dim=64,
+        n_tables=10, bucket_length=1.0, seed=42, dim=EMB_DIM,
         threshold=SQDIST_THRESHOLD,
     )}) base
     JOIN embeddings la ON la.vec_id = base.id_a
@@ -1287,7 +1287,7 @@ def sim_struct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_tables=10,
         bucket_length=1.0,
         seed=42,
-        dim=64,
+        dim=EMB_DIM,
     )
     structs = as_struct_pairs(pairs, e, e, "vec_id", "vec_id")
     return structs.select(
@@ -1748,7 +1748,7 @@ def sim_ann_multiprobe_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_multiprobe_topk(
         e, "vec_id", "embedding",
         k=_MP_K, n_tables=_MP_TABLES, bits_per_table=_MP_BITS,
-        seed=_MP_SEED, dim=64, probe_budget=_MP_PROBES,
+        seed=_MP_SEED, dim=EMB_DIM, probe_budget=_MP_PROBES,
         max_flip=_MP_MAXFLIP,
     )
 
@@ -2059,7 +2059,7 @@ def sim_ann_graph_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_tables=_GX_TABLES,
             bits_per_table=_GX_BITS,
             seed=_GX_SEED,
-            dim=64,
+            dim=EMB_DIM,
             bucket_cap=_GX_CAP,
         )
         .select("qid", "nid")
@@ -2280,7 +2280,7 @@ def sim_ann_probe_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ann = lsh_multiprobe_topk(
             e, "vec_id", "embedding",
             k=_MP_K, n_tables=_MP_TABLES, bits_per_table=_MP_BITS,
-            seed=_MP_SEED, dim=64, probe_budget=bud,
+            seed=_MP_SEED, dim=EMB_DIM, probe_budget=bud,
             max_flip=_MP_MAXFLIP,
         ).select("qid", "nid", F.lit(1).alias("hit"))
         j = exact.join(ann, ["qid", "nid"], "left")

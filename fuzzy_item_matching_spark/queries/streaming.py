@@ -21,18 +21,18 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fuzzy_item_matching_spark.tables import _nano_timestamp_cols, table_path
+from fuzzy_item_matching_spark.tables import footer_schema, table_path
 
 
 def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet, ns timestamps restored —
     the streaming twin of tables.load_table."""
     path = table_path(sf_dir, "events")
-    if _nano_timestamp_cols(path):
+    schema, nanos = footer_schema(spark, path)
+    if nanos:
         # Same runtime guard as tables.load_table — the session may not
         # carry the build-time conf (driver supplies its own session).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
     # FileStreamSource monitors a DIRECTORY; point it at sf_dir with a
     # glob restricted to the events file.
     df = (
@@ -40,7 +40,7 @@ def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    for col in _nano_timestamp_cols(path):
+    for col in nanos:
         df = df.withColumn(col, F.expr(f"timestamp_micros(`{col}` div 1000)"))
     return df
 

@@ -23,7 +23,7 @@ from fuzzy_item_matching_spark.functions.vector import (
     squared_dist,
 )
 from fuzzy_item_matching_spark.queries import query
-from fuzzy_item_matching_spark.tables import load_table
+from fuzzy_item_matching_spark.tables import EMB_DIM, load_table
 
 # DuckDB fragments mirroring functions/vector.py exactly.
 _D_SQ = "list_sum(list_transform({v}::DOUBLE[], x -> x*x))"
@@ -79,7 +79,7 @@ def vec_label_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fuzzy_item_matching_spark.operators.similarity import blocked_pair_stats
 
     e = load_table(spark, sf_dir, "embeddings")
-    return blocked_pair_stats(e, "vec_id", "embedding", "label")
+    return blocked_pair_stats(e, "vec_id", "embedding", "label", dim=EMB_DIM)
 
 
 @query(

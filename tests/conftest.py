@@ -9,8 +9,10 @@ from __future__ import annotations
 
 import math
 import os
+from contextlib import contextmanager
 
 import duckdb
+import pandas as pd
 import pytest
 
 # Per-process scratch isolation (see queries/sources.py SCRATCH): a
@@ -66,6 +68,33 @@ def spark():
     s = get_spark(app_name="fuzzy-engine-tests", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@contextmanager
+def conf_set(spark, key: str, value: str):
+    """Set the SQL conf ``key`` to ``value`` for the ``with`` body."""
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield spark
+    finally:
+        spark.conf.set(key, old)
+
+
+# spark.sql.autoBroadcastJoinThreshold at -1 keeps the operators that
+# place small inputs on the driver (lsh_sqdist_join) on their
+# distributed plan
+DISTRIBUTED = ("spark.sql.autoBroadcastJoinThreshold", "-1")
+
+
+def local_frame(spark, rows: list[tuple], schema: str):
+    """``rows`` as a local relation, whose size the planner knows (a
+    frame made from a Python list, or from an empty pandas frame, has
+    no estimate); no rows: an empty one."""
+    names = spark.createDataFrame([], schema).schema.fieldNames()
+    pdf = pd.DataFrame(rows or [(None,) * len(names)], columns=names)
+    df = spark.createDataFrame(pdf, schema)
+    return df if rows else df.limit(0)
 
 
 @pytest.fixture(scope="session")

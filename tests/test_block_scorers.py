@@ -30,6 +30,13 @@ code they were recorded from, each made by the recorder below:
   frames; on the dirty one the SQL path ranked the NaN vector's NaN
   cosines first and scored a duplicated id with both of its vectors.
 
+Every case runs twice: at the default broadcast threshold, where
+``lsh_sqdist_join`` places the small frames on the driver, and at
+``spark.sql.autoBroadcastJoinThreshold=-1``, where it keeps its
+distributed plan. The hand-made rows are pandas-built local relations,
+so the planner knows their size (but for the float-label rows, whose
+NaN labels pandas would turn into NULLs).
+
 Regenerate the file only when an output change is intended:
 
     PYTHONPATH=. python -m tests.test_block_scorers
@@ -50,7 +57,7 @@ from pyspark.sql import functions as F
 from fuzzy_item_matching_spark.operators import ivf, lsh, similarity
 from fuzzy_item_matching_spark.tables import load_table
 
-from .conftest import SF_CHECK
+from .conftest import DISTRIBUTED, SF_CHECK, conf_set, local_frame
 
 FIXTURE = os.path.join(os.path.dirname(__file__), "data", "block_scorers.json")
 SCHEMA = "vec_id long, embedding array<float>, label int"
@@ -71,7 +78,7 @@ def _frame(spark, name: str):
     if name.startswith("sf"):
         return load_table(spark, os.path.join(TESTDATA, name), "embeddings")
     if name == "empty":
-        return spark.createDataFrame([], SCHEMA)
+        return local_frame(spark, [], SCHEMA)
     base = load_table(spark, os.path.join(TESTDATA, "sf0.001"), "embeddings")
     clean = base.filter(F.col("vec_id").isin(3, 5)).orderBy("vec_id").collect()
     v3, v5 = (list(r["embedding"]) for r in clean)
@@ -86,7 +93,7 @@ def _frame(spark, name: str):
     if name == "dirty_unragged":
         extra = [r for r in extra if r[0] != 90002]
     if name == "ragged_first":  # the first vector read is the 3-dim one
-        return spark.createDataFrame([extra[1]], SCHEMA).unionByName(base)
+        return local_frame(spark, [extra[1]], SCHEMA).unionByName(base)
     if name == "float_labels":
         # NaN labels (two NaN bit patterns) form one block, and -0.0
         # joins the 0.0 block, as they do under an equi-join
@@ -100,7 +107,7 @@ def _frame(spark, name: str):
         return base.withColumn("label", F.col("label").cast("double")).unionByName(
             spark.createDataFrame(extra, SCHEMA.replace("label int", "label double"))
         )
-    return base.unionByName(spark.createDataFrame(extra, SCHEMA))
+    return base.unionByName(local_frame(spark, extra, SCHEMA))
 
 
 def _split(df):
@@ -187,6 +194,13 @@ def recorded():
 def test_block_scorer_output_matches_recording(spark, recorded, case):
     op, frame = case.split("-", 1)
     assert _run(OPS[op], _frame(spark, frame)) == recorded[case]
+
+
+@pytest.mark.parametrize("case", CASES)
+def test_block_scorer_output_matches_recording_distributed(spark, recorded, case):
+    op, frame = case.split("-", 1)
+    with conf_set(spark, *DISTRIBUTED):
+        assert _run(OPS[op], _frame(spark, frame)) == recorded[case]
 
 
 def test_self_mode_pairs_distinct_ids_only(spark):

@@ -6,11 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from fuzzy_item_matching_spark.functions.text import regex_tokenize, remove_stopwords
-from fuzzy_item_matching_spark.operators.mlbridge import (
-    fit_name_pipeline,
-    to_array,
-    to_vector,
-)
+from fuzzy_item_matching_spark.operators.mlbridge import fit_name_pipeline
 from fuzzy_item_matching_spark.tables import load_table
 
 from .conftest import SF_SMOKE
@@ -79,17 +75,6 @@ def test_pipeline_persist_reload(spark, part, tmp_path_factory):
         }
 
     assert norms(model) == norms(reloaded)
-
-
-def test_vector_array_roundtrip(spark):
-    df = spark.createDataFrame([(1, [1.0, 2.0, 3.0])], ["id", "arr"])
-    back = (
-        df.withColumn("vec", to_vector("arr"))
-        .withColumn("arr2", to_array("vec"))
-        .select("arr", "arr2")
-        .first()
-    )
-    assert back.arr == back.arr2
 
 
 def test_model_registry_version_promote_load(spark, part, tmp_path_factory):

@@ -11,7 +11,7 @@ import pytest
 
 from fuzzy_item_matching_spark.queries import load_all
 
-from .conftest import SF_CHECK
+from .conftest import DISTRIBUTED, SF_CHECK, conf_set, local_frame
 
 
 @pytest.fixture(scope="module")
@@ -643,20 +643,54 @@ def test_pit_features_single_user_shuffle(spark, registry):
 
 @pytest.mark.parametrize("mode", ["pair", "self"])
 def test_lsh_sqdist_join_is_one_sorted_pass(spark, mode):
-    """Bucketing and scoring are one ``mapInPandas`` each over a
-    (table, bucket)-sorted stream: no per-key grouped pandas call and
-    no cap window."""
+    """Distributed placement: bucketing and scoring are one
+    ``mapInPandas`` each over a (table, bucket)-sorted stream: no
+    per-key grouped pandas call and no cap window."""
     from fuzzy_item_matching_spark.operators.lsh import lsh_sqdist_join
 
     df = spark.createDataFrame([(1, [0.0, 1.0])], "id long, vec array<double>")
-    out = lsh_sqdist_join(
-        df, df if mode == "pair" else None, "id", "vec", 1.0,
-        n_tables=2, dim=2, bucket_cap=3,
-    )
+    with conf_set(spark, *DISTRIBUTED):
+        out = lsh_sqdist_join(
+            df, df if mode == "pair" else None, "id", "vec", 1.0,
+            n_tables=2, dim=2, bucket_cap=3,
+        )
     plan = out._jdf.queryExecution().executedPlan().toString()
     for node in ("FlatMapCoGroupsInPandas", "FlatMapGroupsInPandas", "Window"):
         assert node not in plan, plan
     assert len(re.findall(r"\bMapInPandas\b", plan)) == 2, plan
+
+
+@pytest.mark.parametrize("mode", ["pair", "self"])
+def test_lsh_sqdist_join_small_inputs_run_on_driver(spark, mode):
+    """Driver placement at the default broadcast threshold: the call
+    runs one collect, with no Python node in any plan it executes (so
+    no Python worker task), and returns a local relation: no
+    ``mapInPandas``, ``mapInArrow`` or exchange left to run."""
+    from fuzzy_item_matching_spark.operators.lsh import lsh_sqdist_join
+
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executed() -> dict[int, str]:
+        xs = store.executionsList()
+        return {
+            xs.apply(i).executionId(): xs.apply(i).physicalPlanDescription()
+            for i in range(xs.size())
+        }
+
+    df = local_frame(spark, [(1, [0.0, 1.0]), (2, [0.0, 1.1])], "id long, vec array<double>")
+    before = executed()
+    out = lsh_sqdist_join(
+        df, df if mode == "pair" else None, "id", "vec", 1.0,
+        n_tables=2, dim=2, bucket_cap=3,
+    )
+    ran = [p for i, p in executed().items() if i not in before]
+    assert len(ran) == 1, ran
+    for p in ran:
+        assert not re.search(r"Python|InPandas|InArrow", p), p
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert not re.search(r"MapInPandas|MapInArrow|Exchange|Python", plan), plan
+    want = {(1, 2)} if mode == "self" else {(1, 1), (1, 2), (2, 1), (2, 2)}
+    assert {(r.id_a, r.id_b) for r in out.collect()} == want
 
 
 _PAIR_NODES = (

@@ -115,10 +115,7 @@ def test_zorder_layout_skips_files_for_2d_range(spark):
     predicate's min/max file pruning: far fewer files intersect the
     query box than exist — the property a date-only or cust-only sort
     cannot give for the OTHER dimension."""
-    from fuzzy_item_matching_spark.operators.zorder import (
-        zorder_key,
-        zorder_write,
-    )
+    from fuzzy_item_matching_spark.operators.zorder import zorder_key
     from fuzzy_item_matching_spark.tables import load_table
 
     path = "/root/repo/.scratch/zorder_orders"
@@ -127,7 +124,15 @@ def test_zorder_layout_skips_files_for_2d_range(spark):
         "day",
         F.datediff(F.col("o_orderdate"), F.lit("1995-01-01").cast("date")),
     )
-    zorder_write(o, zorder_key("o_custkey", "day"), path, n_files=16)
+    # the clustered write: range-partition on the z-key, sort each file
+    (
+        o.withColumn("_z", zorder_key("o_custkey", "day"))
+        .repartitionByRange(16, "_z")
+        .sortWithinPartitions("_z")
+        .drop("_z")
+        .write.mode("overwrite")
+        .parquet(path)
+    )
 
     files = sorted(glob.glob(os.path.join(path, "*.parquet")))
     assert len(files) >= 8
