@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from fuzzy_item_matching_spark.functions.vector import dot
+from fuzzy_item_matching_spark.operators.placement import fits_driver
 
 
 def _folded_sqdist_block(a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -581,16 +582,6 @@ def _brp_buckets(v: np.ndarray, planes: np.ndarray, bucket_length: float) -> np.
         return np.floor(acc / bucket_length).astype(np.int64).T
 
 
-def _fits_driver(df: DataFrame) -> bool:
-    """Whether Spark's planner would broadcast ``df``: a batch plan
-    whose optimized size estimate (``stats().sizeInBytes``) is within
-    ``spark.sql.autoBroadcastJoinThreshold`` (-1: never)."""
-    if df.isStreaming:
-        return False
-    limit = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    return 0 <= df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() <= limit
-
-
 def _driver_run_pairs(
     rows: DataFrame,
     planes: np.ndarray,
@@ -755,7 +746,7 @@ def lsh_sqdist_join(
             out.append((ids_a[r + ia], ids_b[r + ib], d2[ia, ib]))
         return tuple(np.concatenate(c) for c in zip(*out))
 
-    if _fits_driver(rows):
+    if fits_driver(rows):
         out = _driver_run_pairs(
             rows, planes_arr, bucket_length, score, out_schema, self_mode, cap
         )

@@ -13,7 +13,9 @@ provides the Spark-first decompositions:
   join key is the term, so work is proportional to index postings, never
   |A|×|B|. Ultra-common terms are pruned upstream (sparse_tfidf
   max_df_ratio) exactly like the reference tunes LSH thresholds to bound
-  candidate counts (`02_Build Training Pairs.py:119-123`).
+  candidate counts (`02_Build Training Pairs.py:119-123`). Postings
+  within the broadcast threshold and a measured work bound are joined
+  on the driver instead.
 - ``fuzzy_match_pairs``     — end-to-end: raw text column → tokenize →
   stopword filter → char-3-grams → TF-IDF → L2 norm → cosine pair join;
   the engine-native equivalent of the reference's NB1 pipeline + NB2
@@ -24,8 +26,12 @@ LSH-accelerated dense-vector joins live in ``operators/lsh.py``.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from fuzzy_item_matching_spark.functions.text import (
     char_ngrams_of_words,
@@ -34,6 +40,11 @@ from fuzzy_item_matching_spark.functions.text import (
 )
 from fuzzy_item_matching_spark.functions.vector import squared_dist
 from fuzzy_item_matching_spark.operators.features import tfidf_features
+from fuzzy_item_matching_spark.operators.placement import (
+    fits_driver,
+    materialized,
+    spark_keys,
+)
 
 
 def exact_sqdist_join(
@@ -72,32 +83,136 @@ def exact_sqdist_join(
     )
 
 
-def sparse_cosine_join(
+# Most pair partials (Σ_t df_a(t)·df_b(t); in self mode only the
+# id_a < id_b ones) the driver placement generates: near where the
+# collapsed self join overtook it on template names (see
+# sparse_cosine_join, "Placement").
+_DRIVER_MAX_PARTIALS = 10_000_000
+# Partials generated per chunk on the driver: about 40 MB of transient
+# index and product arrays.
+_CHUNK_PARTIALS = 1 << 19
+
+
+def _driver_cosine_pairs(
     left: DataFrame,
     right: DataFrame,
     left_id: str,
     right_id: str,
-    term_col: str = "term",
-    weight_col: str = "weight",
-    min_sim: float = 0.5,
-    sim_col: str = "cosine",
-    self_dedup: bool = False,
+    term_col: str,
+    weight_col: str,
+    min_sim: float,
+    sim_col: str,
+    self_dedup: bool,
+) -> DataFrame | None:
+    """``_spark_cosine_pairs`` on the driver: ONE Arrow collect of both
+    sides' postings tagged by a side byte, then the partials generated
+    in chunks of whole left documents (each left posting meets the run
+    of right postings on its term), so every pair is summed and
+    thresholded within one chunk and only its hits are kept → a local
+    DataFrame. Memory is bounded by the chunk, not by the candidate
+    pairs. None, before any collect, when the postings are over the
+    broadcast threshold, and before any pair is generated when they
+    make more than ``_DRIVER_MAX_PARTIALS`` partials.
+
+    Semantics are the join's: NULL terms never meet, a NULL weight adds
+    nothing (a pair of only NULL partials sums to NULL and is dropped),
+    NULL ids pair in pair mode, and ``self_dedup`` keeps id_a < id_b in
+    Spark's order (NaN above every number, NULL never)."""
+
+    def side(df: DataFrame, tag: int, id_col: str) -> DataFrame:
+        return df.select(
+            F.lit(tag).cast("byte").alias("__side"),
+            F.col(id_col).alias("__id"),
+            F.col(term_col).alias("__t"),
+            F.col(weight_col).alias("__w"),
+        )
+
+    rows = side(left, 0, left_id).unionByName(side(right, 1, right_id))
+    if not fits_driver(rows):
+        return None
+    t = rows.toArrow()
+    t = t.filter(pc.and_(pc.is_valid(t["__t"]), pc.is_valid(t["__w"])))
+    ids = spark_keys(t["__id"])
+    n_ids = len(ids.dictionary) + 1  # the last code is NULL
+    # int64: a pair key, id_a code × n_ids + id_b code, passes 2^31
+    id_code = ids.indices.fill_null(n_ids - 1).to_numpy().astype(np.int64)
+    terms = spark_keys(t["__t"])
+    term = terms.indices.to_numpy().astype(np.int64)
+    is_a = t["__side"].to_numpy() == 0
+    w = t["__w"].to_numpy()
+    # the order id_a < id_b compares ids in: Spark's, NaN above every
+    # number (the NULL code's rank is unused: self mode drops NULL ids,
+    # which never compare)
+    rank = pc.rank(ids.dictionary, null_placement="at_end", tiebreaker="dense")
+    rank = np.append(rank.to_numpy().astype(np.int64), 0)
+    live = id_code != n_ids - 1 if self_dedup else True
+
+    def postings(mask: np.ndarray, *keys: np.ndarray):
+        order = np.lexsort([k[mask] for k in keys])  # the last key sorts first
+        return term[mask][order], id_code[mask][order], w[mask][order]
+
+    # left postings by id (then term), right postings by term (then id rank)
+    ta, ida, wa = postings(is_a & live, term, id_code)
+    tb, idb, wb = postings(~is_a & live, rank[id_code], term)
+    cb = np.bincount(tb, minlength=len(terms.dictionary))
+    b_end = np.cumsum(cb)
+    if self_dedup:  # a left posting meets the right ones of its term ranked above it
+        b_first = np.searchsorted(
+            tb * (n_ids + 1) + rank[idb], ta * (n_ids + 1) + rank[ida], side="right"
+        )
+    else:  # ... or all the right ones of its term
+        b_first = (b_end - cb)[ta]
+    reps = b_end[ta] - b_first
+    ends = np.cumsum(reps)
+    if len(ends) and ends[-1] > _DRIVER_MAX_PARTIALS:
+        return None
+    doc_end = np.searchsorted(ida, ida, side="right")  # past each posting's document
+    pairs, sims = [np.empty(0, np.int64)], [np.empty(0)]
+    lo = 0
+    while lo < len(ta):
+        base = ends[lo - 1] if lo else 0
+        # whole left documents, so every pair's partials sum in one chunk
+        hi = doc_end[max(int(np.searchsorted(ends, base + _CHUNK_PARTIALS, side="right")), lo + 1) - 1]
+        r = reps[lo:hi]
+        ai = np.repeat(np.arange(lo, hi), r)
+        bi = np.repeat(b_first[lo:hi] - (ends[lo:hi] - r - base), r) + np.arange(ends[hi - 1] - base)
+        lo = hi
+        ka, kb = ida[ai], idb[bi]
+        pair, at = np.unique(ka * n_ids + kb, return_inverse=True)
+        sim = np.bincount(at, wa[ai] * wb[bi])
+        hit = (sim >= min_sim) | np.isnan(sim)  # Spark orders NaN above every value
+        pairs.append(pair[hit])
+        sims.append(sim[hit])
+    schema = T.StructType(
+        [
+            T.StructField(left_id, left.schema[left_id].dataType),
+            T.StructField(right_id, right.schema[right_id].dataType),
+            T.StructField(sim_col, T.DoubleType()),
+        ]
+    )
+    sim = np.concatenate(sims)
+    ka, kb = np.divmod(np.concatenate(pairs), n_ids)
+    id_values = pa.concat_arrays([ids.dictionary, pa.nulls(1, ids.dictionary.type)])
+    out = pa.table(
+        [id_values.take(ka), id_values.take(kb), pa.array(sim)],
+        names=[left_id, right_id, sim_col],
+    )
+    return rows.sparkSession.createDataFrame(out, schema)
+
+
+def _spark_cosine_pairs(
+    left: DataFrame,
+    right: DataFrame,
+    left_id: str,
+    right_id: str,
+    term_col: str,
+    weight_col: str,
+    min_sim: float,
+    sim_col: str,
+    self_dedup: bool,
 ) -> DataFrame:
-    """Inverted-index cosine join over sparse L2-normalized weights.
-
-    Inputs are (id, term, weight) rows (one row per document-term, as
-    produced by ``operators.features.sparse_tfidf(normalize=True)``).
-    With unit-norm weights, cosine(a, b) = Σ_t w_a(t)·w_b(t), so the
-    join is: equi-join postings on term → per-pair partial products →
-    hash-aggregate sum → threshold filter.
-
-    Scale shape: one shuffle on ``term`` (the postings join), one shuffle
-    on the pair key (the aggregation); both are plain hash partitions
-    Catalyst/AQE handles, skew bounded by pruning high-df terms upstream.
-    Never materializes |A|×|B| — only pairs sharing ≥1 term appear, the
-    same candidate-bounding idea as the reference's LSH bucketing
-    (`02_Build Training Pairs.py:52-58`).
-    """
+    """The distributed postings join: one shuffle on ``term`` (the
+    postings join), one on the pair key (the aggregation)."""
     a = left.select(
         F.col(left_id),
         F.col(term_col).alias("__t"),
@@ -116,6 +231,52 @@ def sparse_cosine_join(
         .agg(F.sum(F.col("__wa") * F.col("__wb")).alias(sim_col))
         .filter(F.col(sim_col) >= F.lit(min_sim))
     )
+
+
+def sparse_cosine_join(
+    left: DataFrame,
+    right: DataFrame,
+    left_id: str,
+    right_id: str,
+    term_col: str = "term",
+    weight_col: str = "weight",
+    min_sim: float = 0.5,
+    sim_col: str = "cosine",
+    self_dedup: bool = False,
+) -> DataFrame:
+    """Inverted-index cosine join over sparse L2-normalized weights.
+
+    Inputs are (id, term, weight) rows (one row per document-term, as
+    produced by ``operators.features.sparse_tfidf``).
+    With unit-norm weights, cosine(a, b) = Σ_t w_a(t)·w_b(t), so the
+    join is: equi-join postings on term → per-pair partial products →
+    hash-aggregate sum → threshold filter. ``self_dedup`` keeps
+    id_a < id_b.
+
+    Never materializes |A|×|B| — only pairs sharing ≥1 term appear, the
+    same candidate-bounding idea as the reference's LSH bucketing
+    (`02_Build Training Pairs.py:52-58`).
+
+    Placement. When both sides' postings, tagged and unioned, are a
+    batch plan within ``spark.sql.autoBroadcastJoinThreshold``
+    (``operators/placement.fits_driver``), they are collected with one
+    Arrow collect. If they make at most ``_DRIVER_MAX_PARTIALS``
+    partials, the pairs are summed on the driver in bounded chunks
+    (``_driver_cosine_pairs``) and a local DataFrame comes back: the
+    call is EAGER. The bound exists because the input size does not
+    bound the work, which grows with Σ_t df_a(t)·df_b(t), and the
+    driver sums on one thread (crossover runs in
+    ``docs/scaling/text_placement_ab.json``). Otherwise the plan is
+    lazy and distributed (``_spark_cosine_pairs``): one shuffle on
+    ``term``, one on the pair key, both plain hash partitions
+    Catalyst/AQE handles, skew bounded by pruning high-df terms
+    upstream. Both placements return the same pairs; a cosine may
+    differ in its last bits, since the partials are summed in another
+    order.
+    """
+    args = (left, right, left_id, right_id, term_col, weight_col, min_sim, sim_col, self_dedup)
+    out = _driver_cosine_pairs(*args)
+    return out if out is not None else _spark_cosine_pairs(*args)
 
 
 def sparse_cosine_self_join_collapsed(
@@ -159,7 +320,12 @@ def sparse_cosine_self_join_collapsed(
     two counts are doc-level, not postings-level). This is a physical
     strategy choice on measured stats — the operator-level analogue of
     AQE — pinned by tests/test_round11_ops.py equality tests on both
-    corpus shapes."""
+    corpus shapes.
+
+    Placement: postings that ``sparse_cosine_join`` would join on the
+    driver (within the broadcast threshold and ``_DRIVER_MAX_PARTIALS``)
+    are joined there, plainly, with no gate job; the collapse is for
+    the corpora past that bound."""
     from fuzzy_item_matching_spark.operators.collapse import (
         expand_group_pairs,
         group_map,
@@ -167,6 +333,13 @@ def sparse_cosine_self_join_collapsed(
     )
 
     w = weights
+    args = (
+        w.withColumnRenamed(id_col, "id_a"), w.withColumnRenamed(id_col, "id_b"),
+        "id_a", "id_b", term_col, weight_col, min_sim, sim_col, True,
+    )
+    out = _driver_cosine_pairs(*args)
+    if out is not None:
+        return out
     doc_sig = w.groupBy(F.col(id_col).alias("__id")).agg(
         F.array_sort(
             F.collect_list(F.struct(F.col(term_col), F.col(weight_col)))
@@ -176,13 +349,7 @@ def sparse_cosine_self_join_collapsed(
     _, _, collapse = signature_gate(doc_sig, collapse_ratio)
     if not collapse:
         doc_sig.unpersist()
-        a = w.withColumnRenamed(id_col, "id_a")
-        b = w.withColumnRenamed(id_col, "id_b")
-        return sparse_cosine_join(
-            a, b, "id_a", "id_b",
-            term_col=term_col, weight_col=weight_col,
-            min_sim=min_sim, sim_col=sim_col, self_dedup=True,
-        )
+        return _spark_cosine_pairs(*args)
     groups, doc_gid = group_map(doc_sig)
     doc_gid = doc_gid.persist()
     rep_w = w.join(
@@ -219,15 +386,16 @@ def featurize_text(
     num_features: int | None = 46656,
     binary: bool = True,
     max_df_ratio: float = 0.5,
-    n_docs: int | None = None,
 ) -> DataFrame:
     """Raw text → sparse L2-normalized TF-IDF rows (id, term, weight).
 
     The engine-native form of the reference's name pipeline
     T1→T2→T4/T5→T7→T8→T9 (`01_Feature Engineering.py:184-298`):
-    tokenize, stopword-filter, char-n-gram, (optionally) feature-hash,
-    IDF-weight, L2-normalize — entirely JVM-side expressions plus two
-    hash aggregations; no VectorUDT, no Python UDF.
+    tokenize, stopword-filter, char-n-gram, (optionally) feature-hash
+    as JVM-side expressions, then ``tfidf_features``: IDF-weight and
+    L2-normalize, on the driver for a bag frame within the broadcast
+    threshold, else as two hash aggregations; no VectorUDT, no Python
+    UDF.
 
     ``num_features=None`` keeps raw n-gram strings as terms (exact,
     oracle-checkable); an int feature-hashes them (the reference's
@@ -245,7 +413,6 @@ def featurize_text(
         "__grams",
         binary=binary,
         max_df_ratio=max_df_ratio,
-        n_docs=n_docs,
     )
 
 
@@ -270,15 +437,29 @@ def fuzzy_match_pairs(
     IDF statistics are fit on the union of both sides (the reference
     fits its pipelines on the unioned abt+buy table,
     `01_Feature Engineering.py:143-159`).
+
+    Both layers place small inputs on the driver: ``tfidf_features``
+    weighs a bag frame within the broadcast threshold with one collect
+    and returns local rows, and ``sparse_cosine_join`` then sums their
+    postings on the driver under its work bound, so a small call runs
+    two collects and no shuffle. Larger inputs run the distributed
+    plans, with the features persisted for both join sides.
     """
-    if right is None:
+
+    def features(df: DataFrame, id_cols: list[str]) -> DataFrame:
         feats = featurize_text(
-            left, [id_col], text_col,
+            df, id_cols, text_col,
             ngram_n=ngram_n, num_features=num_features, max_df_ratio=max_df_ratio,
-        ).persist()  # both self-join sides reference this plan; without
-        # persistence the whole TF-IDF (aggs + window) computes TWICE —
-        # measured 8.5× slower at sf0.1. The reference caches its
-        # features for the same reason (`03_Train & Deploy Model.py:455`).
+        )
+        # both join sides reference this plan; without persistence the
+        # whole TF-IDF (aggs + window) computes TWICE — measured 8.5×
+        # slower at sf0.1. The reference caches its features for the
+        # same reason (`03_Train & Deploy Model.py:455`). Rows from the
+        # driver placement cost nothing to read twice.
+        return feats if materialized(feats) else feats.persist()
+
+    if right is None:
+        feats = features(left, [id_col])
         # Adaptive self-join strategy: template-generated short texts
         # (part names) collapse to few distinct vectors — the collapsed
         # join shrinks the pair shuffle from Σ df² doc-pair partials to
@@ -294,10 +475,7 @@ def fuzzy_match_pairs(
     ).unionByName(
         right.select(F.lit("R").alias("__side"), F.col(id_col), F.col(text_col))
     )
-    feats = featurize_text(
-        tagged, ["__side", id_col], text_col,
-        ngram_n=ngram_n, num_features=num_features, max_df_ratio=max_df_ratio,
-    ).persist()  # referenced by both filtered sides (see self-mode note)
+    feats = features(tagged, ["__side", id_col])
     a = feats.filter(F.col("__side") == "L").withColumnRenamed(id_col, "id_a")
     b = feats.filter(F.col("__side") == "R").withColumnRenamed(id_col, "id_b")
     return sparse_cosine_join(a, b, "id_a", "id_b", min_sim=min_sim)
@@ -328,9 +506,6 @@ def blocked_pair_stats(
     row costs that row, even when it comes first. A caller that knows
     the dimension passes ``dim`` and skips that aggregate's job.
     """
-    import numpy as np
-    from pyspark.sql import types as T
-
     from fuzzy_item_matching_spark.operators.lsh import (
         _cosine_block,
         _folded_sqdist_block,

@@ -3,7 +3,9 @@ the boosting fits' driver-side round loops return the model rows Spark
 plans (and the DuckDB twins) compute, bit for bit:
 
 - ``exp`` is ``java.lang.StrictMath.exp``, fdlibm's ``e_exp.c``, which
-  libm's and numpy's ``exp`` miss by an ulp on some inputs;
+  libm's and numpy's ``exp`` miss by an ulp on some inputs; ``log``
+  (Spark's ``LOG``, the TF-IDF idf) is ``StrictMath.log``, fdlibm's
+  ``e_log.c``, likewise;
 - ``CAST(double AS DECIMAL(38, s))`` and ``round(double, s)`` round
   the double's shortest decimal string half up. NaN and ±inf cast to
   NULL, and a result past the precision raises, as ANSI mode does;
@@ -79,6 +81,70 @@ def strict_exp(x) -> np.ndarray:
         out = np.where(x > _O_THRESHOLD, np.inf, out)
         out = np.where(x < _U_THRESHOLD, 0.0, out)
     return np.where(np.isnan(x), x, out)
+
+
+_TWO54 = _word(0x43500000)
+_LG = [
+    _word(0x3FE55555, 0x55555593),
+    _word(0x3FD99999, 0x9997FA04),
+    _word(0x3FD24924, 0x94229359),
+    _word(0x3FCC71C5, 0x1D8E78AF),
+    _word(0x3FC74664, 0x96CB03DE),
+    _word(0x3FC39A09, 0xD078C69F),
+    _word(0x3FC2F112, 0xDF3E5244),
+]
+
+
+def _fdlibm_log(x: float) -> float:
+    """fdlibm ``__ieee754_log`` of one double."""
+    bits = struct.unpack("<Q", struct.pack("<d", x))[0]
+    hx, lx = bits >> 32, bits & 0xFFFFFFFF
+    if hx >= 0x80000000:
+        hx -= 1 << 32  # the C code's signed high word
+    k = 0
+    if hx < 0x00100000:  # x < 2^-1022
+        if (hx & 0x7FFFFFFF) | lx == 0:
+            return -math.inf
+        if hx < 0:
+            return math.nan
+        k, x = -54, x * _TWO54  # subnormal: scale up
+        bits = struct.unpack("<Q", struct.pack("<d", x))[0]
+        hx, lx = bits >> 32, bits & 0xFFFFFFFF
+    if hx >= 0x7FF00000:
+        return x + x
+    k += (hx >> 20) - 1023
+    hx &= 0x000FFFFF
+    i = (hx + 0x95F64) & 0x100000
+    x = _word(hx | (i ^ 0x3FF00000), lx)  # normalize x or x/2
+    k += i >> 20
+    f = x - 1.0
+    dk = float(k)
+    if (0x000FFFFF & (2 + hx)) < 3:  # |f| < 2^-20
+        if f == 0.0:
+            return 0.0 if k == 0 else dk * _LN2_HI + dk * _LN2_LO
+        r = f * f * (0.5 - 0.33333333333333333 * f)
+        return f - r if k == 0 else dk * _LN2_HI - ((r - dk * _LN2_LO) - f)
+    s = f / (2.0 + f)
+    z = s * s
+    w = z * z
+    t1 = w * (_LG[1] + w * (_LG[3] + w * _LG[5]))
+    t2 = z * (_LG[0] + w * (_LG[2] + w * (_LG[4] + w * _LG[6])))
+    r = t2 + t1
+    if (hx - 0x6147A) | (0x6B851 - hx) > 0:
+        hfsq = 0.5 * f * f
+        if k == 0:
+            return f - (hfsq - s * (hfsq + r))
+        return dk * _LN2_HI - ((hfsq - (s * (hfsq + r) + dk * _LN2_LO)) - f)
+    if k == 0:
+        return f - s * (f - r)
+    return dk * _LN2_HI - ((s * (f - r) - dk * _LN2_LO) - f)
+
+
+def strict_log(x) -> np.ndarray:
+    """fdlibm ``__ieee754_log`` elementwise, once per distinct value
+    (an idf array holds one value per distinct document frequency)."""
+    uniq, at = np.unique(np.asarray(x, dtype=np.float64), return_inverse=True)
+    return np.array([_fdlibm_log(v) for v in uniq.tolist()], dtype=np.float64)[at]
 
 
 def checked(units: int, scale: int = 18, precision: int = 38) -> int:

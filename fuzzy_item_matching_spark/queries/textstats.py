@@ -3,8 +3,9 @@ the large-scale-pipeline text-analysis surface: quality scoring,
 language ID, token stats, fingerprinting).
 
 Everything here is JVM-side Catalyst expressions + hash aggregations;
-the TF-IDF query runs ``operators.features.sparse_tfidf`` end-to-end
-(lazy n_docs, shuffle-join IDF, windowed L2 norm) against a full SQL
+the TF-IDF query runs ``operators.features.tfidf_features`` end-to-end
+(on the driver when its bags are within the broadcast threshold, else
+lazy N, shuffle-join IDF and a windowed L2 norm) against a full SQL
 replica — the corpus-level A4 check (`01_Feature Engineering.py:284-290`).
 """
 
@@ -48,12 +49,14 @@ from fuzzy_item_matching_spark.tables import load_table
     """,
 )
 def ts_tfidf_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Word-level L2-normalized TF-IDF rows (A4/T8). Plan: two hash
-    aggs + one term join (AQE-broadcast when vocab fits) + one window —
-    n_docs computed in-plan, no eager count, no unbounded broadcast."""
+    """Word-level L2-normalized TF-IDF rows (A4/T8). Bags within the
+    broadcast threshold are weighted on the driver with one collect;
+    otherwise the plan is two hash aggs + one term join (AQE-broadcast
+    when vocab fits) + one window — N computed in-plan, no unbounded
+    broadcast."""
     d = load_table(spark, sf_dir, "documents")
     toks = d.select("doc_id", regex_tokenize("text").alias("toks"))
-    return tfidf_features(toks, ["doc_id"], "toks", binary=False, normalize=True)
+    return tfidf_features(toks, ["doc_id"], "toks", binary=False)
 
 
 @query(
@@ -1235,7 +1238,7 @@ def ts_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordering — and therefore the hash — is exact."""
     d = load_table(spark, sf_dir, "documents")
     toks = d.select("doc_id", regex_tokenize("text").alias("toks"))
-    feats = tfidf_features(toks, ["doc_id"], "toks", binary=False, normalize=True)
+    feats = tfidf_features(toks, ["doc_id"], "toks", binary=False)
     w = Window.partitionBy("doc_id").orderBy(F.desc("weight"), F.asc("term"))
     return (
         feats.withColumn("rnk", F.row_number().over(w))

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from fuzzy_item_matching_spark.operators.skew import salted_join, write_bucketed
 from fuzzy_item_matching_spark.tables import load_table
 
-from .conftest import SF_CHECK
+from .conftest import DISTRIBUTED, SF_CHECK, conf_set, local_frame
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -69,7 +69,12 @@ def test_similarity_join_skew_bounded_by_max_df(spark):
     the pair join must stay a term-key equi-join (shuffle hash / sort
     merge), never a cartesian fallback. Fixture: every doc shares one
     universal word, so without pruning the postings join materializes
-    all n(n-1)/2 pairs through that single hot term."""
+    all n(n-1)/2 pairs through that single hot term.
+
+    The term-key equi-join is a property of the distributed plan, so
+    the plan is checked with the threshold at -1; at the default
+    threshold this small input is joined on the driver, which must
+    return the same pairs."""
     from fuzzy_item_matching_spark.operators.similarity import (
         featurize_text,
         sparse_cosine_join,
@@ -81,7 +86,8 @@ def test_similarity_join_skew_bounded_by_max_df(spark):
     # max_df 0.5); "blk{g}x" contributes "blk" (df = n, pruned) plus
     # exactly 2 group-local grams ("lk{g}", "k{g}x") with df = n/groups
     # — so the pruned candidate load is exactly computable below.
-    docs = spark.createDataFrame(
+    docs = local_frame(
+        spark,
         [(i, f"universal blk{i % groups}x") for i in range(n)],
         "doc_id long, text string",
     )
@@ -127,15 +133,27 @@ def test_similarity_join_skew_bounded_by_max_df(spark):
 
     # the pair join must remain a term-key equi-join — no cartesian /
     # broadcast-nested-loop fallback under the skewed fixture
-    pairs = sparse_cosine_join(
-        feats.withColumnRenamed("doc_id", "id_a"),
-        feats.withColumnRenamed("doc_id", "id_b"),
-        "id_a",
-        "id_b",
-        min_sim=0.3,
-        self_dedup=True,
-    )
-    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    def pair_join():
+        f = featurize_text(
+            docs, ["doc_id"], "text", num_features=None, max_df_ratio=0.5
+        )
+        return sparse_cosine_join(
+            f.withColumnRenamed("doc_id", "id_a"),
+            f.withColumnRenamed("doc_id", "id_b"),
+            "id_a",
+            "id_b",
+            min_sim=0.3,
+            self_dedup=True,
+        )
+
+    on_driver = pair_join()
+    assert on_driver.isLocal()
+    with conf_set(spark, *DISTRIBUTED):
+        pairs = pair_join()
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+        distributed = {(r.id_a, r.id_b) for r in pairs.collect()}
+    assert {(r.id_a, r.id_b) for r in on_driver.collect()} == distributed
+    assert len(distributed) == groups * (per_group * (per_group - 1) // 2)
     assert "CartesianProduct" not in plan
     # the postings join must stay a term-key EQUI-join (sort-merge /
     # shuffled-hash at scale; AQE may broadcast the small test side —

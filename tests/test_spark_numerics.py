@@ -17,6 +17,7 @@ from fuzzy_item_matching_spark.operators.spark_numerics import (
     masked_sums,
     round_half_up,
     strict_exp,
+    strict_log,
     to_units,
     units_to_double,
 )
@@ -40,6 +41,26 @@ def test_strict_exp_matches_strictmath(spark):
     strict = spark._jvm.java.lang.StrictMath
     want = [_bits(strict.exp(float(x))) for x in xs.tolist()]
     got = [_bits(v) for v in strict_exp(xs).tolist()]
+    bad = [(x, w, g) for x, w, g in zip(xs.tolist(), want, got) if w != g]
+    assert not bad, bad[:5]
+
+
+def test_strict_log_matches_spark_log(spark):
+    """Against Spark's ``LOG``, the expression the distributed TF-IDF
+    plan computes its idf with: idf ratios (N+1)/(df+1) and values
+    across the exponent range, subnormals and |x − 1| < 2^-20."""
+    rng = np.random.default_rng(13)
+    n = rng.integers(1, 10**6, 1500).astype(np.float64)
+    xs = np.concatenate([
+        (n + 1.0) / (np.floor(rng.uniform(0.0, 1.0, 1500) * n) + 1.0),
+        np.exp(rng.uniform(-700.0, 700.0, 1000)),
+        1.0 + rng.uniform(-2e-6, 2e-6, 300),
+        rng.uniform(0.5, 2.0, 500),
+        [5e-324, 1e-310, 2.2250738585072014e-308, 1.0, 2.0, 1.7976931348623157e308],
+    ])
+    df = spark.createDataFrame([(float(x),) for x in xs], "x double")
+    want = [_bits(r[0]) for r in df.select(F.log("x")).collect()]
+    got = [_bits(v) for v in strict_log(xs).tolist()]
     bad = [(x, w, g) for x, w, g in zip(xs.tolist(), want, got) if w != g]
     assert not bad, bad[:5]
 
