@@ -78,9 +78,10 @@ def expand_group_pairs(
     id_a < id_b filter, so no size predicate is needed.
 
     Plan: symmetrize so every doc expands from its own group's side,
-    join the doc→group map (one row per doc), explode the other
-    side's member list map-side — the (possibly huge) output never
-    crosses a shuffle. Both group-sized frames broadcast under AQE.
+    join the doc→group map (one row per doc, spread over the shuffle
+    partitions), explode the other side's member list map-side — the
+    (possibly huge) output never crosses a shuffle. The group pairs
+    are broadcast; the group → member list broadcasts under AQE.
     """
     sym = rep_pairs.select(
         F.col("id_a").alias("__ga"), F.col("id_b").alias("__gb"), *val_cols
@@ -98,11 +99,17 @@ def expand_group_pairs(
                 *val_cols,
             )
         )
+    # the output explodes from doc_gid's partitions: spread its rows
+    # over the shuffle partitions (AQE coalesces a small doc map to a
+    # partition or two) and broadcast the group pairs, which the
+    # planner would otherwise stream when both sides look small
+    n_parts = int(doc_gid.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    docs = doc_gid.repartition(n_parts)
     gid_ids = doc_gid.groupBy("__gid").agg(
         F.collect_list("__id").alias("__ids")
     ).select(F.col("__gid").alias("__g2"), "__ids")
     return (
-        doc_gid.join(sym, F.col("__gid") == F.col("__ga"))
+        docs.join(F.broadcast(sym), F.col("__gid") == F.col("__ga"))
         .join(gid_ids, F.col("__gb") == F.col("__g2"))
         .select(
             F.col("__id").alias("id_a"),

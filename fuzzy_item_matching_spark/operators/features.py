@@ -25,6 +25,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from fuzzy_item_matching_spark.operators.placement import (
+    driver_frame,
     fits_driver,
     group_codes,
     spark_keys,
@@ -115,14 +116,7 @@ def _driver_tfidf(
     _, first_row = np.unique(row_doc, return_index=True)
     out = rows.select(id_cols).take(first_row[doc])
     out = out.append_column(schema.names[-2], enc.dictionary.take(term))
-    return spark.createDataFrame(out.append_column("weight", pa.array(weight)), schema)
-
-
-def _out_schema(df: DataFrame, id_cols: list[str], term_col: str, term_type) -> T.StructType:
-    return T.StructType(
-        [df.schema[c] for c in id_cols]
-        + [T.StructField(term_col, term_type), T.StructField("weight", T.DoubleType())]
-    )
+    return driver_frame(spark, out.append_column("weight", pa.array(weight)), schema)
 
 
 def sparse_tfidf(
@@ -146,24 +140,17 @@ def sparse_tfidf(
     A document whose surviving weights are all 0 (every term has
     df == N) keeps them unnormalized.
 
-    Placement (``operators/placement.fits_driver``): rows whose size
-    estimate is within ``spark.sql.autoBroadcastJoinThreshold`` are
-    collected with one Arrow collect and weighted in numpy on the
-    driver; the call is then eager and returns a local DataFrame.
-    Larger or streaming inputs run the lazy distributed plan
-    (``_spark_tfidf``). Spark estimates an ``explode`` at its bag
-    frame's size, not by its element count: pass bags to
-    ``tfidf_features``, which gates on the bag frame.
+    The plan is lazy and distributed (``_spark_tfidf``). A term bag
+    column, one row per document, goes to ``tfidf_features`` instead,
+    which places a small input on the driver: Spark estimates an
+    ``explode`` at its bag frame's size, not by its element count, so
+    only the bag frame's estimate can gate that placement. A caller
+    whose consumer is a large Spark plan keeps its features planned
+    here (``sim_maxscore_topk``).
     """
-    rows = terms_df.select(*id_cols, term_col)
-    schema = _out_schema(rows, id_cols, term_col, rows.schema[term_col].dataType)
-    if fits_driver(rows):
-        t = rows.toArrow()
-        return _driver_tfidf(
-            t, id_cols, np.arange(t.num_rows), t.column(term_col),
-            binary, max_df_ratio, schema, rows.sparkSession,
-        )
-    return _spark_tfidf(rows, id_cols, term_col, binary, max_df_ratio)
+    return _spark_tfidf(
+        terms_df.select(*id_cols, term_col), id_cols, term_col, binary, max_df_ratio
+    )
 
 
 def tfidf_features(
@@ -179,8 +166,14 @@ def tfidf_features(
     document rather than one per term occurrence; otherwise the bags
     are exploded into the distributed plan."""
     bags = df.select(*id_cols, F.col(terms_col).alias("term"))
-    schema = _out_schema(bags, id_cols, "term", bags.schema["term"].dataType.elementType)
     if fits_driver(bags):
+        schema = T.StructType(
+            [bags.schema[c] for c in id_cols]
+            + [
+                T.StructField("term", bags.schema["term"].dataType.elementType),
+                T.StructField("weight", T.DoubleType()),
+            ]
+        )
         t = bags.toArrow()
         lists = t.column("term").combine_chunks()
         return _driver_tfidf(

@@ -41,8 +41,9 @@ from fuzzy_item_matching_spark.functions.text import (
 from fuzzy_item_matching_spark.functions.vector import squared_dist
 from fuzzy_item_matching_spark.operators.features import tfidf_features
 from fuzzy_item_matching_spark.operators.placement import (
+    driver_frame,
     fits_driver,
-    materialized,
+    reusable,
     spark_keys,
 )
 
@@ -88,73 +89,24 @@ def exact_sqdist_join(
 # collapsed self join overtook it on template names (see
 # sparse_cosine_join, "Placement").
 _DRIVER_MAX_PARTIALS = 10_000_000
-# Partials generated per chunk on the driver: about 40 MB of transient
-# index and product arrays.
+# Most output pairs the collapsed self join expands on the driver
+# (24 bytes each as Arrow): sf0.1's part names make 6.4M.
+_DRIVER_MAX_PAIRS = 10_000_000
+# Partials (or expanded pairs) generated per chunk on the driver:
+# about 40 MB of transient index and product arrays.
 _CHUNK_PARTIALS = 1 << 19
 
 
-def _driver_cosine_pairs(
-    left: DataFrame,
-    right: DataFrame,
-    left_id: str,
-    right_id: str,
-    term_col: str,
-    weight_col: str,
-    min_sim: float,
-    sim_col: str,
-    self_dedup: bool,
-) -> DataFrame | None:
-    """``_spark_cosine_pairs`` on the driver: ONE Arrow collect of both
-    sides' postings tagged by a side byte, then the partials generated
-    in chunks of whole left documents (each left posting meets the run
-    of right postings on its term), so every pair is summed and
-    thresholded within one chunk and only its hits are kept → a local
-    DataFrame. Memory is bounded by the chunk, not by the candidate
-    pairs. None, before any collect, when the postings are over the
-    broadcast threshold, and before any pair is generated when they
-    make more than ``_DRIVER_MAX_PARTIALS`` partials.
-
-    Semantics are the join's: NULL terms never meet, a NULL weight adds
-    nothing (a pair of only NULL partials sums to NULL and is dropped),
-    NULL ids pair in pair mode, and ``self_dedup`` keeps id_a < id_b in
-    Spark's order (NaN above every number, NULL never)."""
-
-    def side(df: DataFrame, tag: int, id_col: str) -> DataFrame:
-        return df.select(
-            F.lit(tag).cast("byte").alias("__side"),
-            F.col(id_col).alias("__id"),
-            F.col(term_col).alias("__t"),
-            F.col(weight_col).alias("__w"),
-        )
-
-    rows = side(left, 0, left_id).unionByName(side(right, 1, right_id))
-    if not fits_driver(rows):
-        return None
-    t = rows.toArrow()
-    t = t.filter(pc.and_(pc.is_valid(t["__t"]), pc.is_valid(t["__w"])))
-    ids = spark_keys(t["__id"])
-    n_ids = len(ids.dictionary) + 1  # the last code is NULL
-    # int64: a pair key, id_a code × n_ids + id_b code, passes 2^31
-    id_code = ids.indices.fill_null(n_ids - 1).to_numpy().astype(np.int64)
-    terms = spark_keys(t["__t"])
-    term = terms.indices.to_numpy().astype(np.int64)
-    is_a = t["__side"].to_numpy() == 0
-    w = t["__w"].to_numpy()
-    # the order id_a < id_b compares ids in: Spark's, NaN above every
-    # number (the NULL code's rank is unused: self mode drops NULL ids,
-    # which never compare)
-    rank = pc.rank(ids.dictionary, null_placement="at_end", tiebreaker="dense")
-    rank = np.append(rank.to_numpy().astype(np.int64), 0)
-    live = id_code != n_ids - 1 if self_dedup else True
-
-    def postings(mask: np.ndarray, *keys: np.ndarray):
-        order = np.lexsort([k[mask] for k in keys])  # the last key sorts first
-        return term[mask][order], id_code[mask][order], w[mask][order]
-
-    # left postings by id (then term), right postings by term (then id rank)
-    ta, ida, wa = postings(is_a & live, term, id_code)
-    tb, idb, wb = postings(~is_a & live, rank[id_code], term)
-    cb = np.bincount(tb, minlength=len(terms.dictionary))
+def _sum_pairs(ta, ida, wa, tb, idb, wb, rank, n_ids, n_terms, self_dedup, min_sim):
+    """The pairs (id_a code, id_b code, Σ w_a·w_b) at or over
+    ``min_sim`` of left postings (term codes ``ta``, id codes ``ida``,
+    weights ``wa``) sorted by id then term, against right postings
+    sorted by term then id ``rank``, in chunks of whole left documents
+    (each left posting meets the run of right postings on its term),
+    so every pair is summed and thresholded within one chunk and only
+    its hits are kept. None, before any pair is generated, past
+    ``_DRIVER_MAX_PARTIALS`` partials."""
+    cb = np.bincount(tb, minlength=n_terms)
     b_end = np.cumsum(cb)
     if self_dedup:  # a left posting meets the right ones of its term ranked above it
         b_first = np.searchsorted(
@@ -177,12 +129,163 @@ def _driver_cosine_pairs(
         ai = np.repeat(np.arange(lo, hi), r)
         bi = np.repeat(b_first[lo:hi] - (ends[lo:hi] - r - base), r) + np.arange(ends[hi - 1] - base)
         lo = hi
-        ka, kb = ida[ai], idb[bi]
-        pair, at = np.unique(ka * n_ids + kb, return_inverse=True)
+        pair, at = np.unique(ida[ai] * n_ids + idb[bi], return_inverse=True)
         sim = np.bincount(at, wa[ai] * wb[bi])
         hit = (sim >= min_sim) | np.isnan(sim)  # Spark orders NaN above every value
         pairs.append(pair[hit])
         sims.append(sim[hit])
+    ka, kb = np.divmod(np.concatenate(pairs), n_ids)
+    return ka, kb, np.concatenate(sims)
+
+
+def _collapsed_pairs(ta, ida, wa, tb, idb, wb, rank, n_ids, n_terms, min_sim, collapse_ratio):
+    """``_sum_pairs`` of a self join (one frame's postings on both
+    sides, id_a < id_b) through the collapse
+    ``sparse_cosine_self_join_collapsed`` plans in Spark: documents
+    whose (term, weight) runs are identical form a group, the pairs
+    are summed over one representative per group, and matched groups
+    expand to their members' pairs in chunks. A representative pair
+    sums the same products in the same term order as each member pair,
+    so the cosines are the plain join's, bit for bit. None when the
+    groups exceed ``collapse_ratio`` of the documents, or past
+    ``_DRIVER_MAX_PARTIALS`` partials or ``_DRIVER_MAX_PAIRS``
+    output pairs."""
+    starts = np.flatnonzero(np.r_[True, ida[1:] != ida[:-1]]) if len(ida) else ida
+    lens = np.diff(np.r_[starts, len(ida)])
+    sigs: dict[bytes, int] = {}
+    gid = np.array(
+        [
+            sigs.setdefault(ta[s:e].tobytes() + wa[s:e].tobytes(), len(sigs))
+            for s, e in zip(starts, starts + lens)
+        ],
+        dtype=np.int64,
+    )
+    if not len(gid) or len(sigs) > collapse_ratio * len(gid):
+        return None
+    doc = ida[starts]  # each document's id code
+    _, first = np.unique(gid, return_index=True)
+    rep_of = np.full(n_ids, -1)  # a representative's group, by id code
+    rep_of[doc[first]] = np.arange(len(first))
+    la, lb = rep_of[ida] >= 0, rep_of[idb] >= 0
+    found = _sum_pairs(
+        ta[la], ida[la], wa[la], tb[lb], idb[lb], wb[lb], rank, n_ids, n_terms, True, min_sim
+    )
+    if found is None:
+        return None
+    # the matched groups: representative pairs, and each group with
+    # itself (intra-group pairs) when its self sum passes: Σ w_p·w_q
+    # over its postings p, q of one term (Σ w² without repeated terms)
+    run = np.cumsum(np.r_[True, (ida[1:] != ida[:-1]) | (ta[1:] != ta[:-1])]) - 1
+    on_run = np.bincount(run, wa)[run]
+    self_sim = np.bincount(np.repeat(np.arange(len(doc)), lens), wa * on_run)[first]
+    hit = (self_sim >= min_sim) | np.isnan(self_sim)
+    g_all = np.arange(len(first))
+    ga = np.r_[rep_of[found[0]], g_all[hit]]
+    gb = np.r_[rep_of[found[1]], g_all[hit]]
+    g_sim = np.r_[found[2], self_sim[hit]]
+    size = np.bincount(gid)
+    members = doc[np.lexsort((rank[doc], gid))]  # by group, then id rank
+    g_start = np.cumsum(size) - size
+    cnt = size[ga] * size[gb]  # a group with itself: all ordered pairs, halved below
+    if (cnt - np.where(ga == gb, (cnt + size[ga]) // 2, 0)).sum() > _DRIVER_MAX_PAIRS:
+        return None
+    cum = np.cumsum(cnt)
+    out_a, out_b, out_s = [np.empty(0, np.int64)], [np.empty(0, np.int64)], [np.empty(0)]
+    for k0 in range(0, int(cum[-1]) if len(cum) else 0, _CHUNK_PARTIALS):
+        k = np.arange(k0, min(k0 + _CHUNK_PARTIALS, int(cum[-1])))
+        p = np.searchsorted(cum, k, side="right")
+        within = k - (cum[p] - cnt[p])
+        x = members[g_start[ga[p]] + within // size[gb[p]]]
+        y = members[g_start[gb[p]] + within % size[gb[p]]]
+        keep = (ga[p] != gb[p]) | (rank[x] < rank[y])
+        x, y, p = x[keep], y[keep], p[keep]
+        swap = rank[x] > rank[y]
+        out_a.append(np.where(swap, y, x))
+        out_b.append(np.where(swap, x, y))
+        out_s.append(g_sim[p])
+    return np.concatenate(out_a), np.concatenate(out_b), np.concatenate(out_s)
+
+
+def _driver_cosine_pairs(
+    left: DataFrame,
+    right: DataFrame,
+    left_id: str,
+    right_id: str,
+    term_col: str,
+    weight_col: str,
+    min_sim: float,
+    sim_col: str,
+    self_dedup: bool,
+    collapse_ratio: float | None = None,
+) -> DataFrame | None:
+    """``_spark_cosine_pairs`` on the driver: ONE Arrow collect of both
+    sides' postings tagged by a side byte (of one side's, when both
+    sides are the same frame), the pairs summed by ``_sum_pairs`` →
+    a DataFrame of the hits (``placement.driver_frame``). Memory is
+    bounded by the chunk, not by the candidate pairs. None, before any
+    collect, when the collected postings would be over the broadcast
+    threshold, and before any pair is generated when they make more
+    than ``_DRIVER_MAX_PARTIALS`` partials; with ``collapse_ratio``,
+    a self join of one frame past that bound tries
+    ``_collapsed_pairs`` first.
+
+    Semantics are the join's: NULL terms never meet, a NULL weight adds
+    nothing (a pair of only NULL partials sums to NULL and is dropped),
+    NULL ids pair in pair mode, and ``self_dedup`` keeps id_a < id_b in
+    Spark's order (NaN above every number, NULL never)."""
+
+    def side(df: DataFrame, id_col: str) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias("__id"),
+            F.col(term_col).alias("__t"),
+            F.col(weight_col).alias("__w"),
+        )
+
+    def tagged(df: DataFrame, tag: int) -> DataFrame:
+        return df.select(F.lit(tag).cast("byte").alias("__side"), "*")
+
+    a, b = side(left, left_id), side(right, right_id)
+    # a join of one frame with itself (sides renamed apart) collects
+    # it once: on the 80k sf0.1 part-name postings the tagged union of
+    # two copies took about twice as long to collect as one copy
+    same = a.sameSemantics(b)
+    rows = a if same else tagged(a, 0).unionByName(tagged(b, 1))
+    if not fits_driver(rows):
+        return None
+    t = rows.toArrow()
+    t = t.filter(pc.and_(pc.is_valid(t["__t"]), pc.is_valid(t["__w"])))
+    ids = spark_keys(t["__id"])
+    n_ids = len(ids.dictionary) + 1  # the last code is NULL
+    # int64: a pair key, id_a code × n_ids + id_b code, passes 2^31
+    id_code = ids.indices.fill_null(n_ids - 1).to_numpy().astype(np.int64)
+    terms = spark_keys(t["__t"])
+    term = terms.indices.to_numpy().astype(np.int64)
+    in_a = np.ones(t.num_rows, bool) if same else t["__side"].to_numpy() == 0
+    in_b = in_a if same else ~in_a
+    w = t["__w"].to_numpy()
+    # the order id_a < id_b compares ids in: Spark's, NaN above every
+    # number (the NULL code's rank is unused: self mode drops NULL ids,
+    # which never compare)
+    rank = pc.rank(ids.dictionary, null_placement="at_end", tiebreaker="dense")
+    rank = np.append(rank.to_numpy().astype(np.int64), 0)
+    live = id_code != n_ids - 1 if self_dedup else True
+
+    def postings(mask: np.ndarray, *keys: np.ndarray):
+        order = np.lexsort([k[mask] for k in keys])  # the last key sorts first
+        return term[mask][order], id_code[mask][order], w[mask][order]
+
+    # left postings by id (then term), right postings by term (then id rank)
+    sides = (
+        *postings(in_a & live, term, id_code),
+        *postings(in_b & live, rank[id_code], term),
+        rank, n_ids, len(terms.dictionary),
+    )
+    found = _sum_pairs(*sides, self_dedup, min_sim)
+    if found is None and collapse_ratio is not None and same and self_dedup:
+        found = _collapsed_pairs(*sides, min_sim, collapse_ratio)
+    if found is None:
+        return None
+    ka, kb, sim = found
     schema = T.StructType(
         [
             T.StructField(left_id, left.schema[left_id].dataType),
@@ -190,14 +293,12 @@ def _driver_cosine_pairs(
             T.StructField(sim_col, T.DoubleType()),
         ]
     )
-    sim = np.concatenate(sims)
-    ka, kb = np.divmod(np.concatenate(pairs), n_ids)
     id_values = pa.concat_arrays([ids.dictionary, pa.nulls(1, ids.dictionary.type)])
     out = pa.table(
         [id_values.take(ka), id_values.take(kb), pa.array(sim)],
         names=[left_id, right_id, sim_col],
     )
-    return rows.sparkSession.createDataFrame(out, schema)
+    return driver_frame(rows.sparkSession, out, schema)
 
 
 def _spark_cosine_pairs(
@@ -257,8 +358,9 @@ def sparse_cosine_join(
     same candidate-bounding idea as the reference's LSH bucketing
     (`02_Build Training Pairs.py:52-58`).
 
-    Placement. When both sides' postings, tagged and unioned, are a
-    batch plan within ``spark.sql.autoBroadcastJoinThreshold``
+    Placement. When both sides' postings, tagged and unioned (or the
+    one frame both sides rename), are a batch plan within
+    ``spark.sql.autoBroadcastJoinThreshold``
     (``operators/placement.fits_driver``), they are collected with one
     Arrow collect. If they make at most ``_DRIVER_MAX_PARTIALS``
     partials, the pairs are summed on the driver in bounded chunks
@@ -322,10 +424,12 @@ def sparse_cosine_self_join_collapsed(
     AQE — pinned by tests/test_round11_ops.py equality tests on both
     corpus shapes.
 
-    Placement: postings that ``sparse_cosine_join`` would join on the
-    driver (within the broadcast threshold and ``_DRIVER_MAX_PARTIALS``)
-    are joined there, plainly, with no gate job; the collapse is for
-    the corpora past that bound."""
+    Placement: postings within the broadcast threshold are collected
+    once and joined on the driver, with no gate job: plainly within
+    ``_DRIVER_MAX_PARTIALS``, else through the same collapse in numpy
+    (``_collapsed_pairs``: the same gate, representative partials
+    within that bound, at most ``_DRIVER_MAX_PAIRS`` output pairs).
+    The Spark plan below is for the postings past those bounds."""
     from fuzzy_item_matching_spark.operators.collapse import (
         expand_group_pairs,
         group_map,
@@ -337,7 +441,7 @@ def sparse_cosine_self_join_collapsed(
         w.withColumnRenamed(id_col, "id_a"), w.withColumnRenamed(id_col, "id_b"),
         "id_a", "id_b", term_col, weight_col, min_sim, sim_col, True,
     )
-    out = _driver_cosine_pairs(*args)
+    out = _driver_cosine_pairs(*args, collapse_ratio=collapse_ratio)
     if out is not None:
         return out
     doc_sig = w.groupBy(F.col(id_col).alias("__id")).agg(
@@ -440,10 +544,12 @@ def fuzzy_match_pairs(
 
     Both layers place small inputs on the driver: ``tfidf_features``
     weighs a bag frame within the broadcast threshold with one collect
-    and returns local rows, and ``sparse_cosine_join`` then sums their
-    postings on the driver under its work bound, so a small call runs
-    two collects and no shuffle. Larger inputs run the distributed
-    plans, with the features persisted for both join sides.
+    and returns its rows as data, and ``sparse_cosine_join`` (or, in
+    self mode, ``sparse_cosine_self_join_collapsed``, which collapses
+    template names on the driver past the plain work bound) then sums
+    their postings on the driver, so a small call runs two collects
+    and no shuffle. Larger inputs run the distributed plans, with the
+    features persisted for both join sides.
     """
 
     def features(df: DataFrame, id_cols: list[str]) -> DataFrame:
@@ -454,9 +560,8 @@ def fuzzy_match_pairs(
         # both join sides reference this plan; without persistence the
         # whole TF-IDF (aggs + window) computes TWICE — measured 8.5×
         # slower at sf0.1. The reference caches its features for the
-        # same reason (`03_Train & Deploy Model.py:455`). Rows from the
-        # driver placement cost nothing to read twice.
-        return feats if materialized(feats) else feats.persist()
+        # same reason (`03_Train & Deploy Model.py:455`).
+        return reusable(feats)
 
     if right is None:
         feats = features(left, [id_col])

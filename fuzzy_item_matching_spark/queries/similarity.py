@@ -492,13 +492,12 @@ def sim_fuzzy_doc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from fuzzy_item_matching_spark.functions.text import regex_tokenize
     from fuzzy_item_matching_spark.operators.features import tfidf_features
+    from fuzzy_item_matching_spark.operators.placement import reusable
     from fuzzy_item_matching_spark.operators.similarity import sparse_cosine_join
 
     d = load_table(spark, sf_dir, "documents")
     toks = d.select("doc_id", regex_tokenize("text").alias("toks"))
-    feats = tfidf_features(
-        toks, ["doc_id"], "toks", binary=True, max_df_ratio=0.3
-    ).persist()
+    feats = reusable(tfidf_features(toks, ["doc_id"], "toks", binary=True, max_df_ratio=0.3))
     a = feats.withColumnRenamed("doc_id", "id_a")
     b = feats.withColumnRenamed("doc_id", "id_b")
     return sparse_cosine_join(a, b, "id_a", "id_b", min_sim=0.5, self_dedup=True)
@@ -1552,13 +1551,15 @@ def sim_maxscore_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     from fuzzy_item_matching_spark.functions.text import regex_tokenize
-    from fuzzy_item_matching_spark.operators.features import tfidf_features
+    from fuzzy_item_matching_spark.operators.features import sparse_tfidf
 
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", regex_tokenize("text").alias("toks"))
-    feats = tfidf_features(
-        toks, ["doc_id"], "toks", binary=True, max_df_ratio=0.9
-    ).persist()  # ub ledger + panel + candidate postings + scoring
+    terms = d.select("doc_id", F.explode(regex_tokenize("text")).alias("term"))
+    # the distributed TF-IDF: the plan below is Spark's either way, and
+    # over the driver placement's local rows it ran slower at sf0.1
+    # (7.3-8.1 s against 5.3-7.5 s); persisted for the ub ledger,
+    # panel, candidate postings and scoring
+    feats = sparse_tfidf(terms, ["doc_id"], binary=True, max_df_ratio=0.9).persist()
     ub = feats.groupBy("term").agg(F.max("weight").alias("ub"))
     wq = feats.filter(F.col("doc_id") % _MAXSCORE_QMOD == 0).select(
         F.col("doc_id").alias("q"), "term", F.col("weight").alias("wq")

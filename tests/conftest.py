@@ -83,7 +83,7 @@ def conf_set(spark, key: str, value: str):
 
 # spark.sql.autoBroadcastJoinThreshold at -1 keeps the operators that
 # place small inputs on the driver (lsh_sqdist_join,
-# tfidf_features/sparse_tfidf and sparse_cosine_join, all gated by
+# tfidf_features and sparse_cosine_join, all gated by
 # operators/placement.fits_driver) on their distributed plan
 DISTRIBUTED = ("spark.sql.autoBroadcastJoinThreshold", "-1")
 

@@ -189,11 +189,16 @@ def test_transform_with_state_in_pandas_env_probe(spark):
     assert all(r.n >= 1 for r in rows)
 
 
-def test_collapsed_cosine_join_equals_plain(spark):
+def test_collapsed_cosine_join_equals_plain(spark, monkeypatch):
     """The vector-collapsed self-join must be row-for-row equal to the
     plain postings join on the corpus it exists for (template part
     names, 20k docs -> 64 distinct vectors at sf0.1): same pair set,
-    same cosines to the round-9 float discipline."""
+    same cosines to the round-9 float discipline. These postings fit
+    the driver placement, which the plain join takes; a work bound of
+    0 partials refuses both the driver's plain join and its collapse
+    for the collapsed call, so the Spark collapse runs (its expansion
+    is asserted to run)."""
+    from fuzzy_item_matching_spark.operators import collapse, similarity
     from fuzzy_item_matching_spark.operators.similarity import (
         featurize_text,
         sparse_cosine_join,
@@ -214,12 +219,20 @@ def test_collapsed_cosine_join_equals_plain(spark):
             a, b, "id_a", "id_b", min_sim=0.8, self_dedup=True
         ).collect()
     }
+    expansions = []
+    expand = collapse.expand_group_pairs
+    monkeypatch.setattr(
+        collapse, "expand_group_pairs",
+        lambda *args: expansions.append(1) or expand(*args),
+    )
+    monkeypatch.setattr(similarity, "_DRIVER_MAX_PARTIALS", 0)
     collapsed = {
         (r.id_a, r.id_b): round(r.cosine, 9)
         for r in sparse_cosine_self_join_collapsed(
             feats, "p_partkey", min_sim=0.8
         ).collect()
     }
+    assert expansions == [1]
     assert len(plain) > 0
     assert collapsed == plain
 

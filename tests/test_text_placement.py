@@ -1,6 +1,6 @@
 """The text operators' two placements return the same rows.
 
-``tfidf_features``/``sparse_tfidf`` and ``sparse_cosine_join`` run on
+``tfidf_features`` and ``sparse_cosine_join`` run on
 the driver (one Arrow collect, numpy, a local DataFrame back) when
 their input is within ``spark.sql.autoBroadcastJoinThreshold``, and as
 distributed plans otherwise (``DISTRIBUTED`` sets the threshold to -1).
@@ -81,19 +81,25 @@ def test_tfidf_placements_agree(spark, binary, every_doc, ratio, ids):
     assert want
 
 
-def test_sparse_tfidf_placements_agree(spark):
-    """The (id, term) rows entry point, with a NULL term (dropped by
-    the idf join, its document still counted in N)."""
-    from fuzzy_item_matching_spark.operators.features import sparse_tfidf
+@pytest.mark.parametrize("binary", [True, False])
+def test_sparse_tfidf_equals_driver_bag_features(spark, binary):
+    """``sparse_tfidf`` over (id, term) rows (always the distributed
+    plan) returns the driver-placed ``tfidf_features`` rows of the same
+    bags, with a NULL term (dropped by the idf join, its document still
+    counted in N), a document of only a NULL term, a repeated term and
+    a NULL id."""
+    from fuzzy_item_matching_spark.operators.features import sparse_tfidf, tfidf_features
 
-    terms = local_frame(
+    bags = local_frame(
         spark,
-        [(1, "a"), (1, "a"), (1, "b"), (2, "a"), (2, None), (3, None), (None, "b"), (4, "c")],
-        "id long, term string",
+        [(1, ["a", "a", "b"]), (2, ["a", None]), (3, [None]), (None, ["b"]), (4, ["c"])],
+        "id long, toks array<string>",
     )
-    for binary in (True, False):
-        got, want = _both(spark, lambda: sparse_tfidf(terms, ["id"], binary=binary))
-        _assert_close(got, want)
+    local = tfidf_features(bags, ["id"], "toks", binary=binary)
+    assert local.isLocal()
+    rows = sparse_tfidf(bags.selectExpr("id", "explode(toks) AS term"), ["id"], binary=binary)
+    assert not rows.isLocal()
+    _assert_close(_rows(local), _rows(rows))
 
 
 def test_tfidf_zero_norm_passes_weights(spark):
@@ -221,6 +227,47 @@ def test_cosine_join_over_work_bound_runs_distributed(spark, monkeypatch):
     assert not out.isLocal()
     assert "Exchange" in out._jdf.queryExecution().executedPlan().toString()
     _assert_close(_rows(out), want)
+
+
+@pytest.mark.parametrize("max_pairs", [10_000_000, 0])
+def test_collapsed_self_join_on_driver(spark, monkeypatch, max_pairs):
+    """Past the plain join's work bound, a template corpus (three texts
+    twenty times each, one with a repeated posting, a one-off, a NULL
+    text and a NULL id) collapses
+    on the driver while its expansion is within ``_DRIVER_MAX_PAIRS``;
+    past that the Spark collapse runs. Both return the distributed
+    plain self join's pairs."""
+    from pyspark.sql import functions as F
+
+    from fuzzy_item_matching_spark.operators import similarity
+    from fuzzy_item_matching_spark.operators.similarity import (
+        featurize_text,
+        sparse_cosine_join,
+        sparse_cosine_self_join_collapsed,
+    )
+
+    texts = ["acme widget pro max", "acme widget pro mini", "zeta gadget deluxe"]
+    rows = [(i, texts[i % 3]) for i in range(60)]
+    rows += [(60, "acme gadget pro"), (61, None), (None, "zeta gadget deluxe")]
+    docs = local_frame(spark, rows, "id long, text string")
+    feats = featurize_text(docs, ["id"], "text", num_features=None, max_df_ratio=1.0)
+    # a repeated (id, term) posting in every copy of the first text
+    feats = feats.unionByName(feats.filter((F.col("id") % 3 == 0) & (F.col("term") == "acm")))
+    with conf_set(spark, *DISTRIBUTED):
+        want = _rows(sparse_cosine_join(
+            feats.withColumnRenamed("id", "id_a"), feats.withColumnRenamed("id", "id_b"),
+            "id_a", "id_b", min_sim=0.3, self_dedup=True))
+    calls = []
+    collapsed = similarity._collapsed_pairs
+    monkeypatch.setattr(
+        similarity, "_collapsed_pairs", lambda *a: calls.append(collapsed(*a)) or calls[-1])
+    monkeypatch.setattr(similarity, "_DRIVER_MAX_PARTIALS", 1_000)
+    monkeypatch.setattr(similarity, "_DRIVER_MAX_PAIRS", max_pairs)
+    out = sparse_cosine_self_join_collapsed(feats, "id", min_sim=0.3)
+    assert len(calls) == 1 and (calls[0] is None) == (max_pairs == 0)
+    assert out.isLocal() == (max_pairs > 0)
+    _assert_close(_rows(out), want)
+    assert len(want) > 570  # the intra-group pairs alone are 3 × 190
 
 
 def _executions(spark) -> dict[int, str]:
