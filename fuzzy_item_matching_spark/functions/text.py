@@ -78,9 +78,14 @@ def remove_stopwords(tokens: Column, stopwords: list[str] | None = None) -> Colu
     """Drop stop words, preserving bag semantics and order.
 
     `array_except` would dedup (SURVEY §2 T2 note); `filter` keeps
-    duplicates exactly like StopWordsRemover.
+    duplicates exactly like StopWordsRemover. The list enters the plan
+    as one joined literal split on ``,``: one py4j call per plan,
+    whatever the list's length.
     """
-    sw = F.array(*[F.lit(s) for s in (stopwords or ENGLISH_STOPWORDS)])
+    words = stopwords or ENGLISH_STOPWORDS
+    if any("," in w for w in words):
+        raise ValueError("remove_stopwords: a stop word contains ','")
+    sw = F.split(F.lit(",".join(words)), ",")
     return F.filter(tokens, lambda t: ~F.array_contains(sw, t))
 
 

@@ -43,6 +43,8 @@ from collections import Counter
 
 import numpy as np
 from pyspark.errors import ArithmeticException
+from pyspark.ml import PipelineModel
+from pyspark.ml.feature import SQLTransformer
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -625,7 +627,7 @@ def gboost_fit(
 ) -> DataFrame:
     """Fit ``rounds`` second-order boosted depth-1 trees on ``label``;
     return the model table (round, feature, thr, gain, w_le, w_gt).
-    A scorer applies f(x) = Σ_t η·(w_le if x ≤ thr else w_gt).
+    :func:`score_column` applies f(x) = Σ_t η·(w_le if x ≤ thr else w_gt).
 
     ``loss`` picks the per-row (g, h) pair — everything downstream
     (grid, gain, regularized leaves, DECIMAL sums, quantization) is
@@ -675,8 +677,8 @@ def gboost_depth2_fit(
     """Fit ``rounds`` second-order boosted DEPTH-2 trees: root split
     by the regularized gain, one child split per side (feature
     interactions — the capability XGBoost's max_depth>1 buys), four
-    regularized leaf weights −soft(G, α)/(H + λ). Scorer applies
-    f(x) = Σ_t η·w_leaf through the two-level split path.
+    regularized leaf weights −soft(G, α)/(H + λ). :func:`score_column`
+    applies f(x) = Σ_t η·w_leaf through the two-level split path.
 
     Degenerate-root guard (the adaboost_depth2 discipline): a side
     with no rows gets the TRIVIAL child — the root threshold with
@@ -692,3 +694,85 @@ def gboost_depth2_fit(
         for r, lt_, rt_ in [(tree[1], tree[2], tree[3])]
     ]
     return pairs.sparkSession.createDataFrame(rows, GB2_SCHEMA)
+
+
+# ---------------------------------------------------------------------------
+# The scorer: f(x) = Σ_t η·w_leaf down each round's split path, for the
+# model rows of every gradient fit — GB_SCHEMA depth-1 rows, GB2_SCHEMA
+# depth-2 rows and gboost_deep's GBD_SCHEMA heap-numbered rows.
+
+
+def _double(v: float) -> str:
+    """``v`` as Spark SQL text that reads back bit for bit: ``repr``
+    with the ``D`` suffix keeps -0.0, which ``CAST(-0.0 AS DOUBLE)``
+    parses through DECIMAL to +0.0; NaN and ±inf have no literal and
+    go through a cast of their string name."""
+    if math.isnan(v):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(v):
+        return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
+    return f"{v!r}D"
+
+
+def _split(feature: str, thr: float, le: str, gt: str) -> str:
+    """One split: NULL compares to NULL, so it takes the ``gt`` side."""
+    return f"CASE WHEN `{feature}` <= {_double(thr)} THEN {le} ELSE {gt} END"
+
+
+def _stump(p: dict) -> str:
+    """A split with its two leaf weights (w_le, w_gt)."""
+    return _split(p["feature"], p["thr"], _double(p["w_le"]), _double(p["w_gt"]))
+
+
+def _score_expr(model_rows) -> str:
+    """The ensemble's score as one SQL expression: per round the tree
+    walk times η, summed left to right in round order (0.0 for no
+    rounds). The shape comes from the row fields; a heap-numbered
+    model's depth from its largest node."""
+    rows = sorted((r.asDict() for r in model_rows), key=lambda r: r["round"])
+    if not rows:
+        return "0.0D"
+    if "node" in rows[0]:
+        leaf_level = 2 ** (max(r["node"] for r in rows).bit_length() - 1)
+        by_round: dict[int, dict[int, dict]] = {}
+        for r in rows:
+            by_round.setdefault(r["round"], {})[r["node"]] = r
+
+        def walk(tree: dict[int, dict], n: int) -> str:
+            p = tree[n]
+            if n >= leaf_level:
+                return _stump(p)
+            return _split(
+                p["feature"], p["thr"], walk(tree, 2 * n), walk(tree, 2 * n + 1)
+            )
+
+        trees = [walk(tree, 1) for tree in by_round.values()]
+    elif "f0" in rows[0]:
+        trees = [
+            _split(
+                r["f0"], r["t0"],
+                _split(r["fl"], r["tl"], _double(r["w_ll"]), _double(r["w_lr"])),
+                _split(r["fr"], r["tr"], _double(r["w_rl"]), _double(r["w_rr"])),
+            )
+            for r in rows
+        ]
+    else:
+        trees = [_stump(r) for r in rows]
+    return " + ".join(f"({_double(GB_ETA)} * {t})" for t in trees)
+
+
+def score_column(model_rows) -> Column:
+    """The fitted ensemble's raw score f(x) = Σ_t η·w_leaf as a column
+    expression over the model's feature columns; ``model_rows`` are the
+    collected rows of gboost_fit, gboost_depth2_fit, gboost_deep_fit or
+    gboost_hist_fit. Row-local: the trees ship as literal CASE terms,
+    no join, no UDF."""
+    return F.expr(_score_expr(model_rows))
+
+
+def model_artifact(model_rows) -> PipelineModel:
+    """The same score as an MLWritable model for
+    operators/registry.ModelRegistry: one SQLTransformer that appends
+    ``score`` (the expression of :func:`score_column`) to its input."""
+    stmt = f"SELECT *, {_score_expr(model_rows)} AS score FROM __THIS__"
+    return PipelineModel(stages=[SQLTransformer(statement=stmt)])

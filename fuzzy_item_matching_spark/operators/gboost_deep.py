@@ -102,8 +102,9 @@ def gboost_deep_fit(
     return the model table (round, node, feature, thr, gain, w_le,
     w_gt) with one row per heap node 1..2^depth−1 per round. Leaf
     weights are meaningful at the last level (w_le = w_gt on
-    unsplittable/empty nodes); a scorer walks the split path and adds
-    η·w_leaf. One Spark job (the collect), at any rounds or depth."""
+    unsplittable/empty nodes); boosting.score_column walks the split
+    path and adds η·w_leaf. One Spark job (the collect), at any rounds
+    or depth."""
     if subsample < 1.0 and row_key is None:
         raise ValueError("gboost_deep_fit: subsample < 1 requires row_key")
     return _model(pairs, _grow(

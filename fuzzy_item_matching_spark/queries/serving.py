@@ -411,12 +411,9 @@ def serve_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from pyspark.ml import Pipeline as MLPipeline
-    from pyspark.ml.feature import SQLTransformer
-
     from fuzzy_item_matching_spark.operators.boosting import (
-        GB_ETA,
         gboost_fit,
+        model_artifact,
     )
     from fuzzy_item_matching_spark.operators.lsh import lsh_sqdist_join
     from fuzzy_item_matching_spark.operators.registry import (
@@ -475,37 +472,13 @@ def serve_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()  # feeds the fit's collect AND the scoring
     )
 
-    model_rows = sorted(
-        gboost_fit(labeled, _E2E_FEATS, rounds=_E2E_ROUNDS).collect(),
-        key=lambda r: r["round"],
-    )
-    # CAST every literal to DOUBLE: a bare 0.3 in Spark SQL parses as
-    # DECIMAL and the whole sum would run in decimal arithmetic, while
-    # the oracle multiplies the fit CTE's DOUBLE columns — 1-ulp drift.
-    terms = [
-        f"(CAST({GB_ETA!r} AS DOUBLE) * (CASE"
-        f" WHEN {r['feature']} <= CAST({r['thr']!r} AS DOUBLE)"
-        f" THEN CAST({r['w_le']!r} AS DOUBLE)"
-        f" ELSE CAST({r['w_gt']!r} AS DOUBLE) END))"
-        for r in model_rows
-    ]
-    stmt = (
-        "SELECT id_a, id_b, label, "
-        + " + ".join(terms)
-        + " AS score FROM __THIS__"
-    )
+    model_rows = gboost_fit(labeled, _E2E_FEATS, rounds=_E2E_ROUNDS).collect()
 
     root = os.path.join(SCRATCH, "registry_e2e")
     shutil.rmtree(root, ignore_errors=True)
     reg = ModelRegistry(root)
-    artifact = MLPipeline(stages=[SQLTransformer(statement=stmt)]).fit(
-        spark.createDataFrame(
-            [(0, 0, 0, 0.0, 0.0, 0.0)],
-            ["id_a", "id_b", "label", *_E2E_FEATS],
-        )
-    )
     name = "match_model_e2e"
-    v1 = reg.register(name, artifact)
+    v1 = reg.register(name, model_artifact(model_rows))
     reg.promote(name, v1, PRODUCTION)
     model = reg.load(name, stage=PRODUCTION)
     n_versions = len(reg.versions(name))

@@ -15,6 +15,7 @@ metrics — are relational aggregations and belong in the engine:
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -2736,29 +2737,26 @@ def train_word2vec_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _ADA_ROUNDS = 5
 
-# Fit-once memo shared by train_adaboost_stumps and train_adaboost_score
-# (r06 VERDICT: the score query used to re-run the whole K-round fit —
-# K more crossJoin-aggregate passes + K collects — whenever fit and
-# serve ran in one session). The fitted model is 5 plain-Python rows,
-# session-independent; keyed by (sf_dir, rounds) like a persisted model
-# table a scorer would read. At 100 TB the equivalent is writing the
-# model table once (operators/registry.py) and scoring from it.
+# Each boosted model below is fitted once per (session, sf_dir, config)
+# and its rows shared by its fit, serve and eval queries. A fit is one
+# collect of the pair frame plus a round loop on the driver, about 0.6 s
+# at sf0.1; refitting in every query doubled the warm time of the
+# boosting queries (docs/SCALE_NOTES.md, "One boosted-tree scorer").
+_fit_once = functools.cache
+
 _ADA_SCHEMA = (
     "round int, feature string, thr double, pol int, err double,"
     " alpha double"
 )
-_ADA_FIT_MEMO: dict[tuple[str, int], list] = {}
 
 
+@_fit_once
 def _ada_fit_rows(spark: SparkSession, sf_dir: str) -> list:
     from fuzzy_item_matching_spark.operators.boosting import adaboost_stumps
 
-    key = (sf_dir, _ADA_ROUNDS)
-    if key not in _ADA_FIT_MEMO:
-        _ADA_FIT_MEMO[key] = adaboost_stumps(
-            _lr_pairs(spark, sf_dir), ["x1", "x2", "x3"], rounds=_ADA_ROUNDS
-        ).collect()
-    return _ADA_FIT_MEMO[key]
+    return adaboost_stumps(
+        _lr_pairs(spark, sf_dir), ["x1", "x2", "x3"], rounds=_ADA_ROUNDS
+    ).collect()
 
 
 @query("train_adaboost_stumps")
@@ -2831,21 +2829,14 @@ def train_adaboost_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _ADA_D2_ROUNDS = 3
 
-# fit-once memo shared by the depth-2 fit and score queries — the same
-# persisted-model-table discipline as _ADA_FIT_MEMO
-_ADA_D2_MEMO: dict[tuple[str, int], list] = {}
 
-
+@_fit_once
 def _ada_d2_rows(spark: SparkSession, sf_dir: str) -> list:
     from fuzzy_item_matching_spark.operators.boosting import adaboost_depth2
 
-    key = (sf_dir, _ADA_D2_ROUNDS)
-    if key not in _ADA_D2_MEMO:
-        _ADA_D2_MEMO[key] = adaboost_depth2(
-            _lr_pairs(spark, sf_dir), ["x1", "x2", "x3"],
-            rounds=_ADA_D2_ROUNDS,
-        ).collect()
-    return _ADA_D2_MEMO[key]
+    return adaboost_depth2(
+        _lr_pairs(spark, sf_dir), ["x1", "x2", "x3"], rounds=_ADA_D2_ROUNDS
+    ).collect()
 
 
 @query("train_adaboost_depth2")
@@ -2918,20 +2909,14 @@ def train_adaboost_d2_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _GB_ROUNDS = 3
 
-# fit-once memo shared by the gradient-boosting fit and score queries —
-# the same persisted-model-table discipline as _ADA_FIT_MEMO
-_GB_MEMO: dict[tuple[str, int], list] = {}
 
-
+@_fit_once
 def _gb_rows(spark: SparkSession, sf_dir: str) -> list:
     from fuzzy_item_matching_spark.operators.boosting import gboost_fit
 
-    key = (sf_dir, _GB_ROUNDS)
-    if key not in _GB_MEMO:
-        _GB_MEMO[key] = gboost_fit(
-            _lr_pairs(spark, sf_dir), ["x1", "x2", "x3"], rounds=_GB_ROUNDS
-        ).collect()
-    return _GB_MEMO[key]
+    return gboost_fit(
+        _lr_pairs(spark, sf_dir), ["x1", "x2", "x3"], rounds=_GB_ROUNDS
+    ).collect()
 
 
 @query("train_gboost_fit")
@@ -2981,18 +2966,10 @@ def train_gboost_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     as literal CASE columns — no join, no UDF. The oracle re-runs the
     unrolled fit AND the scoring, verifying both ends together.
     """
-    from fuzzy_item_matching_spark.operators.boosting import GB_ETA
-
     pairs = _lr_pairs(spark, sf_dir)
-    score = None
-    for m in _gb_rows(spark, sf_dir):
-        term = F.lit(GB_ETA) * F.when(
-            F.col(m.feature) <= F.lit(m.thr), F.lit(m.w_le)
-        ).otherwise(F.lit(m.w_gt))
-        score = term if score is None else score + term
-    scored = pairs.select("id_a", "id_b", score.alias("score")).withColumn(
-        "pred", F.when(F.col("score") > 0, 1).otherwise(0)
-    )
+    scored = pairs.select(
+        "id_a", "id_b", _gb_margin(spark, sf_dir).alias("score")
+    ).withColumn("pred", F.when(F.col("score") > 0, 1).otherwise(0))
     return scored.orderBy(F.desc("score"), F.asc("id_a")).limit(20)
 
 
@@ -3139,22 +3116,16 @@ def train_robust_scaler(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Gradient-boosting model analytics: feature importance, Platt
-# calibration, PR-curve threshold sweep — all on the shared _GB_MEMO
+# calibration, PR-curve threshold sweep — all on the shared _gb_rows
 # fit and its unrolled oracle CTEs.
 
 
 def _gb_margin(spark: SparkSession, sf_dir: str):
-    """Per-pair raw ensemble score as a literal CASE column (the
-    train_gboost_score expression, shared)."""
-    from fuzzy_item_matching_spark.operators.boosting import GB_ETA
+    """Per-pair raw ensemble score of the depth-1 model as a literal
+    CASE column (operators/boosting.score_column)."""
+    from fuzzy_item_matching_spark.operators.boosting import score_column
 
-    score = None
-    for m in _gb_rows(spark, sf_dir):
-        term = F.lit(GB_ETA) * F.when(
-            F.col(m.feature) <= F.lit(m.thr), F.lit(m.w_le)
-        ).otherwise(F.lit(m.w_gt))
-        score = term if score is None else score + term
-    return score
+    return score_column(_gb_rows(spark, sf_dir))
 
 
 @query("train_gboost_importance")
@@ -3163,7 +3134,7 @@ def train_gboost_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensemble — XGBoost's `get_score(importance_type='total_gain')`,
     the model-explanation step after the reference's fit (`03_Train &
     Deploy Model.py:176-192`): per feature the split count, summed
-    split gain, and its share of all gain. Reads the shared _GB_MEMO
+    split gain, and its share of all gain. Reads the shared _gb_rows
     model (fit once per session); the aggregation runs in Spark over
     the model table with DECIMAL(38,18) gain sums so the division
     inputs are bit-identical to the oracle's, which re-runs the whole
@@ -3201,7 +3172,7 @@ def train_platt_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw margins: fit p = sigmoid(a·score + b) by {t} full-batch GD
     steps on the log loss — the classical probability calibration for
     margin classifiers, complementing train_isotonic_calibration's
-    non-parametric fit. The score column is the shared _GB_MEMO model
+    non-parametric fit. The score column is the shared _gb_rows model
     as literal CASE terms (no join); each GD step is ONE map-side-
     combinable 1-row aggregate over the persisted pair frame, state
     (a, b) collected per step (the logreg-GD budget) and re-injected
@@ -3312,21 +3283,17 @@ def train_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _GB2_ROUNDS = 2
-_GB2_MEMO: dict[tuple[str, int], list] = {}
 
 
+@_fit_once
 def _gb2_rows(spark: SparkSession, sf_dir: str) -> list:
     from fuzzy_item_matching_spark.operators.boosting import (
         gboost_depth2_fit,
     )
 
-    key = (sf_dir, _GB2_ROUNDS)
-    if key not in _GB2_MEMO:
-        _GB2_MEMO[key] = gboost_depth2_fit(
-            _lr_pairs(spark, sf_dir), ["x1", "x2", "x3"],
-            rounds=_GB2_ROUNDS,
-        ).collect()
-    return _GB2_MEMO[key]
+    return gboost_depth2_fit(
+        _lr_pairs(spark, sf_dir), ["x1", "x2", "x3"], rounds=_GB2_ROUNDS
+    ).collect()
 
 
 @query("train_gboost_depth2")
@@ -3361,22 +3328,10 @@ def train_gboost_d2_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sf_dir, rounds) memo — fit and serve cost one fit per session;
     trees ship as literal nested CASE columns (row-local, no join).
     The oracle re-runs the unrolled fit AND the scoring."""
-    from fuzzy_item_matching_spark.operators.boosting import GB_ETA
+    from fuzzy_item_matching_spark.operators.boosting import score_column
 
     pairs = _lr_pairs(spark, sf_dir)
-    score = None
-    for m in _gb2_rows(spark, sf_dir):
-        term = F.lit(GB_ETA) * F.when(
-            F.col(m.f0) <= F.lit(m.t0),
-            F.when(F.col(m.fl) <= F.lit(m.tl), F.lit(m.w_ll)).otherwise(
-                F.lit(m.w_lr)
-            ),
-        ).otherwise(
-            F.when(F.col(m.fr) <= F.lit(m.tr), F.lit(m.w_rl)).otherwise(
-                F.lit(m.w_rr)
-            )
-        )
-        score = term if score is None else score + term
+    score = score_column(_gb2_rows(spark, sf_dir))
     scored = pairs.select("id_a", "id_b", score.alias("score")).withColumn(
         "pred", F.when(F.col("score") > 0, 1).otherwise(0)
     )
@@ -3389,25 +3344,16 @@ def train_gboost_d2_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _GBD_ROUNDS, _GBD_DEPTH = 2, 3
 
-# fit-once memo shared across the round-9 booster fits and their
-# serve/eval halves — the _GB_MEMO discipline, keyed by the full
-# config so exact/hist/stochastic variants coexist
-_GBD_MEMO: dict[tuple, list] = {}
 
-
+@_fit_once
 def _gbd_rows(spark: SparkSession, sf_dir: str, kind: str, **kw) -> list:
     from fuzzy_item_matching_spark.operators.gboost_deep import (
         gboost_deep_fit,
         gboost_hist_fit,
     )
 
-    key = (sf_dir, kind, tuple(sorted(kw.items())))
-    if key not in _GBD_MEMO:
-        fit = gboost_hist_fit if kind == "hist" else gboost_deep_fit
-        _GBD_MEMO[key] = fit(
-            _lr_pairs(spark, sf_dir), ["x1", "x2", "x3"], **kw
-        ).collect()
-    return _GBD_MEMO[key]
+    fit = gboost_hist_fit if kind == "hist" else gboost_deep_fit
+    return fit(_lr_pairs(spark, sf_dir), ["x1", "x2", "x3"], **kw).collect()
 _GBS_ROUNDS = 3
 _GBS = dict(
     subsample=0.7,
@@ -3533,29 +3479,12 @@ def train_gboost_d3_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     serve cost one fit per session; the trees ship as literal nested
     CASE columns (row-local, no join, no UDF). The oracle re-runs the
     unrolled depth-3 fit AND the scoring, verifying both ends."""
-    from fuzzy_item_matching_spark.operators.boosting import GB_ETA
+    from fuzzy_item_matching_spark.operators.boosting import score_column
 
     pairs = _lr_pairs(spark, sf_dir)
-    rows = _gbd_rows(
-        spark, sf_dir, "exact", rounds=_GBD_ROUNDS, depth=_GBD_DEPTH
+    score = score_column(
+        _gbd_rows(spark, sf_dir, "exact", rounds=_GBD_ROUNDS, depth=_GBD_DEPTH)
     )
-    by_round: dict[int, dict[int, object]] = {}
-    for m in rows:
-        by_round.setdefault(m.round, {})[m.node] = m
-
-    def walk(picks, n, lc):
-        pk = picks[n]
-        go_le = F.col(pk.feature) <= F.lit(pk.thr)
-        if lc == _GBD_DEPTH - 1:
-            return F.when(go_le, F.lit(pk.w_le)).otherwise(F.lit(pk.w_gt))
-        return F.when(go_le, walk(picks, 2 * n, lc + 1)).otherwise(
-            walk(picks, 2 * n + 1, lc + 1)
-        )
-
-    score = None
-    for t in sorted(by_round):
-        term = F.lit(GB_ETA) * walk(by_round[t], 1, 0)
-        score = term if score is None else score + term
     scored = pairs.select("id_a", "id_b", score.alias("score")).withColumn(
         "pred", F.when(F.col("score") > 0, 1).otherwise(0)
     )
@@ -3596,33 +3525,14 @@ def train_split_finder_bakeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact DECIMAL-numerator statistic of train_roc_auc with a
     model-partitioned cumulative window. The oracle replays BOTH
     complete fits and both AUCs in one statement."""
-    from fuzzy_item_matching_spark.operators.boosting import GB_ETA
+    from fuzzy_item_matching_spark.operators.boosting import score_column
 
     pairs = _lr_pairs(spark, sf_dir)
     arms = []
     for name, kind in (("exact_d3", "exact"), ("hist_d3", "hist")):
-        rows = _gbd_rows(
-            spark, sf_dir, kind, rounds=_GBD_ROUNDS, depth=_GBD_DEPTH
+        score = score_column(
+            _gbd_rows(spark, sf_dir, kind, rounds=_GBD_ROUNDS, depth=_GBD_DEPTH)
         )
-        by_round: dict[int, dict[int, object]] = {}
-        for m in rows:
-            by_round.setdefault(m.round, {})[m.node] = m
-
-        def walk(picks, n, lc):
-            pk = picks[n]
-            go_le = F.col(pk.feature) <= F.lit(pk.thr)
-            if lc == _GBD_DEPTH - 1:
-                return F.when(go_le, F.lit(pk.w_le)).otherwise(
-                    F.lit(pk.w_gt)
-                )
-            return F.when(go_le, walk(picks, 2 * n, lc + 1)).otherwise(
-                walk(picks, 2 * n + 1, lc + 1)
-            )
-
-        score = None
-        for t in sorted(by_round):
-            term = F.lit(GB_ETA) * walk(by_round[t], 1, 0)
-            score = term if score is None else score + term
         arms.append(
             pairs.select(
                 F.lit(name).alias("model"),
@@ -3685,8 +3595,6 @@ def train_permutation_importance(
     and one variant-partitioned AUC — one plan, no per-feature
     refits. The oracle replays the fit, the permutation ranks, and
     every AUC."""
-    from fuzzy_item_matching_spark.operators.boosting import GB_ETA
-
     feats = ["x1", "x2", "x3"]
     pairs = _lr_pairs(spark, sf_dir)
     w_id = Window.orderBy("id_a")
@@ -3720,13 +3628,7 @@ def train_permutation_importance(
     u = arms[0]
     for a in arms[1:]:
         u = u.unionByName(a)
-    score = None
-    for m in _gb_rows(spark, sf_dir):
-        term = F.lit(GB_ETA) * F.when(
-            F.col(m.feature) <= F.lit(m.thr), F.lit(m.w_le)
-        ).otherwise(F.lit(m.w_gt))
-        score = term if score is None else score + term
-    sc = u.select("variant", "label", score.alias("score"))
+    sc = u.select("variant", "label", _gb_margin(spark, sf_dir).alias("score"))
     g = sc.groupBy("variant", "score").agg(
         F.sum("label").alias("pos_g"),
         (F.count(F.lit(1)) - F.sum("label")).alias("neg_g"),
@@ -3814,20 +3716,17 @@ train_ece.__doc__ = train_ece.__doc__.format(b=_CAL_BINS)
 _GBES_ROUNDS = 4
 _GBES_SPLIT = 0.7  # train fraction (content-keyed on id_a)
 _GBES_Q = 2.0**30  # val-loss fixed-point quantum
-_GBES_MEMO: dict[str, list] = {}
 
+
+@_fit_once
 def _gbes_rows(spark: SparkSession, sf_dir: str) -> list:
     from fuzzy_item_matching_spark.functions.sampling import keyed_uniform
     from fuzzy_item_matching_spark.operators.boosting import gboost_fit
 
-    if sf_dir not in _GBES_MEMO:
-        train = _lr_pairs(spark, sf_dir).filter(
-            keyed_uniform(F.col("id_a"), 42) < _GBES_SPLIT
-        )
-        _GBES_MEMO[sf_dir] = gboost_fit(
-            train, ["x1", "x2", "x3"], rounds=_GBES_ROUNDS
-        ).collect()
-    return _GBES_MEMO[sf_dir]
+    train = _lr_pairs(spark, sf_dir).filter(
+        keyed_uniform(F.col("id_a"), 42) < _GBES_SPLIT
+    )
+    return gboost_fit(train, ["x1", "x2", "x3"], rounds=_GBES_ROUNDS).collect()
 
 
 @query("train_gboost_early_stop")
@@ -3853,18 +3752,15 @@ def train_gboost_early_stop(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums (order-insensitive); the argmin compares the exact quantized
     losses, so the flag cannot flip on ulp noise."""
     from fuzzy_item_matching_spark.functions.sampling import keyed_uniform
-    from fuzzy_item_matching_spark.operators.boosting import GB_ETA
+    from fuzzy_item_matching_spark.operators.boosting import score_column
 
     model = _gbes_rows(spark, sf_dir)
     val = _lr_pairs(spark, sf_dir).filter(
         ~(keyed_uniform(F.col("id_a"), 42) < _GBES_SPLIT)
     ).select(F.col("label").cast("double").alias("y"), "x1", "x2", "x3")
     fs = {0: F.lit(0.0)}
-    for t, m in enumerate(model, start=1):
-        term = F.lit(GB_ETA) * F.when(
-            F.col(m.feature) <= F.lit(m.thr), F.lit(m.w_le)
-        ).otherwise(F.lit(m.w_gt))
-        fs[t] = fs[t - 1] + term
+    for t in range(1, len(model) + 1):
+        fs[t] = fs[t - 1] + score_column(model[t - 1 : t])
     aggs = []
     for t in range(0, _GBES_ROUNDS + 1):
         f = fs[t]
@@ -4459,36 +4355,29 @@ _RF_FRAC = 0.632  # keyed subsample rate per tree (subagging)
 _RF_SEED0 = 100  # tree b draws with seed _RF_SEED0 + b
 _RF_COMBOS = (("x1", "x2"), ("x2", "x3"), ("x1", "x3"))  # mtry=2 rotation
 
-# fit-once memo shared by the model and OOB-eval queries (the _GB_MEMO
-# discipline: the model table is tiny — one stump row per tree)
-_RF_MEMO: dict[str, list] = {}
 
+@_fit_once
 def _rf_rows(spark: SparkSession, sf_dir: str) -> list:
     from fuzzy_item_matching_spark.functions.sampling import keyed_uniform
     from fuzzy_item_matching_spark.operators.boosting import gboost_fit
 
-    if sf_dir not in _RF_MEMO:
-        rows = []
-        pairs = _lr_pairs(spark, sf_dir)
-        for b in range(_RF_TREES):
-            sub = pairs.filter(
-                keyed_uniform(F.col("id_a"), seed=_RF_SEED0 + b)
-                < F.lit(_RF_FRAC)
-            )
-            [m] = gboost_fit(
-                sub,
-                list(_RF_COMBOS[b % len(_RF_COMBOS)]),
-                rounds=1,
-                lam=1.0,
-                alpha=0.0,
-                gamma=0.0,
-                loss="squared",
-            ).collect()
-            rows.append(
-                (b, m["feature"], m["thr"], m["gain"], m["w_le"], m["w_gt"])
-            )
-        _RF_MEMO[sf_dir] = rows
-    return _RF_MEMO[sf_dir]
+    rows = []
+    pairs = _lr_pairs(spark, sf_dir)
+    for b in range(_RF_TREES):
+        sub = pairs.filter(
+            keyed_uniform(F.col("id_a"), seed=_RF_SEED0 + b) < F.lit(_RF_FRAC)
+        )
+        [m] = gboost_fit(
+            sub,
+            list(_RF_COMBOS[b % len(_RF_COMBOS)]),
+            rounds=1,
+            lam=1.0,
+            alpha=0.0,
+            gamma=0.0,
+            loss="squared",
+        ).collect()
+        rows.append((b, m["feature"], m["thr"], m["gain"], m["w_le"], m["w_gt"]))
+    return rows
 
 
 @query("train_rf_stumps")
