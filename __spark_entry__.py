@@ -68,10 +68,10 @@ def oracle_sql() -> dict[str, str]:
     bucketing, streaming state, seeded sampling) are omitted and get a
     rows-only check, with stronger checks in tests/.
 
-    The oracles live outside the engine: inline strings on
-    ``queries.Query.oracle`` and the generated DuckDB twins in the
-    root ``oracles/`` package. ``oracles.oracle_sql()`` merges both and
-    is the one way to read them; this returns its dict.
+    The oracles live outside the engine, each registered under its
+    query's name in the root ``oracles/`` package.
+    ``oracles.oracle_sql()`` is the one way to read them; this returns
+    its dict.
     """
     from oracles import oracle_sql as _oracle_sql
 

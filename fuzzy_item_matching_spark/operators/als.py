@@ -131,6 +131,8 @@ def als_rank2_fit(
                 "f2",
             )
         )
+    # the trace reads only the eager checkpoints
+    ratings.unpersist()
     out = traces[0]
     for tr in traces[1:]:
         out = out.unionByName(tr)

@@ -114,6 +114,7 @@ def fm_gd_fit(
     if not pw.take(1):
         # the gboost guard's convention: an all-NULL weight trace from
         # empty-sum gradients would be a silent degenerate
+        pw.unpersist()
         raise ValueError(
             "fm fit: empty training frame — no gradient exists"
         )
@@ -148,6 +149,8 @@ def fm_gd_fit(
                 ).alias("coef", "weight"),
             )
         )
+    # the trace reads only the eager checkpoints
+    pw.unpersist()
     out = traces[0]
     for tr in traces[1:]:
         out = out.unionByName(tr)

@@ -121,6 +121,8 @@ def logistic_gd_fit(
                 ).alias("coef", "weight"),
             )
         )
+    # the trace reads only the eager checkpoints
+    pw.unpersist()
     out = traces[0]
     for tr in traces[1:]:
         out = out.unionByName(tr)
@@ -206,6 +208,8 @@ def sparse_logistic_gd_fit(
     if n_features is None:
         mx = post.agg(F.max("j")).collect()[0][0]
         if mx is None:
+            pw.unpersist()
+            post.unpersist()
             raise ValueError(
                 "sparse_logistic_gd_fit: postings frame is empty — "
                 "pass n_features explicitly or provide postings"
@@ -262,6 +266,9 @@ def sparse_logistic_gd_fit(
             .localCheckpoint(eager=True)
         )
         traces.append(w.select(F.lit(t).alias("iter"), "j", "w"))
+    # the trace reads only the eager checkpoints
+    pw.unpersist()
+    post.unpersist()
     out = traces[0]
     for tr in traces[1:]:
         out = out.unionByName(tr)
@@ -322,6 +329,8 @@ def quantile_gd_fit(
                 ).alias("coef", "weight"),
             )
         )
+    # the trace reads only the eager checkpoints
+    pw.unpersist()
     out = traces[0]
     for tr in traces[1:]:
         out = out.unionByName(tr)

@@ -4,17 +4,14 @@ Every operator from SURVEY.md §2 (plus the scale extensions: dedup,
 similarity search, text analysis) is exposed as a named query:
 
     (spark, sf_dir) -> DataFrame            # Spark-first implementation
-    oracle: str | None                      # inline DuckDB SQL, if any
 
 Each query and its DuckDB oracle run at sf0.01 and are compared on
 row count, schema, and an order-insensitive value hash.
-Oracles are not engine code: read them only through
-``oracles.oracle_sql()`` (the root ``oracles/`` package, which this
-package never imports). It merges the inline ``Query.oracle`` strings
-with the oracles generated by the DuckDB twins in ``oracles/``, keyed by
-query name. Queries whose semantics are not SQL-expressible (LSH
-bucketing, streaming state) have neither → rows-only check, with
-stronger checks in tests/.
+Oracles are not engine code: they live in the root ``oracles/`` package
+(which this package never imports), registered under the query's name,
+and are read only through ``oracles.oracle_sql()``. Queries whose
+semantics are not SQL-expressible (LSH bucketing, streaming state) have
+none → rows-only check, with stronger checks in tests/.
 
 Determinism rules for oracle-checked queries:
 - every computed column is aliased identically in Spark and SQL;
@@ -26,6 +23,7 @@ Determinism rules for oracle-checked queries:
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -38,24 +36,32 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class Query:
     name: str
     fn: QueryFn
-    oracle: str | None  # inline DuckDB SQL; read oracles via oracles.oracle_sql()
     doc: str = ""
 
 
 REGISTRY: dict[str, Query] = {}
 
 
-def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Register ``fn`` as a named engine query with an optional inline
-    oracle (the generated ones register in ``oracles/`` instead)."""
+def query(name: str) -> Callable[[QueryFn], QueryFn]:
+    """Register ``fn`` as a named engine query (its oracle, if any,
+    registers under the same name in ``oracles/``)."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle, doc=fn.__doc__ or "")
+        REGISTRY[name] = Query(name=name, fn=fn, doc=fn.__doc__ or "")
         return fn
 
     return deco
+
+
+# A fitted model's rows are computed once per (session, sf_dir, config)
+# and shared by its fit, serve and eval queries. The config is module
+# constants, so the cache key is the call's (spark, sf_dir, ...) args.
+# A fit is one collect plus a driver loop; refitting in every query
+# doubled the warm time of the boosting queries (docs/SCALE_NOTES.md,
+# "One boosted-tree scorer").
+fit_once = functools.cache
 
 
 # The driver verifies queries in registry order under a bounded budget

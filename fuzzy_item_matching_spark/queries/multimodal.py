@@ -28,14 +28,7 @@ from fuzzy_item_matching_spark.queries import query
 from fuzzy_item_matching_spark.tables import load_table
 
 
-@query(
-    "mm_binary_meta",
-    oracle="""
-    SELECT doc_id, 'application/octet-stream' AS mime,
-           length(text) AS n_bytes
-    FROM documents
-    """,
-)
+@query("mm_binary_meta")
 def mm_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary payload + typed metadata projection. Metadata lives in
     ordinary columns → prunable/filterable without touching payload
@@ -49,47 +42,7 @@ def mm_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "mm_image_features",
-    oracle="""
-    WITH dims AS (
-      SELECT doc_id, text, length(text) AS tl,
-             (ascii(substring(text, 1, 1)) % 8 + 1) * 8 AS w,
-             (ascii(substring(text, 2, 1)) % 8 + 1) * 8 AS h
-      FROM documents
-    ),
-    geo AS (
-      SELECT doc_id, text, tl, w, h,
-             3 * w * h AS needed,
-             (3 * w + 3) // 4 * 4 AS stride
-      FROM dims
-    ),
-    sums AS (
-      SELECT g.doc_id,
-             SUM(ascii(substring(g.text, c.i, 1))) AS sum_all,
-             SUM(CASE WHEN c.i <= g.needed % g.tl
-                      THEN ascii(substring(g.text, c.i, 1)) ELSE 0 END)
-               AS sum_prefix
-      FROM geo g, LATERAL (
-        SELECT unnest(generate_series(1, g.tl)) AS i
-      ) c
-      WHERE g.tl > 0
-      GROUP BY g.doc_id
-    )
-    SELECT g.doc_id,
-           CAST(54 + g.stride * g.h AS INT) AS n_bytes,
-           CAST(g.w AS INT) AS width,
-           CAST(g.h AS INT) AS height,
-           g.w::DOUBLE / g.h AS aspect,
-           CAST(CASE WHEN g.tl = 0 THEN 0
-                     ELSE (g.needed // g.tl) * s.sum_all + s.sum_prefix
-                END AS BIGINT) AS sum_px,
-           (CASE WHEN g.tl = 0 THEN 0
-                 ELSE (g.needed // g.tl) * s.sum_all + s.sum_prefix
-            END)::DOUBLE / g.needed AS mean_px
-    FROM geo g LEFT JOIN sums s ON g.doc_id = s.doc_id
-    """,
-)
+@query("mm_image_features")
 def mm_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL bytes→pixels decode via mapInPandas: each document's bytes
     are packed into a genuine 24-bit BMP container (fixture builder,
@@ -106,16 +59,7 @@ def mm_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_image_features(d, real_decode=True)
 
 
-@query(
-    "mm_frame_sample",
-    oracle="""
-    SELECT doc_id, i - 1 AS frame_idx, (i - 1) * 64 AS byte_offset
-    FROM (
-      SELECT doc_id, unnest(generate_series(1, length(text) // 64 + 1)) AS i
-      FROM documents
-    )
-    """,
-)
+@query("mm_frame_sample")
 def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame-sampling index expansion (video decode prep): bounded
     posexplode per document — fanout is n_bytes/stride, JVM-side."""
@@ -124,33 +68,7 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sample_frames(meta)
 
 
-@query(
-    "mm_audio_windows",
-    oracle="""
-    WITH w AS (
-      SELECT doc_id, text,
-             unnest(generate_series(0,
-               CAST(floor((length(text) - 1) / 32.0) AS INT))) AS win
-      FROM documents WHERE length(text) > 0
-    ),
-    s AS (
-      SELECT doc_id, win,
-             ascii(substring(text, win * 32 + i, 1)) AS v
-      FROM (
-        SELECT doc_id, win, text,
-               unnest(generate_series(1,
-                 least(32, length(text) - win * 32))) AS i
-        FROM w
-      )
-    )
-    SELECT doc_id, win,
-           CAST(COUNT(*) AS INT) AS n_samples,
-           CAST(SUM(v) AS BIGINT) AS sum_v,
-           CAST(MAX(v) AS INT) AS peak,
-           CAST(SUM(v) AS DOUBLE) / COUNT(*) AS mean_v
-    FROM s GROUP BY doc_id, win
-    """,
-)
+@query("mm_audio_windows")
 def mm_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL bytes→samples decode + per-32-sample-frame stats in ONE
     Arrow hop: each document's bytes are packed into a genuine
@@ -168,59 +86,7 @@ def mm_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "mm_phash_pairs",
-    oracle="""
-    WITH g AS (
-      SELECT doc_id, text, length(text) AS tl,
-             (ascii(substring(text, 1, 1)) % 8 + 1) * 8 AS w,
-             (ascii(substring(text, 2, 1)) % 8 + 1) * 8 AS h
-      FROM documents WHERE length(text) > 0
-    ),
-    samp AS (
-      SELECT doc_id, u.i AS idx,
-             ascii(substring(text,
-               ((((u.i // 8) * h) // 8) * 3 * w
-                + (((u.i % 8) * w) // 8) * 3) % tl + 1,
-               1)) AS v
-      FROM g, LATERAL (SELECT unnest(generate_series(0, 63)) AS i) u(i)
-    ),
-    sums AS (SELECT doc_id, SUM(v) AS s FROM samp GROUP BY doc_id),
-    chunks AS (
-      SELECT samp.doc_id, idx // 8 AS band,
-             CAST(SUM(CASE WHEN 64 * v > s
-                           THEN 1 << (7 - (idx % 8)) ELSE 0 END) AS INT)
-               AS chunk
-      FROM samp JOIN sums USING (doc_id) GROUP BY 1, 2
-    ),
-    ok AS (
-      SELECT band, chunk FROM chunks
-      GROUP BY band, chunk
-      HAVING 20 * COUNT(*) <= greatest(1280, (SELECT COUNT(*) FROM sums))
-    ),
-    pruned AS (
-      SELECT c.doc_id, c.band, c.chunk
-      FROM chunks c JOIN ok USING (band, chunk)
-    ),
-    cand AS (
-      SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-      FROM pruned x JOIN pruned y
-        ON x.band = y.band AND x.chunk = y.chunk AND x.doc_id < y.doc_id
-    ),
-    wide AS (
-      SELECT doc_id, list(chunk ORDER BY band) AS cs FROM chunks GROUP BY doc_id
-    )
-    SELECT id_a, id_b, CAST(hm AS INT) AS hamming FROM (
-      SELECT c.id_a, c.id_b,
-             list_sum(list_transform(list_zip(a.cs, b.cs),
-               p -> bit_count(xor(CAST(p[1] AS BIGINT),
-                                  CAST(p[2] AS BIGINT))))) AS hm
-      FROM cand c
-      JOIN wide a ON a.doc_id = c.id_a
-      JOIN wide b ON b.doc_id = c.id_b
-    ) WHERE hm <= 6
-    """,
-)
+@query("mm_phash_pairs")
 def mm_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image near-dup pairs via perceptual average-hash — the standard
     image-dedup path a multimodal pipeline runs before training:
@@ -305,49 +171,7 @@ _SC_FRAME = 32  # bytes per synthetic frame (mm_audio_windows' stride)
 _SC_TAU = 96  # |Δ signature| scene-cut threshold
 
 
-@query(
-    "mm_scene_cuts",
-    oracle=f"""
-    WITH w AS (
-      SELECT doc_id, text,
-             unnest(generate_series(0,
-               CAST(floor((length(text) - 1) / {_SC_FRAME}.0) AS INT)))
-               AS win
-      FROM documents WHERE length(text) > 0
-    ),
-    sig AS (
-      SELECT doc_id, win, SUM(v) AS sig FROM (
-        SELECT doc_id, win,
-               ascii(substring(text, win * {_SC_FRAME} + i, 1)) AS v
-        FROM (
-          SELECT doc_id, win, text,
-                 unnest(generate_series(1,
-                   least({_SC_FRAME}, length(text) - win * {_SC_FRAME})))
-                   AS i
-          FROM w
-        )
-      ) GROUP BY doc_id, win
-    ),
-    cuts AS (
-      SELECT doc_id, win, sig,
-             CASE WHEN lag(sig) OVER dw IS NULL THEN 1
-                  WHEN abs(sig - lag(sig) OVER dw) > {_SC_TAU} THEN 1
-                  ELSE 0 END AS is_cut
-      FROM sig WINDOW dw AS (PARTITION BY doc_id ORDER BY win)
-    ),
-    scenes AS (
-      SELECT doc_id, win, sig,
-             SUM(is_cut) OVER (PARTITION BY doc_id ORDER BY win
-                               ROWS UNBOUNDED PRECEDING) AS scene_id
-      FROM cuts
-    )
-    SELECT doc_id, CAST(scene_id AS BIGINT) AS scene_id,
-           CAST(MIN(win) AS BIGINT) AS start_frame,
-           CAST(COUNT(*) AS BIGINT) AS n_frames,
-           CAST(SUM(sig) AS BIGINT) AS scene_sig
-    FROM scenes GROUP BY doc_id, scene_id
-    """,
-)
+@query("mm_scene_cuts")
 def mm_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video scene-cut detection over the synthetic frame stream —
     the shot-segmentation step a multimodal curation pipeline runs
@@ -418,25 +242,7 @@ mm_scene_cuts.__doc__ = mm_scene_cuts.__doc__.format(
 )
 
 
-@query(
-    "mm_image_resize",
-    oracle="""
-    WITH g AS (
-      SELECT doc_id, text, length(text) AS tl,
-             (ascii(substring(text, 1, 1)) % 8 + 1) * 8 AS w,
-             (ascii(substring(text, 2, 1)) % 8 + 1) * 8 AS h
-      FROM documents WHERE length(text) > 0
-    )
-    SELECT doc_id,
-           CAST(u.i // 8 AS INT) AS py,
-           CAST(u.i % 8 AS INT) AS px,
-           ascii(substring(text,
-             ((((u.i // 8) * h) // 8) * 3 * w
-              + (((u.i % 8) * w) // 8) * 3) % tl + 1,
-             1)) AS v
-    FROM g, LATERAL (SELECT unnest(generate_series(0, 63)) AS i) u(i)
-    """,
-)
+@query("mm_image_resize")
 def mm_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image RESIZE (nearest-neighbor, 8×8 grayscale thumbnail) over
     the REAL BMP decode path — the brief's decode→resize tier as a

@@ -22,22 +22,7 @@ def _dec(c: str, scale: int = 2) -> F.Column:
     return F.col(c).cast(f"decimal(18,{scale})")
 
 
-@query(
-    "rel_pricing_summary",
-    oracle="""
-    SELECT l_returnflag, l_linestatus,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS sum_disc_price,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_qty,
-           COUNT(*) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-    GROUP BY l_returnflag, l_linestatus
-    ORDER BY l_returnflag, l_linestatus
-    """,
-)
+@query("rel_pricing_summary")
 def rel_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q1-style scan→filter→hash-aggregate (A1 `NB2:264-268`,
     P6 filter, P1/P2 projections). Catalyst plan: parquet scan with
@@ -60,16 +45,7 @@ def rel_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_top_revenue_orders",
-    oracle="""
-    SELECT o.o_orderkey, c.c_name,
-           CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS total_price
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-    ORDER BY total_price DESC, o.o_orderkey
-    LIMIT 10
-    """,
-)
+@query("rel_top_revenue_orders")
 def rel_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-join (J1 `NB1:489-494`) + global sort (P9 `NB3:578-579`) +
     limit (P8). customer is the small side — broadcast-hash join, no
@@ -88,17 +64,7 @@ def rel_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_cust_order_stats",
-    oracle="""
-    SELECT c.c_custkey, c.c_mktsegment,
-           COUNT(o.o_orderkey) AS n_orders,
-           CAST(COALESCE(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))), 0) AS DOUBLE) AS total_spent
-    FROM customer c LEFT JOIN orders o ON o.o_custkey = c.c_custkey
-    GROUP BY c.c_custkey, c.c_mktsegment
-    ORDER BY c.c_custkey
-    """,
-)
+@query("rel_cust_order_stats")
 def rel_cust_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-outer labeling join + COALESCE default (J2/P5,
     `NB2:233-242`): customers keep a row even with zero orders."""
@@ -116,16 +82,7 @@ def rel_cust_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_union_distinct_nations",
-    oracle="""
-    SELECT nationkey FROM (
-        SELECT c_nationkey AS nationkey FROM customer
-        UNION ALL
-        SELECT s_nationkey AS nationkey FROM supplier
-    ) t GROUP BY nationkey ORDER BY nationkey
-    """,
-)
+@query("rel_union_distinct_nations")
 def rel_union_distinct_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """union (bag, U1 `NB1:159`) + distinct (U2/U3 `NB2:212-218`):
     PySpark union == SQL UNION ALL; the explicit distinct() gives set
@@ -135,15 +92,7 @@ def rel_union_distinct_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c.unionByName(s).distinct().orderBy("nationkey")
 
 
-@query(
-    "rel_status_share",
-    oracle="""
-    WITH g AS (SELECT o_orderstatus, COUNT(*) AS instances FROM orders GROUP BY o_orderstatus)
-    SELECT o_orderstatus, instances,
-           CAST(instances AS DOUBLE) / SUM(instances) OVER () AS ratio
-    FROM g ORDER BY o_orderstatus
-    """,
-)
+@query("rel_status_share")
 def rel_status_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Class-balance ratio via unpartitioned window sum — exactly the
     reference's W1 (`NB2:264-271`). Physical plan: hash agg, then a
@@ -157,16 +106,7 @@ def rel_status_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_orderstatus")
 
 
-@query(
-    "rel_price_clean_cast",
-    oracle="""
-    SELECT p_partkey,
-           '$' || CAST(CAST(p_retailprice AS DECIMAL(18,2)) AS VARCHAR) AS price_str,
-           CAST(REPLACE('$' || CAST(CAST(p_retailprice AS DECIMAL(18,2)) AS VARCHAR), '$', '')
-                AS DOUBLE) AS price
-    FROM part ORDER BY p_partkey
-    """,
-)
+@query("rel_price_clean_cast")
 def rel_price_clean_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's price-cleaning expression — replace('$','') + cast
     (P3, `NB1:66`) — round-tripped through a dollar-formatted string.
@@ -180,16 +120,7 @@ def rel_price_clean_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_case_buckets",
-    oracle="""
-    SELECT CASE WHEN o_totalprice < 50000 THEN 'small'
-                WHEN o_totalprice < 150000 THEN 'medium'
-                ELSE 'large' END AS bucket,
-           o_orderpriority, COUNT(*) AS n
-    FROM orders GROUP BY bucket, o_orderpriority ORDER BY bucket, o_orderpriority
-    """,
-)
+@query("rel_case_buckets")
 def rel_case_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL-expression evaluation (P7 `f.expr`, `NB3:103-105`) — CASE
     buckets + group-by, driven through F.expr like the reference does."""
@@ -208,14 +139,7 @@ def rel_case_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_customers_without_orders",
-    oracle="""
-    SELECT c_custkey, c_name FROM customer c
-    WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-    ORDER BY c_custkey
-    """,
-)
+@query("rel_customers_without_orders")
 def rel_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anti join (relational-core completeness; SURVEY §2.C notes the
     reference has none). Spark: left_anti — the build side streams, no
@@ -227,15 +151,7 @@ def rel_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_customers_with_open_orders",
-    oracle="""
-    SELECT c_custkey FROM customer c
-    WHERE EXISTS (SELECT 1 FROM orders o
-                  WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'O')
-    ORDER BY c_custkey
-    """,
-)
+@query("rel_customers_with_open_orders")
 def rel_customers_with_open_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi join (EXISTS). The status filter pushes below the join into
     the orders scan (PushedFilters in the physical plan)."""
@@ -244,17 +160,7 @@ def rel_customers_with_open_orders(spark: SparkSession, sf_dir: str) -> DataFram
     return c.join(o, o.o_custkey == c.c_custkey, "left_semi").select("c_custkey")
 
 
-@query(
-    "rel_region_rollup",
-    oracle="""
-    SELECT r.r_name, n.n_name, COUNT(c.c_custkey) AS n_customers
-    FROM customer c
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    JOIN region r ON n.n_regionkey = r.r_regionkey
-    GROUP BY ROLLUP(r.r_name, n.n_name)
-    ORDER BY r_name NULLS FIRST, n_name NULLS FIRST
-    """,
-)
+@query("rel_region_rollup")
 def rel_region_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical rollup aggregate (SURVEY §2.E: 'engine gets grouping
     sets free from Spark SQL'). nation/region are tiny dims → broadcast
@@ -271,15 +177,7 @@ def rel_region_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_events_hourly",
-    oracle="""
-    SELECT date_trunc('hour', ts) AS hour, event_type,
-           COUNT(*) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-    FROM events GROUP BY hour, event_type ORDER BY hour, event_type
-    """,
-)
+@query("rel_events_hourly")
 def rel_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-hour batch aggregation over the events table — the batch
     twin of the streaming window query (queries/streaming.py); identical
@@ -295,17 +193,7 @@ def rel_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_top_parts_per_brand",
-    oracle="""
-    SELECT p_brand, p_partkey, rn FROM (
-        SELECT p_brand, p_partkey,
-               ROW_NUMBER() OVER (PARTITION BY p_brand
-                                  ORDER BY p_retailprice DESC, p_partkey) AS rn
-        FROM part) t
-    WHERE rn <= 3 ORDER BY p_brand, rn
-    """,
-)
+@query("rel_top_parts_per_brand")
 def rel_top_parts_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-K per group via ranking window — the partitioned-window
     capability SURVEY §2.F says the engine should expose beyond the
@@ -320,16 +208,7 @@ def rel_top_parts_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_order_lines_collect",
-    oracle="""
-    SELECT l_orderkey,
-           array_to_string(list_sort(list(l_linenumber::VARCHAR)), ',') AS line_numbers,
-           COUNT(*) AS n_lines
-    FROM lineitem WHERE l_orderkey % 100 = 0
-    GROUP BY l_orderkey
-    """,
-)
+@query("rel_order_lines_collect")
 def rel_order_lines_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Group-by collect_list (A2, `01_Feature Engineering.py:228-249`):
     collapse exploded rows back to one array per entity. collect_list
@@ -345,15 +224,7 @@ def rel_order_lines_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_expr_join_scoring",
-    oracle="""
-    SELECT o.o_orderkey, c.c_name,
-           CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS total_price
-    FROM orders o JOIN customer c
-      ON o.o_custkey = c.c_custkey AND o.o_totalprice > 400000
-    """,
-)
+@query("rel_expr_join_scoring")
 def rel_expr_join_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join on an expression condition against an aliased side (J3/J5,
     `03_Train & Deploy Model.py:71-76, 567-570`): the reference joins
@@ -371,18 +242,7 @@ def rel_expr_join_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_segment_distinct_parts",
-    oracle="""
-    SELECT c.c_mktsegment,
-           COUNT(DISTINCT l.l_partkey) AS n_parts,
-           COUNT(*) AS n_lineitems
-    FROM lineitem l
-    JOIN orders o ON l.l_orderkey = o.o_orderkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    GROUP BY c.c_mktsegment ORDER BY c.c_mktsegment
-    """,
-)
+@query("rel_segment_distinct_parts")
 def rel_segment_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-way join + distinct aggregate (J1 chain, A-family). orders and
     customer broadcast under AQE at small SF; at scale the l_orderkey
@@ -402,16 +262,7 @@ def rel_segment_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_intersect_segments",
-    oracle="""
-    SELECT c_custkey FROM (
-      SELECT DISTINCT o_custkey AS c_custkey FROM orders WHERE o_orderstatus = 'F'
-      INTERSECT
-      SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'O'
-    ) t
-    """,
-)
+@query("rel_intersect_segments")
 def rel_intersect_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT (set semantics) — relational-core completeness (the
     reference has none; SURVEY §2.D says include them anyway).
@@ -426,16 +277,7 @@ def rel_intersect_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     return f.intersect(op)
 
 
-@query(
-    "rel_except_segments",
-    oracle="""
-    SELECT c_custkey FROM (
-      SELECT DISTINCT o_custkey AS c_custkey FROM orders WHERE o_orderstatus = 'F'
-      EXCEPT
-      SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'O'
-    ) t
-    """,
-)
+@query("rel_except_segments")
 def rel_except_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT (set semantics): customers with finished but no open
     orders."""
@@ -451,14 +293,7 @@ def rel_except_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with 2 occurrences)
 
 
-@query(
-    "rel_cube_summary",
-    oracle="""
-    SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n
-    FROM orders
-    GROUP BY CUBE(o_orderstatus, o_orderpriority)
-    """,
-)
+@query("rel_cube_summary")
 def rel_cube_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE aggregate (all grouping-set combinations) — free from
     Spark SQL per SURVEY §2.E; a single expand + hash agg, one
@@ -469,16 +304,7 @@ def rel_cube_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_pivot_status_priority",
-    oracle="""
-    SELECT o_orderpriority,
-           COUNT(*) FILTER (o_orderstatus = 'F') AS status_f,
-           COUNT(*) FILTER (o_orderstatus = 'O') AS status_o,
-           COUNT(*) FILTER (o_orderstatus = 'P') AS status_p
-    FROM orders GROUP BY o_orderpriority
-    """,
-)
+@query("rel_pivot_status_priority")
 def rel_pivot_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot (wide conditional aggregation). Explicit value list keeps
     the plan a single pass — Spark's two-pass value discovery is the
@@ -497,17 +323,7 @@ def rel_pivot_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_asof_join_events",
-    oracle="""
-    SELECT e.event_id, e.user_id, e.ts,
-           c.event_id AS asof_event_id,
-           c.value AS asof_value
-    FROM (SELECT * FROM events WHERE event_type = 'error') e
-    ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-      ON e.user_id = c.user_id AND e.ts >= c.ts
-    """,
-)
+@query("rel_asof_join_events")
 def rel_asof_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join (point-in-time): each error event picks up the same
     user's latest click at-or-before it. Implemented with the
@@ -532,20 +348,7 @@ def rel_asof_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_range_join_bands",
-    oracle="""
-    WITH bands(band, lo, hi) AS (
-      VALUES ('budget', 0.0, 50000.0), ('mid', 50000.0, 150000.0),
-             ('premium', 150000.0, 300000.0), ('luxury', 300000.0, 1e12)
-    )
-    SELECT b.band, COUNT(*) AS n,
-           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-    FROM orders o JOIN bands b
-      ON o.o_totalprice >= b.lo AND o.o_totalprice < b.hi
-    GROUP BY b.band
-    """,
-)
+@query("rel_range_join_bands")
 def rel_range_join_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range (interval) join: orders against a tiny band dimension on
     lo ≤ price < hi. With a broadcast side this is a
@@ -572,18 +375,7 @@ def rel_range_join_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_sql_entrypoint",
-    oracle="""
-    SELECT n.n_name,
-           COUNT(DISTINCT c.c_custkey) AS n_customers,
-           COUNT(o.o_orderkey) AS n_orders
-    FROM customer c
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    LEFT JOIN orders o ON o.o_custkey = c.c_custkey
-    GROUP BY n.n_name
-    """,
-)
+@query("rel_sql_entrypoint")
 def rel_sql_entrypoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The pure-SQL API surface: tables registered as temp views, the
     query text handed to spark.sql — same Catalyst plan as the
@@ -606,17 +398,7 @@ def rel_sql_entrypoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_json_props",
-    oracle="""
-    SELECT event_type, COUNT(*) AS n,
-           CAST(SUM(CAST(json_extract_string(props, '$.k') AS INT))
-                AS BIGINT) AS sum_k,
-           MIN(CAST(json_extract_string(props, '$.k') AS INT)) AS min_k,
-           MAX(CAST(json_extract_string(props, '$.k') AS INT)) AS max_k
-    FROM events GROUP BY event_type
-    """,
-)
+@query("rel_json_props")
 def rel_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured column surface: events.props parsed with a TYPED
     from_json schema (not string get_json_object probing), then plain
@@ -636,18 +418,7 @@ def rel_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_latest_event_per_user",
-    oracle="""
-    SELECT user_id, event_id, event_type, value
-    FROM (
-      SELECT user_id, event_id, event_type, value,
-             row_number() OVER (
-               PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-      FROM events
-    ) WHERE rn = 1
-    """,
-)
+@query("rel_latest_event_per_user")
 def rel_latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep-latest-per-key — the CDC/compaction primitive: one
     row_number window per key ordered by recency with a unique
@@ -664,22 +435,7 @@ def rel_latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_audit_referential",
-    oracle="""
-    SELECT 'lineitem->orders' AS fk, COUNT(*) AS n_orphans
-    FROM lineitem l WHERE NOT EXISTS
-      (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)
-    UNION ALL
-    SELECT 'orders->customer', COUNT(*)
-    FROM orders o WHERE NOT EXISTS
-      (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)
-    UNION ALL
-    SELECT 'customer->nation', COUNT(*)
-    FROM customer c WHERE NOT EXISTS
-      (SELECT 1 FROM nation n WHERE n.n_nationkey = c.c_nationkey)
-    """,
-)
+@query("rel_audit_referential")
 def rel_audit_referential(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Referential-integrity audit — the standing data-quality gate of
     any pipeline: orphan counts for three FK edges as one unioned plan
@@ -706,18 +462,7 @@ def rel_audit_referential(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_audit_profile",
-    oracle="""
-    SELECT COUNT(*) AS n_rows,
-           COUNT(*) - COUNT(o_custkey) AS null_custkey,
-           COUNT(*) - COUNT(o_orderstatus) AS null_status,
-           COUNT(DISTINCT o_orderstatus) AS n_statuses,
-           MIN(o_orderkey) AS min_key, MAX(o_orderkey) AS max_key,
-           MIN(o_orderdate) AS min_date, MAX(o_orderdate) AS max_date
-    FROM orders
-    """,
-)
+@query("rel_audit_profile")
 def rel_audit_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Table profile — the schema-drift/null-rate check a pipeline runs
     before trusting a new partition: row count, per-column null counts,
@@ -737,17 +482,7 @@ def rel_audit_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_price_quantiles",
-    oracle="""
-    SELECT p_brand,
-           COUNT(*) AS n,
-           quantile_cont(p_retailprice, 0.5) AS median_price,
-           quantile_cont(p_retailprice, 0.9) AS p90_price,
-           quantile_cont(p_retailprice, 0.99) AS p99_price
-    FROM part GROUP BY p_brand
-    """,
-)
+@query("rel_price_quantiles")
 def rel_price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated quantiles per group (`percentile` /
     quantile_cont — both engines sort-and-interpolate identically, so
@@ -768,46 +503,7 @@ def rel_price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HISTO_BINS = 64
 
 
-@query(
-    "rel_histo_quantiles",
-    oracle=f"""
-    WITH v AS (
-      SELECT l_returnflag, CAST(l_extendedprice AS DOUBLE) AS v FROM lineitem
-    ),
-    st AS (
-      SELECT l_returnflag, MIN(v) AS mn, MAX(v) AS mx, COUNT(*) AS n
-      FROM v GROUP BY 1
-    ),
-    b AS (
-      SELECT v.l_returnflag,
-             CASE WHEN st.mx > st.mn THEN
-               LEAST({_HISTO_BINS - 1},
-                     CAST(FLOOR((v.v - st.mn) / (st.mx - st.mn)
-                                * {_HISTO_BINS}) AS INT))
-             ELSE 0 END AS bin
-      FROM v JOIN st USING (l_returnflag)
-    ),
-    h AS (SELECT l_returnflag, bin, COUNT(*) AS c FROM b GROUP BY 1, 2),
-    cum AS (
-      SELECT l_returnflag, bin,
-             SUM(c) OVER (PARTITION BY l_returnflag ORDER BY bin) AS cum
-      FROM h
-    ),
-    qs AS (
-      SELECT l_returnflag, mn, mx, n, q, CAST(CEIL(q * n) AS BIGINT) AS thr
-      FROM st, unnest([0.5, 0.9, 0.99]) AS u(q)
-    ),
-    sel AS (
-      SELECT q.l_returnflag, q.q, q.mn, q.mx, q.n, MIN(c.bin) AS bin
-      FROM qs q JOIN cum c USING (l_returnflag)
-      WHERE CAST(c.cum AS BIGINT) >= q.thr
-      GROUP BY 1, 2, 3, 4, 5
-    )
-    SELECT l_returnflag, q, CAST(n AS BIGINT) AS n, bin,
-           mn + (mx - mn) / {_HISTO_BINS} * bin AS est
-    FROM sel
-    """,
-)
+@query("rel_histo_quantiles")
 def rel_histo_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate per-group quantiles via a MERGEABLE equi-width
     histogram — the bounded-state path `rel_price_quantiles` documents
@@ -892,50 +588,7 @@ def _bloom_pos(j: "F.Column", key: "F.Column") -> "F.Column":
     return hex_long_once(h, 1) % _BLOOM_M
 
 
-@query(
-    "rel_bloom_semi_join",
-    oracle=f"""
-    WITH build AS (
-      SELECT c_custkey FROM customer WHERE c_mktsegment = '{_BLOOM_SEG}'
-    ),
-    bpos AS (
-      SELECT CAST('0x' || substr(md5(u.j || ':' || b.c_custkey), 1, 8) AS BIGINT)
-               % {_BLOOM_M} AS pos
-      FROM build b, unnest(range({_BLOOM_K})) AS u(j)
-    ),
-    filt AS (
-      SELECT pos // 32 AS word, bit_or(1 << (pos % 32)) AS bits
-      FROM bpos GROUP BY pos // 32
-    ),
-    ppos AS (
-      SELECT o.o_orderkey, o.o_custkey,
-             CAST('0x' || substr(md5(u.j || ':' || o.o_custkey), 1, 8) AS BIGINT)
-               % {_BLOOM_M} AS pos
-      FROM orders o, unnest(range({_BLOOM_K})) AS u(j)
-    ),
-    probe AS (
-      SELECT p.o_orderkey, p.o_custkey,
-             CASE WHEN (coalesce(f.bits, 0) & (1 << (p.pos % 32))) <> 0
-                  THEN 1 ELSE 0 END AS hit
-      FROM ppos p LEFT JOIN filt f ON p.pos // 32 = f.word
-    ),
-    passed AS (
-      SELECT o_orderkey, o_custkey FROM probe
-      GROUP BY o_orderkey, o_custkey HAVING SUM(hit) = {_BLOOM_K}
-    ),
-    truth AS (SELECT DISTINCT c_custkey FROM build)
-    SELECT COUNT(*) AS n_orders,
-           (SELECT COUNT(*) FROM passed) AS n_bloom_pass,
-           CAST(coalesce(SUM(CASE WHEN t.c_custkey IS NOT NULL
-                                   THEN 1 ELSE 0 END), 0)
-                AS BIGINT) AS n_true,
-           (SELECT COUNT(*) FROM passed) -
-           CAST(coalesce(SUM(CASE WHEN t.c_custkey IS NOT NULL
-                                  THEN 1 ELSE 0 END), 0)
-                AS BIGINT) AS n_false_pos
-    FROM orders o LEFT JOIN truth t ON o.o_custkey = t.c_custkey
-    """,
-)
+@query("rel_bloom_semi_join")
 def rel_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit bloom-filter join pruning (m=1024 bits, k=3, portable
     md5 positions): build a bloom filter from the dimension keys
@@ -1010,16 +663,7 @@ def rel_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SALT_S = 8  # sub-keys per hot group
 
 
-@query(
-    "rel_salted_agg",
-    oracle="""
-    SELECT l_returnflag,
-           COUNT(*) AS n,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-           CAST(MAX(l_extendedprice) AS DOUBLE) AS max_price
-    FROM lineitem GROUP BY l_returnflag
-    """,
-)
+@query("rel_salted_agg")
 def rel_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage salted aggregation: stage 1 aggregates on
     (key, salt) with the salt drawn from a deterministic row hash,
@@ -1054,21 +698,7 @@ def rel_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_rolling_user_value",
-    oracle="""
-    WITH e AS (
-      SELECT event_id, user_id, epoch_us(ts) // 1000000 AS sec, value
-      FROM events
-    )
-    SELECT event_id, user_id,
-           COUNT(*) OVER w AS n_1h,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) OVER w AS DOUBLE) AS val_1h
-    FROM e
-    WINDOW w AS (PARTITION BY user_id ORDER BY sec
-                 RANGE BETWEEN 3599 PRECEDING AND CURRENT ROW)
-    """,
-)
+@query("rel_rolling_user_value")
 def rel_rolling_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-RANGE window frame: for every event, the count and value
     total of the SAME USER's events in the trailing hour — the rolling
@@ -1105,35 +735,7 @@ def rel_rolling_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SESSION_GAP_S = 1800  # 30-minute inactivity gap
 
 
-@query(
-    "rel_user_sessions_batch",
-    oracle=f"""
-    WITH e AS (
-      SELECT event_id, user_id, epoch_us(ts) // 1000000 AS sec, value
-      FROM events
-    ),
-    flagged AS (
-      SELECT *,
-             CASE WHEN lag(sec) OVER w IS NULL
-                       OR sec - lag(sec) OVER w > {_SESSION_GAP_S}
-                  THEN 1 ELSE 0 END AS new_sess
-      FROM e
-      WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id)
-    ),
-    sessed AS (
-      SELECT *,
-             CAST(SUM(new_sess) OVER (PARTITION BY user_id
-               ORDER BY sec, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             AS BIGINT) AS session_id
-      FROM flagged
-    )
-    SELECT user_id, session_id, COUNT(*) AS n_events,
-           MIN(sec) AS start_sec, MAX(sec) AS end_sec,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-    FROM sessed GROUP BY user_id, session_id
-    """,
-)
+@query("rel_user_sessions_batch")
 def rel_user_sessions_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch sessionization via lag + cumulative flag: a new session
     starts after a >30-min gap; the running sum of start flags numbers
@@ -1175,17 +777,7 @@ def rel_user_sessions_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_grouping_sets",
-    oracle="""
-    SELECT coalesce(o_orderstatus, 'ALL') AS status,
-           coalesce(o_orderpriority, 'ALL') AS priority,
-           COUNT(*) AS n,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-    FROM orders
-    GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-    """,
-)
+@query("rel_grouping_sets")
 def rel_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary GROUPING SETS — the multi-granularity report shape
     between cube (all combinations, rel_cube_summary) and rollup
@@ -1212,31 +804,7 @@ def rel_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_value_outliers",
-    oracle="""
-    WITH stats AS (
-      SELECT event_type,
-             COUNT(*) AS n,
-             CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*)
-               AS mean,
-             CAST(SUM(CAST(value AS DECIMAL(18,6))
-                      * CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*)
-               AS mean_sq
-      FROM events GROUP BY event_type
-    ),
-    sig AS (
-      SELECT event_type, n, mean,
-             sqrt(greatest(mean_sq - mean * mean, 0.0)) AS sigma
-      FROM stats
-    )
-    SELECT s.event_type, s.n, s.mean, s.sigma,
-           CAST(SUM(CASE WHEN abs(e.value - s.mean) > 3.0 * s.sigma
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-    FROM events e JOIN sig s USING (event_type)
-    GROUP BY s.event_type, s.n, s.mean, s.sigma
-    """,
-)
+@query("rel_value_outliers")
 def rel_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group 3-sigma outlier screen — the data-quality gate that
     runs before any metric is trusted. Mean and E[X^2] come from exact
@@ -1276,20 +844,7 @@ def rel_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_ntile_price_deciles",
-    oracle="""
-    WITH t AS (
-      SELECT p_partkey, p_retailprice,
-             NTILE(10) OVER (ORDER BY p_retailprice, p_partkey) AS decile
-      FROM part
-    )
-    SELECT decile, COUNT(*) AS n,
-           CAST(MIN(p_retailprice) AS DOUBLE) AS lo,
-           CAST(MAX(p_retailprice) AS DOUBLE) AS hi
-    FROM t GROUP BY decile
-    """,
-)
+@query("rel_ntile_price_deciles")
 def rel_ntile_price_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NTILE decile bucketing (the remaining ranking window function:
     row_number/rank family elsewhere) with a total order via the
@@ -1312,38 +867,7 @@ def rel_ntile_price_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_scd2_user_state",
-    oracle="""
-    WITH e AS (
-      SELECT event_id, user_id, event_type,
-             epoch_us(ts) // 1000000 AS sec
-      FROM events
-    ),
-    marked AS (
-      SELECT *,
-             CASE WHEN lag(event_type) OVER w IS NULL
-                       OR lag(event_type) OVER w <> event_type
-                  THEN 1 ELSE 0 END AS chg
-      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id)
-    ),
-    changes AS (SELECT * FROM marked WHERE chg = 1),
-    hist AS (
-      SELECT user_id, event_type, sec AS valid_from,
-             lead(sec) OVER (PARTITION BY user_id
-                             ORDER BY sec, event_id) AS valid_to
-      FROM changes
-    )
-    SELECT event_type,
-           COUNT(*) AS n_periods,
-           CAST(SUM(CASE WHEN valid_to IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_current,
-           CAST(SUM(CASE WHEN valid_to IS NULL THEN 0
-                         ELSE valid_to - valid_from END) AS BIGINT)
-             AS closed_duration_s
-    FROM hist GROUP BY event_type
-    """,
-)
+@query("rel_scd2_user_state")
 def rel_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Slowly-changing-dimension type 2 built from an event stream:
     collapse each user's event_type runs to their CHANGE points (lag),
@@ -1386,17 +910,7 @@ def rel_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_observed_metrics",
-    oracle="""
-    SELECT COUNT(*) AS n_rows,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-             AS total_price,
-           CAST(SUM(CASE WHEN o_totalprice > 200000 THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_high
-    FROM orders WHERE o_orderstatus = 'O'
-    """,
-)
+@query("rel_observed_metrics")
 def rel_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pipeline observability via ``df.observe`` (the Observation
     API): counters ride along INSIDE the filtered write pass —
@@ -1430,22 +944,7 @@ def rel_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_rows_frame_ma",
-    oracle="""
-    WITH e AS (
-      SELECT event_id, user_id, epoch_us(ts) // 1000000 AS sec, value
-      FROM events
-    )
-    SELECT event_id, user_id,
-           COUNT(*) OVER w AS n_window,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) OVER w AS DOUBLE)
-             / COUNT(*) OVER w AS ma3
-    FROM e
-    WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id
-                 ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-    """,
-)
+@query("rel_rows_frame_ma")
 def rel_rows_frame_ma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROWS-frame sliding window: per event, the 3-event moving
     average of the SAME user's values — the count-based frame
@@ -1474,18 +973,7 @@ def rel_rows_frame_ma(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_unpivot_metrics",
-    oracle="""
-    SELECT o_orderkey, metric, value FROM (
-      SELECT o_orderkey,
-             CAST(o_totalprice AS DOUBLE) AS total_price,
-             CAST(CAST(substr(o_orderpriority, 1, 1) AS INT) AS DOUBLE) AS priority_grade,
-             CAST(o_custkey % 97 AS DOUBLE) AS cust_bucket
-      FROM orders WHERE o_orderkey % 100 = 0
-    ) UNPIVOT (value FOR metric IN (total_price, priority_grade, cust_bucket))
-    """,
-)
+@query("rel_unpivot_metrics")
 def rel_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNPIVOT/melt — wide-to-long reshape, the inverse of
     rel_pivot_status_priority: three per-order measures become
@@ -1519,54 +1007,7 @@ def rel_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RJ_BUCKET_S = 3600  # range-join bucket width (1 hour)
 
 
-@query(
-    "rel_bucketed_range_join",
-    oracle=f"""
-    WITH e AS (
-      SELECT event_id, user_id, epoch_us(ts) // 1000000 AS sec, event_type
-      FROM events
-    ),
-    flagged AS (
-      SELECT *,
-             CASE WHEN lag(sec) OVER w IS NULL
-                       OR sec - lag(sec) OVER w > {_SESSION_GAP_S}
-                  THEN 1 ELSE 0 END AS new_sess
-      FROM e WHERE event_type = 'click'
-      WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id)
-    ),
-    sessed AS (
-      SELECT *,
-             CAST(SUM(new_sess) OVER (PARTITION BY user_id
-               ORDER BY sec, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             AS BIGINT) AS session_id
-      FROM flagged
-    ),
-    s AS (
-      SELECT user_id, session_id,
-             MIN(sec) - 1800 AS start_sec, MAX(sec) + 1800 AS end_sec
-      FROM sessed GROUP BY 1, 2
-    ),
-    iv AS (
-      SELECT user_id, session_id, start_sec, end_sec,
-             unnest(generate_series(start_sec // {_RJ_BUCKET_S},
-                                    end_sec // {_RJ_BUCKET_S})) AS bucket
-      FROM s
-    ),
-    v AS (
-      SELECT user_id, event_id, sec, sec // {_RJ_BUCKET_S} AS bucket
-      FROM e WHERE event_type = 'view'
-    ),
-    hits AS (
-      SELECT v.user_id, iv.session_id, v.sec
-      FROM v JOIN iv ON v.user_id = iv.user_id AND v.bucket = iv.bucket
-      WHERE v.sec BETWEEN iv.start_sec AND iv.end_sec
-    )
-    SELECT user_id, session_id, COUNT(*) AS n_views,
-           MIN(sec) AS first_view, MAX(sec) AS last_view
-    FROM hits GROUP BY 1, 2
-    """,
-)
+@query("rel_bucketed_range_join")
 def rel_bucketed_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Big-big point-in-interval range join via time bucketing — the
     scale form `rel_range_join_bands`' docstring promises: attribute
@@ -1648,32 +1089,7 @@ def rel_bucketed_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_skew_report",
-    oracle="""
-    WITH k AS (
-      SELECT user_id, COUNT(*) AS n FROM events GROUP BY user_id
-    ),
-    s AS (
-      SELECT CAST(SUM(n) AS BIGINT) AS n_rows,
-             CAST(COUNT(*) AS BIGINT) AS n_keys,
-             CAST(MAX(n) AS BIGINT) AS max_n
-      FROM k
-    ),
-    top1 AS (
-      SELECT user_id AS top_user, n FROM k ORDER BY n DESC, user_id LIMIT 1
-    ),
-    top5 AS (
-      SELECT CAST(SUM(n) AS BIGINT) AS t5 FROM (
-        SELECT n FROM k ORDER BY n DESC, user_id LIMIT 5
-      )
-    )
-    SELECT s.n_rows, s.n_keys, s.max_n, top1.top_user,
-           CAST(s.max_n AS DOUBLE) * s.n_keys / s.n_rows AS skew_ratio,
-           CAST(top5.t5 AS DOUBLE) / s.n_rows AS top5_share
-    FROM s, top1, top5
-    """,
-)
+@query("rel_skew_report")
 def rel_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-key skew diagnostic — the report you run BEFORE sizing a
     salted join or an AQE skew threshold (operators/skew.py): per-key
@@ -1725,20 +1141,7 @@ def rel_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_range_interval_ma",
-    oracle="""
-    SELECT event_id, event_type,
-           CAST(COUNT(*) OVER w AS BIGINT) AS n_1h,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) OVER w AS DOUBLE)
-             AS sum_1h
-    FROM events
-    WINDOW w AS (
-      PARTITION BY event_type ORDER BY ts
-      RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW
-    )
-    """,
-)
+@query("rel_range_interval_ma")
 def rel_range_interval_ma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-RANGE window frame — the value-based frame the W-family's
     other queries don't cover (rel_rows_frame_ma is ROWS-based,
@@ -1775,35 +1178,7 @@ def rel_range_interval_ma(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_cohort_retention",
-    oracle="""
-    WITH d AS (
-      SELECT user_id,
-             CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day
-      FROM events
-    ),
-    c AS (
-      SELECT user_id, day,
-             MIN(day) OVER (PARTITION BY user_id) AS cohort_day
-      FROM d
-    ),
-    act AS (
-      SELECT cohort_day // 7 AS cohort_week,
-             (day - cohort_day) // 7 AS week_offset,
-             COUNT(DISTINCT user_id) AS n_active
-      FROM c GROUP BY 1, 2
-    ),
-    base AS (
-      SELECT cohort_week, n_active AS n_cohort FROM act
-      WHERE week_offset = 0
-    )
-    SELECT a.cohort_week, a.week_offset, a.n_active, b.n_cohort,
-           round(a.n_active * 1.0 / b.n_cohort, 9) AS retention
-    FROM act a JOIN base b USING (cohort_week)
-    ORDER BY a.cohort_week, a.week_offset
-    """,
-)
+@query("rel_cohort_retention")
 def rel_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The cohort-retention matrix — the canonical product-analytics
     rollup: users cohorted by first-seen week, per (cohort, offset)
@@ -1874,38 +1249,7 @@ def _ewma_weights() -> list[float]:
     return [round((1.0 - _EWMA_LAMBDA) ** k, 12) for k in range(_EWMA_LAGS)]
 
 
-def _ewma_oracle() -> str:
-    vals = ", ".join(
-        f"({k}, {w!r})" for k, w in enumerate(_ewma_weights())
-    )
-    return f"""
-    WITH hourly AS (
-      SELECT CAST(floor(epoch(ts)) AS BIGINT) // 3600 AS h,
-             CAST(COUNT(*) AS BIGINT) AS n
-      FROM events GROUP BY 1
-    ),
-    lags AS (SELECT * FROM (VALUES {vals}) AS t(lag, w)),
-    terms AS (
-      SELECT cur.h, cur.n, lags.w, src.n AS n_src
-      FROM hourly cur
-      CROSS JOIN lags
-      JOIN hourly src ON src.h = cur.h - lags.lag
-    ),
-    e AS (
-      SELECT h, n,
-             round(CAST(SUM(CAST(round(w * n_src, 9) AS DECIMAL(38,18)))
-                        AS DOUBLE)
-                   / CAST(SUM(CAST(w AS DECIMAL(38,18))) AS DOUBLE),
-                   9) AS ewma
-      FROM terms GROUP BY h, n
-    )
-    SELECT h, n, ewma,
-           CASE WHEN n > 2.0 * ewma THEN 1 ELSE 0 END AS burst
-    FROM e ORDER BY h
-    """
-
-
-@query("rel_ewma_control", oracle=_ewma_oracle())
+@query("rel_ewma_control")
 def rel_ewma_control(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EWMA control chart over hourly event volume — the
     time-ADAPTIVE baseline that upgrades stream_anomaly_zscore's
@@ -1984,24 +1328,7 @@ rel_ewma_control.__doc__ = rel_ewma_control.__doc__.format(
 )
 
 
-@query(
-    "rel_last_touch_attribution",
-    oracle="""
-    WITH o AS (
-      SELECT user_id, ts, event_id, event_type,
-             LAST_VALUE(CASE WHEN event_type <> 'purchase'
-                             THEN event_type END IGNORE NULLS)
-               OVER (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-               AS touch
-      FROM events
-    )
-    SELECT COALESCE(touch, '(none)') AS touch,
-           CAST(COUNT(*) AS BIGINT) AS n_purchases
-    FROM o WHERE event_type = 'purchase'
-    GROUP BY 1 ORDER BY n_purchases DESC, touch
-    """,
-)
+@query("rel_last_touch_attribution")
 def rel_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-touch attribution — for every purchase, credit the same
     user's most recent PRIOR non-purchase event (the marketing-
@@ -2033,21 +1360,7 @@ def rel_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_recursive_hierarchy",
-    oracle="""
-    WITH RECURSIVE anc AS (
-      SELECT c_custkey, c_custkey AS node, 0 AS depth FROM customer
-      UNION ALL
-      SELECT c_custkey, node // 10 AS node, depth + 1 AS depth
-      FROM anc WHERE node >= 10
-    )
-    SELECT c_custkey,
-           CAST(MAX(depth) AS INT) AS depth,
-           CAST(MAX(CASE WHEN node < 10 THEN node END) AS BIGINT) AS root
-    FROM anc GROUP BY c_custkey
-    """,
-)
+@query("rel_recursive_hierarchy")
 def rel_recursive_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RECURSIVE CTE — Spark 4's WITH RECURSIVE (UnionLoop execution),
     the iterative-query shape every other closure on this surface
@@ -2128,18 +1441,7 @@ _RC_CLOSURE_SQL = """
 """
 
 
-@query(
-    "rel_recursive_closure",
-    oracle=_RC_CLOSURE_SQL.format(
-        edges=_RC_EDGES_SQL.format(
-            nation="nation",
-            supplier="supplier",
-            customer="customer",
-            orders="orders",
-        ),
-        region="region",
-    ),
-)
+@query("rel_recursive_closure")
 def rel_recursive_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROWING-frontier WITH RECURSIVE — the r10 VERDICT's #6 ask and
     the other half of the engine-owned-iteration surface:
@@ -2185,18 +1487,7 @@ def rel_recursive_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_variant_props",
-    oracle="""
-    SELECT event_type,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(props->>'$.k' AS INT)) AS BIGINT) AS k_sum,
-           CAST(COUNT(CASE WHEN json_extract(props, '$.missing')
-                           IS NOT NULL THEN 1 END) AS BIGINT)
-             AS n_missing_hits
-    FROM events GROUP BY event_type
-    """,
-)
+@query("rel_variant_props")
 def rel_variant_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark 4 VARIANT — the schema-FLEXIBLE semi-structured type:
     ``parse_json`` ingests the props payload once into the binary
@@ -2226,17 +1517,7 @@ def rel_variant_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_sql_udf_tiers",
-    oracle="""
-    SELECT CASE WHEN CAST(o_totalprice AS DOUBLE) > 150000.0
-                THEN 'high' ELSE 'standard' END AS tier,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-             AS revenue
-    FROM orders GROUP BY 1
-    """,
-)
+@query("rel_sql_udf_tiers")
 def rel_sql_udf_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL-defined scalar function (Spark 4 ``CREATE FUNCTION ...
     RETURNS ... RETURN expr``) — the F-family's declarative member:
@@ -2264,18 +1545,7 @@ def rel_sql_udf_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_pipe_syntax_pricing",
-    oracle="""
-    SELECT p_brand,
-           CAST(COUNT(*) AS BIGINT) AS n_parts,
-           CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE)
-             AS total_price
-    FROM part WHERE p_size >= 25
-    GROUP BY p_brand
-    ORDER BY total_price DESC, p_brand LIMIT 10
-    """,
-)
+@query("rel_pipe_syntax_pricing")
 def rel_pipe_syntax_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL pipe syntax (Spark 4 ``|>``) — the linear query form: scan
     |> filter |> aggregate |> order |> limit, each operator reading
@@ -2300,34 +1570,7 @@ def rel_pipe_syntax_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_sql_table_function",
-    oracle="""
-    WITH o AS (
-      -- floor(x*100 + 0.5): pure-IEEE cents; CAST(DOUBLE AS BIGINT)
-      -- itself diverges (DuckDB rounds, Spark truncates)
-      SELECT o_orderkey AS okey,
-             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
-      FROM orders
-    ),
-    w AS (
-      SELECT okey, cents,
-             LEAST(4, 1 + CAST(cents // 10000000 AS INT)) AS n
-      FROM o
-    ),
-    x AS (
-      SELECT okey, cents, n,
-             unnest(generate_series(1, n)) AS inst
-      FROM w
-    )
-    SELECT CAST(inst AS INT) AS inst,
-           CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CASE WHEN inst = 1
-                         THEN cents - (n - 1) * (cents // n)
-                         ELSE cents // n END) AS BIGINT) AS total_cents
-    FROM x GROUP BY 1 ORDER BY 1
-    """,
-)
+@query("rel_sql_table_function")
 def rel_sql_table_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL-defined TABLE function (Spark 4 ``CREATE FUNCTION ...
     RETURNS TABLE``) invoked through a correlated LATERAL join — the
@@ -2370,23 +1613,7 @@ def rel_sql_table_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_python_udtf_runs",
-    oracle="""
-    WITH flagged AS (
-      SELECT o_custkey,
-             CASE WHEN o_totalprice > lag(o_totalprice) OVER w
-                  THEN 1 ELSE 0 END AS inc
-      FROM orders
-      WINDOW w AS (PARTITION BY o_custkey
-                   ORDER BY o_orderdate, o_orderkey)
-    )
-    SELECT o_custkey AS custkey,
-           CAST(COUNT(*) AS INT) AS n_orders,
-           CAST(SUM(inc) AS INT) AS n_increases
-    FROM flagged GROUP BY 1
-    """,
-)
+@query("rel_python_udtf_runs")
 def rel_python_udtf_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF over a partitioned TABLE argument — the REAL
     user-defined table function (SURVEY F3's posexplode rows cover the
@@ -2442,15 +1669,7 @@ def rel_python_udtf_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_pandas_udaf_median",
-    oracle="""
-    SELECT o_orderpriority,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           median(o_totalprice) AS med_price
-    FROM orders GROUP BY o_orderpriority
-    """,
-)
+@query("rel_pandas_udaf_median")
 def rel_pandas_udaf_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped-aggregate pandas UDF — the UDAF member of the function
     surface (scalar pandas_udf, applyInPandas, UDTF, and SQL UDFs are
@@ -2503,19 +1722,7 @@ def rel_pandas_udaf_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
-    "rel_lateral_topk_per_cust",
-    oracle="""
-    SELECT c_custkey, o_orderkey,
-           CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS totalprice
-    FROM customer c, LATERAL (
-      SELECT o_orderkey, o_totalprice FROM orders
-      WHERE o_custkey = c.c_custkey
-      ORDER BY o_totalprice DESC, o_orderkey
-      LIMIT 3
-    ) t
-    """,
-)
+@query("rel_lateral_topk_per_cust")
 def rel_lateral_topk_per_cust(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated top-k per entity via the Spark 4 `DataFrame.lateralJoin`
     API: each customer joins the LATERAL subquery of its own top-3
@@ -2553,37 +1760,7 @@ def rel_lateral_topk_per_cust(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rel_transpose_status_metrics",
-    oracle="""
-    WITH m AS (
-      SELECT o_orderstatus AS s,
-             CAST(COUNT(*) AS DOUBLE) AS n_orders,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-               AS revenue,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-               / COUNT(*) AS avg_price
-      FROM orders GROUP BY 1
-    )
-    SELECT 'n_orders' AS key,
-           MAX(CASE WHEN s = 'F' THEN n_orders END) AS "F",
-           MAX(CASE WHEN s = 'O' THEN n_orders END) AS "O",
-           MAX(CASE WHEN s = 'P' THEN n_orders END) AS "P"
-    FROM m
-    UNION ALL
-    SELECT 'revenue',
-           MAX(CASE WHEN s = 'F' THEN revenue END),
-           MAX(CASE WHEN s = 'O' THEN revenue END),
-           MAX(CASE WHEN s = 'P' THEN revenue END)
-    FROM m
-    UNION ALL
-    SELECT 'avg_price',
-           MAX(CASE WHEN s = 'F' THEN avg_price END),
-           MAX(CASE WHEN s = 'O' THEN avg_price END),
-           MAX(CASE WHEN s = 'P' THEN avg_price END)
-    FROM m
-    """,
-)
+@query("rel_transpose_status_metrics")
 def rel_transpose_status_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metric-matrix pivot via the Spark 4 `DataFrame.transpose` API:
     the (status x metric) summary flips to (metric x status) — the
@@ -2630,34 +1807,7 @@ _CMJ_W = 64  # buckets per row
 _CMJ_QTY = 45  # build side = high-quantity lines
 
 
-@query(
-    "rel_cm_join_size",
-    oracle=f"""
-    WITH ca AS (SELECT l_partkey AS k, CAST(COUNT(*) AS BIGINT) AS c
-                FROM lineitem GROUP BY 1),
-    cb AS (SELECT l_partkey AS k, CAST(COUNT(*) AS BIGINT) AS c
-           FROM lineitem WHERE l_quantity > {_CMJ_QTY} GROUP BY 1),
-    ha AS (SELECT k, c, u.r,
-                  CAST('0x' || substr(md5(u.r || ':' || CAST(k AS VARCHAR)), 1, 8)
-                    AS BIGINT) % {_CMJ_W} AS bucket
-           FROM ca, unnest(range({_CMJ_D})) AS u(r)),
-    hb AS (SELECT k, c, u.r,
-                  CAST('0x' || substr(md5(u.r || ':' || CAST(k AS VARCHAR)), 1, 8)
-                    AS BIGINT) % {_CMJ_W} AS bucket
-           FROM cb, unnest(range({_CMJ_D})) AS u(r)),
-    cma AS (SELECT r, bucket, CAST(SUM(c) AS BIGINT) AS c
-            FROM ha GROUP BY 1, 2),
-    cmb AS (SELECT r, bucket, CAST(SUM(c) AS BIGINT) AS c
-            FROM hb GROUP BY 1, 2),
-    est AS (SELECT cma.r AS r, CAST(SUM(cma.c * cmb.c) AS BIGINT) AS est_size
-            FROM cma JOIN cmb USING (r, bucket) GROUP BY 1),
-    tru AS (SELECT CAST(SUM(ca.c * cb.c) AS BIGINT) AS true_size
-            FROM ca JOIN cb USING (k))
-    SELECT CAST(est.r AS INT) AS r, est.est_size, tru.true_size,
-           est.est_size - tru.true_size AS overcount
-    FROM est CROSS JOIN tru
-    """,
-)
+@query("rel_cm_join_size")
 def rel_cm_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JOIN-SIZE ESTIMATION from count-min sketches — the AMS
     inner-product estimator every cost-based planner needs before
@@ -2745,34 +1895,7 @@ _TDA_LOOKBACK_S = 604800  # 7 days
 _TDA_HALFLIFE_S = 86400  # 1 day
 
 
-@query(
-    "rel_time_decay_attribution",
-    oracle=f"""
-    WITH ev AS (
-      SELECT user_id, event_id, event_type,
-             epoch_us(ts) // 1000000 AS sec
-      FROM events
-    ),
-    p AS (SELECT user_id, event_id AS pid, sec AS tp FROM ev
-          WHERE event_type = 'purchase'),
-    t AS (SELECT user_id, event_id AS tid, event_type AS touch, sec AS te
-          FROM ev WHERE event_type <> 'purchase'),
-    j AS (
-      SELECT p.pid, t.touch,
-             1.0 / CAST(1 << ((p.tp - t.te) // {_TDA_HALFLIFE_S}) AS DOUBLE)
-               AS w
-      FROM p JOIN t ON t.user_id = p.user_id
-       AND t.te < p.tp AND p.tp - t.te <= {_TDA_LOOKBACK_S}
-    ),
-    sw AS (SELECT pid, touch, w,
-                  SUM(w) OVER (PARTITION BY pid) AS tot
-           FROM j)
-    SELECT touch,
-           CAST(COUNT(*) AS BIGINT) AS n_credits,
-           CAST(SUM(CAST(w / tot AS DECIMAL(38,18))) AS DOUBLE) AS credit
-    FROM sw GROUP BY touch
-    """,
-)
+@query("rel_time_decay_attribution")
 def rel_time_decay_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TIME-DECAY MULTI-TOUCH attribution — every purchase splits one
     unit of credit across ALL the user's prior touches in a 7-day
@@ -2845,42 +1968,7 @@ _CUSUM_K = "60.00"  # allowance (reference level the page test drifts above)
 _CUSUM_H = "500.00"  # decision threshold
 
 
-@query(
-    "rel_cusum_changepoints",
-    oracle=f"""
-    WITH y AS (
-      SELECT user_id, ts, event_id,
-             CAST(value AS DECIMAL(18,2)) - CAST({_CUSUM_K} AS DECIMAL(18,2))
-               AS dev
-      FROM events
-    ),
-    p AS (
-      SELECT user_id, ts, event_id,
-             CAST(SUM(dev) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                 ROWS UNBOUNDED PRECEDING)
-                  AS DECIMAL(38,2)) AS pre
-      FROM y
-    ),
-    m AS (
-      SELECT user_id, ts, pre,
-             MIN(pre) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                            ROWS UNBOUNDED PRECEDING) AS runmin
-      FROM p
-    ),
-    c AS (
-      SELECT user_id, ts,
-             pre - LEAST(CAST(0.00 AS DECIMAL(38,2)), runmin) AS cusum
-      FROM m
-    )
-    SELECT user_id,
-           CAST(COUNT(*) AS BIGINT) AS n_alarms,
-           CAST(MAX(cusum) AS DOUBLE) AS max_cusum,
-           MIN(ts) AS first_alarm_ts
-    FROM c
-    WHERE cusum > CAST({_CUSUM_H} AS DECIMAL(38,2))
-    GROUP BY user_id
-    """,
-)
+@query("rel_cusum_changepoints")
 def rel_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM changepoint/drift detection (Page's one-sided test) per
     user over the event stream — the sequential monitor a data-quality
@@ -2951,50 +2039,7 @@ def rel_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Holt's linear-trend exponential smoothing via engine-owned recursion
 # ---------------------------------------------------------------------------
 
-# alpha / beta are EXACT binary fractions (1/2, 1/4): every smoothing
-# step is IEEE-exact scaling + addition, so both engines walk an
-# identical double sequence with no per-step quantization needed.
-_HOLT_DAILY_SQL = """
-    daily AS (
-      SELECT CAST(ts AS DATE) AS d, CAST(COUNT(*) AS BIGINT) AS n
-      FROM {events} GROUP BY CAST(ts AS DATE)
-    ),
-    idx AS (
-      SELECT d, n,
-             CAST(ROW_NUMBER() OVER (ORDER BY d) AS BIGINT) - 1 AS i
-      FROM daily
-    )
-"""
-
-_HOLT_REC_SQL = """
-    WITH RECURSIVE
-    {series}
-    holt(i, lvl, trend) AS (
-      SELECT a.i, CAST(a.n AS DOUBLE) AS lvl,
-             CAST(b.n AS DOUBLE) - CAST(a.n AS DOUBLE) AS trend
-      FROM {idx} a JOIN {idx} b ON a.i = 0 AND b.i = 1
-      UNION ALL
-      SELECT r.i + 1,
-             0.5 * CAST(d.n AS DOUBLE) + 0.5 * (r.lvl + r.trend),
-             0.25 * ((0.5 * CAST(d.n AS DOUBLE) + 0.5 * (r.lvl + r.trend))
-                     - r.lvl)
-               + 0.75 * r.trend
-      FROM holt r JOIN {idx} d ON d.i = r.i + 1
-      WHERE r.i < 95
-    )
-    SELECT h.i AS day_idx, x.n AS n_events, h.lvl, h.trend,
-           h.lvl + h.trend AS fc_next
-    FROM holt h JOIN {idx} x ON x.i = h.i
-"""
-
-
-@query(
-    "rel_holt_forecast",
-    oracle=_HOLT_REC_SQL.format(
-        series=_HOLT_DAILY_SQL.format(events="events") + ",",
-        idx="idx",
-    ),
-)
+@query("rel_holt_forecast")
 def rel_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HOLT's linear-trend exponential smoothing (double exponential
     smoothing, Holt 1957) over the daily event series, run as an
@@ -3073,26 +2118,7 @@ def rel_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
-    "rel_skyline_parts",
-    oracle="""
-    WITH pts AS (
-      SELECT CAST(p_retailprice AS DECIMAL(18,2)) AS price, p_size,
-             CAST(COUNT(*) AS BIGINT) AS n_parts,
-             CAST(MIN(p_partkey) AS BIGINT) AS min_partkey
-      FROM part GROUP BY 1, 2
-    ),
-    d AS (
-      SELECT price, p_size, n_parts, min_partkey,
-             MAX(p_size) OVER (ORDER BY price ASC, p_size DESC
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                                        AND 1 PRECEDING) AS best_prev
-      FROM pts
-    )
-    SELECT CAST(price AS DOUBLE) AS price, p_size, n_parts, min_partkey
-    FROM d WHERE best_prev IS NULL OR best_prev < p_size
-    """,
-)
+@query("rel_skyline_parts")
 def rel_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-D SKYLINE / Pareto frontier (Börzsönyi et al., ICDE 2001):
     the parts no other part beats on BOTH axes (cheaper AND bigger) —
@@ -3145,40 +2171,7 @@ def rel_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
-    "rel_bitmap_overlap",
-    oracle="""
-    WITH m AS (
-      SELECT DISTINCT p.p_brand AS brand, o.o_custkey AS ck
-      FROM lineitem l
-      JOIN orders o ON o.o_orderkey = l.l_orderkey
-      JOIN part p ON p.p_partkey = l.l_partkey
-    ),
-    w AS (
-      SELECT brand, ck // 63 AS word_idx,
-             bit_or(CAST(1 AS BIGINT) << CAST(ck % 63 AS INT)) AS word
-      FROM m GROUP BY brand, ck // 63
-    ),
-    sizes AS (
-      SELECT brand, CAST(SUM(bit_count(word)) AS BIGINT) AS n
-      FROM w GROUP BY brand
-    ),
-    inter AS (
-      SELECT a.brand AS brand_a, b.brand AS brand_b,
-             CAST(SUM(bit_count(a.word & b.word)) AS BIGINT) AS n_common
-      FROM w a JOIN w b
-        ON b.word_idx = a.word_idx AND a.brand < b.brand
-      GROUP BY a.brand, b.brand
-    )
-    SELECT i.brand_a, i.brand_b, sa.n AS n_a, sb.n AS n_b, i.n_common,
-           CAST(i.n_common AS DOUBLE)
-             / CAST(sa.n + sb.n - i.n_common AS DOUBLE) AS jaccard
-    FROM inter i
-    JOIN sizes sa ON sa.brand = i.brand_a
-    JOIN sizes sb ON sb.brand = i.brand_b
-    WHERE i.n_common > 0
-    """,
-)
+@query("rel_bitmap_overlap")
 def rel_bitmap_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BITMAP-INDEX set algebra — the OLAP classic: per-brand customer
     membership packed into 63-bit WORDS (word = custkey div 63, bit =
@@ -3270,37 +2263,7 @@ _ABC_A = 0.5  # cumulative revenue share boundaries
 _ABC_B = 0.8
 
 
-@query(
-    "rel_abc_classes",
-    oracle=f"""
-    WITH rev AS (
-      SELECT l_partkey AS pk,
-             SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS r
-      FROM lineitem GROUP BY l_partkey
-    ),
-    tot AS (SELECT CAST(SUM(r) AS DOUBLE) AS t FROM rev),
-    ranked AS (
-      SELECT pk, r,
-             CAST(SUM(r) OVER (ORDER BY r DESC, pk ASC
-                               ROWS UNBOUNDED PRECEDING) AS DOUBLE)
-               AS cum
-      FROM rev
-    ),
-    classed AS (
-      SELECT pk, r,
-             CASE WHEN cum / tot.t <= {_ABC_A!r} THEN 'A'
-                  WHEN cum / tot.t <= {_ABC_B!r} THEN 'B'
-                  ELSE 'C' END AS abc
-      FROM ranked CROSS JOIN tot
-    )
-    SELECT abc,
-           CAST(COUNT(*) AS BIGINT) AS n_parts,
-           CAST(SUM(r) AS DOUBLE) AS revenue,
-           CAST(SUM(r) AS DOUBLE) / tot.t AS revenue_share
-    FROM classed CROSS JOIN tot
-    GROUP BY abc, tot.t
-    """,
-)
+@query("rel_abc_classes")
 def rel_abc_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ABC / PARETO classification — inventory analytics' 80/20
     workhorse: rank parts by revenue, walk the cumulative share, and
@@ -3354,29 +2317,7 @@ def rel_abc_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
-    "rel_benford_audit",
-    oracle="""
-    WITH digits AS (
-      SELECT CAST(substr(CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR),
-                         1, 1) AS INT) AS d
-      FROM orders WHERE o_totalprice > 0
-    ),
-    obs AS (
-      SELECT d, CAST(COUNT(*) AS BIGINT) AS n FROM digits GROUP BY d
-    ),
-    tot AS (SELECT CAST(SUM(n) AS BIGINT) AS t FROM obs)
-    SELECT o.d AS digit, o.n AS observed,
-           ROUND(CAST(o.n AS DOUBLE) / t.t, 9) AS observed_share,
-           ROUND(log10(1.0 + 1.0 / o.d), 9) AS benford_share,
-           ROUND(
-             CAST(t.t AS DOUBLE)
-             * (CAST(o.n AS DOUBLE) / t.t - log10(1.0 + 1.0 / o.d))
-             * (CAST(o.n AS DOUBLE) / t.t - log10(1.0 + 1.0 / o.d))
-             / log10(1.0 + 1.0 / o.d), 9) AS chi2_term
-    FROM obs o CROSS JOIN tot t
-    """,
-)
+@query("rel_benford_audit")
 def rel_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford's-law first-digit audit over order totals — the
     standard forensic/data-quality screen for fabricated or
@@ -3424,29 +2365,7 @@ def rel_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
-    "rel_gini_concentration",
-    oracle="""
-    WITH rev AS (
-      SELECT l_partkey AS pid,
-             SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS r
-      FROM lineitem GROUP BY l_partkey
-    ),
-    ranked AS (
-      SELECT r, ROW_NUMBER() OVER (ORDER BY r, pid) AS i FROM rev
-    ),
-    agg AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             SUM(r) AS s,
-             SUM(CAST(i AS DECIMAL(38,2)) * r) AS si
-      FROM ranked
-    )
-    SELECT n AS n_parts, CAST(s AS DOUBLE) AS total_revenue,
-           ROUND(2.0 * CAST(si AS DOUBLE) / (n * CAST(s AS DOUBLE))
-                 - (CAST(n AS DOUBLE) + 1.0) / n, 9) AS gini
-    FROM agg
-    """,
-)
+@query("rel_gini_concentration")
 def rel_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini coefficient of per-part revenue concentration — the
     assortment-inequality audit (how much of the catalog carries the
@@ -3491,41 +2410,7 @@ def rel_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
-    "rel_fifo_allocation",
-    oracle="""
-    WITH seq AS (
-      SELECT o_custkey AS cust, o_orderkey AS okey,
-             CAST(o_totalprice AS DECIMAL(18,2)) AS price,
-             SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-               PARTITION BY o_custkey
-               ORDER BY o_orderdate, o_orderkey
-               ROWS UNBOUNDED PRECEDING) AS cum
-      FROM orders
-    ),
-    budget AS (
-      SELECT c_custkey AS cust,
-             CAST(GREATEST(c_acctbal, 0) AS DECIMAL(18,2)) AS bal
-      FROM customer
-    ),
-    alloc AS (
-      SELECT s.cust, s.okey, s.price,
-             CASE WHEN s.cum <= b.bal THEN s.price
-                  WHEN s.cum - s.price >= b.bal THEN CAST(0 AS DECIMAL(18,2))
-                  ELSE CAST(b.bal - (s.cum - s.price) AS DECIMAL(18,2))
-             END AS funded
-      FROM seq s JOIN budget b ON b.cust = s.cust
-    )
-    SELECT cust, CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CASE WHEN funded = price AND price > 0
-                    THEN 1 ELSE 0 END) AS BIGINT) AS fully_funded,
-           CAST(SUM(funded) AS DOUBLE) AS funded_total,
-           CAST(SUM(price - funded) AS DOUBLE) AS unfunded_total
-    FROM alloc
-    GROUP BY cust
-    HAVING SUM(price - funded) > 0
-    """,
-)
+@query("rel_fifo_allocation")
 def rel_fifo_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FIFO allocation by cumulative interval matching: each
     customer's account balance funds their orders OLDEST-FIRST, the
@@ -3611,28 +2496,7 @@ def rel_fifo_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
-    "rel_seq_patterns",
-    oracle="""
-    WITH firsts AS (
-      SELECT user_id, event_type,
-             MIN(ts) AS t0, MIN(event_id) AS eid
-      FROM events GROUP BY user_id, event_type
-    ),
-    pairs AS (
-      SELECT a.event_type AS ante, b.event_type AS conseq
-      FROM firsts a JOIN firsts b
-        ON a.user_id = b.user_id
-       AND a.event_type <> b.event_type
-       AND (a.t0 < b.t0 OR (a.t0 = b.t0 AND a.eid < b.eid))
-    ),
-    users AS (SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS u FROM events)
-    SELECT p.ante, p.conseq, CAST(COUNT(*) AS BIGINT) AS support_users,
-           ROUND(CAST(COUNT(*) AS DOUBLE) / users.u, 9) AS support
-    FROM pairs p CROSS JOIN users
-    GROUP BY p.ante, p.conseq, users.u
-    """,
-)
+@query("rel_seq_patterns")
 def rel_seq_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequential-pattern support (the PrefixSpan/GSP length-2 core):
     for every ordered event-type pair (A → B), the number and share
@@ -3689,55 +2553,7 @@ def rel_seq_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
-    "rel_theil_decomposition",
-    oracle="""
-    WITH spend AS (
-      SELECT c.c_custkey, c.c_nationkey AS s,
-             CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS y
-      FROM customer c JOIN orders o ON o.o_custkey = c.c_custkey
-      GROUP BY c.c_custkey, c.c_nationkey
-    ),
-    tot AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(round(y, 2) AS DECIMAL(38,2))) AS DOUBLE)
-               / COUNT(*) AS mu
-      FROM spend
-    ),
-    total_t AS (
-      SELECT CAST(SUM(CAST(round((y / t.mu) * ln(y / t.mu), 12)
-                 AS DECIMAL(38,18))) AS DOUBLE) / t.n AS theil
-      FROM spend, tot t GROUP BY t.n
-    ),
-    gmeans AS (
-      SELECT s, CAST(COUNT(*) AS BIGINT) AS ns,
-             CAST(SUM(CAST(round(y, 2) AS DECIMAL(38,2))) AS DOUBLE)
-               / COUNT(*) AS mus
-      FROM spend GROUP BY s
-    ),
-    groups AS (
-      SELECT g.s, g.ns, g.mus,
-             CAST(SUM(CAST(round((sp.y / g.mus) * ln(sp.y / g.mus), 12)
-                  AS DECIMAL(38,18))) AS DOUBLE) / g.ns AS ts
-      FROM spend sp JOIN gmeans g ON g.s = sp.s
-      GROUP BY g.s, g.ns, g.mus
-    ),
-    decomp AS (
-      SELECT
-        CAST(SUM(CAST(round((CAST(g.ns AS DOUBLE) / t.n) * (g.mus / t.mu)
-             * g.ts, 12) AS DECIMAL(38,18))) AS DOUBLE) AS within_,
-        CAST(SUM(CAST(round((CAST(g.ns AS DOUBLE) / t.n) * (g.mus / t.mu)
-             * ln(g.mus / t.mu), 12) AS DECIMAL(38,18))) AS DOUBLE)
-          AS between_
-      FROM groups g, tot t GROUP BY t.n, t.mu
-    )
-    SELECT t.n AS n_customers,
-           round(tt.theil, 9) AS theil_total,
-           round(d.within_, 9) AS theil_within,
-           round(d.between_, 9) AS theil_between
-    FROM tot t, total_t tt, decomp d
-    """,
-)
+@query("rel_theil_decomposition")
 def rel_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THEIL-T inequality decomposition of customer spend:
     T = (1/n)Σ(y/μ)ln(y/μ), split EXACTLY (unlike Gini, which does
@@ -3859,48 +2675,7 @@ def rel_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
-    "rel_seasonal_decompose",
-    oracle="""
-    WITH monthly AS (
-      SELECT date_trunc('month', o_orderdate) AS m,
-             CAST(month(o_orderdate) AS INT) AS moy,
-             SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS yd
-      FROM orders GROUP BY 1, 2
-    ),
-    lagged AS (
-      SELECT moy, CAST(yd AS DOUBLE) AS y,
-             lag(yd, 6) OVER w AS l6, lag(yd, 5) OVER w AS l5,
-             lag(yd, 4) OVER w AS l4, lag(yd, 3) OVER w AS l3,
-             lag(yd, 2) OVER w AS l2, lag(yd, 1) OVER w AS l1,
-             lead(yd, 1) OVER w AS r1, lead(yd, 2) OVER w AS r2,
-             lead(yd, 3) OVER w AS r3, lead(yd, 4) OVER w AS r4,
-             lead(yd, 5) OVER w AS r5, lead(yd, 6) OVER w AS r6,
-             yd
-      FROM monthly WINDOW w AS (ORDER BY m)
-    ),
-    detrended AS (
-      SELECT moy,
-             round(y - CAST(l6 + r6
-                            + 2 * (l5 + l4 + l3 + l2 + l1 + yd
-                                   + r1 + r2 + r3 + r4 + r5)
-                            AS DOUBLE) / 24.0, 6) AS d
-      FROM lagged WHERE l6 IS NOT NULL AND r6 IS NOT NULL
-    ),
-    raw AS (
-      SELECT moy, CAST(COUNT(*) AS BIGINT) AS n_obs,
-             CAST(SUM(CAST(d AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*) AS s
-      FROM detrended GROUP BY 1
-    ),
-    ctr AS (
-      SELECT CAST(SUM(CAST(round(s, 6) AS DECIMAL(38,6))) AS DOUBLE)
-             / COUNT(*) AS mean_s
-      FROM raw
-    )
-    SELECT moy, n_obs, round(s - mean_s, 6) AS seasonal_index
-    FROM raw, ctr
-    """,
-)
+@query("rel_seasonal_decompose")
 def rel_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classical additive seasonal decomposition of monthly revenue
     (the moving-average method behind every `seasonal_decompose`
@@ -3978,31 +2753,7 @@ def rel_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
-    "rel_rfm_segmentation",
-    oracle="""
-    WITH per_cust AS (
-      SELECT o_custkey AS ck, max(o_orderdate) AS last_d,
-             CAST(COUNT(*) AS BIGINT) AS f,
-             SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS m
-      FROM orders GROUP BY 1
-    ),
-    mx AS (SELECT max(o_orderdate) AS maxd FROM orders),
-    scored AS (
-      SELECT CAST(ntile(5) OVER (
-               ORDER BY datediff('day', last_d, maxd), ck) AS INT) AS r_s,
-             CAST(ntile(5) OVER (ORDER BY f DESC, ck) AS INT) AS f_s,
-             CAST(ntile(5) OVER (ORDER BY m DESC, ck) AS INT) AS m_s,
-             f, m
-      FROM per_cust, mx
-    )
-    SELECT CAST(r_s * 100 + f_s * 10 + m_s AS INT) AS rfm_code,
-           CAST(COUNT(*) AS BIGINT) AS n_customers,
-           round(CAST(SUM(m) AS DOUBLE), 2) AS monetary_total,
-           round(CAST(SUM(f) AS DOUBLE) / COUNT(*), 9) AS avg_frequency
-    FROM scored GROUP BY 1
-    """,
-)
+@query("rel_rfm_segmentation")
 def rel_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM (recency / frequency / monetary) customer segmentation —
     the marketing-analytics workhorse: per customer, days since last

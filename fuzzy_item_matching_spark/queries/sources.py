@@ -29,15 +29,7 @@ from fuzzy_item_matching_spark.tables import load_table
 SCRATCH = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
 
 
-@query(
-    "src_csv_roundtrip",
-    oracle="""
-    SELECT r.r_name, COUNT(*) AS n_nations,
-           MIN(n.n_name) AS first_nation
-    FROM nation n JOIN region r ON n.n_regionkey = r.r_regionkey
-    GROUP BY r.r_name
-    """,
-)
+@query("src_csv_roundtrip")
 def src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1: CSV written then re-read with a handwritten StructType —
     the reference's explicit-schema CSV ingest
@@ -68,15 +60,7 @@ def src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "src_parquet_write_read",
-    oracle="""
-    SELECT o_orderpriority, COUNT(*) AS n,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-    FROM orders WHERE o_orderstatus = 'F'
-    GROUP BY o_orderpriority
-    """,
-)
+@query("src_parquet_write_read")
 def src_parquet_write_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2: filtered orders written to parquet (overwrite) and read
     back — the reference's Delta write/scan cycle
@@ -99,7 +83,7 @@ def src_parquet_write_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("src_seeded_sample", oracle=None)  # Bernoulli sampling is
+@query("src_seeded_sample")  # Bernoulli sampling is
 # engine-specific (Spark's XORShiftRandom) — rows-only here, with
 # determinism + fraction properties in tests/test_sources.py
 def src_seeded_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -115,15 +99,7 @@ def src_seeded_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "src_partitioned_prune",
-    oracle="""
-    SELECT o_orderpriority, COUNT(*) AS n,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-    FROM orders WHERE o_orderstatus = 'O'
-    GROUP BY o_orderpriority
-    """,
-)
+@query("src_partitioned_prune")
 def src_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partitioned layout + partition-pruned scan — the 100 TB table
     design primitive: orders written hive-style partitioned by
@@ -148,22 +124,7 @@ def src_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "src_archive_ingest",
-    oracle="""
-    WITH a(id, name, price) AS (
-      VALUES (1, 'alpha kettle', 12.50), (2, 'beta toaster', 30.00),
-             (3, 'gamma blender', 45.25)
-    ),
-    b(id, name, price) AS (
-      VALUES (10, 'alpha kettle deluxe', 14.00), (11, 'delta mixer', 52.75)
-    )
-    SELECT src, COUNT(*) AS n,
-           CAST(SUM(CAST(price AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-    FROM (SELECT 'a' AS src, * FROM a UNION ALL SELECT 'b', * FROM b)
-    GROUP BY src
-    """,
-)
+@query("src_archive_ingest")
 def src_archive_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4 — the reference's bronze-ingest step (wget + unzip of
     Abt-Buy.zip, `EXTRACT:2-7`) as a network-free local analogue:
@@ -218,22 +179,7 @@ def src_archive_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_D_U = (
-    "(CAST(CAST('0x' || substr(md5('42:' || CAST({key} AS VARCHAR)), 1, 8)"
-    " AS BIGINT) AS DOUBLE) / 4294967296.0)"
-)
-
-
-@query(
-    "src_keyed_sample",
-    oracle=f"""
-    SELECT l_returnflag, COUNT(*) AS n,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-    FROM lineitem
-    WHERE {_D_U.format(key="l_orderkey || '|' || l_linenumber")} < 0.1
-    GROUP BY l_returnflag
-    """,
-)
+@query("src_keyed_sample")
 def src_keyed_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S7, the reproducible form: content-keyed Bernoulli sample —
     u = f(md5(seed:key)) per row, so the SAME rows are sampled on any
@@ -254,16 +200,7 @@ def src_keyed_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "src_orc_roundtrip",
-    oracle="""
-    SELECT p_brand, COUNT(*) AS n,
-           CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
-           MIN(p_name) AS first_name
-    FROM part WHERE p_size >= 25
-    GROUP BY p_brand
-    """,
-)
+@query("src_orc_roundtrip")
 def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1/S2 on the ORC format: filtered parts written as ORC
     (overwrite) and read back through the vectorized ORC reader —
@@ -288,14 +225,7 @@ def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "src_jsonl_roundtrip",
-    oracle="""
-    SELECT s_nationkey, COUNT(*) AS n,
-           CAST(SUM(CAST(s_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
-    FROM supplier GROUP BY s_nationkey
-    """,
-)
+@query("src_jsonl_roundtrip")
 def src_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines write + schema-explicit read-back — the interchange
     format of every crawl/annotation pipeline. The read supplies an
@@ -329,22 +259,7 @@ def src_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "src_python_datasource",
-    oracle="""
-    WITH gen AS (
-      SELECT p.part_id, s.seq,
-             (p.part_id * 1000003 + s.seq * 97) % 1000000007 AS value
-      FROM unnest(range(8)) AS p(part_id),
-           unnest(range(1000)) AS s(seq)
-    )
-    SELECT part_id, COUNT(*) AS n,
-           CAST(SUM(value) AS BIGINT) AS value_sum,
-           CAST(MIN(value) AS BIGINT) AS value_min,
-           CAST(MAX(value) AS BIGINT) AS value_max
-    FROM gen GROUP BY part_id
-    """,
-)
+@query("src_python_datasource")
 def src_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom Python DataSource (Spark 4 connector API,
     `sources/pysource.py`): the driver plans 8 input partitions,
@@ -377,23 +292,7 @@ def src_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "src_schema_evolution",
-    oracle="""
-    WITH unioned AS (
-      SELECT n_nationkey, n_name, NULL::BIGINT AS pop
-      FROM nation WHERE n_regionkey < 2
-      UNION ALL
-      SELECT n_nationkey, n_name, n_nationkey * 1000 AS pop
-      FROM nation WHERE n_regionkey >= 2
-    )
-    SELECT COUNT(*) AS n_rows,
-           CAST(SUM(coalesce(pop, 0)) AS BIGINT) AS pop_sum,
-           CAST(SUM(CASE WHEN pop IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_old_schema
-    FROM unioned
-    """,
-)
+@query("src_schema_evolution")
 def src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema evolution across parquet file generations: generation 1
     lacks the ``pop`` column, generation 2 adds it; the mergeSchema
@@ -434,20 +333,7 @@ def src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "src_dynamic_partition_overwrite",
-    oracle="""
-    WITH final AS (
-      SELECT o_orderstatus, o_orderkey,
-             CASE WHEN o_orderstatus = 'F' THEN o_totalprice * 2
-                  ELSE o_totalprice END AS price
-      FROM orders
-    )
-    SELECT o_orderstatus, COUNT(*) AS n,
-           CAST(SUM(CAST(price AS DECIMAL(18,2))) AS DOUBLE) AS total
-    FROM final GROUP BY o_orderstatus
-    """,
-)
+@query("src_dynamic_partition_overwrite")
 def src_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic partition overwrite: the full orders table lands
     partitioned by status, then a corrected 'F' slice (prices doubled)
@@ -490,15 +376,7 @@ def src_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-@query(
-    "src_compaction",
-    oracle="""
-    SELECT 64 AS n_files_before, 4 AS n_files_after,
-           COUNT(*) AS n_rows,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-    FROM lineitem
-    """,
-)
+@query("src_compaction")
 def src_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-file compaction: lineitem deliberately fragmented into 64
     shards (the streaming-ingest pathology — minutes-sized files), then
@@ -536,31 +414,7 @@ def src_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "src_time_travel",
-    oracle="""
-    WITH v1 AS (
-      SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderstatus = 'O'
-    ),
-    upd AS (
-      SELECT o_orderkey, o_totalprice + 1000.0 AS o_totalprice
-      FROM v1 WHERE o_orderkey % 10 = 0
-    ),
-    v2 AS (
-      SELECT v1.o_orderkey, v1.o_totalprice FROM v1
-      WHERE NOT EXISTS (SELECT 1 FROM upd WHERE upd.o_orderkey = v1.o_orderkey)
-      UNION ALL
-      SELECT o_orderkey, o_totalprice FROM upd
-    )
-    SELECT
-      (SELECT COUNT(*) FROM v1) AS v1_rows,
-      (SELECT COUNT(*) FROM v2) AS v2_rows,
-      (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-       FROM v1) AS v1_total,
-      (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-       FROM v2) AS v2_total
-    """,
-)
+@query("src_time_travel")
 def src_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot versioning + time travel on plain parquet
     (operators/versioned.py — the Delta capability the reference
@@ -658,34 +512,7 @@ def src_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "src_snapshot_diff",
-    oracle="""
-    WITH v1 AS (
-      SELECT o_orderkey, CAST(o_totalprice AS DECIMAL(18,2)) AS price
-      FROM orders WHERE o_orderkey % 13 != 3
-    ),
-    v2 AS (
-      SELECT o_orderkey,
-             CAST(o_totalprice AS DECIMAL(18,2))
-               + CASE WHEN o_orderkey % 7 = 0
-                      THEN CAST(5.00 AS DECIMAL(18,2))
-                      ELSE CAST(0.00 AS DECIMAL(18,2)) END AS price
-      FROM orders WHERE o_orderkey % 11 != 5
-    ),
-    d AS (
-      SELECT CASE WHEN v1.o_orderkey IS NULL THEN 'added'
-                  WHEN v2.o_orderkey IS NULL THEN 'removed'
-                  WHEN v1.price != v2.price THEN 'changed'
-                  ELSE 'unchanged' END AS status,
-             coalesce(v2.price, 0) - coalesce(v1.price, 0) AS delta
-      FROM v1 FULL OUTER JOIN v2 USING (o_orderkey)
-    )
-    SELECT status, COUNT(*) AS n,
-           CAST(SUM(delta) AS DOUBLE) AS price_delta
-    FROM d GROUP BY status
-    """,
-)
+@query("src_snapshot_diff")
 def src_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot reconciliation (table diff): classify every key across
     two table versions as added / removed / changed / unchanged and
@@ -739,48 +566,7 @@ def src_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "src_scd2_history",
-    oracle="""
-    WITH base AS (
-      SELECT c_custkey, CAST(c_acctbal AS DECIMAL(18,2)) AS bal
-      FROM customer
-    ),
-    delta AS (
-      SELECT c_custkey,
-             bal + CAST('100.00' AS DECIMAL(18,2)) AS new_bal
-      FROM base WHERE c_custkey % 7 = 0
-      UNION ALL
-      SELECT c_custkey + 1000000 AS c_custkey, bal AS new_bal
-      FROM base WHERE c_custkey % 13 = 0
-    ),
-    j AS (
-      SELECT COALESCE(b.c_custkey, d.c_custkey) AS c_custkey,
-             b.bal, d.new_bal,
-             b.c_custkey IS NOT NULL AS in_base,
-             d.c_custkey IS NOT NULL AS in_delta
-      FROM base b FULL OUTER JOIN delta d ON b.c_custkey = d.c_custkey
-    ),
-    hist AS (
-      -- closed-out prior versions (value actually changed)
-      SELECT c_custkey, bal, 0 AS valid_from, 1 AS valid_to
-      FROM j WHERE in_base AND in_delta AND bal <> new_bal
-      UNION ALL
-      -- still-current untouched (or no-op delta) rows
-      SELECT c_custkey, bal, 0 AS valid_from, NULL AS valid_to
-      FROM j WHERE in_base AND (NOT in_delta OR bal = new_bal)
-      UNION ALL
-      -- new current versions: changed keys + inserts
-      SELECT c_custkey, new_bal AS bal, 1 AS valid_from, NULL AS valid_to
-      FROM j WHERE in_delta AND (NOT in_base OR bal <> new_bal)
-    )
-    SELECT c_custkey, CAST(bal AS DOUBLE) AS bal,
-           CAST(valid_from AS INT) AS valid_from,
-           CAST(valid_to AS INT) AS valid_to,
-           valid_to IS NULL AS is_current
-    FROM hist
-    """,
-)
+@query("src_scd2_history")
 def src_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Slowly-changing-dimension TYPE-2 apply — the lake-maintenance
     classic the MERGE sink (S6) doesn't cover: instead of overwriting
@@ -859,34 +645,7 @@ def src_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "src_quarantine_split",
-    oracle="""
-    WITH raw AS (
-      SELECT o_orderkey,
-             CASE WHEN o_orderkey % 19 = 1 THEN -o_totalprice
-                  ELSE o_totalprice END AS price,
-             CASE WHEN o_orderkey % 23 = 2 THEN 'X'
-                  ELSE o_orderstatus END AS status,
-             CASE WHEN o_orderkey % 29 = 3 THEN NULL
-                  ELSE o_custkey END AS custkey
-      FROM orders
-    ),
-    flagged AS (
-      SELECT list_filter([
-               CASE WHEN price <= 0 THEN 'nonpositive_price' END,
-               CASE WHEN status NOT IN ('O', 'F', 'P') THEN 'bad_status' END,
-               CASE WHEN custkey IS NULL THEN 'null_custkey' END
-             ], x -> x IS NOT NULL) AS reasons
-      FROM raw
-    )
-    SELECT reason, COUNT(*) AS n FROM (
-      SELECT unnest(CASE WHEN len(reasons) = 0 THEN ['valid']
-                    ELSE reasons END) AS reason
-      FROM flagged
-    ) GROUP BY reason
-    """,
-)
+@query("src_quarantine_split")
 def src_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Expectation-based quarantine split: every ingested row is
     checked against a rule set and either passes ('valid') or is
@@ -936,18 +695,7 @@ def src_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exploded.groupBy("reason").agg(F.count(F.lit(1)).alias("n"))
 
 
-@query(
-    "src_bucketed_colocated_join",
-    oracle="""
-    SELECT o.o_orderpriority,
-           CAST(COUNT(*) AS BIGINT) AS n_lines,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l.l_discount AS DECIMAL(18,4))))
-             AS DOUBLE) AS revenue
-    FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    GROUP BY o.o_orderpriority
-    """,
-)
+@query("src_bucketed_colocated_join")
 def src_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The co-located big-big join — Spark's bucketing as the 100 TB
     answer to repeated fact-fact joins: both sides are written
@@ -998,15 +746,7 @@ def src_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
-    "src_file_metadata",
-    oracle="""
-    SELECT o_orderstatus AS status,
-           CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(1 AS BIGINT) AS n_files
-    FROM orders GROUP BY o_orderstatus
-    """,
-)
+@query("src_file_metadata")
 def src_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HIDDEN `_metadata` FILE COLUMNS — the Spark reader's built-in
     lineage surface: write orders partitioned by status (one file per

@@ -15,38 +15,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fuzzy_item_matching_spark.functions.text import (
-    ENGLISH_STOPWORDS,
     char_ngrams_of_words,
     md5_bucket,
     regex_tokenize,
     remove_stopwords,
     word_ngrams,
 )
-from fuzzy_item_matching_spark.queries import query
+from fuzzy_item_matching_spark.queries import fit_once, query
 from fuzzy_item_matching_spark.tables import load_table
 
-# DuckDB mirror of regex_tokenize(col): same regex, same empty-filter.
-# coalesce mirrors regex_tokenize's null normalization (reference
-# `01_Feature Engineering.py:147,155`): null text -> empty token list.
-_D_TOKENS = (
-    "list_filter(regexp_split_to_array(lower(coalesce({c}, '')), '[^\\w\\d]'),"
-    " x -> length(x) >= 1)"
-)
-# The identical 181-word list, SQL-quoted (apostrophes doubled).
-_D_STOPWORDS = "[" + ", ".join(
-    "'" + w.replace("'", "''") + "'" for w in ENGLISH_STOPWORDS
-) + "]"
-
-
-@query(
-    "text_tokens",
-    oracle=f"""
-    SELECT doc_id,
-           array_to_string({_D_TOKENS.format(c="text")}, '|') AS tokens_str,
-           len({_D_TOKENS.format(c="text")}) AS n_tokens
-    FROM documents
-    """,
-)
+@query("text_tokens")
 def text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T1 RegexTokenizer over documents.text — pure narrow projection,
     whole-stage codegen, no shuffle."""
@@ -59,19 +37,7 @@ def text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "text_stop_filtered",
-    oracle=f"""
-    SELECT doc_id,
-           array_to_string(
-             list_filter({_D_TOKENS.format(c="text")},
-                         t -> NOT list_contains({_D_STOPWORDS}, t)), '|') AS kept_str,
-           len({_D_TOKENS.format(c="text")})
-             - len(list_filter({_D_TOKENS.format(c="text")},
-                               t -> NOT list_contains({_D_STOPWORDS}, t))) AS n_stopwords
-    FROM documents
-    """,
-)
+@query("text_stop_filtered")
 def text_stop_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2 StopWordsRemover parity with Spark's full 181-word English
     list (`01_Feature Engineering.py:195-201`); bag semantics preserved
@@ -95,17 +61,7 @@ def text_stop_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "text_char_3grams",
-    oracle=f"""
-    SELECT p_partkey,
-           array_to_string(
-             flatten(list_transform({_D_TOKENS.format(c="p_name")},
-               w -> list_transform(generate_series(1, greatest(length(w)-2, 0)),
-                                   i -> w[i:i+2]))), '|') AS grams_str
-    FROM part
-    """,
-)
+@query("text_char_3grams")
 def text_char_3grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T3+T4+T5 composite: per-word char-3-grams of part.p_name,
     flattened to one bag per row (`01_Feature Engineering.py:203-249`).
@@ -116,17 +72,7 @@ def text_char_3grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     return p.select("p_partkey", F.concat_ws("|", grams).alias("grams_str"))
 
 
-@query(
-    "text_word_2grams",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, {_D_TOKENS.format(c="text")} AS toks FROM documents)
-    SELECT doc_id,
-           array_to_string(
-             list_transform(generate_series(1, greatest(len(toks)-1, 0)),
-                            i -> toks[i] || ' ' || toks[i+1]), '|') AS bigrams_str
-    FROM t
-    """,
-)
+@query("text_word_2grams")
 def text_word_2grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T6 word-2-gram (ml.feature.NGram(n=2) semantics,
     `01_Feature Engineering.py:342-349`) — space-joined adjacent
@@ -142,16 +88,7 @@ def text_word_2grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "text_hashed_tf",
-    oracle=f"""
-    SELECT doc_id,
-           CAST('0x' || substr(md5(t), 1, 8) AS BIGINT) % 1024 AS bucket,
-           COUNT(*) AS tf
-    FROM (SELECT doc_id, unnest({_D_TOKENS.format(c="text")}) AS t FROM documents)
-    GROUP BY doc_id, bucket
-    """,
-)
+@query("text_hashed_tf")
 def text_hashed_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T7 HashingTF in sparse relational layout: (doc, bucket, tf)
     rows (`01_Feature Engineering.py:274-282`). Uses the md5 bucket
@@ -167,17 +104,7 @@ def text_hashed_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "text_levenshtein_pairs",
-    oracle="""
-    SELECT a.p_partkey AS id_a, b.p_partkey AS id_b,
-           levenshtein(a.p_name, b.p_name) AS edit_dist
-    FROM part a JOIN part b
-      ON a.p_brand = b.p_brand AND a.p_size = b.p_size
-     AND a.p_partkey < b.p_partkey
-    WHERE levenshtein(a.p_name, b.p_name) <= 12
-    """,
-)
+@query("text_levenshtein_pairs")
 def text_levenshtein_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance fuzzy pairs — the third similarity family next to
     Jaccard (dedup) and cosine (similarity). Levenshtein is O(len²)
@@ -240,31 +167,7 @@ _BPE_MERGES: tuple[tuple[str, str], ...] = (
 _BPE_PASSES = 3
 
 
-def _bpe_sql(word_expr: str) -> str:
-    """DuckDB expression applying the merge table to one word: chars
-    spaced out, then the ranked replaces — space-padded so a pair only
-    matches at SYMBOL boundaries (plain substring replace would corrupt
-    an adjacent multi-char symbol: pair (a,n) must not split 'va n')."""
-    s = f"' ' || trim(regexp_replace({word_expr}, '(.)', '\\1 ', 'g')) || ' '"
-    for a, b in _BPE_MERGES:
-        for _ in range(_BPE_PASSES):
-            s = f"replace({s}, ' {a} ', ' {b} ')"
-    return f"trim({s})"
-
-
-@query(
-    "text_bpe_segments",
-    oracle=f"""
-    WITH words AS (
-      SELECT unnest({_D_TOKENS.format(c="text")}) AS w FROM documents
-    ),
-    seg AS (
-      SELECT unnest(string_split({_bpe_sql("w")}, ' ')) AS segment
-      FROM words
-    )
-    SELECT segment, COUNT(*) AS n FROM seg GROUP BY segment
-    """,
-)
+@query("text_bpe_segments")
 def text_bpe_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer APPLY: segment every corpus word with a fixed
     ranked merge table (greedy non-overlapping replaces, standard BPE
@@ -303,59 +206,7 @@ def text_bpe_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BPE_FIT_ITERS = 8
 
 
-def _bpe_fit_oracle() -> str:
-    """Generate the unrolled-iteration DuckDB twin of the BPE fit:
-    each level recomputes boundary pairs over the current segmentation,
-    picks the argmax (count DESC, pair ASC), and applies it via the
-    same padded {p}-pass replace — the merge arriving through a one-row
-    cross join instead of a driver collect (same unrolled-loop oracle
-    technique as the IVF Lloyd refinement, queries/similarity.py)."""
-    parts = [
-        """
-    WITH v0 AS (
-      SELECT w, COUNT(*) AS wc FROM (
-        SELECT unnest({toks}) AS w FROM documents
-      ) GROUP BY w
-    ),
-    seg0 AS (
-      SELECT w, wc,
-             ' ' || trim(regexp_replace(w, '(.)', '\\1 ', 'g')) || ' ' AS s
-      FROM v0
-    )""".format(toks=_D_TOKENS.format(c="text"))
-    ]
-    for k in range(1, _BPE_FIT_ITERS + 1):
-        apply_s = "s"
-        for _ in range(_BPE_PASSES):
-            apply_s = (
-                f"replace({apply_s}, ' ' || b.p || ' ',"
-                f" ' ' || replace(b.p, ' ', '') || ' ')"
-            )
-        parts.append(f"""
-    pairs{k} AS (
-      SELECT p, SUM(wc) AS cnt FROM (
-        SELECT wc,
-               unnest(list_transform(generate_series(1, len(a) - 1),
-                      i -> a[i] || ' ' || a[i + 1])) AS p
-        FROM (SELECT wc, string_split(trim(s), ' ') AS a FROM seg{k - 1})
-      ) GROUP BY p
-    ),
-    best{k} AS (
-      SELECT CAST({k} AS INT) AS rank, p, CAST(cnt AS BIGINT) AS cnt
-      FROM pairs{k} ORDER BY cnt DESC, p ASC LIMIT 1
-    ),
-    seg{k} AS (
-      SELECT w, wc, {apply_s} AS s FROM seg{k - 1}, best{k} b
-    )""")
-    union = " UNION ALL ".join(
-        f"SELECT * FROM best{k}" for k in range(1, _BPE_FIT_ITERS + 1)
-    )
-    parts.append(f"""
-    SELECT rank, p AS pair, replace(p, ' ', '') AS merged, cnt
-    FROM ({union})""")
-    return ",".join(parts[:1]) + "," + ",".join(parts[1:-1]) + parts[-1]
-
-
-@query("text_bpe_fit", oracle=_bpe_fit_oracle())
+@query("text_bpe_fit")
 def text_bpe_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer FIT: learn the first {n} merge rules from the
     corpus word vocabulary — the iterative half of subword
@@ -439,18 +290,7 @@ def text_bpe_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 text_bpe_fit.__doc__ = text_bpe_fit.__doc__.format(n=_BPE_FIT_ITERS)
 
 
-@query(
-    "text_jaro_winkler_pairs",
-    oracle="""
-    SELECT id_a, id_b, jw FROM (
-      SELECT a.p_partkey AS id_a, b.p_partkey AS id_b,
-             jaro_winkler_similarity(a.p_name, b.p_name) AS jw
-      FROM part a JOIN part b
-        ON a.p_brand = b.p_brand AND a.p_size = b.p_size
-       AND a.p_partkey < b.p_partkey
-    ) WHERE jw >= 0.88
-    """,
-)
+@query("text_jaro_winkler_pairs")
 def text_jaro_winkler_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jaro-Winkler fuzzy pairs — the record-linkage scoring kernel
     (Winkler 1990, the string comparator behind Fellegi-Sunter
@@ -495,86 +335,7 @@ _BPE_B_K = 4  # merges accepted per round
 _BPE_B_C = 32  # candidate shortlist per round
 
 
-def _bpe_batched_oracle() -> str:
-    """Unrolled DuckDB twin of the batched fit. Per round: pair counts
-    → a top-C shortlist (total order: cnt DESC, pair ASC) → greedy
-    non-overlap selection unrolled as K chained LIMIT-1 CTEs (candidate
-    excluded iff it shares a symbol with any earlier selection this
-    round) → all K merges applied through one pivoted scalar row.
-    COALESCE(chr(1)) turns unused selection slots into no-op replaces."""
-    parts = [
-        """
-    WITH v0 AS MATERIALIZED (
-      SELECT w, COUNT(*) AS wc FROM (
-        SELECT unnest({toks}) AS w FROM documents
-      ) GROUP BY w
-    ),
-    seg0 AS MATERIALIZED (
-      SELECT w, wc,
-             ' ' || trim(regexp_replace(w, '(.)', '\\1 ', 'g')) || ' ' AS s
-      FROM v0
-    )""".format(toks=_D_TOKENS.format(c="text"))
-    ]
-    arms = []
-    for r in range(1, _BPE_B_ROUNDS + 1):
-        parts.append(f"""
-    pairs{r} AS MATERIALIZED (
-      SELECT p, SUM(wc) AS cnt FROM (
-        SELECT wc,
-               unnest(list_transform(generate_series(1, len(a) - 1),
-                      i -> a[i] || ' ' || a[i + 1])) AS p
-        FROM (SELECT wc, string_split(trim(s), ' ') AS a FROM seg{r - 1})
-      ) GROUP BY p
-    ),
-    top{r} AS MATERIALIZED (
-      SELECT p, CAST(cnt AS BIGINT) AS cnt,
-             string_split(p, ' ')[1] AS ls, string_split(p, ' ')[2] AS rs
-      FROM pairs{r} ORDER BY cnt DESC, p ASC LIMIT {_BPE_B_C}
-    )""")
-        prev: list[str] = []
-        for k in range(1, _BPE_B_K + 1):
-            if prev:
-                prior = " UNION ALL ".join(
-                    f"SELECT ls, rs FROM {c}" for c in prev
-                )
-                guard = f"""
-      WHERE NOT EXISTS (
-        SELECT 1 FROM ({prior}) s
-        WHERE s.ls IN (t.ls, t.rs) OR s.rs IN (t.ls, t.rs)
-      )"""
-            else:
-                guard = ""
-            parts.append(f"""
-    sel{r}_{k} AS MATERIALIZED (
-      SELECT {k} AS sel, p, cnt, ls, rs FROM top{r} t{guard}
-      ORDER BY cnt DESC, p ASC LIMIT 1
-    )""")
-            prev.append(f"sel{r}_{k}")
-        chosen_union = " UNION ALL ".join(f"SELECT * FROM {c}" for c in prev)
-        piv_cols = ", ".join(
-            f"MAX(CASE WHEN sel = {k} THEN p END) AS p{k}"
-            for k in range(1, _BPE_B_K + 1)
-        )
-        apply_s = "s"
-        for k in range(1, _BPE_B_K + 1):
-            pk = f"COALESCE(b.p{k}, chr(1))"
-            for _ in range(_BPE_PASSES):
-                apply_s = (
-                    f"replace({apply_s}, ' ' || {pk} || ' ',"
-                    f" ' ' || replace({pk}, ' ', '') || ' ')"
-                )
-        parts.append(f"""
-    chosen{r} AS MATERIALIZED ({chosen_union}),
-    piv{r} AS MATERIALIZED (SELECT {piv_cols} FROM chosen{r}),
-    seg{r} AS MATERIALIZED (SELECT w, wc, {apply_s} AS s FROM seg{r - 1}, piv{r} b)""")
-        arms.append(
-            f"SELECT CAST({r} AS INT) AS round, CAST(sel AS INT) AS sel,"
-            f" p AS pair, replace(p, ' ', '') AS merged, cnt FROM chosen{r}"
-        )
-    return ",".join(parts) + " " + " UNION ALL ".join(arms)
-
-
-@query("text_bpe_fit_batched", oracle=_bpe_batched_oracle())
+@query("text_bpe_fit_batched")
 def text_bpe_fit_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE fit, the SCALE variant: accept up to {k} NON-OVERLAPPING
     merges per round (pairs sharing no symbol with a higher-ranked
@@ -716,21 +477,18 @@ def text_unigram_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _UNI_PRUNE_TAU = 0.004  # multi-char survival threshold on p1
-_UNI_MEMO: dict[str, list] = {}
 
 
+@fit_once
 def _uni_rows(spark: SparkSession, sf_dir: str) -> list:
     from fuzzy_item_matching_spark.operators.unigram_lm import (
         unigram_em_fit,
     )
     from fuzzy_item_matching_spark.tables import load_table
 
-    if sf_dir not in _UNI_MEMO:
-        d = load_table(spark, sf_dir, "documents")
-        _UNI_MEMO[sf_dir] = unigram_em_fit(
-            d, regex_tokenize("text")
-        ).collect()  # ≤ alphabet + 64 rows — the fitted-state budget
-    return _UNI_MEMO[sf_dir]
+    d = load_table(spark, sf_dir, "documents")
+    # ≤ alphabet + 64 rows — the fitted-state budget
+    return unigram_em_fit(d, regex_tokenize("text")).collect()
 
 
 @query("text_unigram_prune")
@@ -776,34 +534,7 @@ text_unigram_prune.__doc__ = text_unigram_prune.__doc__.format(
 # ---------------------------------------------------------------------------
 
 
-def _skeleton_sql(col: str) -> str:
-    """DuckDB consonant skeleton of a multi-word string: per word,
-    first letter + vowel-class-stripped remainder, '_'-joined."""
-    return (
-        f"array_to_string(list_transform(string_split(lower({col}), ' '),"
-        " w -> substr(w, 1, 1)"
-        " || regexp_replace(substr(w, 2), '[aeiouhwy]', '', 'g')), '_')"
-    )
-
-
-@query(
-    "text_phonetic_blocking",
-    oracle=f"""
-    WITH k AS (
-      SELECT p_partkey, p_name, {_skeleton_sql("p_name")} AS block_key
-      FROM part
-    ),
-    b AS (
-      SELECT block_key,
-             CAST(COUNT(*) AS BIGINT) AS n_parts,
-             CAST(COUNT(DISTINCT p_name) AS BIGINT) AS n_names,
-             CAST(COUNT(*) * (COUNT(*) - 1) / 2 AS BIGINT) AS n_cand_pairs
-      FROM k GROUP BY block_key
-    )
-    SELECT block_key, n_parts, n_names, n_cand_pairs
-    FROM b WHERE n_parts > 1
-    """,
-)
+@query("text_phonetic_blocking")
 def text_phonetic_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PHONETIC BLOCKING for entity resolution: a consonant-skeleton
     key (per word: first letter + vowel/h/w/y-stripped remainder,

@@ -22,28 +22,10 @@ from fuzzy_item_matching_spark.functions.vector import (
     l2_normalize,
     squared_dist,
 )
-from fuzzy_item_matching_spark.queries import query
+from fuzzy_item_matching_spark.queries import fit_once, query
 from fuzzy_item_matching_spark.tables import EMB_DIM, load_table
 
-# DuckDB fragments mirroring functions/vector.py exactly.
-_D_SQ = "list_sum(list_transform({v}::DOUBLE[], x -> x*x))"
-_D_NORM = f"sqrt({_D_SQ})"
-_D_DOT = "list_sum(list_transform(list_zip({a}::DOUBLE[], {b}::DOUBLE[]), s -> s[1]*s[2]))"
-_D_SQD = (
-    "list_sum(list_transform(list_zip({a}::DOUBLE[], {b}::DOUBLE[]),"
-    " s -> (s[1]-s[2])*(s[1]-s[2])))"
-)
-
-
-@query(
-    "vec_l2_norm",
-    oracle=f"""
-    SELECT vec_id,
-           {_D_NORM.format(v="embedding")} AS norm,
-           embedding[1]::DOUBLE / {_D_NORM.format(v="embedding")} AS e0_unit
-    FROM embeddings
-    """,
-)
+@query("vec_l2_norm")
 def vec_l2_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L2 norm + first component of the unit vector (T9 Normalizer
     parity, `01_Feature Engineering.py:292-295`). Narrow projection —
@@ -56,18 +38,7 @@ def vec_l2_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "vec_label_pair_stats",
-    oracle=f"""
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           {_D_DOT.format(a="a.embedding", b="b.embedding")} AS dp,
-           {_D_SQD.format(a="a.embedding", b="b.embedding")} AS sqdist,
-           {_D_DOT.format(a="a.embedding", b="b.embedding")}
-             / ({_D_NORM.format(v="a.embedding")} * {_D_NORM.format(v="b.embedding")}) AS cosine
-    FROM embeddings a JOIN embeddings b
-      ON a.label = b.label AND a.vec_id < b.vec_id
-    """,
-)
+@query("vec_label_pair_stats")
 def vec_label_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked pairwise distances: dot/sqdist/cosine for same-label
     pairs (V1 applied `03_Train & Deploy Model.py:100-107`). The label
@@ -82,16 +53,7 @@ def vec_label_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return blocked_pair_stats(e, "vec_id", "embedding", "label", dim=EMB_DIM)
 
 
-@query(
-    "vec_centroid_by_label",
-    oracle="""
-    SELECT label, i - 1 AS pos, AVG(x) AS centroid
-    FROM (SELECT label, unnest(embedding::DOUBLE[]) AS x,
-                 generate_subscripts(embedding, 1) AS i
-          FROM embeddings)
-    GROUP BY label, i ORDER BY label, pos
-    """,
-)
+@query("vec_centroid_by_label")
 def vec_centroid_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid via posexplode + hash agg (F3 UDTF surface,
     `01_Feature Engineering.py:213`). |labels|×dim output rows; the agg
@@ -105,22 +67,7 @@ def vec_centroid_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "vec_knn_bruteforce",
-    oracle=f"""
-    WITH pairs AS (
-      SELECT a.vec_id AS qid, b.vec_id AS nid,
-             {_D_DOT.format(a="a.embedding", b="b.embedding")}
-               / ({_D_NORM.format(v="a.embedding")} * {_D_NORM.format(v="b.embedding")}) AS cosine
-      FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-    )
-    SELECT qid, nid, cosine, rnk FROM (
-      SELECT qid, nid, cosine,
-             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rnk
-      FROM pairs) t
-    WHERE rnk <= 3
-    """,
-)
+@query("vec_knn_bruteforce")
 def vec_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k per query vector — the exact ANN
     baseline (SURVEY §4.3 extension). O(n²) by design: this is the
@@ -147,41 +94,7 @@ _Q_DIM = 64  # embedding dimensionality (embeddings.parquet)
 _Q_K = 5  # neighbors per query vector
 
 
-@query(
-    "vec_int8_topk",
-    oracle=f"""
-    WITH sc AS (
-      SELECT u.i, MAX(abs(e.embedding[u.i]::DOUBLE)) AS s
-      FROM embeddings e, unnest(range(1, {_Q_DIM + 1})) AS u(i)
-      GROUP BY u.i
-    ),
-    sarr AS (SELECT list(s ORDER BY i) AS arr FROM sc),
-    q AS (
-      SELECT e.vec_id,
-             list_transform(range(1, {_Q_DIM + 1}), i ->
-               CASE WHEN sarr.arr[i] = 0 THEN CAST(0 AS BIGINT)
-                    ELSE CAST(round(127.0 * e.embedding[i]::DOUBLE
-                                    / sarr.arr[i]) AS BIGINT)
-               END) AS qv
-      FROM embeddings e, sarr
-    ),
-    pairs AS (
-      SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-             CAST(list_sum(list_transform(range(1, {_Q_DIM + 1}),
-                  i -> a.qv[i] * b.qv[i])) AS BIGINT) AS qdot
-      FROM q a JOIN q b ON b.vec_id <> a.vec_id
-      WHERE a.vec_id % 50 = 0
-    ),
-    ranked AS (
-      SELECT query_id, neighbor_id, qdot,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY qdot DESC, neighbor_id) AS rnk
-      FROM pairs
-    )
-    SELECT query_id, neighbor_id, qdot, rnk
-    FROM ranked WHERE rnk <= {_Q_K}
-    """,
-)
+@query("vec_int8_topk")
 def vec_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Int8 symmetric quantization + quantized top-k retrieval:
     per-dimension max-abs scales (one corpus pass), q_i =
@@ -243,44 +156,7 @@ def vec_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MA_DIM = 8  # coarse prefix dims (matryoshka truncation)
 _MA_SHORT = 50  # stage-1 shortlist per query
 
-_D_DOT8 = (
-    "list_sum(list_transform(list_zip({a}[1:8]::DOUBLE[], {b}[1:8]::DOUBLE[]),"
-    " s -> s[1]*s[2]))"
-)
-
-
-@query(
-    "vec_matryoshka_topk",
-    oracle=f"""
-    WITH coarse AS (
-      SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-             {_D_DOT8.format(a="a.embedding", b="b.embedding")} AS cdot
-      FROM embeddings a JOIN embeddings b ON b.vec_id <> a.vec_id
-      WHERE a.vec_id % 50 = 0
-    ),
-    short AS (
-      SELECT query_id, neighbor_id, cdot FROM (
-        SELECT query_id, neighbor_id, cdot,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                                  ORDER BY cdot DESC, neighbor_id) AS crnk
-        FROM coarse
-      ) WHERE crnk <= {_MA_SHORT}
-    ),
-    fullx AS (
-      SELECT s.query_id, s.neighbor_id, s.cdot,
-             {_D_DOT.format(a="a.embedding", b="b.embedding")} AS fdot
-      FROM short s
-      JOIN embeddings a ON a.vec_id = s.query_id
-      JOIN embeddings b ON b.vec_id = s.neighbor_id
-    )
-    SELECT query_id, neighbor_id, cdot, fdot, rnk FROM (
-      SELECT query_id, neighbor_id, cdot, fdot,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY fdot DESC, neighbor_id) AS rnk
-      FROM fullx
-    ) WHERE rnk <= {_Q_K}
-    """,
-)
+@query("vec_matryoshka_topk")
 def vec_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka two-stage retrieval: rank ALL candidates by the dot
     product of the first {dim} dims only (the truncated-embedding
@@ -441,46 +317,9 @@ def _gram_long_partials(e) -> "DataFrame":
     else:
         src = src.filter(F.col("emb").isNotNull())
     return src.mapInArrow(gen, "i long, j long, s long")
-# One decimal-exact matvec step as a DuckDB CTE pair: w = C·v
-# (DECIMAL-accumulated), n = ||w|| (DECIMAL-accumulated), v' = w/n.
-_D_PCA_STEP = """
-    w{t} AS (
-      SELECT c.i, CAST(SUM(CAST(c.c * v{p}.v AS DECIMAL(38,18)))
-                       AS DOUBLE) AS w
-      FROM cov c JOIN v{p} ON v{p}.i = c.j GROUP BY c.i
-    ),
-    n{t} AS (
-      SELECT sqrt(CAST(SUM(CAST(w * w AS DECIMAL(38,18))) AS DOUBLE))
-               AS nrm
-      FROM w{t}
-    ),
-    v{t} AS (SELECT i, w / nrm AS v FROM w{t}, n{t})
-"""
 
 
-@query(
-    "vec_pca_power",
-    oracle=f"""
-    WITH xs AS (
-      SELECT vec_id, unnest(embedding::DOUBLE[]) AS x,
-             generate_subscripts(embedding, 1) AS i
-      FROM embeddings
-    ),
-    nn AS (SELECT COUNT(*) AS n FROM embeddings),
-    cov AS (
-      SELECT a.i, b.i AS j,
-             CAST(SUM(CAST(floor(a.x * b.x * {_PCA_Q!r}) AS BIGINT)) AS DOUBLE)
-               / {_PCA_Q!r} / nn.n AS c
-      FROM xs a JOIN xs b ON a.vec_id = b.vec_id, nn
-      GROUP BY a.i, b.i, nn.n
-    ),
-    v0 AS (SELECT DISTINCT i, 1.0 AS v FROM xs),
-    {",".join(_D_PCA_STEP.format(t=t, p=t - 1) for t in range(1, _PCA_ITERS + 1))}
-    SELECT v{_PCA_ITERS}.i - 1 AS dim_idx, v{_PCA_ITERS}.v AS loading,
-           n{_PCA_ITERS}.nrm AS eigenvalue
-    FROM v{_PCA_ITERS}, n{_PCA_ITERS}
-    """,
-)
+@query("vec_pca_power")
 def vec_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top principal direction of the (uncentered) second-moment
     matrix by {t} unrolled power iterations — PCA's core reduced to
@@ -574,20 +413,14 @@ vec_pca_power.__doc__ = vec_pca_power.__doc__.format(t=_PCA_ITERS)
 
 _KM_DIM = 64
 
-# (sf_dir,) -> collected centroid rows [(c, cent list[float], n)] —
-# the adaboost/gboost fit-memo discipline: silhouette reuses the fit.
-_KM_MEMO: dict[str, list] = {}
-
-
+# collected centroid rows [(c, cent list[float], n)], fitted once:
+# silhouette reuses the fit.
+@fit_once
 def _km_cent(spark: SparkSession, sf_dir: str):
     from fuzzy_item_matching_spark.operators.kmeans import kmeans_fit
 
-    if sf_dir not in _KM_MEMO:
-        e = load_table(spark, sf_dir, "embeddings")
-        _KM_MEMO[sf_dir] = kmeans_fit(
-            e, dim=_KM_DIM
-        ).collect()  # k rows — bounded
-    return _KM_MEMO[sf_dir]
+    e = load_table(spark, sf_dir, "embeddings")
+    return kmeans_fit(e, dim=_KM_DIM).collect()  # k rows — bounded
 
 
 @query("vec_kmeans_centroids")
@@ -723,16 +556,14 @@ def vec_kmeans_elbow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@fit_once
 def _km_cent_k(spark: SparkSession, sf_dir: str, k: int):
     from fuzzy_item_matching_spark.operators.kmeans import KM_K, kmeans_fit
 
     if k == KM_K:
-        return _km_cent(spark, sf_dir)  # share the main fit memo
-    key = f"{sf_dir}::k{k}"
-    if key not in _KM_MEMO:
-        e = load_table(spark, sf_dir, "embeddings")
-        _KM_MEMO[key] = kmeans_fit(e, k=k, dim=_KM_DIM).collect()
-    return _KM_MEMO[key]
+        return _km_cent(spark, sf_dir)  # share the main fit
+    e = load_table(spark, sf_dir, "embeddings")
+    return kmeans_fit(e, k=k, dim=_KM_DIM).collect()
 
 
 vec_kmeans_elbow.__doc__ = vec_kmeans_elbow.__doc__.format(
@@ -740,15 +571,7 @@ vec_kmeans_elbow.__doc__ = vec_kmeans_elbow.__doc__.format(
 )
 
 
-@query(
-    "vec_arrow_map_norms",
-    oracle=f"""
-    SELECT vec_id,
-           CAST(len(embedding) AS INT) AS dim,
-           {_D_NORM.format(v="embedding")} AS norm
-    FROM embeddings
-    """,
-)
+@query("vec_arrow_map_norms")
 def vec_arrow_map_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """mapInArrow — the LOWEST-overhead Python boundary (raw
     RecordBatches, no pandas materialization; the missing member next
@@ -868,70 +691,7 @@ vec_kcenter_init.__doc__ = vec_kcenter_init.__doc__.format(k=_KC_K)
 # Rank-2 PCA via Hotelling deflation (PC2 = top eigenvector of C − λ₁v₁v₁ᵀ)
 # ---------------------------------------------------------------------------
 
-_D_PCA2_STEP = """
-    {w} AS (
-      SELECT c.i, CAST(SUM(CAST(c.c * {vp}.v AS DECIMAL(38,18)))
-                       AS DOUBLE) AS w
-      FROM {cov} c JOIN {vp} ON {vp}.i = c.j GROUP BY c.i
-    ),
-    {n} AS (
-      SELECT sqrt(CAST(SUM(CAST(w * w AS DECIMAL(38,18))) AS DOUBLE))
-               AS nrm
-      FROM {w}
-    ),
-    {v} AS (SELECT i, w / nrm AS v FROM {w}, {n})
-"""
-
-
-def _pca2_oracle() -> str:
-    steps1 = ",".join(
-        _D_PCA2_STEP.format(
-            cov="cov", w=f"w{t}", n=f"n{t}", v=f"v{t}", vp=f"v{t - 1}"
-        )
-        for t in range(1, _PCA_ITERS + 1)
-    )
-    steps2 = ",".join(
-        _D_PCA2_STEP.format(
-            cov="cov2", w=f"u{t}", n=f"m{t}", v=f"y{t}", vp=f"y{t - 1}"
-        )
-        for t in range(1, _PCA_ITERS + 1)
-    )
-    T = _PCA_ITERS
-    return f"""
-    WITH xs AS (
-      SELECT vec_id, unnest(embedding::DOUBLE[]) AS x,
-             generate_subscripts(embedding, 1) AS i
-      FROM embeddings
-    ),
-    nn AS (SELECT COUNT(*) AS n FROM embeddings),
-    cov AS (
-      SELECT a.i, b.i AS j,
-             CAST(SUM(CAST(floor(a.x * b.x * {_PCA_Q!r}) AS BIGINT)) AS DOUBLE)
-               / {_PCA_Q!r} / nn.n AS c
-      FROM xs a JOIN xs b ON a.vec_id = b.vec_id, nn
-      GROUP BY a.i, b.i, nn.n
-    ),
-    v0 AS (SELECT DISTINCT i, 1.0 AS v FROM xs),
-    {steps1},
-    cov2 AS (
-      SELECT c.i, c.j, c.c - n{T}.nrm * va.v * vb.v AS c
-      FROM cov c
-      JOIN v{T} va ON va.i = c.i
-      JOIN v{T} vb ON vb.i = c.j, n{T}
-    ),
-    y0 AS (SELECT DISTINCT i, 1.0 AS v FROM xs),
-    {steps2}
-    SELECT 1 AS component, v{T}.i - 1 AS dim_idx, v{T}.v AS loading,
-           n{T}.nrm AS eigenvalue
-    FROM v{T}, n{T}
-    UNION ALL
-    SELECT 2 AS component, y{T}.i - 1 AS dim_idx, y{T}.v AS loading,
-           m{T}.nrm AS eigenvalue
-    FROM y{T}, m{T}
-    """
-
-
-@query("vec_pca_deflation", oracle=_pca2_oracle())
+@query("vec_pca_deflation")
 def vec_pca_deflation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANK-2 PCA by HOTELLING DEFLATION: run the proven power
     iteration for the top direction v₁ (λ₁ = ‖C·v₁‖), subtract the
@@ -1043,44 +803,7 @@ def _rff_params() -> tuple[list[list[float]], list[float]]:
     )
 
 
-def _rff_oracle() -> str:
-    w, b = _rff_params()
-
-    def sqld(av: str, bv: str) -> str:
-        return (
-            f"list_sum(list_transform(list_zip({av}, {bv}),"
-            " s -> (s[1]-s[2])*(s[1]-s[2])))"
-        )
-
-    def plane(vec: str, j: int) -> str:
-        lits = "[" + ",".join(repr(x) for x in w[j]) + "]"
-        return (
-            f"cos(list_sum(list_transform(list_zip({vec}, {lits}),"
-            f" s -> s[1]*s[2])) + {b[j]!r})"
-        )
-
-    scale = repr(2.0 / _RFF_D)
-    zdot = " + ".join(
-        f"({plane('a.embedding::DOUBLE[]', j)})"
-        f" * ({plane('b.embedding::DOUBLE[]', j)})"
-        for j in range(_RFF_D)
-    )
-    return f"""
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           round(exp(-{_RFF_GAMMA!r}
-                 * ({sqld('a.embedding::DOUBLE[]', 'b.embedding::DOUBLE[]')})),
-                 9) AS k_exact,
-           round({scale} * ({zdot}), 9) AS k_rff,
-           round(abs(round(exp(-{_RFF_GAMMA!r}
-                 * ({sqld('a.embedding::DOUBLE[]', 'b.embedding::DOUBLE[]')})),
-                 9)
-               - round({scale} * ({zdot}), 9)), 9) AS abs_err
-    FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1
-    WHERE a.vec_id % {_RFF_QMOD} = 0
-    """
-
-
-@query("vec_rff_features", oracle=_rff_oracle())
+@query("vec_rff_features")
 def vec_rff_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random Fourier features (Rahimi & Recht 2007): {d} seeded
     cosine projections z_j(x) = cos(w_j·x + b_j), w ~ N(0, 2γI),
@@ -1160,51 +883,7 @@ _GD_MUL = 4_294_967_296  # 2^32
 _GD_OFF = 2_147_483_648  # 2^31
 
 
-def _grid_density_oracle() -> str:
-    cx = f"CAST(floor((embedding::DOUBLE[])[1] / {_GD_H!r}) AS BIGINT)"
-    cy = f"CAST(floor((embedding::DOUBLE[])[2] / {_GD_H!r}) AS BIGINT)"
-    levels = [
-        f"""cells AS (
-      SELECT {cx} AS cx, {cy} AS cy, CAST(COUNT(*) AS BIGINT) AS n
-      FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) = 64
-      GROUP BY 1, 2
-    ),
-    core AS (
-      SELECT cx, cy, n, cx * {_GD_MUL} + cy + {_GD_OFF} AS key
-      FROM cells WHERE n >= {_GD_MINPTS}
-    ),
-    adj AS (
-      SELECT a.key AS ka, b.key AS kb
-      FROM core a JOIN core b
-        ON abs(a.cx - b.cx) <= 1 AND abs(a.cy - b.cy) <= 1
-    ),
-    l0 AS (SELECT key, key AS lbl FROM core)"""
-    ]
-    for t in range(1, _GD_ROUNDS + 1):
-        levels.append(f"""l{t} AS (
-      SELECT a.ka AS key, MIN(l.lbl) AS lbl
-      FROM adj a JOIN l{t - 1} l ON l.key = a.kb
-      GROUP BY a.ka
-    )""")
-    return f"""
-    WITH {",".join(levels)},
-    clusters AS (
-      SELECT l.lbl AS cluster, CAST(COUNT(*) AS BIGINT) AS n_cells,
-             CAST(SUM(c.n) AS BIGINT) AS n_points
-      FROM l{_GD_ROUNDS} l JOIN core c ON c.key = l.key
-      GROUP BY l.lbl
-    ),
-    noise AS (
-      SELECT CAST(-1 AS BIGINT) AS cluster,
-             CAST(COUNT(*) AS BIGINT) AS n_cells,
-             CAST(COALESCE(SUM(n), 0) AS BIGINT) AS n_points
-      FROM cells WHERE n < {_GD_MINPTS}
-    )
-    SELECT * FROM clusters UNION ALL SELECT * FROM noise
-    """
-
-
-@query("vec_grid_density_clusters", oracle=_grid_density_oracle())
+@query("vec_grid_density_clusters")
 def vec_grid_density_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grid-density clustering (the DBSCAN intuition made
     shuffle-friendly): quantize the first two embedding coordinates
@@ -1293,43 +972,7 @@ vec_grid_density_clusters.__doc__ = vec_grid_density_clusters.__doc__.format(
 _MAH_TOPK = 20
 
 
-def _mahalanobis_oracle() -> str:
-    return f"""
-    WITH ex AS (
-      SELECT vec_id, unnest(embedding::DOUBLE[]) AS x,
-             generate_subscripts(embedding::DOUBLE[], 1) AS d
-      FROM embeddings
-      WHERE embedding IS NOT NULL AND len(embedding) = 64
-    ),
-    stats AS (
-      SELECT d,
-             CAST(SUM(CAST(round(x, 12) AS DECIMAL(38,18))) AS DOUBLE)
-               / COUNT(*) AS mu,
-             CAST(SUM(CAST(round(x * x, 12) AS DECIMAL(38,18))) AS DOUBLE)
-               / COUNT(*) AS ex2,
-             CAST(COUNT(*) AS BIGINT) AS n
-      FROM ex GROUP BY d
-    ),
-    var_ AS (
-      SELECT d, mu, ex2 - mu * mu AS v FROM stats
-    ),
-    scored AS (
-      SELECT e.vec_id,
-             CAST(SUM(CAST(round((e.x - s.mu) * (e.x - s.mu) / s.v, 9)
-                  AS DECIMAL(38,18))) AS DOUBLE) AS score
-      FROM ex e JOIN var_ s ON s.d = e.d AND s.v > 0
-      GROUP BY e.vec_id
-    )
-    SELECT vec_id, round(score, 9) AS mahalanobis_sq, rnk FROM (
-      SELECT vec_id, score,
-             CAST(ROW_NUMBER() OVER (ORDER BY round(score, 9) DESC, vec_id)
-                  AS INT) AS rnk
-      FROM scored
-    ) WHERE rnk <= {_MAH_TOPK}
-    """
-
-
-@query("vec_mahalanobis_outliers", oracle=_mahalanobis_oracle())
+@query("vec_mahalanobis_outliers")
 def vec_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Diagonal-covariance Mahalanobis outlier scoring: standardize
     every embedding dimension by its own corpus (μ_d, σ²_d) and rank
@@ -1433,47 +1076,7 @@ def _rc_splits() -> list[list[tuple[int, float]]]:
     return trees
 
 
-def _rc_oracle() -> str:
-    trees = _rc_splits()
-    leaf_cols = []
-    for ti, splits in enumerate(trees):
-        bits = " || ".join(
-            f"(CASE WHEN (embedding::DOUBLE[])[{d + 1}] < {t!r}"
-            " THEN '0' ELSE '1' END)"
-            for d, t in splits
-        )
-        leaf_cols.append(f"{bits} AS leaf{ti}")
-    occ_joins = "\n".join(
-        f"JOIN (SELECT leaf{ti} AS lf{ti}, CAST(COUNT(*) AS BIGINT)"
-        f" AS c{ti} FROM leaves GROUP BY leaf{ti}) o{ti}"
-        f" ON o{ti}.lf{ti} = l.leaf{ti}"
-        for ti in range(len(trees))
-    )
-    score = " + ".join(
-        f"CAST(round(ln(CAST(c{ti} AS DOUBLE)), 12) AS DECIMAL(38,18))"
-        for ti in range(len(trees))
-    )
-    return f"""
-    WITH leaves AS (
-      SELECT vec_id, {", ".join(leaf_cols)}
-      FROM embeddings
-      WHERE embedding IS NOT NULL AND len(embedding) = 64
-    ),
-    scored AS (
-      SELECT l.vec_id,
-             round(CAST(({score}) AS DOUBLE) / {len(trees)}, 9) AS density
-      FROM leaves l
-      {occ_joins}
-    )
-    SELECT vec_id, density, rnk FROM (
-      SELECT vec_id, density,
-             CAST(ROW_NUMBER() OVER (ORDER BY density, vec_id) AS INT) AS rnk
-      FROM scored
-    ) WHERE rnk <= {_RC_TOPK}
-    """
-
-
-@query("vec_random_cut_density", oracle=_rc_oracle())
+@query("vec_random_cut_density")
 def vec_random_cut_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-cut density anomaly scoring — the isolation-forest /
     RRCF intuition in its OBLIVIOUS, shuffle-friendly form: {t}
@@ -1556,47 +1159,7 @@ def _jl_params() -> list[list[float]]:
     return [[float(x) for x in row] for row in r]
 
 
-def _jl_oracle() -> str:
-    from fuzzy_item_matching_spark.queries.similarity import _sql_plane_dot
-
-    planes = _jl_params()
-    sqd = (
-        "list_sum(list_transform(list_zip({a}, {b}),"
-        " s -> (s[1]-s[2])*(s[1]-s[2])))"
-    )
-    dproj = " + ".join(
-        f"(({_sql_plane_dot('a.embedding::DOUBLE[]', p)})"
-        f" - ({_sql_plane_dot('b.embedding::DOUBLE[]', p)}))"
-        f" * (({_sql_plane_dot('a.embedding::DOUBLE[]', p)})"
-        f" - ({_sql_plane_dot('b.embedding::DOUBLE[]', p)}))"
-        for p in planes
-    )
-    return f"""
-    WITH pairs AS (
-      SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-             {sqd.format(a="a.embedding::DOUBLE[]",
-                         b="b.embedding::DOUBLE[]")} AS d_orig,
-             {dproj} AS d_proj
-      FROM embeddings a
-      JOIN embeddings b ON b.vec_id = a.vec_id + 1
-      WHERE a.vec_id % {_JL_QMOD} = 0
-        AND a.embedding IS NOT NULL AND len(a.embedding) = 64
-        AND b.embedding IS NOT NULL AND len(b.embedding) = 64
-    ),
-    ratios AS (
-      SELECT round(d_proj / d_orig, 9) AS ratio
-      FROM pairs WHERE d_orig > 0
-    )
-    SELECT CAST(least(19, CAST(floor(ratio * 10) AS BIGINT)) AS INT)
-             AS bucket,
-           CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           round(CAST(SUM(CAST(ratio AS DECIMAL(38,9))) AS DOUBLE)
-                 / COUNT(*), 9) AS avg_ratio
-    FROM ratios GROUP BY 1
-    """
-
-
-@query("vec_jl_projection", oracle=_jl_oracle())
+@query("vec_jl_projection")
 def vec_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Johnson–Lindenstrauss random projection 64 → {k} dims with a
     seeded N(0, 1/{k}) matrix, audited by the DISTANCE-DISTORTION
@@ -1668,78 +1231,7 @@ _SKM_ITERS = 2
 _SKM_Q = 2.0**40  # fixed-point quantum (the kmeans/PCA discipline)
 
 
-def _skm_oracle() -> str:
-    q = repr(_SKM_Q)
-    sumsq = "list_sum(list_transform({v}, w -> w * w))"
-    parts = [
-        f"""WITH emb AS MATERIALIZED (
-      SELECT vec_id,
-             list_transform(x, v -> v / sqrt({sumsq.format(v="x")})) AS xh
-      FROM (
-        SELECT vec_id, embedding::DOUBLE[] AS x FROM embeddings
-        WHERE embedding IS NOT NULL AND len(embedding) = 64
-          AND len(list_filter(embedding::DOUBLE[], v -> isnan(v))) = 0
-          AND {sumsq.format(v="embedding::DOUBLE[]")} > 0
-      )
-    ),
-    cent0 AS MATERIALIZED (
-      SELECT ROW_NUMBER() OVER (ORDER BY vec_id) AS c, xh AS cent
-      FROM emb ORDER BY vec_id LIMIT {_SKM_K}
-    )"""
-    ]
-    for t in range(1, _SKM_ITERS + 1):
-        parts.append(f"""d{t} AS MATERIALIZED (
-      SELECT e.vec_id, c.c,
-             list_sum(list_transform(list_zip(e.xh, c.cent),
-                                     s -> s[1] * s[2])) AS d
-      FROM emb e, cent{t - 1} c
-    ),
-    a{t} AS MATERIALIZED (
-      SELECT vec_id, c FROM (
-        SELECT vec_id, c,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY d DESC, c) AS rn
-        FROM d{t}
-      ) WHERE rn = 1
-    ),
-    upd{t} AS MATERIALIZED (
-      SELECT c, j,
-             CAST(SUM(CAST(floor(v * {q}) AS BIGINT)) AS BIGINT) AS s,
-             CAST(COUNT(*) AS BIGINT) AS n
-      FROM (
-        SELECT a.c, generate_subscripts(e.xh, 1) AS j, unnest(e.xh) AS v
-        FROM a{t} a JOIN emb e USING (vec_id)
-      ) GROUP BY c, j
-    ),
-    m{t} AS (
-      SELECT c, j, (CAST(s AS DOUBLE) / {q}) / n AS m, n FROM upd{t}
-    ),
-    nrm{t} AS (
-      SELECT c,
-             sqrt(list_sum(list_transform(list(m ORDER BY j),
-                                          v -> v * v))) AS nrm
-      FROM m{t} GROUP BY c
-    ),
-    cent{t} AS MATERIALIZED (
-      SELECT m.c, list(m.m / nr.nrm ORDER BY m.j) AS cent
-      FROM m{t} m JOIN nrm{t} nr USING (c)
-      GROUP BY m.c, nr.nrm
-    ),
-    sz{t} AS (SELECT c, MIN(n) AS n FROM upd{t} GROUP BY c)""")
-    k = _SKM_ITERS
-    return (
-        ",\n    ".join(parts)
-        + f"""
-    SELECT f.c, CAST(f.j AS INT) AS j, f.coord, s.n
-    FROM (
-      SELECT c, generate_subscripts(cent, 1) AS j, unnest(cent) AS coord
-      FROM cent{k}
-    ) f JOIN sz{k} s USING (c)
-    """
-    )
-
-
-@query("vec_spherical_kmeans", oracle=_skm_oracle())
+@query("vec_spherical_kmeans")
 def vec_spherical_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spherical k-means (cosine Lloyd): unit-normalize every
     embedding, assign by MAXIMUM dot product (= cosine on the unit

@@ -5,18 +5,13 @@ return exactly what its query returns (row count, schema and an
 order-insensitive value hash). The engine never imports this package;
 read every oracle through :func:`oracle_sql`.
 
-Two places hold oracles today:
-
-- ``Query.oracle`` in ``fuzzy_item_matching_spark.queries``: SQL
-  strings written inline at the query's ``@query`` registration;
-- the modules here, for queries whose oracle is generated by a DuckDB
-  twin of an operator. ``boosting``, ``gboost_deep``, ``kmeans``,
-  ``logreg``, ``unigram_lm``, ``als``, ``fm`` and ``zorder`` hold the
-  twins, one module per ``operators/`` module. ``training``,
-  ``vectors``, ``text``, ``serving``, ``sources`` and ``streaming``
-  hold the oracles built from them, one module per ``queries/``
-  module, each function registered under its query name with
-  :func:`oracle`.
+Every oracle is a function in this package registered under its
+query's name with :func:`oracle`. ``boosting``, ``gboost_deep``,
+``kmeans``, ``logreg``, ``unigram_lm``, ``als``, ``fm`` and ``zorder``
+hold DuckDB twins of operators, one module per ``operators/`` module.
+Every other module holds the oracles of one ``queries/`` module, with
+the SQL helpers only oracles use; SQL text that a query itself runs
+stays in the engine and is imported from there.
 """
 
 from __future__ import annotations
@@ -52,12 +47,4 @@ def oracle_sql() -> dict[str, str]:
     unknown = sorted(ORACLES.keys() - reg.keys())
     if unknown:
         raise ValueError(f"oracles for unregistered queries: {unknown}")
-    out = {}
-    for name, q in reg.items():
-        if name in ORACLES:
-            if q.oracle is not None:
-                raise ValueError(f"query {name} has an inline and a built oracle")
-            out[name] = ORACLES[name]()
-        elif q.oracle is not None:
-            out[name] = q.oracle
-    return out
+    return {name: ORACLES[name]() for name in reg if name in ORACLES}

@@ -1,17 +1,20 @@
 """The oracles live outside the engine and are read through one accessor.
 
-``oracles.oracle_sql()`` merges the inline ``Query.oracle`` strings with
-the DuckDB twins in the root ``oracles/`` package. These checks need no
-SparkSession: they pin the accessor's output and the package split.
+Every oracle is registered under its query's name in the root
+``oracles/`` package, and ``oracles.oracle_sql()`` is the one reader.
+These checks need no SparkSession: they pin the accessor's output and
+the package split.
 """
 
 from __future__ import annotations
 
 import ast
+import dataclasses
 import hashlib
 import json
 import pathlib
 
+from fuzzy_item_matching_spark.queries import Query
 from oracles import oracle_sql
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
@@ -66,3 +69,18 @@ def test_no_sql_twins_left_in_operators():
         and node.name.endswith(("_sql", "_ctes"))
     ]
     assert twins == ["dedup.winnowing_sql"]
+
+
+def test_queries_declare_no_oracle():
+    """Oracles have one home: no ``query(...)`` call in the engine
+    passes ``oracle=``, and a ``Query`` holds no oracle field."""
+    offenders = [
+        f"{path.relative_to(ROOT)}:{node.lineno}"
+        for path, tree in _modules(ENGINE)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "id", getattr(node.func, "attr", None)) == "query"
+        and any(k.arg == "oracle" for k in node.keywords)
+    ]
+    assert offenders == []
+    assert [f.name for f in dataclasses.fields(Query)] == ["name", "fn", "doc"]

@@ -123,7 +123,7 @@ def test_ivf_sample_cap_matches_oracle_when_sampling_active(
     rows, and require the full bitwise oracle match — if operator and
     oracle ever draw different refinement rows, this fails loudly."""
     from fuzzy_item_matching_spark.operators.ivf import ivf_cosine_topk
-    from fuzzy_item_matching_spark.queries.similarity import _ivf_topk_oracle
+    from oracles.similarity import _ivf_topk_oracle
 
     cap = 200
     assert embeddings.count() > cap, "cap must force sampling for this test"
